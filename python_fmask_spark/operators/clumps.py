@@ -125,8 +125,11 @@ def label_clumps_distributed(df: DataFrame, flag_col: str,
     mapping = [(k[0], k[1], find(k)[1]) for k in list(parent)]
     spark = df.sparkSession
     if mapping:
+        # from pandas, the frame ships as Arrow batches (get_spark turns
+        # Arrow on), not as a Python-RDD job
         map_df = spark.createDataFrame(
-            mapping, "cell_id string, local_label bigint, root bigint")
+            pd.DataFrame(mapping, columns=["cell_id", "local_label", "root"]),
+            "cell_id string, local_label bigint, root bigint")
         out = (labeled.join(F.broadcast(map_df),
                             ["cell_id", "local_label"], "left")
                .withColumn("clump_id", F.coalesce("root", "local_label"))

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .. import constants as C
@@ -94,8 +94,18 @@ def fill_minima_distributed(df: DataFrame, img_col: str,
               f"{img_col} bigint, h_max bigint, h_min bigint, "
               "cell_h int, cell_has_null int, cell_bval double, "
               "img2 bigint, changed int")
+    state_cols = ["cell_id", "r", "c", img_col, "h_max", "h_min", "cell_h",
+                  "cell_has_null", "cell_bval", "img2"]
 
     def one_round(pdf: pd.DataFrame) -> pd.DataFrame:
+        halo = pdf["is_halo"].to_numpy()
+        core = ~halo
+        out = pdf.loc[core, state_cols].reset_index(drop=True)
+        if pd.isna(pdf["h_max"].iloc[0]):
+            # all-nodata cell: nothing to fill, every pixel keeps
+            # nullval (as kernels.fill_minima returns), nothing changes
+            out["changed"] = np.zeros(len(out), dtype=np.int32)
+            return out
         rr = pdf["r"].to_numpy()
         lo = int(rr.min())
         h = int(rr.max()) - lo + 1
@@ -113,7 +123,6 @@ def fill_minima_distributed(df: DataFrame, img_col: str,
         nullmask = ~present | (img == nullval)
         seed = np.full((h, W), _UNSET, dtype=np.int64)
         # halo rows carry their current img2 as sources
-        halo = pdf["is_halo"].to_numpy()
         seed[rr[halo] - lo, cc[halo]] = np.minimum(
             pdf["img2"].to_numpy()[halo], _UNSET)
         # The reference seeds EITHER the null-adjacent inner ring OR
@@ -137,34 +146,24 @@ def fill_minima_distributed(df: DataFrame, img_col: str,
             seed[edge] = np.minimum(seed[edge], b)
 
         res = _local_fill_from_sources(img, nullmask, seed, h_min, h_max)
-        core = ~halo
         out_img2 = res[rr[core] - lo, cc[core]]
-        prev = pdf["img2"].to_numpy()[core]
-        changed = (out_img2 != prev).astype(np.int32)
-        return pd.DataFrame({
-            "cell_id": pdf["cell_id"].to_numpy()[core],
-            "r": rr[core].astype(np.int32),
-            "c": cc[core].astype(np.int32),
-            img_col: pdf[img_col].to_numpy()[core],
-            "h_max": pdf["h_max"].to_numpy()[core],
-            "h_min": pdf["h_min"].to_numpy()[core],
-            "cell_h": pdf["cell_h"].to_numpy()[core],
-            "cell_has_null": pdf["cell_has_null"].to_numpy()[core],
-            "cell_bval": pdf["cell_bval"].to_numpy()[core],
-            "img2": out_img2,
-            "changed": changed,
-        })
+        out["changed"] = (out_img2 != out["img2"].to_numpy()).astype(np.int32)
+        out["img2"] = out_img2
+        return out
 
     from ..tiling import with_halo
 
     state = base
     for _ in range(max_rounds):
         haloed = with_halo(state, radius=1, tile_rows=tile_rows)
-        new_state = haloed.groupBy("cell_id", "tile") \
-            .applyInPandas(one_round, schema=schema).localCheckpoint()
-        n_changed = new_state.agg(F.sum("changed")).collect()[0][0]
-        state = new_state
-        if not n_changed:
+        # the round's changed-pixel count rides the checkpoint job
+        # itself (an observed metric), not a second aggregate job
+        obs = Observation()
+        state = (haloed.groupBy("cell_id", "tile")
+                 .applyInPandas(one_round, schema=schema)
+                 .observe(obs, F.sum("changed").alias("n_changed"))
+                 .localCheckpoint())
+        if not obs.get["n_changed"]:
             break
 
     return state.withColumn(

@@ -642,7 +642,7 @@ def classify_distributed(spark: SparkSession, table: str = "documents",
                                 "cloud_id", "cloud_height_du",
                                 "cloud_base_temp_c",
                                 "cast(null as string) AS text_sha256"))
-        digests = pipeline.text_digests(spark, table)
+        digests = pipeline.text_digests(spark, view)
     return (out.join(ident, ["cell_id", "r", "c"])
             .join(digests, "url")
             .select("url", "cell_id", "r", "c", "fmask_class", "cloud_id",

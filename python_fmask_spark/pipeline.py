@@ -75,11 +75,11 @@ def stage_fingerprint(spark: SparkSession, logic: str) -> str:
     return hashlib.sha256(f"{ident}||{logic}".encode()).hexdigest()[:16]
 
 
-def text_digests(spark: SparkSession, table: str = "documents") -> DataFrame:
+def text_digests(spark: SparkSession, view: str) -> DataFrame:
     """(url, text_sha256) — the byte-identity invariant, computed from
-    the materialized pass-1 stage table (a LogicalRDD leaf), NOT by
-    re-running the threshold/pass2/pass3 tail a second time."""
-    view = materialize_pass1(spark, table)
+    the pass-1 leaf ``view`` (materialize_pass1) the caller already
+    built, NOT by re-running the threshold/pass2/pass3 tail or pass 1
+    a second time."""
     return spark.sql(
         f"SELECT url, sha2(text, 256) AS text_sha256 FROM {view}")
 
@@ -733,7 +733,7 @@ def classify_auto(spark: SparkSession, table: str = "documents",
         pass1_cols=(*_KERNEL_P1_COLS, "cell_rows")))
         .join(F.broadcast(big), "cell_id", "left_semi")
         .localCheckpoint())
-    dig_big = text_digests(spark, table)
+    dig_big = text_digests(spark, view)
     big_out = classify_distributed(spark, table, params,
                                    p3=p3_big, digests=dig_big,
                                    sensor=sensor, s2_offsets=s2_offsets,

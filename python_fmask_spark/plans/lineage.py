@@ -5,27 +5,57 @@ Iceberg in production — same write API) together with a row in the
 ``_lineage`` table:
 
   (run_id, stage, input_fingerprint, rows_out, n_partitions, wall_ms,
-   written_at_ms, per-partition row counts)
+   written_at_ms, per-file row counts)
 
 Resume: a stage whose (stage, input_fingerprint) already has a SUCCESS
 marker is read back instead of recomputed — the reference's
 keepIntermediates temp-file pattern (fmask/fmask.py:206-216) made
 restart-safe.
 
-The per-partition counts double as skew evidence: the bench reports
-max/median partition rows from here.
+A stage barrier costs only its own write. The row counts come from the
+footers of the parquet files the write produced (one file per write
+task that had rows, or a single empty file when none had), the lineage
+row is a parquet file written by pyarrow, and the stage is read back
+with the schema Spark stored in those footers — no re-scan, no
+schema-inference job, no Python-RDD job (the stats-while-writing idea
+of Delta Lake, VLDB 2020). ``n_partitions`` therefore counts written
+files, and ``max_partition_rows``/``median_partition_rows`` are per
+written file: write-side skew evidence, which a read-back would hide by
+merging small files into fewer partitions.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 LINEAGE_DIR = "_lineage"
+# the footer key under which Spark stores a written frame's schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+# column order and types of a Spark-inferred one-row dict frame, so
+# lineage files written before the pyarrow writer read back unchanged
+LINEAGE_SCHEMA = pa.schema([
+    ("input_fingerprint", pa.string()),
+    ("max_partition_rows", pa.int64()),
+    ("median_partition_rows", pa.int64()),
+    ("n_partitions", pa.int64()),
+    ("rows_out", pa.int64()),
+    ("run_id", pa.string()),
+    ("stage", pa.string()),
+    ("wall_ms", pa.int64()),
+    ("written_at_ms", pa.int64()),
+])
+_LINEAGE_DDL = ", ".join(
+    f"{f.name} {'string' if f.type == pa.string() else 'bigint'}"
+    for f in LINEAGE_SCHEMA)
 
 
 class StageRunner:
@@ -49,6 +79,18 @@ class StageRunner:
             meta = json.load(f)
         return meta.get("input_fingerprint") == input_fingerprint
 
+    def _read_back(self, path: str) -> tuple[DataFrame, list[int]]:
+        """The stage table under the schema Spark wrote into its
+        footers (no inference job), plus the row count of every file."""
+        metas = [pq.read_metadata(f)
+                 for f in sorted(glob.glob(os.path.join(path, "part-*")))]
+        if not metas:
+            raise FileNotFoundError(f"stage table {path} has no data files")
+        schema = StructType.fromJson(
+            json.loads(metas[0].metadata[_SPARK_SCHEMA_KEY]))
+        return (self.spark.read.schema(schema).parquet(path),
+                [m.num_rows for m in metas])
+
     def run(self, stage: str, input_fingerprint: str,
             build: "callable[[], DataFrame]") -> DataFrame:
         """Build-or-resume a stage; always returns the stage DataFrame
@@ -56,39 +98,37 @@ class StageRunner:
         the materialization barrier that keeps codegen units small)."""
         path = self._stage_path(stage)
         if self.is_done(stage, input_fingerprint):
-            return self.spark.read.parquet(path)
+            return self._read_back(path)[0]
 
         t0 = time.perf_counter()
-        df = build()
-        df.write.mode("overwrite").parquet(path)
+        build().write.mode("overwrite").parquet(path)
         wall_ms = int((time.perf_counter() - t0) * 1000)
 
-        out = self.spark.read.parquet(path)
-        pstats = (out.groupBy(F.spark_partition_id().alias("pid"))
-                  .count().collect())
-        counts = sorted(int(r["count"]) for r in pstats)
-        rows_out = sum(counts)
+        out, counts = self._read_back(path)
+        counts.sort()
         lineage_row = {
             "run_id": self.run_id,
             "stage": stage,
             "input_fingerprint": input_fingerprint,
-            "rows_out": rows_out,
+            "rows_out": sum(counts),
             "n_partitions": len(counts),
-            "max_partition_rows": counts[-1] if counts else 0,
-            "median_partition_rows":
-                counts[len(counts) // 2] if counts else 0,
+            "max_partition_rows": counts[-1],
+            "median_partition_rows": counts[len(counts) // 2],
             "wall_ms": wall_ms,
             "written_at_ms": int(time.time() * 1000),
         }
-        self.spark.createDataFrame([lineage_row]).write.mode("append") \
-            .parquet(os.path.join(self.workdir, LINEAGE_DIR))
+        pq.write_table(
+            pa.Table.from_pylist([lineage_row], schema=LINEAGE_SCHEMA),
+            os.path.join(self.workdir, LINEAGE_DIR,
+                         f"part-{uuid.uuid4().hex}.parquet"))
         with open(self._marker_path(stage), "w") as f:
             json.dump({"input_fingerprint": input_fingerprint,
                        **lineage_row}, f)
         return out
 
     def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.workdir, LINEAGE_DIR))
+        return self.spark.read.schema(_LINEAGE_DDL).parquet(
+            os.path.join(self.workdir, LINEAGE_DIR))
 
 
 def classify_checkpointed(spark: SparkSession, table: str, workdir: str,

@@ -43,11 +43,13 @@ def class_rat_df(spark: SparkSession) -> DataFrame:
     colors = {c: (r, g, b, a) for c, r, g, b, a in COLOR_TABLE}
     rows = []
     for value, name in enumerate(CLASS_NAMES):
-        r, g, b, a = colors.get(value, (None, None, None, None))
-        rows.append((value, name, r, g, b, a))
-    return spark.createDataFrame(
-        rows, "class_value int, class_name string, red int, green int, "
-              "blue int, alpha int")
+        rgba = colors.get(value, ("NULL",) * 4)
+        rows.append(f"({value}, '{name}', {', '.join(map(str, rgba))})")
+    # a VALUES relation lives in the JVM; a Python list would run a
+    # Python-worker job just to build six rows
+    return spark.sql(
+        f"SELECT * FROM VALUES {', '.join(rows)} "
+        "AS rat(class_value, class_name, red, green, blue, alpha)")
 
 
 def write_mask(df: DataFrame, name: str,

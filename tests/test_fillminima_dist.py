@@ -33,22 +33,36 @@ def _terrain(seed: int, H: int, with_nulls: bool) -> np.ndarray:
     return img
 
 
-@pytest.mark.parametrize("with_nulls,tile_rows,bval",
+@pytest.mark.parametrize("nulls,tile_rows,bval",
                          [(False, 16, 0), (True, 16, 0),
-                          (False, 37, 80), (True, 32, 80)])
-def test_distributed_fill_equals_whole(spark, with_nulls, tile_rows, bval):
+                          (False, 37, 80), (True, 32, 80),
+                          # every pixel nodata: the round must not
+                          # convert the cell's NaN h_max to int
+                          ("all", 16, 0),
+                          # an all-nodata cell beside a normal one
+                          ("one_cell", 16, 80)])
+def test_distributed_fill_equals_whole(spark, nulls, tile_rows, bval):
     H = 96
-    img = _terrain(11, H, with_nulls)
-    rows = [("u%04d" % (r * W + c), "cellF", r, c, int(img[r, c]))
-            for r in range(H) for c in range(W)]
+    if nulls == "all":
+        cells = {"cellF": np.zeros((H, W), dtype=np.int64)}
+    elif nulls == "one_cell":
+        cells = {"cellF": _terrain(11, H, True),
+                 "cellN": np.zeros((H // 2, W), dtype=np.int64)}
+    else:
+        cells = {"cellF": _terrain(11, H, nulls)}
+    rows = [("u%s%04d" % (cell, r * W + c), cell, r, c, int(img[r, c]))
+            for cell, img in cells.items()
+            for r in range(img.shape[0]) for c in range(W)]
     df = spark.createDataFrame(
         pd.DataFrame(rows, columns=["url", "cell_id", "r", "c", "nir"]))
     out = fill_minima_distributed(df, "nir", nullval=0, boundaryval=bval,
                                   tile_rows=tile_rows).collect()
-    want = kernels.fill_minima(img, nullval=0, boundaryval=bval)
-    got = {(r.r, r.c): r.filled for r in out}
-    assert len(got) == H * W
-    bad = [(r, c, got[(r, c)], int(want[r, c]))
-           for r in range(H) for c in range(W)
-           if got[(r, c)] != int(want[r, c])]
+    got = {(r.cell_id, r.r, r.c): r.filled for r in out}
+    assert len(got) == len(rows)
+    bad = []
+    for cell, img in cells.items():
+        want = kernels.fill_minima(img, nullval=0, boundaryval=bval)
+        bad += [(cell, r, c, got[(cell, r, c)], int(want[r, c]))
+                for r in range(img.shape[0]) for c in range(W)
+                if got[(cell, r, c)] != int(want[r, c])]
     assert not bad, f"{len(bad)} mismatches, first: {bad[:5]}"

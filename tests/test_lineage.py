@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 
@@ -34,6 +35,88 @@ def test_stage_runner_resume(spark, sf_small):
         assert {r.stage for r in lin} == {"s1"}
         assert all(r.rows_out == n1 for r in lin)
         assert all(r.max_partition_rows >= r.median_partition_rows for r in lin)
+
+
+def _spark_jobs(spark, group: str, action) -> int:
+    """Number of Spark jobs ``action()`` launches, counted under a job
+    group of its own."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_stage_barrier_costs_only_its_write(spark, sf_small):
+    """A fresh stage launches exactly the jobs of its own write: row
+    counts come from the written footers, the lineage row is written
+    without Spark, and the read-back infers no schema. A resumed stage
+    launches none."""
+    register_views(spark, sf_small)
+
+    def build():
+        return spark.sql("SELECT doc_id, lang FROM documents") \
+            .repartition(3, "lang")
+
+    with tempfile.TemporaryDirectory() as wd:
+        n_write = _spark_jobs(spark, "lin_write", lambda: build().write
+                              .parquet(os.path.join(wd, "plain")))
+        runner = StageRunner(spark, os.path.join(wd, "run"), "j1")
+        assert _spark_jobs(spark, "lin_fresh",
+                           lambda: runner.run("s", "fp", build)) == n_write
+        assert _spark_jobs(spark, "lin_resume",
+                           lambda: runner.run("s", "fp", build)) == 0
+
+
+def test_lineage_reads_earlier_spark_written_rows(spark, sf_small):
+    """A _lineage directory holding a row appended the earlier way (a
+    one-row Spark frame) next to pyarrow-written rows reads back as one
+    table with the earlier column names and types."""
+    register_views(spark, sf_small)
+    with tempfile.TemporaryDirectory() as wd:
+        lin_dir = os.path.join(wd, "_lineage")
+        old_row = {"run_id": "old", "stage": "s0",
+                   "input_fingerprint": "fp0", "rows_out": 7,
+                   "n_partitions": 2, "max_partition_rows": 4,
+                   "median_partition_rows": 4, "wall_ms": 11,
+                   "written_at_ms": 12}
+        spark.createDataFrame([old_row]).write.parquet(lin_dir)
+        old_dtypes = spark.read.parquet(lin_dir).dtypes
+
+        runner = StageRunner(spark, wd, "new")
+        n = runner.run("s1", "fp1", lambda: spark.sql(
+            "SELECT doc_id, lang FROM documents")).count()
+        runner.run("s2", "fp1", lambda: spark.sql(
+            "SELECT lang FROM documents"))
+        lin = runner.lineage()
+        assert lin.dtypes == old_dtypes
+        rows = {r.stage: r for r in lin.collect()}
+        assert set(rows) == {"s0", "s1", "s2"}
+        assert rows["s0"].asDict() == old_row
+        assert rows["s1"].rows_out == rows["s2"].rows_out == n
+        assert rows["s1"].run_id == "new"
+
+
+def test_empty_stage_records_zero_rows(spark, sf_small):
+    register_views(spark, sf_small)
+    with tempfile.TemporaryDirectory() as wd:
+        runner = StageRunner(spark, wd, "e")
+
+        def build():
+            return spark.sql(
+                "SELECT doc_id, lang, n_chars FROM documents WHERE false")
+
+        built = [(f.name, f.dataType) for f in build().schema]
+        for _ in range(2):  # build, then resume
+            out = runner.run("empty", "fp", build)
+            assert [(f.name, f.dataType) for f in out.schema] == built
+            assert out.count() == 0
+        (row,) = runner.lineage().collect()
+        assert row.rows_out == 0
+        assert row.max_partition_rows == row.median_partition_rows == 0
 
 
 def test_classify_checkpointed_resume(spark, sf_small):
