@@ -6,12 +6,16 @@
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+# this checkout's root, wherever it lives
+_ROOT = os.path.dirname(os.path.abspath(__file__))
+_FIXTURES = os.path.join(_ROOT, "tests", "fixtures")
+sys.path.insert(0, _ROOT)
 
 from python_fmask_spark import oracle, pipeline  # noqa: E402
 from python_fmask_spark.dialect import DUCKDB, SPARK  # noqa: E402
@@ -29,7 +33,7 @@ def _s2_fixture_offsets() -> dict[str, int]:
     (fmask/fmask.py:137-149, fmask/cmdline/sentinel2Stacked.py:318-341)."""
     from python_fmask_spark import sen2meta
     meta = sen2meta.Sen2ZipfileMeta.from_file(
-        "/root/repo/tests/fixtures/MTD_MSIL1C_fixture.xml")
+        os.path.join(_FIXTURES, "MTD_MSIL1C_fixture.xml"))
     return sen2meta.make_ref_offset_dict(meta)
 
 
@@ -39,7 +43,7 @@ def _s2_tile_meta():
     the reference's sentinel2makeAnglesImage.py:95-123 path."""
     from python_fmask_spark import sen2meta
     return sen2meta.Sen2TileMeta.from_file(
-        "/root/repo/tests/fixtures/MTD_TL_fixture.xml")
+        os.path.join(_FIXTURES, "MTD_TL_fixture.xml"))
 
 def _mtl_thermal_calib_sql(d: str) -> str:
     """S5/S6 on the driver board. The SPARK rendering's calibration
@@ -55,7 +59,7 @@ def _mtl_thermal_calib_sql(d: str) -> str:
         infos = {}
         for name in ("modern_l7", "oldest_l7", "oldest_l5"):
             t = mtl.thermal_info_from_mtl(
-                mtl.read_mtl_file(f"/root/repo/tests/fixtures/MTL_{name}.txt"))
+                mtl.read_mtl_file(os.path.join(_FIXTURES, f"MTL_{name}.txt")))
             infos[name] = (t.gain, t.offset, t.k1, t.k2)
     else:
         g7 = (17.04 - 0.0) / (255.0 - 1.0)
@@ -992,9 +996,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ordered[name] = out.pop(name)
     ordered.update(out)  # anything not yet listed keeps build order
     return ordered
-
-
-_FIXTURES = "/root/repo/tests/fixtures"
 
 
 def oracle_sql() -> dict[str, str]:

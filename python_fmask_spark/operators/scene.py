@@ -36,7 +36,7 @@ class FmaskParams:
     # --greensnowthreshold (fmask/config.py:354-368; applied
     # fmask/fmask.py:452-453). These change pass 1 itself, so a
     # non-default value materializes its own pass-1 leaf
-    # (pipeline._snow_skey).
+    # (pipeline.Scene.key).
     nir_snow_thresh: float = C.EQN20_NIR_SNOW_THRESH
     green_snow_thresh: float = C.EQN20_GREEN_SNOW_THRESH
 

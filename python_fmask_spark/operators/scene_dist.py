@@ -43,6 +43,7 @@ numbering.
 from __future__ import annotations
 
 import math
+from typing import TYPE_CHECKING
 
 import numpy as np
 import pandas as pd
@@ -55,6 +56,9 @@ from . import kernels
 from .clumps import label_clumps_distributed
 from .fillminima_dist import fill_minima_distributed
 from .scene import FmaskParams
+
+if TYPE_CHECKING:
+    from ..pipeline import Scene
 
 
 def _sweep_bounds(t_base, t_low, t_high, sun_az, sun_zen, sat_az, sat_zen,
@@ -272,8 +276,7 @@ def _match_band_kernel(left: pd.DataFrame, right: pd.DataFrame
 
 def classify_distributed(spark: SparkSession, table: str = "documents",
                          params: FmaskParams | None = None,
-                         p3: DataFrame | None = None,
-                         digests: DataFrame | None = None,
+                         cells: DataFrame | None = None,
                          runner=None,
                          sensor: str = "LANDSAT8",
                          s2_offsets: dict[str, int] | None = None,
@@ -282,9 +285,12 @@ def classify_distributed(spark: SparkSession, table: str = "documents",
     """Full classification with bounded task grains (see module doc).
     Returns the same schema as pipeline.classify.
 
-    ``p3``/``digests`` override the pass-3 derivation and the
-    byte-identity digest side (benchmarks feed a pre-materialized
-    pixel table directly).
+    ``cells`` (a small DataFrame of cell_id) restricts the run to those
+    cells — pipeline.classify's ``cells_mode="semi"`` — before the
+    dist_p3 barrier, so every stage sees only them; classify_auto
+    routes its mega-cells here this way. It cannot be combined with a
+    ``runner``: the stage fingerprint does not cover the cell subset,
+    so a resume would read another run's rows.
 
     ``runner`` (plans.lineage.StageRunner): materialize each stage
     barrier through a fingerprinted stage TABLE instead of
@@ -295,40 +301,38 @@ def classify_distributed(spark: SparkSession, table: str = "documents",
     (tests/test_lineage.py::test_distributed_classify_resumes). The
     reference analogue is its keepIntermediates temp rasters
     (fmask/fmask.py:206-216)."""
-    from .. import pipeline, tiling
+    from .. import pipeline
 
     params = params or FmaskParams()
+    return _classify_distributed(
+        spark, pipeline.Scene(table, sensor, s2_offsets, s2_cdi, tile_meta,
+                              **params.snow_kwargs()),
+        params, cells, runner)
+
+
+def _classify_distributed(spark: SparkSession, scene: Scene,
+                          params: FmaskParams,
+                          cells: DataFrame | None = None,
+                          runner=None) -> DataFrame:
+    from .. import pipeline, tiling
+
+    if cells is not None and runner is not None:
+        raise ValueError(
+            "classify_distributed: cells= cannot be combined with a "
+            "runner (the stage fingerprint does not cover the cell "
+            "subset, so a resume would read another run's rows)")
     ensure_package_on_executors(spark)
-    has_thermal = sensor != "SENTINEL2"
-    external_p3 = p3 is not None
+    has_thermal = scene.sensor != "SENTINEL2"
     # Stage fingerprint folds in EVERYTHING that changes stage results:
     # the FmaskParams fields (min_cloud_size_px/buffers alter dist_flags
-    # and the finalize), the rendered pass-1 SQL (sensor dispatch,
-    # offsets, derive-formula version), and the session's registered
-    # input identity (per-file mtime/size) — so resuming in the same
-    # workdir after changing params or rewriting the table re-runs
-    # instead of silently reusing stale stage tables. An externally
-    # supplied p3 is fingerprinted by its analyzed plan (deterministic
-    # within a session; conservatively re-runs across sessions, which
-    # is correct — the runner cannot validate a caller-built frame).
-    fp = ""
-    if runner is not None:
-        import dataclasses
-
-        fp_logic = [f"{table}:{sensor}:distv3:cdi={s2_cdi}",
-                    repr(dataclasses.astuple(params)),
-                    repr(sorted((s2_offsets or {}).items()))]
-        if external_p3:
-            try:
-                fp_logic.append(
-                    p3._jdf.queryExecution().analyzed().toString())
-            except Exception:
-                fp_logic.append(p3.schema.json())
-        else:
-            fp_logic.append(pipeline.pass1_sql_text(
-                table, sensor=sensor, s2_offsets=s2_offsets,
-                tile_meta=tile_meta))
-        fp = pipeline.stage_fingerprint(spark, "||".join(fp_logic))
+    # and the finalize), the scene key (rendered pass-1 SQL: sensor
+    # dispatch, offsets, snow floors, angle grids, CDI, derive-formula
+    # version), and the session's registered input identity (per-file
+    # mtime/size) — so resuming in the same workdir after changing
+    # params or rewriting the table re-runs instead of silently reusing
+    # stale stage tables.
+    fp = ("" if runner is None else pipeline.stage_fingerprint(
+        spark, f"distv4||{params!r}||{scene.key()}"))
 
     def _mat(stage: str, build):
         """Stage barrier: fingerprinted stage table under a runner,
@@ -339,25 +343,22 @@ def classify_distributed(spark: SparkSession, table: str = "documents",
             return runner.run(stage, fp, build)
         return build().localCheckpoint()
 
-    if p3 is None:
-        view = pipeline.materialize_pass1(spark, table, runner=runner,
-                                          sensor=sensor,
-                                          s2_offsets=s2_offsets,
-                                          s2_cdi=s2_cdi,
-                                          tile_meta=tile_meta,
-                                          **params.snow_kwargs())
-        thr = (None if runner is not None else
-               pipeline.materialize_thresholds(spark, table, sensor=sensor,
-                                               s2_offsets=s2_offsets,
-                                               s2_cdi=s2_cdi,
-                                               tile_meta=tile_meta,
-                                               **params.snow_kwargs()))
-        cols = ", ".join((*pipeline._KERNEL_COLS, "cell_rows"))
-        p3 = _mat("dist_p3", lambda: spark.sql(pipeline.tail_sql_from_pass1(
-            view, "pass3", f"SELECT {cols} FROM pass3", sensor=sensor,
+    view = pipeline._pass1_leaf(spark, scene, runner=runner)
+    thr = (None if runner is not None
+           else pipeline._thresholds_leaf(spark, scene))
+    cols = ", ".join((*pipeline._KERNEL_COLS, "cell_rows"))
+
+    def build_p3() -> DataFrame:
+        p3 = spark.sql(pipeline.tail_sql_from_pass1(
+            view, "pass3", f"SELECT {cols} FROM pass3", sensor=scene.sensor,
             thresholds_view=thr,
             eqn17_cloud_prob_thresh=params.eqn17_cloud_prob_thresh,
-            pass1_cols=(*pipeline._KERNEL_P1_COLS, "cell_rows"))))
+            pass1_cols=(*pipeline._KERNEL_P1_COLS, "cell_rows")))
+        if cells is None:
+            return p3
+        return p3.join(F.broadcast(cells), "cell_id", "left_semi")
+
+    p3 = _mat("dist_p3", build_p3)
 
     # --- stage 1: interim cloud mask, tiled (cloudFinalPass tail)
     raw = p3
@@ -629,21 +630,7 @@ def classify_distributed(spark: SparkSession, table: str = "documents",
         "base_temp_c AS cloud_base_temp_c")
     # identity + digest join back, once, at the very end
     ident = p3.select("url", "cell_id", "r", "c")
-    if digests is None:
-        if external_p3:
-            # p3's urls may be unrelated to `table` (bench/skew feeds a
-            # pre-materialized pixel frame, possibly with no registered
-            # 'documents' view at all): deriving digests from the table
-            # would crash or silently drop rows through the inner url
-            # join below. Emit a NULL digest instead — callers wanting
-            # the byte-identity column pass digests explicitly.
-            return (out.join(ident, ["cell_id", "r", "c"])
-                    .selectExpr("url", "cell_id", "r", "c", "fmask_class",
-                                "cloud_id", "cloud_height_du",
-                                "cloud_base_temp_c",
-                                "cast(null as string) AS text_sha256"))
-        digests = pipeline.text_digests(spark, view)
     return (out.join(ident, ["cell_id", "r", "c"])
-            .join(digests, "url")
+            .join(pipeline.text_digests(spark, view), "url")
             .select("url", "cell_id", "r", "c", "fmask_class", "cloud_id",
                     "cloud_height_du", "cloud_base_temp_c", "text_sha256"))

@@ -14,11 +14,15 @@ all scalar math in whole-stage codegen. Only the genuinely spatial tail
 
 from __future__ import annotations
 
+import hashlib
+import weakref
+from dataclasses import dataclass, replace
+
 from pyspark.sql import DataFrame, SparkSession
 
 from . import derive
 from .dialect import SPARK
-from .operators.scene import SCENE_OUT_SCHEMA, FmaskParams, classify_scene
+from .operators.scene import FmaskParams
 from .session import ensure_package_on_executors
 
 # Columns the scene kernel needs (everything else is pruned before the
@@ -41,35 +45,61 @@ _KERNEL_P1_COLS = ("url", "r", "c", "nir", "snow",
                    "sat_az_cdn", "sat_zen_cdn")
 
 
-def pass1_sql_text(table: str = "documents", sensor: str = "LANDSAT8",
-                   s2_offsets: dict[str, int] | None = None,
-                   tile_meta=None,
-                   nir_snow_thresh: float | None = None,
-                   green_snow_thresh: float | None = None) -> str:
-    """The rendered pass-1 SQL (features + pass1 CTEs). Also serves as
-    the logic component of resumable-stage fingerprints: any change to
-    the derive formulas, sensor dispatch, offsets, or the Eqn-20 snow
-    knobs changes this text and therefore invalidates StageRunner stage
-    tables."""
+@dataclass(frozen=True)
+class Scene:
+    """One scene's identity: the input table, the sensor dispatch, the
+    Sentinel-2 offsets and CDI composition, the tile-XML angle grids
+    and the Eqn-20 snow floors — the engine's counterpart of the
+    reference's per-run config, which doFmask carries through every
+    pass (fmask/fmask.py:96-221). The keyword entry points (classify,
+    classify_auto, classify_distributed, interim_class_kernel,
+    materialize_pass1, materialize_thresholds) each build one and pass
+    it below them."""
+
+    table: str = "documents"
+    sensor: str = "LANDSAT8"
+    s2_offsets: dict[str, int] | None = None
+    s2_cdi: bool = False
+    tile_meta: object = None  # sen2meta.Sen2TileMeta
+    nir_snow_thresh: float | None = None
+    green_snow_thresh: float | None = None
+
+    def key(self) -> str:
+        """Short sha256 naming this scene's pass-1 leaf: the session
+        cache key, the leaf view names and the logic part of every
+        stage fingerprint. The rendered pass-1 SQL already holds the
+        sensor dispatch, the offsets, the snow floors (None and the
+        default float render alike) and the inlined angle-grid VALUES,
+        so two granules never share a leaf; the CDI flag is the one
+        field applied after that SQL."""
+        ident = f"{self.table}|cdi={self.s2_cdi}|{pass1_sql_text(self)}"
+        return hashlib.sha256(ident.encode()).hexdigest()[:16]
+
+
+def pass1_sql_text(scene: Scene = Scene()) -> str:
+    """The rendered pass-1 SQL (features + pass1 CTEs) of ``scene``.
+    Scene.key() hashes it, so any change to the derive formulas, the
+    sensor dispatch, the offsets, the Eqn-20 snow knobs or the angle
+    grids names a new leaf and invalidates StageRunner stage tables."""
     p1_ctes = ",\n".join([
-        derive.features_sql(SPARK, derive.documents_wide_sql(SPARK, table),
-                            tile_meta=tile_meta),
-        derive.pass1_sql(SPARK, sensor=sensor, s2_offsets=s2_offsets,
-                         nir_snow_thresh=nir_snow_thresh,
-                         green_snow_thresh=green_snow_thresh),
+        derive.features_sql(
+            SPARK, derive.documents_wide_sql(SPARK, scene.table),
+            tile_meta=scene.tile_meta),
+        derive.pass1_sql(SPARK, sensor=scene.sensor,
+                         s2_offsets=scene.s2_offsets,
+                         nir_snow_thresh=scene.nir_snow_thresh,
+                         green_snow_thresh=scene.green_snow_thresh),
     ])
     return f"WITH {p1_ctes} SELECT * FROM pass1"
 
 
 def stage_fingerprint(spark: SparkSession, logic: str) -> str:
     """Fingerprint for StageRunner stage tables: sha256 over the logic
-    identity (rendered SQL / params repr) PLUS the session's registered
+    identity (Scene.key() / params repr) PLUS the session's registered
     input identity (sources.registered_input_identity — sf_dir +
     per-file mtime/size). Resuming in the same workdir after either the
     logic or the input data changed re-runs the stage instead of
     silently reusing a stale table."""
-    import hashlib
-
     from .sources import registered_input_identity
     ident = registered_input_identity(spark)
     return hashlib.sha256(f"{ident}||{logic}".encode()).hexdigest()[:16]
@@ -84,63 +114,27 @@ def text_digests(spark: SparkSession, view: str) -> DataFrame:
         f"SELECT url, sha2(text, 256) AS text_sha256 FROM {view}")
 
 
-def pass3_sql(table: str = "documents") -> str:
-    ctes = ",\n".join([
-        derive.features_sql(SPARK, derive.documents_wide_sql(SPARK, table)),
-        derive.pass1_sql(SPARK),
-        derive.thresholds_sql(SPARK),
-        derive.pass2_sql(SPARK),
-        derive.pass3_sql(SPARK),
-    ])
-    cols = ", ".join(_KERNEL_COLS)
-    return f"WITH {ctes} SELECT {cols} FROM pass3"
-
-
-# session -> {table: materialized view name}. The pass-1 stage table
-# is immutable for a given registered input, so every query in a session
+# session -> the pass-1 / thresholds leaf views it has materialized.
+# A leaf is named by its Scene.key(), and the pass-1 stage table is
+# immutable for a given registered input, so every query in a session
 # shares ONE materialization (the reference's temp-raster reuse,
 # fmask/fmask.py:206-216); sources.register_views invalidates it when
 # the underlying input changes (including a rewrite of the parquet files
 # at the same path — the register identity folds in file mtimes/sizes).
 # WeakKeyDictionary on the session object: id(spark) integers can be
 # recycled after a session is garbage-collected.
-import weakref
-
-_PASS1_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, str]]" =     weakref.WeakKeyDictionary()
+_PASS1_CACHE: "weakref.WeakKeyDictionary[SparkSession, set[str]]" = \
+    weakref.WeakKeyDictionary()
 
 
 def invalidate_pass1_cache(spark: SparkSession) -> None:
     """Drop this session's materialized pass-1 views (called when the
     registered input tables change underneath them)."""
-    for view in _PASS1_CACHE.pop(spark, {}).values():
+    for view in _PASS1_CACHE.pop(spark, set()):
         try:
             spark.catalog.dropTempView(view)
         except Exception:
             pass
-
-
-def _snow_skey(nir_snow_thresh: float | None,
-               green_snow_thresh: float | None) -> str:
-    """Cache-key/view-name suffix for non-default Eqn-20 snow knobs: a
-    knobbed pass-1 leaf must never alias the default one (the snow
-    column differs row-by-row)."""
-    if nir_snow_thresh is None and green_snow_thresh is None:
-        return ""
-    tag = f"_snow{nir_snow_thresh}x{green_snow_thresh}"
-    return (tag.replace(".", "p").replace("-", "m")
-            .replace("+", "e").replace("None", "d"))
-
-
-def _offs_skey(s2_offsets: dict[str, int] | None) -> str:
-    """Cache-key/view-name suffix for non-zero Sentinel-2 radiometric
-    offsets: a leaf built with product-XML offsets must never alias the
-    zero-offset leaf (every reflectance differs row-by-row). Empty for
-    None/all-zero so the existing zero-offset view names are stable."""
-    if not s2_offsets or not any(s2_offsets.values()):
-        return ""
-    import hashlib
-    key = ",".join(f"{k}={s2_offsets[k]}" for k in sorted(s2_offsets))
-    return "_off" + hashlib.sha256(key.encode()).hexdigest()[:8]
 
 
 def materialize_pass1(spark: SparkSession, table: str = "documents",
@@ -173,70 +167,67 @@ def materialize_pass1(spark: SparkSession, table: str = "documents",
     survives restarts and makes classify resumable mid-pipeline). Both
     forms register the same leaf view name, so every downstream plan is
     identical either way."""
-    skey = sensor + ("_cdi" if s2_cdi else "") \
-        + ("_grid" if tile_meta is not None else "") \
-        + _offs_skey(s2_offsets) \
-        + _snow_skey(nir_snow_thresh, green_snow_thresh)
-    suffix = "" if skey == "LANDSAT8" else f"_{skey.lower()}"
-    view = f"_pass1_mat_{table}{suffix}"
-    cache = _PASS1_CACHE.setdefault(spark, {})
-    if reuse and runner is None and cache.get((table, skey)) == view \
+    return _pass1_leaf(spark, Scene(table, sensor, s2_offsets, s2_cdi,
+                                    tile_meta, nir_snow_thresh,
+                                    green_snow_thresh), reuse, runner)
+
+
+def _pass1_leaf(spark: SparkSession, scene: Scene, reuse: bool = True,
+                runner=None) -> str:
+    key = scene.key()
+    view = f"_pass1_mat_{key}"
+    cache = _PASS1_CACHE.setdefault(spark, set())
+    if reuse and runner is None and view in cache \
             and spark.catalog.tableExists(view):
         return view
-    if s2_cdi:
-        # The reference applies the CDI displacement test INSIDE pass 1
-        # when setSen2displacementTest is on (fmask/fmask.py:395-412):
-        # pcp becomes the CDI-filtered PCP and everything downstream
-        # (clear_land, the thresholds histograms, pass 2/3) consumes
-        # it. Build the raw S2 pass-1 leaf, run the per-cell CDI kernel
-        # over it, and replace pcp + its one dependent column.
-        from pyspark.sql import functions as F
 
-        from .sen2meta import require_s2_offsets
-        if sensor != "SENTINEL2":
-            raise ValueError("s2_cdi requires sensor='SENTINEL2' "
-                             "(fmask/config.py:388-394)")
-        offs = require_s2_offsets(s2_offsets)
-        ensure_package_on_executors(spark)
-        raw_view = materialize_pass1(spark, table, reuse=reuse,
-                                     sensor=sensor, s2_offsets=s2_offsets,
-                                     tile_meta=tile_meta,
-                                     nir_snow_thresh=nir_snow_thresh,
-                                     green_snow_thresh=green_snow_thresh)
-        kout = (spark.sql(
-            f"SELECT {_cdi_src_select(offs)} FROM {raw_view}")
-            .groupBy("cell_id").applyInPandas(
-                _cdi_kernel, schema=_CDI_OUT_SCHEMA)
-            .select("cell_id", "r", "c",
-                    F.expr("cast(pcp_final as boolean) AS _pcp_cdi")))
-        mod = (spark.table(raw_view)
-               .join(kout, ["cell_id", "r", "c"])
-               .withColumn("pcp", F.col("_pcp_cdi"))
-               .withColumn("clear_land", F.expr(
-                   "NOT nullmask AND NOT pcp AND NOT water_test"))
-               .drop("_pcp_cdi"))
-        mod.localCheckpoint().createOrReplaceTempView(view)
-        cache[(table, skey)] = view
-        return view
-    sql = pass1_sql_text(table, sensor=sensor, s2_offsets=s2_offsets,
-                         tile_meta=tile_meta,
-                         nir_snow_thresh=nir_snow_thresh,
-                         green_snow_thresh=green_snow_thresh)
+    def build() -> DataFrame:
+        if scene.s2_cdi:
+            return _cdi_pass1(spark, scene, reuse)
+        return spark.sql(pass1_sql_text(scene))
+
     if runner is not None:
-        fp = stage_fingerprint(spark, f"{table}:{sql}")
-        p1 = runner.run("pass1", fp, lambda: spark.sql(sql))
-        p1.createOrReplaceTempView(view)
+        p1 = runner.run("pass1", stage_fingerprint(spark, key), build)
         # do NOT keep the session reuse cache pointing at this view: the
         # stage table lives in the runner's workdir, whose lifetime the
         # session does not control — a later cache hit would read a
         # deleted parquet. Evicting forces the next plain call to
         # rebuild its own localCheckpoint leaf.
-        cache.pop((table, skey), None)
-        return view
-    p1 = spark.sql(sql).localCheckpoint()
+        cache.discard(view)
+    else:
+        p1 = build().localCheckpoint()
+        cache.add(view)
     p1.createOrReplaceTempView(view)
-    cache[(table, skey)] = view
     return view
+
+
+def _cdi_pass1(spark: SparkSession, scene: Scene, reuse: bool) -> DataFrame:
+    """The reference applies the CDI displacement test INSIDE pass 1
+    when setSen2displacementTest is on (fmask/fmask.py:395-412): pcp
+    becomes the CDI-filtered PCP and everything downstream (clear_land,
+    the thresholds histograms, pass 2/3) consumes it. Build the raw S2
+    pass-1 leaf, run the per-cell CDI kernel over it, and replace pcp +
+    its one dependent column."""
+    from pyspark.sql import functions as F
+
+    from .sen2meta import require_s2_offsets
+    if scene.sensor != "SENTINEL2":
+        raise ValueError("s2_cdi requires sensor='SENTINEL2' "
+                         "(fmask/config.py:388-394)")
+    offs = require_s2_offsets(scene.s2_offsets)
+    ensure_package_on_executors(spark)
+    raw_view = _pass1_leaf(spark, replace(scene, s2_cdi=False), reuse)
+    kout = (spark.sql(f"SELECT {_cdi_src_select(offs)} FROM {raw_view}")
+            .groupBy("cell_id").applyInPandas(
+                _cdi_kernel, schema=_CDI_OUT_SCHEMA)
+            .select("cell_id", "r", "c",
+                    F.expr("cast(pcp_final as boolean) AS _pcp_cdi")))
+    return (spark.table(raw_view)
+            .join(kout, ["cell_id", "r", "c"])
+            .withColumn("pcp", F.col("_pcp_cdi"))
+            .withColumn("clear_land", F.expr(
+                "NOT nullmask AND NOT pcp AND NOT water_test"))
+            .drop("_pcp_cdi"))
 
 
 # pass-1 columns the pass-2/pass-3 CTE formulas themselves consume
@@ -306,48 +297,30 @@ def materialize_thresholds(spark: SparkSession, table: str = "documents",
     behind a leaf view, session-cached like pass 1. Every tail consumer
     (pass2/pass3/dims) then references a leaf instead of re-analyzing
     the 6-window-function thresholds CTE."""
-    skey = sensor + ("_cdi" if s2_cdi else "") \
-        + ("_grid" if tile_meta is not None else "") \
-        + _offs_skey(s2_offsets) \
-        + _snow_skey(nir_snow_thresh, green_snow_thresh)
-    suffix = "" if skey == "LANDSAT8" else f"_{skey.lower()}"
-    view = f"_thr_mat_{table}{suffix}"
-    cache = _PASS1_CACHE.setdefault(spark, {})
-    key = ("thr", table, skey)
-    if cache.get(key) == view and spark.catalog.tableExists(view):
+    return _thresholds_leaf(spark, Scene(table, sensor, s2_offsets, s2_cdi,
+                                         tile_meta, nir_snow_thresh,
+                                         green_snow_thresh))
+
+
+def _thresholds_leaf(spark: SparkSession, scene: Scene) -> str:
+    view = f"_thr_mat_{scene.key()}"
+    cache = _PASS1_CACHE.setdefault(spark, set())
+    if view in cache and spark.catalog.tableExists(view):
         return view
-    p1view = materialize_pass1(spark, table, sensor=sensor,
-                               s2_offsets=s2_offsets, s2_cdi=s2_cdi,
-                               tile_meta=tile_meta,
-                               nir_snow_thresh=nir_snow_thresh,
-                               green_snow_thresh=green_snow_thresh)
-    sql = (f"WITH pass1 AS (SELECT * FROM {p1view}), "
-           f"{derive.thresholds_sql(SPARK, sensor=sensor)} "
+    sql = (f"WITH pass1 AS (SELECT * FROM {_pass1_leaf(spark, scene)}), "
+           f"{derive.thresholds_sql(SPARK, sensor=scene.sensor)} "
            f"SELECT * FROM thresholds")
     spark.sql(sql).localCheckpoint().createOrReplaceTempView(view)
-    cache[key] = view
+    cache.add(view)
     return view
 
 
-def pass3_df(spark: SparkSession, table: str = "documents",
-             sensor: str = "LANDSAT8",
-             s2_offsets: dict[str, int] | None = None,
-             s2_cdi: bool = False,
-             eqn17_cloud_prob_thresh: float | None = None,
-             nir_snow_thresh: float | None = None,
-             green_snow_thresh: float | None = None) -> DataFrame:
-    view = materialize_pass1(spark, table, sensor=sensor,
-                             s2_offsets=s2_offsets, s2_cdi=s2_cdi,
-                             nir_snow_thresh=nir_snow_thresh,
-                             green_snow_thresh=green_snow_thresh)
-    thr = materialize_thresholds(spark, table, sensor=sensor,
-                                 s2_offsets=s2_offsets, s2_cdi=s2_cdi,
-                                 nir_snow_thresh=nir_snow_thresh,
-                                 green_snow_thresh=green_snow_thresh)
+def pass3_df(spark: SparkSession, scene: Scene,
+             eqn17_cloud_prob_thresh: float | None = None) -> DataFrame:
     cols = ", ".join(_KERNEL_COLS)
     return spark.sql(tail_sql_from_pass1(
-        view, "pass3", f"SELECT {cols} FROM pass3", sensor=sensor,
-        thresholds_view=thr,
+        _pass1_leaf(spark, scene), "pass3", f"SELECT {cols} FROM pass3",
+        sensor=scene.sensor, thresholds_view=_thresholds_leaf(spark, scene),
         eqn17_cloud_prob_thresh=eqn17_cloud_prob_thresh,
         pass1_cols=_KERNEL_P1_COLS))
 
@@ -374,6 +347,7 @@ def interim_class_kernel(spark: SparkSession, table: str = "documents",
     from .operators import kernels
 
     params = params or FmaskParams()
+    scene = Scene(table, sensor, s2_offsets, s2_cdi, **params.snow_kwargs())
     # persist: with_halo explodes its input — without a materialization
     # point Spark recomputes the whole pass-1..3 derivation per consumer.
     # (r6 A/B KEPT this: dropping the checkpoint looked like "one fewer
@@ -381,11 +355,7 @@ def interim_class_kernel(spark: SparkSession, table: str = "documents",
     # stage then carries the whole pass-2/3 tail + dim broadcasts above
     # a Generate, defeating stage fusion; the narrow 8-column
     # checkpoint is the faster shape on repeat calls.)
-    p3 = pass3_df(spark, table, sensor=sensor, s2_offsets=s2_offsets,
-                  s2_cdi=s2_cdi,
-                  eqn17_cloud_prob_thresh=params.eqn17_cloud_prob_thresh,
-                  **params.snow_kwargs()
-                  ).select(
+    p3 = pass3_df(spark, scene, params.eqn17_cloud_prob_thresh).select(
         "url", "cell_id", "r", "c", "nullmask",
         "water_test", "snow", "cloud_raw").localCheckpoint()
 
@@ -416,13 +386,10 @@ def interim_class_kernel(spark: SparkSession, table: str = "documents",
             when snow then {4}
             when water_test then {5}
             else {1} end as int)""").alias("fmask_class"))
-    # same snow knobs -> reuses the leaf p3 already materialized
-    view = materialize_pass1(spark, table, sensor=sensor,
-                             s2_offsets=s2_offsets, s2_cdi=s2_cdi,
-                             **params.snow_kwargs())
+    # same scene -> reuses the leaf p3 already materialized
     ident = spark.sql(
         f"""SELECT cell_id, r, c, url, sha2(text, 256) AS text_sha256
-            FROM {view}""")
+            FROM {_pass1_leaf(spark, scene)}""")
     return (out.join(ident, ["cell_id", "r", "c"])
             .select("url", "cell_id", "r", "c", "cloud_raw", "cloud_m",
                     "clouddil", "nullmask", "water_test", "snow",
@@ -530,14 +497,8 @@ def s2_cdi_pcp(spark: SparkSession, table: str = "documents",
         _cdi_kernel, schema=_CDI_OUT_SCHEMA)
 
 
-def scene_exchange(spark: SparkSession, table: str = "documents",
-                   sensor: str = "LANDSAT8",
-                   s2_offsets: dict[str, int] | None = None,
-                   s2_cdi: bool = False,
-                   eqn17_cloud_prob_thresh: float | None = None,
-                   tile_meta=None,
-                   nir_snow_thresh: float | None = None,
-                   green_snow_thresh: float | None = None
+def scene_exchange(spark: SparkSession, scene: Scene,
+                   eqn17_cloud_prob_thresh: float | None = None
                    ) -> tuple[DataFrame, DataFrame]:
     """The slim scene-kernel exchange: (pixel frame, per-cell dim frame).
 
@@ -549,19 +510,11 @@ def scene_exchange(spark: SparkSession, table: str = "documents",
     over the pass-1 leaf (both map-side-combine JVM aggregates)."""
     from .operators.scene import DIM_COLS, PX_EXCHANGE_SQL
 
-    view = materialize_pass1(spark, table, sensor=sensor,
-                             s2_offsets=s2_offsets, s2_cdi=s2_cdi,
-                             tile_meta=tile_meta,
-                             nir_snow_thresh=nir_snow_thresh,
-                             green_snow_thresh=green_snow_thresh)
-    thr = materialize_thresholds(spark, table, sensor=sensor,
-                                 s2_offsets=s2_offsets, s2_cdi=s2_cdi,
-                                 tile_meta=tile_meta,
-                                 nir_snow_thresh=nir_snow_thresh,
-                                 green_snow_thresh=green_snow_thresh)
+    view = _pass1_leaf(spark, scene)
+    thr = _thresholds_leaf(spark, scene)
     px = spark.sql(tail_sql_from_pass1(
         view, "pass3", f"SELECT {PX_EXCHANGE_SQL} FROM pass3",
-        sensor=sensor, thresholds_view=thr,
+        sensor=scene.sensor, thresholds_view=thr,
         eqn17_cloud_prob_thresh=eqn17_cloud_prob_thresh,
         pass1_cols=("r", "c", "nir", "snow",
                     "sat_az_cdn", "sat_zen_cdn")))
@@ -579,7 +532,7 @@ def scene_exchange(spark: SparkSession, table: str = "documents",
             JOIN (SELECT cell_id, {ang}
                   FROM pass1 GROUP BY cell_id) a
               ON a.cell_id = t.cell_id""",
-        sensor=sensor, thresholds_view=thr))
+        sensor=scene.sensor, thresholds_view=thr))
     return px, dims
 
 
@@ -607,22 +560,24 @@ def classify(spark: SparkSession, table: str = "documents",
     rides the groupBy sort that was measured spilling 8.3 GB at 40.96M
     rows with the full-width row. The digest side reads the pass-1
     leaf, so the threshold/pass2/pass3 tail never re-derives text."""
-    from .operators.scene import SCENE_OUT_SCHEMA_SLIM, scene_cogroup_kernel
+    params = params or FmaskParams()
+    return _classify(spark, Scene(table, sensor, s2_offsets, s2_cdi,
+                                  tile_meta, **params.snow_kwargs()),
+                     params, cells, cells_mode)
 
+
+def _classify(spark: SparkSession, scene: Scene, params: FmaskParams,
+              cells: DataFrame | None = None,
+              cells_mode: str = "semi") -> DataFrame:
     from pyspark.sql import functions as F
 
-    params = params or FmaskParams()
+    from .operators.scene import SCENE_OUT_SCHEMA_SLIM, scene_cogroup_kernel
+
     ensure_package_on_executors(spark)
-    px, dims = scene_exchange(
-        spark, table, sensor=sensor, s2_offsets=s2_offsets, s2_cdi=s2_cdi,
-        eqn17_cloud_prob_thresh=params.eqn17_cloud_prob_thresh,
-        tile_meta=tile_meta, **params.snow_kwargs())
-    view = materialize_pass1(spark, table, sensor=sensor,
-                             s2_offsets=s2_offsets, s2_cdi=s2_cdi,
-                             tile_meta=tile_meta, **params.snow_kwargs())
+    px, dims = scene_exchange(spark, scene, params.eqn17_cloud_prob_thresh)
     ident = spark.sql(
         f"""SELECT cell_id, r, c, url, sha2(text, 256) AS text_sha256
-            FROM {view}""")
+            FROM {_pass1_leaf(spark, scene)}""")
     if cells is not None:
         how = "left_semi" if cells_mode == "semi" else "left_anti"
         px = px.join(F.broadcast(cells), "cell_id", how)
@@ -632,7 +587,7 @@ def classify(spark: SparkSession, table: str = "documents",
            .cogroup(dims.groupBy("cell_id"))
            .applyInPandas(
                scene_cogroup_kernel(
-                   params, has_thermal=(sensor != "SENTINEL2")),
+                   params, has_thermal=(scene.sensor != "SENTINEL2")),
                schema=SCENE_OUT_SCHEMA_SLIM))
     return (out.join(ident, ["cell_id", "r", "c"])
             .select("url", "cell_id", "r", "c", "fmask_class", "cloud_id",
@@ -642,8 +597,6 @@ def classify(spark: SparkSession, table: str = "documents",
 def classify_auto(spark: SparkSession, table: str = "documents",
                   params: FmaskParams | None = None,
                   row_threshold: int = 2_000_000,
-                  p3: DataFrame | None = None,
-                  digests: DataFrame | None = None,
                   sensor: str = "LANDSAT8",
                   s2_offsets: dict[str, int] | None = None,
                   tile_meta=None,
@@ -662,80 +615,32 @@ def classify_auto(spark: SparkSession, table: str = "documents",
     crossover: a 2M-row cell's kernel working set is ~300 MB of NumPy
     slabs (10 H x 8 arrays + the Arrow frame), safely inside a
     multi-task executor heap, while 10x that risks per-task OOM — and
-    scripts/bench_skew_scene.py (round 3) measured the distributed
-    max task staying bounded (~11 s) at 4M-row cells while the
-    whole-cell task grows linearly. The routing decision reads per-cell
-    counts from the materialized pass-1 leaf (one map-side-combine
-    aggregate); only the mega-cell ID LIST reaches the driver — small
-    by construction (a cell is routed distributed precisely because it
-    is rare and huge). Both paths produce bit-identical output
-    (tests/test_scene_dist.py), so the union is exact."""
+    round 3 measured the distributed max task staying bounded (~11 s)
+    at 4M-row cells while the whole-cell task grows linearly
+    (BENCH/BASELINE.md, "Skew + dispatch evidence"). The routing
+    decision reads per-cell counts from the materialized pass-1 leaf
+    (one map-side-combine aggregate); only the mega-cell ID LIST
+    reaches the driver — small by construction (a cell is routed
+    distributed precisely because it is rare and huge). Both halves
+    share the scene's pass-1 and thresholds leaves: classify excludes
+    the mega-cells (``cells_mode="anti"``) and classify_distributed
+    keeps only them (``cells=``). Both paths produce bit-identical
+    output (tests/test_scene_dist.py), so the union is exact."""
     from pyspark.sql import functions as F
 
-    from .operators.scene import SCENE_OUT_SCHEMA, classify_scene
-    from .operators.scene_dist import classify_distributed
+    from .operators.scene_dist import _classify_distributed
 
     params = params or FmaskParams()
-    if p3 is not None:
-        # pre-materialized pixel-table path (benchmarks / skew tests):
-        # count per cell on p3 itself and dispatch the same way
-        big_cells = (p3.groupBy("cell_id").count()
-                     .filter(F.col("count") >= row_threshold)
-                     .select("cell_id"))
-        if big_cells.count() == 0:
-            out = p3.groupBy("cell_id").applyInPandas(
-                lambda pdf: classify_scene(pdf, params),
-                schema=SCENE_OUT_SCHEMA)
-            return out.join(digests, "url") if digests is not None else out
-        big = big_cells.localCheckpoint()
-        p3_small = p3.join(F.broadcast(big), "cell_id", "left_anti")
-        small_out = p3_small.groupBy("cell_id").applyInPandas(
-            lambda pdf: classify_scene(pdf, params),
-            schema=SCENE_OUT_SCHEMA)
-        if digests is not None:
-            small_out = small_out.join(digests, "url")
-        p3_big = p3.join(F.broadcast(big), "cell_id", "left_semi") \
-            .localCheckpoint()
-        big_out = classify_distributed(spark, table, params,
-                                       p3=p3_big, digests=digests,
-                                       sensor=sensor,
-                                       s2_offsets=s2_offsets)
-        return small_out.unionByName(big_out.select(*small_out.columns))
-
-    view = materialize_pass1(spark, table, sensor=sensor,
-                             s2_offsets=s2_offsets, s2_cdi=s2_cdi,
-                             tile_meta=tile_meta,
-                             **params.snow_kwargs())
-    big_cells = (spark.table(view).groupBy("cell_id").count()
+    scene = Scene(table, sensor, s2_offsets, s2_cdi, tile_meta,
+                  **params.snow_kwargs())
+    big_cells = (spark.table(_pass1_leaf(spark, scene))
+                 .groupBy("cell_id").count()
                  .filter(F.col("count") >= row_threshold)
                  .select("cell_id"))
-    n_big = big_cells.count()
-    if n_big == 0:
-        return classify(spark, table, params, sensor=sensor,
-                        s2_offsets=s2_offsets, s2_cdi=s2_cdi,
-                        tile_meta=tile_meta)
+    if big_cells.count() == 0:
+        return _classify(spark, scene, params)
     big = big_cells.localCheckpoint()
-
-    small_out = classify(spark, table, params, cells=big,
-                         cells_mode="anti", sensor=sensor,
-                         s2_offsets=s2_offsets, s2_cdi=s2_cdi,
-                         tile_meta=tile_meta)
-
-    thr = materialize_thresholds(spark, table, sensor=sensor,
-                                 s2_offsets=s2_offsets, s2_cdi=s2_cdi,
-                                 tile_meta=tile_meta,
-                                 **params.snow_kwargs())
-    cols = ", ".join((*_KERNEL_COLS, "cell_rows"))
-    p3_big = (spark.sql(tail_sql_from_pass1(
-        view, "pass3", f"SELECT {cols} FROM pass3", sensor=sensor,
-        thresholds_view=thr,
-        eqn17_cloud_prob_thresh=params.eqn17_cloud_prob_thresh,
-        pass1_cols=(*_KERNEL_P1_COLS, "cell_rows")))
-        .join(F.broadcast(big), "cell_id", "left_semi")
-        .localCheckpoint())
-    dig_big = text_digests(spark, view)
-    big_out = classify_distributed(spark, table, params,
-                                   p3=p3_big, digests=dig_big,
-                                   sensor=sensor, s2_offsets=s2_offsets,
-                                   tile_meta=tile_meta, s2_cdi=s2_cdi)
+    small_out = _classify(spark, scene, params, cells=big,
+                          cells_mode="anti")
+    big_out = _classify_distributed(spark, scene, params, cells=big)
     return small_out.unionByName(big_out.select(*small_out.columns))

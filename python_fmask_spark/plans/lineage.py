@@ -130,53 +130,3 @@ class StageRunner:
         return self.spark.read.schema(_LINEAGE_DDL).parquet(
             os.path.join(self.workdir, LINEAGE_DIR))
 
-
-def classify_checkpointed(spark: SparkSession, table: str, workdir: str,
-                          run_id: str = "run1") -> DataFrame:
-    """Checkpoint-resumable classify with the SAME plan shape as
-    pipeline.classify: pass 1, the slim bit-packed pixel frame, the
-    per-cell dim frame, and the identity/digest dim each materialize as
-    fingerprinted stage tables with lineage; the cogrouped scene kernel
-    runs over the staged leaves and a restart skips completed stages."""
-    from .. import pipeline
-    from ..operators.scene import (DIM_COLS, PX_EXCHANGE_SQL,
-                                   SCENE_OUT_SCHEMA_SLIM,
-                                   scene_cogroup_kernel)
-    from ..operators.scene import FmaskParams
-
-    runner = StageRunner(spark, workdir, run_id)
-    fp = f"{table}:v2-slim"
-
-    view = pipeline.materialize_pass1(spark, table, runner=runner)
-
-    px = runner.run("px", fp, lambda: spark.sql(
-        pipeline.tail_sql_from_pass1(
-            view, "pass3", f"SELECT {PX_EXCHANGE_SQL} FROM pass3")))
-    ang = ", ".join(f"first({k}) AS {k}" for k in DIM_COLS[3:])
-    dims = runner.run("dims", fp, lambda: spark.sql(
-        pipeline.tail_sql_from_pass1(
-            view, "thresholds",
-            f"""SELECT t.cell_id,
-                  cast(t.tlow as double) AS g_tlow,
-                  cast(t.thigh as double) AS g_thigh,
-                  t.b4_17 AS g_b4_17,
-                  a.sun_az, a.sun_zen, a.sat_az, a.sat_zen
-                FROM thresholds t
-                JOIN (SELECT cell_id, {ang}
-                      FROM pass1 GROUP BY cell_id) a
-                  ON a.cell_id = t.cell_id""")))
-    ident = runner.run("ident", fp, lambda: spark.sql(
-        f"""SELECT cell_id, r, c, url, sha2(text, 256) AS text_sha256
-            FROM {view}"""))
-
-    def build_final() -> DataFrame:
-        out = (px.groupBy("cell_id")
-               .cogroup(dims.groupBy("cell_id"))
-               .applyInPandas(scene_cogroup_kernel(FmaskParams()),
-                              schema=SCENE_OUT_SCHEMA_SLIM))
-        return (out.join(ident, ["cell_id", "r", "c"])
-                .select("url", "cell_id", "r", "c", "fmask_class",
-                        "cloud_id", "cloud_height_du",
-                        "cloud_base_temp_c", "text_sha256"))
-
-    return runner.run("final_class", fp + ":px", build_final)

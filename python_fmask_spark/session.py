@@ -111,8 +111,8 @@ def get_spark(
             "SPARK_GRAFT_EXECUTOR_MEM_MB",
             str(min(max(worker_mb - 1024, 1024), 6144))))
         builder = builder.config("spark.executor.memory", f"{exec_mb}m")
-    # Stage-level evidence for scaling runs (parsed by
-    # scripts/stage_metrics.py): shuffle bytes, spill, GC per stage.
+    # Stage-level evidence (parsed by perfbench/eventlog.py): shuffle
+    # bytes, spill, GC per stage.
     ev_dir = os.environ.get("SPARK_GRAFT_EVENTLOG")
     if ev_dir:
         os.makedirs(ev_dir, exist_ok=True)

@@ -61,13 +61,7 @@ def get_cmdargs(argv=None):
     p.add_argument("-e", "--tempdir", default="",
                    help="Stage-table workdir: distributed stages become "
                         "fingerprinted, crash-resumable parquet tables "
-                        "(the reference's tempdir/keepintermediates). "
-                        "Known gap: with --parallaxtest the CDI-"
-                        "modified pass-1 frame itself is rebuilt on "
-                        "resume (only the post-pass-1 stages are "
-                        "staged); correctness is unaffected — the cdi "
-                        "token in the stage fingerprint prevents stale "
-                        "aliasing")
+                        "(the reference's tempdir/keepintermediates)")
     p.add_argument("-v", "--verbose", action="store_true",
                    help="Print per-stage progress to stderr")
     p.add_argument("--granule-xml", default="",

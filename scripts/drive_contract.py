@@ -12,7 +12,9 @@ import os
 import sys
 
 spec = importlib.util.spec_from_file_location(
-    "__spark_entry__", "/root/repo/__spark_entry__.py")
+    "__spark_entry__",
+    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                 "__spark_entry__.py"))
 mod = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(mod)
 

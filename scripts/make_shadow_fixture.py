@@ -27,8 +27,10 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/scripts")
+SCRIPTS = os.path.dirname(os.path.abspath(__file__))
+ROOT = os.path.dirname(SCRIPTS)
+sys.path.insert(0, ROOT)
+sys.path.insert(0, SCRIPTS)
 
 from python_fmask_spark import constants as C  # noqa: E402
 from python_fmask_spark import oracle  # noqa: E402
@@ -37,7 +39,8 @@ from python_fmask_spark.operators import kernels  # noqa: E402
 from python_fmask_spark.operators.scene import FmaskParams, classify_scene  # noqa: E402
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-OUT_DIR = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/tests/fixtures"
+OUT_DIR = (sys.argv[2] if len(sys.argv) > 2
+           else os.path.join(ROOT, "tests", "fixtures"))
 
 KERNEL_COLS = ("url, cell_id, r, c, sha256(text) AS text_sha256, nir, bt, "
                "nullmask, water_test, snow, cloud_raw, "
@@ -162,7 +165,7 @@ def main() -> None:
     # provably sensitive to the XML grid values themselves.
     from python_fmask_spark import sen2meta
     tmeta = sen2meta.Sen2TileMeta.from_file(
-        "/root/repo/tests/fixtures/MTD_TL_fixture.xml")
+        os.path.join(ROOT, "tests", "fixtures", "MTD_TL_fixture.xml"))
     p3grid = pass3_duckdb(con, sensor="SENTINEL2", tile_meta=tmeta,
                           extra_cols=", sun_az_cdn, sun_zen_cdn")
     grid_parts = []

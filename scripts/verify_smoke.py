@@ -1,7 +1,7 @@
 """Verify-skill smoke: drive the driver contract from a fresh process.
 
 Run from any cwd (catches sys.path assumptions):
-    cd /tmp && python /root/repo/scripts/verify_smoke.py [query ...]
+    cd /tmp && python <checkout>/scripts/verify_smoke.py [query ...]
 """
 
 import importlib.util
@@ -9,7 +9,9 @@ import os
 import sys
 
 spec = importlib.util.spec_from_file_location(
-    "__spark_entry__", "/root/repo/__spark_entry__.py")
+    "__spark_entry__",
+    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                 "__spark_entry__.py"))
 mod = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(mod)
 

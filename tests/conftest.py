@@ -1,10 +1,12 @@
 from __future__ import annotations
 
+import pathlib
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout these tests belong to, wherever it lives
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 from python_fmask_spark.session import get_spark  # noqa: E402
 

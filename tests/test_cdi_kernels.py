@@ -3,13 +3,9 @@
 
 from __future__ import annotations
 
-import sys
-
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
-
-from python_fmask_spark.operators import kernels  # noqa: E402
+from python_fmask_spark.operators import kernels
 
 
 def test_box_mean_constant():

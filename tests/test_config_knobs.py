@@ -4,17 +4,18 @@ cloud-probability threshold knob and the strictFmask preset."""
 from __future__ import annotations
 
 import os
+import pathlib
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+from python_fmask_spark import constants as C
+from python_fmask_spark import oracle, pipeline
+from python_fmask_spark.dialect import DUCKDB, SPARK
+from python_fmask_spark.operators.scene import FmaskParams
+from python_fmask_spark.sources import register_views
 
-from python_fmask_spark import oracle, pipeline  # noqa: E402
-from python_fmask_spark.dialect import DUCKDB, SPARK  # noqa: E402
-from python_fmask_spark.operators.scene import FmaskParams  # noqa: E402
-from python_fmask_spark.sources import register_views  # noqa: E402
-
+SCRIPTS = str(pathlib.Path(__file__).resolve().parents[1] / "scripts")
 
 def _land_thresholds(spark, eqn17):
     view = pipeline.materialize_pass1(spark)
@@ -140,6 +141,10 @@ def test_snow_thresh_flows_into_classification(spark, sf_oracle):
     v_knob = pipeline.materialize_pass1(spark, nir_snow_thresh=2.0,
                                         green_snow_thresh=2.0)
     assert v_def != v_knob
+    # the default floors spelled as floats name the same leaf as None
+    assert pipeline.materialize_pass1(
+        spark, nir_snow_thresh=C.EQN20_NIR_SNOW_THRESH,
+        green_snow_thresh=C.EQN20_GREEN_SNOW_THRESH) == v_def
 
 
 def test_cli_params_mirror_reference_conversions():
@@ -147,7 +152,7 @@ def test_cli_params_mirror_reference_conversions():
     conversions (usgsLandsatStacked.py:255-263): percentage /100,
     metres -> pixels via x_res; --strict preserves the preset buffers
     unless explicitly overridden."""
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, SCRIPTS)
     from classify_job import get_cmdargs, params_from_cmdargs
 
     p = params_from_cmdargs(get_cmdargs(
@@ -177,7 +182,7 @@ def test_parallaxtest_cli_flag(capsys):
     is gated to SENTINEL2 like the reference (the flag exists only on
     sentinel2Stacked.py:112-114); the gate fires at PARSE time (no
     SparkSession spin-up before the usage error)."""
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, SCRIPTS)
     import pytest
 
     from classify_job import get_cmdargs

@@ -3,14 +3,10 @@
 
 from __future__ import annotations
 
-import sys
-
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from python_fmask_spark import dialect as D  # noqa: E402
+from python_fmask_spark import dialect as D
 
 CASES = [
     ("hexint", lambda d: D.hexint("'00ff'", d)),

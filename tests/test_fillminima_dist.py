@@ -3,17 +3,13 @@ for any tiling (the W6 tile-fixpoint property, SURVEY §7)."""
 
 from __future__ import annotations
 
-import sys
-
 import numpy as np
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from python_fmask_spark import constants as C  # noqa: E402
-from python_fmask_spark.operators import kernels  # noqa: E402
-from python_fmask_spark.operators.fillminima_dist import (  # noqa: E402
+from python_fmask_spark import constants as C
+from python_fmask_spark.operators import kernels
+from python_fmask_spark.operators.fillminima_dist import (
     fill_minima_distributed,
 )
 

@@ -10,6 +10,7 @@ out.
 
 from __future__ import annotations
 
+import pathlib
 import sys
 
 import duckdb
@@ -17,14 +18,14 @@ import numpy as np
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/scripts")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]
+                        / "scripts"))
 
 from independent_oracle import classify_scene_independent  # noqa: E402
-from python_fmask_spark import oracle  # noqa: E402
-from python_fmask_spark.dialect import DUCKDB  # noqa: E402
-from python_fmask_spark.operators import kernels  # noqa: E402
-from python_fmask_spark.operators.scene import FmaskParams, classify_scene  # noqa: E402
+from python_fmask_spark import oracle
+from python_fmask_spark.dialect import DUCKDB
+from python_fmask_spark.operators import kernels
+from python_fmask_spark.operators.scene import FmaskParams, classify_scene
 
 SF_DIR = "/root/testdata/sf0.01"
 

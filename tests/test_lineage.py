@@ -3,13 +3,10 @@
 from __future__ import annotations
 
 import os
-import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
-
-from python_fmask_spark.plans.lineage import StageRunner, classify_checkpointed  # noqa: E402
-from python_fmask_spark.sources import register_views  # noqa: E402
+from python_fmask_spark.plans.lineage import StageRunner
+from python_fmask_spark.sources import register_views
 
 
 def test_stage_runner_resume(spark, sf_small):
@@ -119,19 +116,33 @@ def test_empty_stage_records_zero_rows(spark, sf_small):
         assert row.max_partition_rows == row.median_partition_rows == 0
 
 
-def test_classify_checkpointed_resume(spark, sf_small):
+def test_distributed_cdi_pass1_is_staged(spark, sf_small):
+    """With the CDI displacement test on, the CDI-modified pass-1 frame
+    is a stage table like every other barrier: the first runner records
+    a pass1 lineage row, and a second runner on the same workdir resumes
+    it without running the raw pass 1 or the CDI kernel (no Spark job
+    even with the session's leaves dropped), writes no lineage rows and
+    returns identical rows."""
     from python_fmask_spark import pipeline
+    from python_fmask_spark.operators.scene_dist import classify_distributed
+    from python_fmask_spark.oracle import S2_ZERO_OFFSETS
 
     register_views(spark, sf_small)
+    kw = dict(sensor="SENTINEL2", s2_offsets=S2_ZERO_OFFSETS, s2_cdi=True)
     with tempfile.TemporaryDirectory() as wd:
-        out1 = classify_checkpointed(spark, "documents", wd).collect()
-        # second run resumes from the final stage table: identical rows
-        out2 = classify_checkpointed(spark, "documents", wd).collect()
-        assert sorted(map(tuple, out1)) == sorted(map(tuple, out2))
-        assert len(out1) == 500
-        # and the staged plan equals the live pipeline bit-for-bit
-        live = pipeline.classify(spark).collect()
-        assert sorted(map(tuple, out1)) == sorted(map(tuple, live))
+        r1 = StageRunner(spark, wd, "c1")
+        out1 = sorted(map(tuple, classify_distributed(
+            spark, runner=r1, **kw).collect()))
+        assert "pass1" in {r.stage for r in r1.lineage().collect()}
+
+        pipeline.invalidate_pass1_cache(spark)
+        r2 = StageRunner(spark, wd, "c2")
+        assert _spark_jobs(spark, "cdi_resume", lambda: pipeline
+                           .materialize_pass1(spark, runner=r2, **kw)) == 0
+        out2 = sorted(map(tuple, classify_distributed(
+            spark, runner=r2, **kw).collect()))
+        assert r2.lineage().filter("run_id = 'c2'").count() == 0
+        assert out2 == out1
 
 
 def test_runner_fingerprint_covers_params(spark, sf_small):

@@ -5,16 +5,12 @@ real fixture is covered by test_oracle_parity."""
 
 from __future__ import annotations
 
-import sys
-
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from python_fmask_spark.dialect import DUCKDB, SPARK  # noqa: E402
-from python_fmask_spark.functions import dedup, sampling  # noqa: E402
-from python_fmask_spark.functions import text as textfn  # noqa: E402
+from python_fmask_spark.dialect import DUCKDB, SPARK
+from python_fmask_spark.functions import dedup, sampling
+from python_fmask_spark.functions import text as textfn
 
 # 17 words -> 3 paragraphs (8 + 8 + 1) for doc 0/1; doc 2 shares doc
 # 0's first 8-word paragraph exactly but nothing else.

@@ -1,12 +1,8 @@
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from python_fmask_spark.mtl import read_mtl_text, thermal_info_from_mtl  # noqa: E402
+from python_fmask_spark.mtl import read_mtl_text, thermal_info_from_mtl
 
 SAMPLE = """
 GROUP = L1_METADATA_FILE

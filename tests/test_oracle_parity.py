@@ -6,14 +6,11 @@ from __future__ import annotations
 
 import math
 import os
-import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as entrymod  # noqa: E402
+import __spark_entry__ as entrymod
 
 
 def _duck_con(sf_dir: str):

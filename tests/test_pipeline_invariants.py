@@ -10,12 +10,9 @@
 from __future__ import annotations
 
 import hashlib
-import sys
 
-sys.path.insert(0, "/root/repo")
-
-from python_fmask_spark import pipeline  # noqa: E402
-from python_fmask_spark.sources import load_table, register_views  # noqa: E402
+from python_fmask_spark import pipeline
+from python_fmask_spark.sources import load_table, register_views
 
 
 def _classify_rows(spark, sf_dir):

@@ -5,15 +5,11 @@ ops under random tilings."""
 
 from __future__ import annotations
 
-import sys
-
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-sys.path.insert(0, "/root/repo")
-
-from python_fmask_spark.operators import kernels  # noqa: E402
+from python_fmask_spark.operators import kernels
 
 
 @st.composite

@@ -2,13 +2,9 @@
 
 from __future__ import annotations
 
-import sys
-
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
-
-from python_fmask_spark import tiling  # noqa: E402
+from python_fmask_spark import tiling
 
 
 def test_salted_repartition_preserves_rows_and_spreads_hot_key(spark):

@@ -6,15 +6,13 @@ shadow match, fused buffering) is pinned to the reference semantics."""
 
 from __future__ import annotations
 
-import sys
+import os
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
-
-from python_fmask_spark import pipeline  # noqa: E402
-from python_fmask_spark.operators.scene_dist import classify_distributed  # noqa: E402
-from python_fmask_spark.sources import register_views  # noqa: E402
+from python_fmask_spark import pipeline
+from python_fmask_spark.operators.scene_dist import classify_distributed
+from python_fmask_spark.sources import register_views
 
 COLS = ["url", "fmask_class", "cloud_id", "cloud_height_du",
         "cloud_base_temp_c", "text_sha256"]
@@ -141,43 +139,34 @@ def test_distributed_s2_no_thermal_matches_scene_kernel(spark, sf_small):
         f"{list(diffs.items())[:3]}"
 
 
-def _p3_frame(spark):
-    view = pipeline.materialize_pass1(spark)
-    thr = pipeline.materialize_thresholds(spark)
-    cols = ", ".join((*pipeline._KERNEL_COLS, "cell_rows"))
-    return spark.sql(pipeline.tail_sql_from_pass1(
-        view, "pass3", f"SELECT {cols} FROM pass3",
-        thresholds_view=thr)).localCheckpoint()
-
-
-def test_external_p3_without_digests_keeps_rows(spark, sf_small):
-    """ADVICE r4: an externally supplied p3 with digests=None must NOT
-    derive digests from the documents table (p3's urls may be unrelated
-    to it in bench/skew contexts, so the inner url join would drop rows
-    or crash). The output carries NULL text_sha256, loses no rows, and
-    the classes still match the whole-scene kernel."""
+def test_classify_auto_mixed_dispatch_matches_classify(spark, sf_small):
+    """A row threshold at the largest cell sends those cells to
+    classify_distributed (cells=) and the rest to classify
+    (cells_mode="anti"); the union equals classify over every cell,
+    text digests included."""
     register_views(spark, sf_small)
-    base = pipeline.classify(spark)
-    expect = {r.url: r.fmask_class for r in base.collect()}
-    out = classify_distributed(spark, p3=_p3_frame(spark)).collect()
-    assert len(out) == len(expect)
-    assert all(r.text_sha256 is None for r in out)
-    got = {r.url: r.fmask_class for r in out}
-    assert got == expect
+    rows = [r["count"] for r in spark.table(pipeline.materialize_pass1(
+        spark)).groupBy("cell_id").count().collect()]
+    assert min(rows) < max(rows)  # both branches run
+    whole = _canon(pipeline.classify(spark))
+    auto = _canon(pipeline.classify_auto(spark, row_threshold=max(rows)))
+    assert auto == whole
 
 
-def test_classify_auto_external_p3_without_digests(spark, sf_small):
-    """classify_auto's p3 path with digests=None routes mega-cells to
-    classify_distributed — which must not reach for the default table's
-    digests (ADVICE r4). row_threshold=8 forces BOTH branches to run."""
+def test_distributed_rejects_cells_with_runner(spark, sf_small, tmp_path):
+    """A stage fingerprint that ignored ``cells`` would resume another
+    run's rows, so the pair is refused before any stage runs."""
+    import pytest
+
+    from python_fmask_spark.plans.lineage import StageRunner
+
     register_views(spark, sf_small)
-    base = {r.url: r.fmask_class
-            for r in pipeline.classify(spark).collect()}
-    out = pipeline.classify_auto(
-        spark, row_threshold=8, p3=_p3_frame(spark)).collect()
-    assert len(out) == len(base)
-    got = {r.url: r.fmask_class for r in out}
-    assert got == base
+    cells = spark.createDataFrame([("c",)], "cell_id string")
+    with pytest.raises(ValueError, match="runner"):
+        classify_distributed(
+            spark, cells=cells,
+            runner=StageRunner(spark, str(tmp_path), "x"))
+    assert not os.listdir(os.path.join(tmp_path, "_lineage"))
 
 
 def test_distributed_l47_matches_scene_kernel(spark, sf_small):

@@ -5,17 +5,17 @@ fmask/cmdline/sentinel2Stacked.py:318-341."""
 
 from __future__ import annotations
 
-import sys
+import dataclasses
+import pathlib
 
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from python_fmask_spark import derive, sen2meta
 
-from python_fmask_spark import derive, sen2meta  # noqa: E402
-
-TILE_XML = "/root/repo/tests/fixtures/MTD_TL_fixture.xml"
-PROD_XML = "/root/repo/tests/fixtures/MTD_MSIL1C_fixture.xml"
+FIXTURES = pathlib.Path(__file__).resolve().parent / "fixtures"
+TILE_XML = str(FIXTURES / "MTD_TL_fixture.xml")
+PROD_XML = str(FIXTURES / "MTD_MSIL1C_fixture.xml")
 
 
 def test_tile_meta_fields():
@@ -213,6 +213,16 @@ def test_tile_meta_reaches_classify(spark):
     syn = spark.sql(f"SELECT url, sat_az_cdn FROM {vs}").toPandas()
     mrg = grid.merge(syn, on="url", suffixes=("_g", "_s"))
     assert (mrg.sat_az_cdn_g != mrg.sat_az_cdn_s).any()
+    # a second granule in the same session (sun zenith grid shifted)
+    # gets its own leaf, never the first granule's angles
+    m2 = dataclasses.replace(m, sun_zenith_grid=m.sun_zenith_grid + 4.0)
+    vg2 = pipeline.materialize_pass1(spark, sensor="SENTINEL2",
+                                     s2_offsets=S2_ZERO_OFFSETS,
+                                     tile_meta=m2)
+    assert vg2 != vg
+    zen = spark.sql(f"""SELECT a.sun_zen AS z1, b.sun_zen AS z2
+                        FROM {vg} a JOIN {vg2} b USING (url)""").toPandas()
+    assert len(zen) and (zen.z1 != zen.z2).all()
     # full chain runs under the grid leaf and returns every pixel
     out = pipeline.classify(spark, sensor="SENTINEL2",
                             s2_offsets=S2_ZERO_OFFSETS, tile_meta=m)

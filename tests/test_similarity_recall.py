@@ -4,15 +4,11 @@ hold on the sf0.01 embeddings fixture vs exact brute force."""
 
 from __future__ import annotations
 
-import sys
-
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from python_fmask_spark.dialect import DUCKDB  # noqa: E402
-from python_fmask_spark.functions import similarity as S  # noqa: E402
+from python_fmask_spark.dialect import DUCKDB
+from python_fmask_spark.functions import similarity as S
 
 
 @pytest.fixture(scope="module")

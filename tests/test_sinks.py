@@ -3,11 +3,7 @@
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
-from python_fmask_spark.plans import sinks  # noqa: E402
+from python_fmask_spark.plans import sinks
 
 
 def _mask_df(spark):

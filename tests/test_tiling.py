@@ -4,17 +4,13 @@ tile-decomposition property)."""
 
 from __future__ import annotations
 
-import sys
-
 import numpy as np
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from python_fmask_spark import constants as C  # noqa: E402
-from python_fmask_spark import tiling  # noqa: E402
-from python_fmask_spark.operators import clumps, kernels  # noqa: E402
+from python_fmask_spark import constants as C
+from python_fmask_spark import tiling
+from python_fmask_spark.operators import clumps, kernels
 
 H = 100
 W = C.SCENE_WIDTH
