@@ -412,6 +412,25 @@ def clump_groups(clumps: np.ndarray) -> list[tuple[int, np.ndarray]]:
     return list(zip((int(i) for i in ids.tolist()), np.split(order, cuts)))
 
 
+def cloud_base(bt_cloud: np.ndarray) -> tuple[float, np.ndarray]:
+    """One clump's cloud-base temperature and relative cloud-top heights
+    (Eqns 22-24, cloudShapeFunc, fmask/fmask.py:896-951): ``bt_cloud``
+    is the clump's brightness temperatures; returns (t_base, heights as
+    uint8 x CLOUD_HEIGHT_SCALE)."""
+    bt_cloud = np.asarray(bt_cloud).astype(np.float64)
+    n_pix = len(bt_cloud)
+    R = np.sqrt(n_pix / (2 * np.pi))
+    if R >= 8:
+        percentile = 100.0 * (R - 8.0) ** 2 / (R ** 2)
+        # scipy.stats.scoreatpercentile == np.percentile (linear interp)
+        t_base = float(np.percentile(bt_cloud, percentile))
+    else:
+        t_base = float(bt_cloud.min())
+    bt_cloud[bt_cloud > t_base] = t_base
+    h_rel = (t_base - bt_cloud) / C.LAPSE_RATE_WET
+    return t_base, np.round(h_rel * C.CLOUD_HEIGHT_SCALE).astype(np.uint8)
+
+
 def cloud_shape_and_base_temp(
     clumps: np.ndarray, bt: np.ndarray
 ) -> tuple[np.ndarray, dict[int, float]]:
@@ -422,18 +441,7 @@ def cloud_shape_and_base_temp(
     ncols = bt.shape[1]
     for cloud_id, flat_ndx in clump_groups(clumps):
         ndx = (flat_ndx // ncols, flat_ndx % ncols)
-        bt_cloud = bt[ndx].astype(np.float64).copy()
-        n_pix = len(ndx[0])
-        R = np.sqrt(n_pix / (2 * np.pi))
-        if R >= 8:
-            percentile = 100.0 * (R - 8.0) ** 2 / (R ** 2)
-            # scipy.stats.scoreatpercentile == np.percentile (linear interp)
-            t_base = float(np.percentile(bt_cloud, percentile))
-        else:
-            t_base = float(bt_cloud.min())
-        bt_cloud[bt_cloud > t_base] = t_base
-        h_rel = (t_base - bt_cloud) / C.LAPSE_RATE_WET
-        cloud_shape[ndx] = np.round(h_rel * C.CLOUD_HEIGHT_SCALE).astype(np.uint8)
+        t_base, cloud_shape[ndx] = cloud_base(bt[ndx])
         cloud_base_temp[int(cloud_id)] = t_base
     return cloud_shape, cloud_base_temp
 
@@ -441,6 +449,26 @@ def cloud_shape_and_base_temp(
 # ---------------------------------------------------------------------------
 # shadow projection + matching (fmask/fmask.py:959-1060, 1188-1308)
 # ---------------------------------------------------------------------------
+
+
+def project_shadow(rows: np.ndarray, cols: np.ndarray, height: np.ndarray,
+                   sun_az: float, sun_zen: float, nrows: int, ncols: int,
+                   x_res: float, y_res: float
+                   ) -> tuple[np.ndarray, np.ndarray]:
+    """Project one clump's cloud-top pixels (rows, cols; ``height`` in
+    CLOUD_HEIGHT_SCALE units) along the sun vector onto the cloud-base
+    plane; returns the shadow template's (rows, cols), clipped to the
+    nrows x ncols raster (makeCloudShadowShapes, fmask/fmask.py:1021-1052)."""
+    cloud_hgt = C.METRES_PER_KM * height.astype(np.float64) \
+        / C.CLOUD_HEIGHT_SCALE
+    x = cols * x_res
+    y = rows * y_res
+    d = cloud_hgt * np.tan(sun_zen).astype(np.float32)
+    x_dash = x - d * float(np.sin(sun_az))
+    y_dash = y - d * float(np.cos(sun_az))
+    tr = (y_dash / y_res).astype(np.uint32).clip(0, nrows - 1)
+    tc = (x_dash / x_res).astype(np.uint32).clip(0, ncols - 1)
+    return tr, tc
 
 
 def make_shadow_shapes(
@@ -452,9 +480,9 @@ def make_shadow_shapes(
     sat_az_img: np.ndarray | None = None,
     sat_zen_img: np.ndarray | None = None,
 ) -> dict[int, tuple[tuple[np.ndarray, np.ndarray], float, float, float, float]]:
-    """Project cloud-top pixels along the sun vector onto the cloud-base
-    plane (makeCloudShadowShapes, fmask/fmask.py:959-1060; the cheap
-    cloud-top-only variant, duplicates kept, fmask/fmask.py:1021-1052).
+    """Shadow templates of every clump (makeCloudShadowShapes,
+    fmask/fmask.py:959-1060; the cheap cloud-top-only variant,
+    duplicates kept, fmask/fmask.py:1021-1052).
 
     ``sat_az_img``/``sat_zen_img`` (radians): per-pixel view-angle grids
     (the makeAngles stack); when given, each clump's sat angles are the
@@ -471,34 +499,21 @@ def make_shadow_shapes(
             sat_zen = float(sat_zen_img[ndx].mean())
         else:
             sat_az, sat_zen = angles["sat_az"], angles["sat_zen"]
-        cloud_hgt = C.METRES_PER_KM * cloud_shape[ndx].astype(np.float64) \
-            / C.CLOUD_HEIGHT_SCALE
-        x = ndx[1] * x_res
-        y = ndx[0] * y_res
-        d = cloud_hgt * np.tan(sun_zen).astype(np.float32)
-        x_dash = x - d * float(np.sin(sun_az))
-        y_dash = y - d * float(np.cos(sun_az))
-        rows = (y_dash / y_res).astype(np.uint32).clip(0, nrows - 1)
-        cols = (x_dash / x_res).astype(np.uint32).clip(0, ncols - 1)
-        out[int(cloud_id)] = ((rows.flatten(), cols.flatten()),
-                              sat_az, sat_zen, sun_az, sun_zen)
+        tr, tc = project_shadow(ndx[0], ndx[1], cloud_shape[ndx], sun_az,
+                                sun_zen, nrows, ncols, x_res, y_res)
+        out[int(cloud_id)] = ((tr, tc), sat_az, sat_zen, sun_az, sun_zen)
     return out
 
 
-def match_one_shadow(
-    cloudmask: np.ndarray,
-    shadow_entry,
-    potential_shadow: np.ndarray,
-    t_cloudbase: float,
-    t_low,
-    t_high,
-    x_res: float,
-    y_res: float,
-    nullmask: np.ndarray,
-):
-    """Height-sweep template match (matchOneShadow, fmask/fmask.py:1188-1308).
-    Returns matched (rows, cols) index tuple or None."""
-    img_nrows, img_ncols = cloudmask.shape
+def shadow_sweep(t_cloudbase: float, t_low, t_high, sun_az: float,
+                 sun_zen: float, sat_az: float, sat_zen: float,
+                 x_res: float, y_res: float):
+    """The height sweep of matchOneShadow (fmask/fmask.py:1188-1246):
+    returns (num_steps, place), where ``place(i)`` is step i's
+    (row_off, col_off) template shift. The offsets are linear in i, so
+    the end placements bound the intermediate ones (scene_dist sizes its
+    search windows from them). ``t_low``/``t_high`` None means the scene
+    has no thermal thresholds."""
     if t_low is None:
         t_low = 0.0
     if t_high is None:
@@ -506,8 +521,6 @@ def match_one_shadow(
 
     h_min = max(0.2, (t_low - 4 - t_cloudbase) / 9.8) * C.METRES_PER_KM
     h_max = min(12, (t_high + 4 - t_cloudbase)) * C.METRES_PER_KM
-
-    (shape_ndx, sat_az, sat_zen, sun_az, sun_zen) = shadow_entry
 
     tan_sun_zen = np.tan(sun_zen)
     sin_sun_az = np.sin(sun_az)
@@ -526,29 +539,66 @@ def match_one_shadow(
     x_step = (x_off_max - x_off_min) / num_steps
     y_step = (y_off_max - y_off_min) / num_steps
 
-    row0, row_n = int(shape_ndx[0].min()), int(shape_ndx[0].max())
-    col0, col_n = int(shape_ndx[1].min()), int(shape_ndx[1].max())
-    nrows, ncols = row_n - row0 + 1, col_n - col0 + 1
-    shadow_template = np.zeros((nrows, ncols), dtype=bool)
-    shadow_template[shape_ndx[0] - row0, shape_ndx[1] - col0] = True
-
-    best_similarity = 0.0
-    best_rc = (0, 0)
-    best_overlap = None
-    for i in range(num_steps):
+    def place(i: int) -> tuple[int, int]:
         H = (x_off_min + i * x_step) / (tan_sun_zen * sin_sun_az)
         d_view = H * tan_sat_zen
         x_view, y_view = d_view * sin_sat_az, d_view * cos_sat_az
         x_off = x_off_min + i * x_step - x_view
         y_off = y_off_min + i * y_step - y_view
-        row_off = int(y_off / y_res)
-        col_off = int(x_off / x_res)
-        r = row0 - row_off
-        c = col0 - col_off
+        return int(y_off / y_res), int(x_off / x_res)
+
+    return num_steps, place
+
+
+def match_one_shadow(
+    cloudmask: np.ndarray,
+    shadow_entry,
+    potential_shadow: np.ndarray,
+    t_cloudbase: float,
+    t_low,
+    t_high,
+    x_res: float,
+    y_res: float,
+    nullmask: np.ndarray,
+    row0: int = 0,
+    img_nrows: int | None = None,
+):
+    """Height-sweep template match (matchOneShadow, fmask/fmask.py:1188-1308).
+    Returns matched (rows, cols) index tuple or None.
+
+    The rasters may be the row band [row0, row0 + band rows) of a cell
+    ``img_nrows`` rows tall (default: the rasters are the whole cell).
+    Placements are bounds-checked against the whole cell, so a band
+    accepts exactly the whole-cell placements; one that falls outside
+    the band raises AssertionError rather than matching wrongly.
+    Returned indexes are cell rows."""
+    band_nrows, img_ncols = cloudmask.shape
+    if img_nrows is None:
+        img_nrows = band_nrows
+    (shape_ndx, sat_az, sat_zen, sun_az, sun_zen) = shadow_entry
+    num_steps, place = shadow_sweep(t_cloudbase, t_low, t_high, sun_az,
+                                    sun_zen, sat_az, sat_zen, x_res, y_res)
+
+    trow0, trow_n = int(shape_ndx[0].min()), int(shape_ndx[0].max())
+    tcol0, tcol_n = int(shape_ndx[1].min()), int(shape_ndx[1].max())
+    nrows, ncols = trow_n - trow0 + 1, tcol_n - tcol0 + 1
+    shadow_template = np.zeros((nrows, ncols), dtype=bool)
+    shadow_template[shape_ndx[0] - trow0, shape_ndx[1] - tcol0] = True
+
+    best_similarity = 0.0
+    best_rc = (0, 0)
+    best_overlap = None
+    for i in range(num_steps):
+        row_off, col_off = place(i)
+        r = trow0 - row_off
+        c = tcol0 - col_off
         if r >= 0 and r + nrows <= img_nrows and c >= 0 and c + ncols <= img_ncols:
-            cloud = cloudmask[r:r + nrows, c:c + ncols]
-            pot_shadow = potential_shadow[r:r + nrows, c:c + ncols].copy()
-            null = nullmask[r:r + nrows, c:c + ncols]
+            lr = r - row0
+            if lr < 0 or lr + nrows > band_nrows:
+                raise AssertionError("shadow search band under-covered")
+            cloud = cloudmask[lr:lr + nrows, c:c + ncols]
+            pot_shadow = potential_shadow[lr:lr + nrows, c:c + ncols].copy()
+            null = nullmask[lr:lr + nrows, c:c + ncols]
             pot_shadow[cloud] = 0
             pot_shadow[null] = 0
             tmpl = shadow_template.copy()

@@ -24,8 +24,6 @@ class FmaskParams:
     cloud_buffer_px: float = C.CLOUD_BUFFER_SIZE
     shadow_buffer_px: float = C.SHADOW_BUFFER_SIZE
     min_cloud_size_px: int = C.MIN_CLOUD_SIZE_PIXELS
-    x_res: float = C.X_RES
-    y_res: float = C.Y_RES
     # Eqn-17 land-threshold constant — the reference's per-run
     # setEqn17CloudProbThresh / CLI --cloudprobthreshold knob
     # (fmask/config.py:336-344): paper default 0.2, Zhu's MATLAB
@@ -146,7 +144,7 @@ def classify_scene(pdf: pd.DataFrame, params: FmaskParams = FmaskParams(),
         sat_az_img = _to_raster(pdf, "sat_az_cdn", H, W, 0, np.int64) * 0.01
         sat_zen_img = _to_raster(pdf, "sat_zen_cdn", H, W, 0, np.int64) * 0.01
     shapes = kernels.make_shadow_shapes(clumps, cloud_shape, angles,
-                                        params.x_res, params.y_res,
+                                        C.X_RES, C.Y_RES,
                                         sat_az_img=sat_az_img,
                                         sat_zen_img=sat_zen_img)
     shadowmask = np.zeros((H, W), dtype=bool)
@@ -154,7 +152,7 @@ def classify_scene(pdf: pd.DataFrame, params: FmaskParams = FmaskParams(),
         t_base = base_temp.get(cloud_id, 0)
         matched = kernels.match_one_shadow(
             cloudmask, entry, potential_shadow, t_base, t_low, t_high,
-            params.x_res, params.y_res, nullmask)
+            C.X_RES, C.Y_RES, nullmask)
         if matched is not None:
             shadowmask[matched] = True
     if params.shadow_buffer_px > 0:

@@ -11,14 +11,20 @@ loops clumps independently, /root/reference/fmask/fmask.py:1100-1185):
   stage 2  potential shadow  distributed fill-minima (tile fixpoint)
   stage 3  cloud clumps      cross-tile CCL, renumbered to scan order
   stage 4  3-D clouds +      applyInPandas over (cell_id, cloud_id) —
-           shadow template   task size == clump size
-  stage 5  shadow match      cogrouped applyInPandas over
-                             (cell_id, cloud_id): template pixels x
-                             search-window pixels (window rows are
-                             tile-bucket equi-joined, never a range
-                             scan; window height <= clump extent +
-                             max sun-vector shift)
+           shadow template   task size == clump size; also emits each
+           + search window   clump's search-window rows
+  stage 5  shadow match      cogrouped applyInPandas over (cell_id, row
+                             band): the band's template pixels x the
+                             band's flag pixels (tile-bucket
+                             equi-joined, never a range scan; window
+                             height <= clump extent + max sun-vector
+                             shift)
   stage 6  buffers+finalize  one fused tiled halo kernel + column CASE
+
+Stages 4-5 run the whole-cell kernel's own functions
+(kernels.cloud_base, project_shadow, shadow_sweep, match_one_shadow on a
+row band), so both classify paths share one copy of the shadow
+algorithm and its arithmetic.
 
 Task-grain bounds: stages 1-3 and 6 are bounded by TILE (independent
 of cell size); stages 4-5 are bounded by CLUMP extent — the
@@ -42,7 +48,6 @@ numbering.
 
 from __future__ import annotations
 
-import math
 from typing import TYPE_CHECKING
 
 import numpy as np
@@ -61,99 +66,64 @@ if TYPE_CHECKING:
     from ..pipeline import Scene
 
 
-def _sweep_bounds(t_base, t_low, t_high, sun_az, sun_zen, sat_az, sat_zen,
-                  x_res, y_res):
-    """The height sweep's step count and endpoint (row, col) offsets
-    (matchOneShadow setup, fmask/fmask.py:1188-1246). x/y offsets are
-    LINEAR in the step index, so the endpoint placements bound every
-    intermediate one — that's what makes the search window finite."""
-    tl = 0.0 if t_low is None or (isinstance(t_low, float)
-                                  and math.isnan(t_low)) else t_low
-    th = 10.0 if t_high is None or (isinstance(t_high, float)
-                                    and math.isnan(t_high)) else t_high
-    h_lo = max(0.2, (tl - 4 - t_base) / 9.8) * C.METRES_PER_KM
-    h_hi = min(12, (th + 4 - t_base)) * C.METRES_PER_KM
-    tan_szen = math.tan(sun_zen)
-    sin_saz = math.sin(sun_az)
-    cos_saz = math.cos(sun_az)
-    tan_vzen = math.tan(sat_zen)
-    sin_vaz = math.sin(sat_az)
-    cos_vaz = math.cos(sat_az)
-    d_min, d_max = h_lo * tan_szen, h_hi * tan_szen
-    x_off_min, x_off_max = d_min * sin_saz, d_max * sin_saz
-    y_off_min, y_off_max = d_min * cos_saz, d_max * cos_saz
-    longest = max(abs(x_off_max - x_off_min), abs(y_off_max - y_off_min))
-    num_steps = max(1, int(np.ceil(longest / x_res)))
-    x_step = (x_off_max - x_off_min) / num_steps
-    y_step = (y_off_max - y_off_min) / num_steps
-
-    def place(i):
-        hh = (x_off_min + i * x_step) / (tan_szen * sin_saz)
-        x_off = x_off_min + i * x_step - hh * tan_vzen * sin_vaz
-        y_off = y_off_min + i * y_step - hh * tan_vzen * cos_vaz
-        return int(y_off / y_res), int(x_off / x_res)
-
-    return (num_steps, x_off_min, x_step, y_off_min, y_step,
-            tan_szen, sin_saz, tan_vzen, sin_vaz, cos_vaz, place)
+def _opt(v) -> float | None:
+    """A nullable Spark double as the kernels expect it: NaN/None -> None."""
+    return None if pd.isna(v) else float(v)
 
 
-# stage-4 per-pixel output: projection + 3-D shape, one row per clump
-# pixel (tr/tc = this pixel's shadow-template position)
+# stage-4 per-pixel output: 3-D shape + projection, one row per clump
+# pixel (tr/tc = this pixel's shadow-template position; win_r0/win_r1 =
+# the clump's search-window rows, constant per clump)
 _PX_SCHEMA = ("cell_id string, cloud_id bigint, r int, c int, "
               "height_du int, base_temp_c double, "
-              "sat_az_m double, sat_zen_m double, tr int, tc int")
+              "sat_az_m double, sat_zen_m double, tr int, tc int, "
+              "win_r0 int, win_r1 int")
 
 
 def _clump_kernel(pdf: pd.DataFrame,
                   has_thermal: bool = True) -> pd.DataFrame:
-    """Per-clump 3-D cloud shape (cloudShapeFunc, fmask/fmask.py:896-951)
-    + cloud-top shadow projection (makeCloudShadowShapes,
-    fmask/fmask.py:959-1060). Scan-order sort reproduces the whole-scene
-    kernel's summation order bit-for-bit. Without thermal the cloud is
-    a flat 2-D shape and the match runs at Tcloudbase = 0 with NaN
-    reported as the base temperature, matching classify_scene's
-    no-thermal regime (fmask/fmask.py:913-951, matchShadows:1148-1152)."""
+    """One clump's 3-D cloud (kernels.cloud_base), shadow template
+    (kernels.project_shadow) and search window: the rows the height
+    sweep's end placements (kernels.shadow_sweep) span. The scan-order
+    sort reproduces the whole-cell kernel's pixel order bit-for-bit.
+    Without thermal the cloud is a flat 2-D shape and the match runs at
+    Tcloudbase = 0 with NaN reported as the base temperature, matching
+    classify_scene's no-thermal regime (fmask/fmask.py:913-951,
+    matchShadows:1148-1152)."""
     pdf = pdf.sort_values(["r", "c"]).reset_index(drop=True)
     n_pix = len(pdf)
     if has_thermal:
-        bt_cloud = pdf["bt"].to_numpy().astype(np.float64).copy()
-        R = np.sqrt(n_pix / (2 * np.pi))
-        if R >= 8:
-            pct = 100.0 * (R - 8.0) ** 2 / (R ** 2)
-            t_base = float(np.percentile(bt_cloud, pct))
-        else:
-            t_base = float(bt_cloud.min())
-        bt_cloud[bt_cloud > t_base] = t_base
-        h_rel = (t_base - bt_cloud) / C.LAPSE_RATE_WET
-        height_du = np.round(h_rel * C.CLOUD_HEIGHT_SCALE).astype(np.uint8)
+        t_base, height_du = kernels.cloud_base(pdf["bt"].to_numpy())
     else:
-        t_base = float("nan")  # reported; the sweep maps NaN -> 0
+        t_base = float("nan")
         height_du = np.zeros(n_pix, dtype=np.uint8)
 
-    sun_az = float(pdf["sun_az"].iloc[0])
-    sun_zen = float(pdf["sun_zen"].iloc[0])
+    g0 = pdf.iloc[0]
+    sun_az, sun_zen = float(g0["sun_az"]), float(g0["sun_zen"])
     sat_az = float((pdf["sat_az_cdn"].to_numpy().astype(np.int64)
                     * 0.01).mean())
     sat_zen = float((pdf["sat_zen_cdn"].to_numpy().astype(np.int64)
                      * 0.01).mean())
-    H = int(pdf["cell_rows"].iloc[0])
-    W = C.SCENE_WIDTH
-    x_res, y_res = C.X_RES, C.Y_RES
+    rows = pdf["r"].to_numpy()
+    tr, tc = kernels.project_shadow(
+        rows, pdf["c"].to_numpy(), height_du, sun_az, sun_zen,
+        int(g0["cell_rows"]), C.SCENE_WIDTH, C.X_RES, C.Y_RES)
 
-    cloud_hgt = C.METRES_PER_KM * height_du.astype(np.float64) \
-        / C.CLOUD_HEIGHT_SCALE
-    x = pdf["c"].to_numpy() * x_res
-    y = pdf["r"].to_numpy() * y_res
-    d = cloud_hgt * np.float64(np.float32(np.tan(sun_zen)))
-    x_dash = x - d * float(np.sin(sun_az))
-    y_dash = y - d * float(np.cos(sun_az))
-    tr = (y_dash / y_res).astype(np.uint32).clip(0, H - 1)
-    tc = (x_dash / x_res).astype(np.uint32).clip(0, W - 1)
+    # The match calls shadow_sweep again on the same doubles, so these
+    # end placements are exactly the ones it will try.
+    num_steps, place = kernels.shadow_sweep(
+        t_base if has_thermal else 0.0, _opt(g0["g_tlow"]),
+        _opt(g0["g_thigh"]), sun_az, sun_zen, sat_az, sat_zen,
+        C.X_RES, C.Y_RES)
+    trow0 = int(tr.min())
+    ends = [trow0 - place(i)[0] for i in (0, num_steps - 1)]
+    win_r0 = max(0, min(ends))
+    win_r1 = max(ends) + int(tr.max()) - trow0
 
     return pd.DataFrame({
         "cell_id": pdf["cell_id"].to_numpy(),
         "cloud_id": pdf["cloud_id"].to_numpy().astype(np.int64),
-        "r": pdf["r"].to_numpy().astype(np.int32),
+        "r": rows.astype(np.int32),
         "c": pdf["c"].to_numpy().astype(np.int32),
         "height_du": height_du.astype(np.int32),
         "base_temp_c": np.full(n_pix, t_base),
@@ -161,64 +131,12 @@ def _clump_kernel(pdf: pd.DataFrame,
         "sat_zen_m": np.full(n_pix, sat_zen),
         "tr": tr.astype(np.int32),
         "tc": tc.astype(np.int32),
+        "win_r0": np.full(n_pix, win_r0, dtype=np.int32),
+        "win_r1": np.full(n_pix, win_r1, dtype=np.int32),
     })
 
 
 _MATCH_SCHEMA = "cell_id string, r int, c int"
-
-
-def _match_one(trs, tcs, scal, cloud, pot, null, win_r0, wh, H):
-    """One clump's height-sweep match (matchOneShadow,
-    fmask/fmask.py:1188-1308) against a shared band raster, with bounds
-    checks still done against the FULL cell raster so accepted
-    placements are exactly the whole-scene kernel's. Returns (r, c,
-    overlap) of the best placement above the 0.3 acceptance, or None."""
-    W = C.SCENE_WIDTH
-    x_res, y_res = C.X_RES, C.Y_RES
-    t_base = scal["base_temp_c"]
-    if isinstance(t_base, float) and math.isnan(t_base):
-        t_base = 0.0  # no-thermal regime: Tcloudbase = 0
-    (num_steps, *_rest, place) = _sweep_bounds(
-        t_base, scal["g_tlow"], scal["g_thigh"],
-        scal["sun_az"], scal["sun_zen"], scal["sat_az_m"],
-        scal["sat_zen_m"], x_res, y_res)
-    trow0 = int(trs.min())
-    tcol0 = int(tcs.min())
-    tnr = int(trs.max()) - trow0 + 1
-    tnc = int(tcs.max()) - tcol0 + 1
-    template = np.zeros((tnr, tnc), dtype=bool)
-    template[trs - trow0, tcs - tcol0] = True
-
-    best_sim = 0.0
-    best = None
-    for i in range(num_steps):
-        row_off, col_off = place(i)
-        r = trow0 - row_off
-        c = tcol0 - col_off
-        if not (0 <= r and r + tnr <= H and 0 <= c and c + tnc <= W):
-            continue
-        lr = r - win_r0
-        if lr < 0 or lr + tnr > wh:
-            # band under-covered (cannot happen: band halo = max window
-            # span) — fail closed rather than silently wrong
-            raise AssertionError("shadow search band under-covered")
-        cl = cloud[lr:lr + tnr, c:c + tnc]
-        ps = pot[lr:lr + tnr, c:c + tnc].copy()
-        nu = null[lr:lr + tnr, c:c + tnc]
-        ps[cl] = False
-        ps[nu] = False
-        tmpl = template.copy()
-        tmpl[cl] = False
-        tmpl[nu] = False
-        shadow_area = tmpl.sum()
-        overlap = np.logical_and(ps, tmpl)
-        sim = float(overlap.sum()) / shadow_area if shadow_area > 0 else 0.0
-        if sim > best_sim:
-            best_sim = sim
-            best = (r, c, overlap)
-    if best_sim > 0.3 and best is not None:
-        return best
-    return None
 
 
 def _match_band_kernel(left: pd.DataFrame, right: pd.DataFrame
@@ -227,7 +145,8 @@ def _match_band_kernel(left: pd.DataFrame, right: pd.DataFrame
     per-clump scalars of every clump whose search window STARTS in this
     row band; ``right`` = flag pixels of the band plus its halo (max
     window span). All of the band's clumps sweep against ONE copy of
-    the band raster — the per-clump window duplication that made the
+    the band raster (kernels.match_one_shadow with the band's row
+    offset) — the per-clump window duplication that made the
     naive (cell, cloud) join quadratic-ish in clump count is gone,
     while parallelism still scales with cell height (H / band_rows
     independent tasks), mirroring the reference's independent per-clump
@@ -253,16 +172,17 @@ def _match_band_kernel(left: pd.DataFrame, right: pd.DataFrame
     out_c: list[np.ndarray] = []
     for _cid, grp in left.groupby("cloud_id", sort=True):
         g0 = grp.iloc[0]
-        scal = {k: float(g0[k]) for k in
-                ("base_temp_c", "g_tlow", "g_thigh", "sun_az", "sun_zen",
-                 "sat_az_m", "sat_zen_m")}
-        res = _match_one(grp["tr"].to_numpy(), grp["tc"].to_numpy(),
-                         scal, cloud, pot, null, win_r0, wh, H)
+        t_base = float(g0["base_temp_c"])
+        entry = ((grp["tr"].to_numpy(), grp["tc"].to_numpy()),
+                 float(g0["sat_az_m"]), float(g0["sat_zen_m"]),
+                 float(g0["sun_az"]), float(g0["sun_zen"]))
+        res = kernels.match_one_shadow(
+            cloud, entry, pot, 0.0 if np.isnan(t_base) else t_base,
+            _opt(g0["g_tlow"]), _opt(g0["g_thigh"]), C.X_RES, C.Y_RES,
+            null, row0=win_r0, img_nrows=H)
         if res is not None:
-            r, c, overlap = res
-            orr, occ = np.where(overlap)
-            out_r.append((r + orr).astype(np.int32))
-            out_c.append((c + occ).astype(np.int32))
+            out_r.append(res[0].astype(np.int32))
+            out_c.append(res[1].astype(np.int32))
     if not out_r:
         return pd.DataFrame({"cell_id": pd.Series(dtype=object),
                              "r": pd.Series(dtype=np.int32),
@@ -391,8 +311,8 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
     # once at the end.
     maj = tiling.tiled_neighborhood(
         raw.select("cell_id", "r", "c", "cloud_raw", "nullmask"),
-        kernels.majority3_buffer, "cloud_raw", "maj", radius=1,
-        passthrough=("nullmask",), carry_url=False)
+        lambda slabs: {"maj": kernels.majority3_buffer(slabs["cloud_raw"])},
+        ("cloud_raw",), ("maj",), radius=1, passthrough=("nullmask",))
     cloudmask_df = maj.withColumn(
         "cloudmask", F.expr("maj and not nullmask")) \
         .select("cell_id", "r", "c", "cloudmask")
@@ -465,83 +385,10 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
         F.expr("first(sun_zen) AS sun_zen"))
     tmpl = px.join(F.broadcast(cell_dim), "cell_id")
 
-    # window row range per clump from the sweep's endpoint placements.
-    # The per-clump reduction (min/max template row + carried scalars)
-    # runs as a JVM hash aggregate with map-side combine — only the
-    # ~1-row-per-cloud dim reaches Python, never the template pixels.
-    win_schema = ("cell_id string, cloud_id bigint, win_r0 int, win_r1 int")
-    wdim0 = tmpl.groupBy("cell_id", "cloud_id").agg(
-        F.expr("min(tr) AS trow0"), F.expr("max(tr) AS trmax"),
-        F.expr("first(base_temp_c) AS base_temp_c"),
-        F.expr("first(sat_az_m) AS sat_az_m"),
-        F.expr("first(sat_zen_m) AS sat_zen_m"),
-        F.expr("first(g_tlow) AS g_tlow"),
-        F.expr("first(g_thigh) AS g_thigh"),
-        F.expr("first(sun_az) AS sun_az"),
-        F.expr("first(sun_zen) AS sun_zen"))
-
-    def windows_map(batches):
-        # Vectorized replay of _sweep_bounds' endpoint placements over
-        # the whole clump dim (one row per cloud — this used to be a
-        # per-row Python loop). np trig on arrays can differ from the
-        # scalar libm calls inside the match kernel's _sweep_bounds by
-        # ~1 ULP, which could flip an int() truncation at an exact
-        # integer boundary — so the window is padded by one guard row
-        # on each side. Windows only need to CONTAIN the sweep (they
-        # pick the match band; the kernel re-derives exact placements),
-        # so the padding cannot change any result.
-        for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame({"cell_id": pd.Series(dtype=object),
-                                    "cloud_id": pd.Series(dtype=np.int64),
-                                    "win_r0": pd.Series(dtype=np.int32),
-                                    "win_r1": pd.Series(dtype=np.int32)})
-                continue
-            tb = pdf["base_temp_c"].to_numpy(np.float64)
-            tb = np.where(np.isnan(tb), 0.0, tb)  # no-thermal: Tbase=0
-            tl = pdf["g_tlow"].to_numpy(np.float64)
-            tl = np.where(np.isnan(tl), 0.0, tl)
-            th = pdf["g_thigh"].to_numpy(np.float64)
-            th = np.where(np.isnan(th), 10.0, th)
-            sun_az = pdf["sun_az"].to_numpy(np.float64)
-            sun_zen = pdf["sun_zen"].to_numpy(np.float64)
-            sat_az = pdf["sat_az_m"].to_numpy(np.float64)
-            sat_zen = pdf["sat_zen_m"].to_numpy(np.float64)
-            h_lo = np.maximum(0.2, (tl - 4 - tb) / 9.8) * C.METRES_PER_KM
-            h_hi = np.minimum(12, (th + 4 - tb)) * C.METRES_PER_KM
-            tan_szen = np.tan(sun_zen)
-            sin_saz, cos_saz = np.sin(sun_az), np.cos(sun_az)
-            tan_vzen = np.tan(sat_zen)
-            sin_vaz, cos_vaz = np.sin(sat_az), np.cos(sat_az)
-            x_off_min = h_lo * tan_szen * sin_saz
-            x_off_max = h_hi * tan_szen * sin_saz
-            y_off_min = h_lo * tan_szen * cos_saz
-            y_off_max = h_hi * tan_szen * cos_saz
-            longest = np.maximum(np.abs(x_off_max - x_off_min),
-                                 np.abs(y_off_max - y_off_min))
-            num_steps = np.maximum(
-                1, np.ceil(longest / C.X_RES)).astype(np.int64)
-            x_step = (x_off_max - x_off_min) / num_steps
-            y_step = (y_off_max - y_off_min) / num_steps
-            trow0 = pdf["trow0"].to_numpy(np.int64)
-            rows_ends = []
-            for i in (np.zeros_like(num_steps), num_steps - 1):
-                hh = (x_off_min + i * x_step) / (tan_szen * sin_saz)
-                y_off = y_off_min + i * y_step - hh * tan_vzen * cos_vaz
-                ro = np.trunc(y_off / C.Y_RES).astype(np.int64)
-                rows_ends.append(trow0 - ro)
-            rs = np.stack(rows_ends)
-            tnr = pdf["trmax"].to_numpy(np.int64) - trow0 + 1
-            win_r0 = np.maximum(0, rs.min(axis=0) - 1)  # -1: ULP guard
-            win_r1 = rs.max(axis=0) + tnr  # (+ tnr - 1) + 1 ULP guard
-            yield pd.DataFrame({
-                "cell_id": pdf["cell_id"].to_numpy(),
-                "cloud_id": pdf["cloud_id"].to_numpy(np.int64),
-                "win_r0": win_r0.astype(np.int32),
-                "win_r1": win_r1.astype(np.int32)})
-
-    windows = _mat("dist_windows", lambda: wdim0.mapInPandas(
-        windows_map, schema=win_schema))
+    # window rows per clump, emitted exactly by the stage-4 kernel
+    windows = _mat("dist_windows", lambda: px.groupBy(
+        "cell_id", "cloud_id").agg(F.expr("first(win_r0) AS win_r0"),
+                                   F.expr("first(win_r1) AS win_r1")))
 
     # Band the match: every clump whose window STARTS in a row band is
     # matched inside one task against ONE copy of the band raster
@@ -552,15 +399,15 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
     span = int(windows.agg(
         F.expr("max(win_r1 - win_r0 + 1)")).collect()[0][0] or 1)
     B = max(1024, span)
-    wdim = windows.withColumn("band", F.expr(f"win_r0 div {B}"))
-    tmpl_b = tmpl.join(wdim.select("cell_id", "cloud_id", "band"),
-                       ["cell_id", "cloud_id"])
+    band = f"win_r0 div {B}"
+    tmpl_b = tmpl.withColumn("band", F.expr(band))
 
     T = C.TILE_SIZE
-    # fresh leaf: both cogroup sides otherwise share the windows
-    # lineage and its `band` attribute id is ambiguous to the analyzer
+    # fresh leaf: both cogroup sides otherwise derive from dist_px and
+    # share its attribute ids, which the analyzer finds ambiguous
     bands = _mat("dist_bands",
-                 lambda: wdim.select("cell_id", "band").distinct())
+                 lambda: windows.selectExpr("cell_id", f"{band} AS band")
+                 .distinct())
     band_tiles = bands.withColumn(
         "tile", F.explode(F.expr(
             f"sequence((band * {B}) div {T}, "
@@ -606,11 +453,10 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
         return {"shadow_dil": sh, "cloud_dil": cl}
 
     rad = int(max(sh_rad, cl_rad, 1))
-    buf = tiling.tiled_neighborhood_multi(
+    buf = tiling.tiled_neighborhood(
         base, fused, in_cols=("shadow_raw", "cloudmask"),
         out_cols=("shadow_dil", "cloud_dil"), radius=rad,
-        passthrough=("nullmask", "water_test", "snow"),
-        carry_url=False)
+        passthrough=("nullmask", "water_test", "snow"))
 
     out = buf.join(
         px.select("cell_id", "r", "c", "cloud_id", "height_du",

@@ -337,7 +337,7 @@ def interim_class_kernel(spark: SparkSession, table: str = "documents",
     morphology tile-parallel — the 100-TB plan shape.
 
     Plan notes: the two morphology stages are fused into a single halo
-    shuffle (tiling.tiled_neighborhood_multi) — halo grows from 1+5 to
+    shuffle (tiling.tiled_neighborhood) — halo grows from 1+5 to
     6 rows while shuffle count and Arrow round trips halve; the text
     digest is joined back JVM-side instead of riding through the Python
     kernels (it was the largest column in the exchange)."""
@@ -367,16 +367,15 @@ def interim_class_kernel(spark: SparkSession, table: str = "documents",
         dil = kernels.dilate(cloud_m, params.cloud_buffer_px)
         return {"cloudbuf": maj, "cloud_m": cloud_m, "clouddil": dil}
 
-    # carry_url=False: url (the largest exchanged column) stays out of
-    # the halo sort and joins back on (cell_id, r, c) below, together
-    # with the digest — one JVM-side join instead of a fatter exchange.
-    out = tiling.tiled_neighborhood_multi(
+    # url (the largest exchanged column) stays out of the halo sort and
+    # joins back on (cell_id, r, c) below, together with the digest —
+    # one JVM-side join instead of a fatter exchange.
+    out = tiling.tiled_neighborhood(
         p3.drop("url"), fused,
         in_cols=("cloud_raw", "nullmask"),
         out_cols=("cloudbuf", "cloud_m", "clouddil"),
         radius=1 + rad,
-        passthrough=("water_test", "snow"),
-        carry_url=False)
+        passthrough=("water_test", "snow"))
     out = out.select(
         "cell_id", "r", "c", "cloud_raw", "cloud_m", "clouddil",
         "nullmask", "water_test", "snow",

@@ -1,7 +1,7 @@
 """SparkSession factory tuned for the engine.
 
-Local testing uses ``local[$SPARK_GRAFT_CPUS]``; on a real cluster the same
-configs apply per-executor (AQE handles skew/coalescing at runtime, Arrow
+Local runs use ``local[$SPARK_GRAFT_CPUS]``, by default every CPU this
+process may run on; on a real cluster the same configs apply per-executor (AQE handles skew/coalescing at runtime, Arrow
 batches feed the pandas-UDF tile kernels).
 """
 
@@ -44,7 +44,8 @@ def get_spark(
     app_name: str = "python-fmask-spark",
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
@@ -62,9 +63,8 @@ def get_spark(
         # per-task execution memory at that size (UnsafeRow in-memory is
         # several x the shuffle bytes) and spill. A smaller advisory
         # keeps the per-task sort resident (measured: morphology stage
-        # spill 5 GB -> ~0 at rep8192; override via env if needed).
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                os.environ.get("SPARK_GRAFT_ADVISORY_PART", "16m"))
+        # spill 5 GB -> ~0 at rep8192).
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Arrow for all pandas UDF exchange (tile kernels).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -75,42 +75,22 @@ def get_spark(
         # classify join-back (slim kernel output x pass-1 identity on
         # (cell_id, r, c)) otherwise sorts BOTH 41M-row sides; with the
         # 16 MB advisory partitions the per-partition hash build is
-        # small and SHJ removes both sorts (measured below in
-        # BENCH/BASELINE.md; env-disable to fall back to SMJ).
-        # normalized: any truthy spelling (1/yes/true) flips it — the
-        # raw value would crash getOrCreate on Spark's strict boolean
-        # conf parse
-        .config("spark.sql.join.preferSortMergeJoin",
-                str(os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false")
-                    .strip().lower() in ("1", "true", "yes")).lower())
+        # small and SHJ removes both sorts (measured in
+        # BENCH/BASELINE.md).
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         # AQE rewrite of planned SortMergeJoins to shuffled-hash at
         # runtime (guide §3.1): the classify/interim join-backs on
         # (cell_id, r, c) are planned from stats-free LogicalRDD leaves,
         # so preferSortMergeJoin=false alone cannot pick SHJ there. With
         # the 16 MB advisory partition target every post-shuffle
         # partition sits far below this threshold, so the rewrite is
-        # safe (the hash build is per-partition); scale deployments
-        # size it alongside the advisory target via env.
+        # safe (the hash build is per-partition).
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-                os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", "128m"))
+                "128m")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    if master.startswith("local-cluster"):
-        # local-cluster[N, cores, mem]'s third field caps the WORKER;
-        # spark.executor.memory still defaults to 1g, which silently
-        # strangles every sort to ~75 MB/task before spilling (measured:
-        # 3-8 GB spill at rep8192 that no worker-memory increase could
-        # remove). Size the executor heap from the worker grant but cap
-        # it — N over-sized heaps on one box evict the page cache and
-        # thrash (measured: 4 x 15g heaps doubled a stage's p50).
-        # Override with SPARK_GRAFT_EXECUTOR_MEM_MB.
-        worker_mb = int(master.split(",")[2].rstrip("]").strip())
-        exec_mb = int(os.environ.get(
-            "SPARK_GRAFT_EXECUTOR_MEM_MB",
-            str(min(max(worker_mb - 1024, 1024), 6144))))
-        builder = builder.config("spark.executor.memory", f"{exec_mb}m")
     # Stage-level evidence (parsed by perfbench/eventlog.py): shuffle
     # bytes, spill, GC per stage.
     ev_dir = os.environ.get("SPARK_GRAFT_EVENTLOG")

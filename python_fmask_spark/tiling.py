@@ -5,8 +5,10 @@ horizontal tiles of TILE_SIZE rows. Neighborhood kernels (majority,
 dilation, focal variance) need ``radius`` rows of context across tile
 seams — the reference gets this via RIOS overlap reads
 (fmask/fmask.py:262-263,706-711,1326); we get it with ``with_halo``:
-each boundary row is duplicated into the adjacent tile BEFORE the
+one explode copies each boundary row into the adjacent tile BEFORE the
 groupBy, so the kernel shuffle is one pass and needs no self-join.
+``tiled_neighborhood`` is the one halo-kernel helper: it runs any
+composition of such kernels over that single shuffle.
 
 Scale notes: halo duplication is O(radius/TILE_SIZE) overhead (<7% for
 radius 2, tiles 32). The (cell_id, tile) grouping key is already salt-like
@@ -61,151 +63,58 @@ def with_halo(df: DataFrame, radius: int,
 
 def tiled_neighborhood(
     df: DataFrame,
-    kernel: Callable[[np.ndarray], np.ndarray],
-    in_col: str,
-    out_col: str,
-    radius: int,
-    tile_rows: int = C.TILE_SIZE,
-    out_type: str = "boolean",
-    passthrough: tuple[str, ...] = (),
-    carry_url: bool = True,
-) -> DataFrame:
-    """Run a 2-D neighborhood kernel tile-parallel with halo exchange.
-
-    ``carry_url=False`` drops the url identity from the halo exchange —
-    (cell_id, r, c) identifies the pixel, and shipping the ~40-byte url
-    through the sort (twice, with halo duplication) was measured as the
-    morphology stage's largest spill contributor; callers join url back
-    JVM-side on (cell_id, r, c).
-
-    ``kernel`` maps a bool/int raster slab -> same-shape array; it must
-    use reflect borders (all kernels in operators/kernels.py do). The
-    slab passed to the kernel covers [tile_start - radius, tile_end +
-    radius] rows; only core rows are emitted, so seam rows equal the
-    whole-raster result exactly (property-tested).
-
-    The slab's synthetic edges are only reached where the halo is
-    truncated by the true raster border — where reflect is the correct
-    semantic anyway.
-    """
-    W = C.SCENE_WIDTH
-    ensure_package_on_executors(df.sparkSession)
-    passthrough = tuple(p for p in passthrough if p != in_col)
-    id_cols = (["url"] if carry_url else []) + ["cell_id", "r", "c"]
-    sel = [*id_cols, in_col, *passthrough]
-    haloed = with_halo(df.select(*sel), radius, tile_rows)
-
-    dtypes = dict(df.dtypes)
-    pass_schema = "".join(
-        f", {name} {dtypes[name]}" for name in (in_col, *passthrough))
-    url_schema = "url string, " if carry_url else ""
-    schema = (f"{url_schema}cell_id string, r int, c int, "
-              f"{out_col} {out_type}{pass_schema}")
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        r = pdf["r"].to_numpy()
-        slab_lo = r.min()
-        slab_hi = r.max()
-        h = slab_hi - slab_lo + 1
-        arr = np.zeros((h, W), dtype=bool)
-        arr[r - slab_lo, pdf["c"].to_numpy()] = \
-            pdf[in_col].to_numpy().astype(bool)
-        res = kernel(arr)
-        core = ~pdf["is_halo"].to_numpy()
-        rr = r[core]
-        out = {}
-        if carry_url:
-            out["url"] = pdf["url"].to_numpy()[core]
-        out.update({
-            "cell_id": pdf["cell_id"].to_numpy()[core],
-            "r": rr.astype(np.int32),
-            "c": pdf["c"].to_numpy()[core].astype(np.int32),
-            out_col: res[rr - slab_lo, pdf["c"].to_numpy()[core]],
-        })
-        for name in (in_col, *passthrough):
-            out[name] = pdf[name].to_numpy()[core]
-        return pd.DataFrame(out)
-
-    return haloed.groupBy("cell_id", "tile").applyInPandas(run, schema=schema)
-
-
-def tiled_neighborhood_multi(
-    df: DataFrame,
     kernel: Callable[[dict[str, np.ndarray]], dict[str, np.ndarray]],
     in_cols: tuple[str, ...],
     out_cols: tuple[str, ...],
     radius: int,
     tile_rows: int = C.TILE_SIZE,
-    out_type: str = "boolean",
     passthrough: tuple[str, ...] = (),
-    carry_url: bool = True,
-    pack_bools: bool = True,
 ) -> DataFrame:
-    """Fused multi-stage neighborhood kernels over ONE halo shuffle.
+    """Run 2-D neighborhood kernels tile-parallel over ONE halo shuffle.
 
-    ``carry_url=False``: see tiled_neighborhood — identity joins back
-    on (cell_id, r, c) instead of riding the halo sort.
+    ``kernel`` maps {in_col: bool raster slab} -> {out_col: same-shape
+    bool array}; it must use reflect borders (all kernels in
+    operators/kernels.py do). ``radius`` must cover the composed reach
+    (e.g. majority(1) then dilate(5) -> 6): composing k local operators
+    into one tile pass costs one shuffle and one Arrow round trip
+    instead of k. The slab covers [tile_start - radius, tile_end +
+    radius] rows and only core rows are emitted, so seam rows equal the
+    whole-raster result exactly (property-tested); the slab's synthetic
+    edges are only reached where the halo is truncated by the true
+    raster border, where reflect is the correct semantic anyway.
 
-    ``pack_bools=True`` (default) packs every boolean input/passthrough
-    column into ONE tinyint bitmask for the halo exchange: the sort
-    feeding applyInPandas stores each field in an 8-byte UnsafeRow
-    slot, so k booleans cost 8k bytes there — the bitmask makes that 8
-    total. The kernel sees ordinary unpacked slabs and the output
-    schema is unchanged (Arrow transfers bools as bits either way; only
-    the JVM-side exchange width changes).
-
-    ``kernel`` maps {in_col: raster slab} -> {out_col: same-shape
-    array}; ``radius`` must cover the composed reach (e.g. majority(1)
-    then dilate(5) -> 6). Composing k local operators into one tile pass
-    costs one shuffle and one Arrow round trip instead of k — the
-    halo grows additively while the exchanged bytes drop k-fold.
-    Seam-correctness argument is the same as tiled_neighborhood: core
-    outputs only depend on inputs within ``radius`` rows, all present
-    on the slab; synthetic slab edges coincide with true raster borders
-    where reflect is the correct semantic."""
+    Rows are keyed (cell_id, r, c): callers join other columns (url,
+    digests) back on that key instead of shipping them through the halo
+    sort. Every boolean input/passthrough column rides the exchange
+    packed into ONE tinyint bitmask: the sort feeding applyInPandas
+    stores each field in an 8-byte UnsafeRow slot, so k booleans would
+    cost 8k bytes there; the kernel and the output see plain booleans."""
     W = C.SCENE_WIDTH
     ensure_package_on_executors(df.sparkSession)
     passthrough = tuple(p for p in passthrough if p not in in_cols)
-    id_cols = (["url"] if carry_url else []) + ["cell_id", "r", "c"]
     dtypes = dict(df.dtypes)
     data_cols = (*in_cols, *passthrough)
-    packed = tuple(n for n in data_cols
-                   if dtypes[n] == "boolean") if pack_bools else ()
+    packed = tuple(n for n in data_cols if dtypes[n] == "boolean")
     unpacked = tuple(n for n in data_cols if n not in packed)
-    if len(packed) > 1:
-        pack_expr = " + ".join(f"{1 << i} * cast({n} as int)"
-                               for i, n in enumerate(packed))
-        pre = df.select(
-            *id_cols,
-            F.expr(f"cast({pack_expr} as tinyint)").alias("_bf"),
-            *unpacked)
-        wire_cols = ("_bf", *unpacked)
-    else:
-        packed = ()
-        pre = df.select(*id_cols, *data_cols)
-        wire_cols = data_cols
-    haloed = with_halo(pre, radius, tile_rows)
+    pack_expr = " + ".join(f"{1 << i} * cast({n} as int)"
+                           for i, n in enumerate(packed)) or "0"
+    haloed = with_halo(df.select(
+        "cell_id", "r", "c",
+        F.expr(f"cast({pack_expr} as tinyint)").alias("_bf"),
+        *unpacked), radius, tile_rows)
 
-    out_schema = "".join(f", {name} {out_type}" for name in out_cols)
-    pass_schema = "".join(
-        f", {name} {dtypes[name]}" for name in data_cols)
-    url_schema = "url string, " if carry_url else ""
-    schema = (f"{url_schema}cell_id string, r int, c int"
-              f"{out_schema}{pass_schema}")
-    del wire_cols  # documentation only; run() reads _bf/unpacked
+    schema = ("cell_id string, r int, c int"
+              + "".join(f", {name} boolean" for name in out_cols)
+              + "".join(f", {name} {dtypes[name]}" for name in data_cols))
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         r = pdf["r"].to_numpy()
         slab_lo = r.min()
         h = r.max() - slab_lo + 1
         cc_all = pdf["c"].to_numpy()
-        cols = {}
-        if packed:
-            bf = pdf["_bf"].to_numpy()
-            for i, name in enumerate(packed):
-                cols[name] = (bf & (1 << i)) != 0
-        for name in unpacked:
-            cols[name] = pdf[name].to_numpy()
+        bf = pdf["_bf"].to_numpy()
+        cols = {name: (bf & (1 << i)) != 0 for i, name in enumerate(packed)}
+        cols.update({name: pdf[name].to_numpy() for name in unpacked})
         slabs = {}
         for name in in_cols:
             arr = np.zeros((h, W), dtype=bool)
@@ -215,14 +124,11 @@ def tiled_neighborhood_multi(
         core = ~pdf["is_halo"].to_numpy()
         rr = r[core]
         cc = cc_all[core]
-        out = {}
-        if carry_url:
-            out["url"] = pdf["url"].to_numpy()[core]
-        out.update({
+        out = {
             "cell_id": pdf["cell_id"].to_numpy()[core],
             "r": rr.astype(np.int32),
             "c": cc.astype(np.int32),
-        })
+        }
         for name in out_cols:
             out[name] = res[name][rr - slab_lo, cc]
         for name in data_cols:

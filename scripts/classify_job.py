@@ -9,7 +9,7 @@ same conversions the reference applies (:255-263):
     divided by 100 before reaching the engine;
   --cloudbufferdistance / --shadowbufferdistance are METRES and are
     converted to pixels by integer division with the pixel size
-    (toaImgInfo.xRes there, FmaskParams.x_res here).
+    (toaImgInfo.xRes there, constants.X_RES here).
 
 Usage:
   spark-submit --py-files python_fmask_spark.zip scripts/classify_job.py \
@@ -137,6 +137,7 @@ def params_from_cmdargs(cmdargs):
     (usgsLandsatStacked.py:255-263: /100 for the percentage, metre ->
     pixel division for the buffers) on top of the optional strict
     preset."""
+    from python_fmask_spark import constants as C
     from python_fmask_spark.operators.scene import FmaskParams
 
     base = FmaskParams.strict if cmdargs.strict else FmaskParams
@@ -149,11 +150,10 @@ def params_from_cmdargs(cmdargs):
     # explicit buffer flags override the preset/engine defaults; an
     # omitted flag (None) leaves the strict preset's 0/3 or the engine
     # defaults in place
-    x_res = FmaskParams().x_res
     if cmdargs.cloudbufferdistance is not None:
-        kw["cloud_buffer_px"] = int(cmdargs.cloudbufferdistance / x_res)
+        kw["cloud_buffer_px"] = int(cmdargs.cloudbufferdistance / C.X_RES)
     if cmdargs.shadowbufferdistance is not None:
-        kw["shadow_buffer_px"] = int(cmdargs.shadowbufferdistance / x_res)
+        kw["shadow_buffer_px"] = int(cmdargs.shadowbufferdistance / C.X_RES)
     return base(**kw)
 
 

@@ -7,7 +7,7 @@
 # On a real cluster: substitute --master spark://... or yarn and set
 # --num-executors for the N / 4N scaling comparison.
 set -euo pipefail
-MASTER="${1:-local[${SPARK_GRAFT_CPUS:-32}]}"
+MASTER="${1:-local[${SPARK_GRAFT_CPUS:-$(nproc)}]}"
 SF_DIR="${2:-${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}}"
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 

@@ -20,6 +20,8 @@ def spark():
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
+# the smallest scale factor whose cells contain cloud shadow (class 3)
+SF_SHADOW = str(pathlib.Path(SF_SMALL).with_name("sf0.1"))
 
 
 @pytest.fixture(scope="session")
@@ -30,3 +32,8 @@ def sf_small():
 @pytest.fixture(scope="session")
 def sf_oracle():
     return SF_ORACLE
+
+
+@pytest.fixture(scope="session")
+def sf_shadow():
+    return SF_SHADOW

@@ -150,7 +150,7 @@ def test_snow_thresh_flows_into_classification(spark, sf_oracle):
 def test_cli_params_mirror_reference_conversions():
     """scripts/classify_job.py applies the reference CLI's unit
     conversions (usgsLandsatStacked.py:255-263): percentage /100,
-    metres -> pixels via x_res; --strict preserves the preset buffers
+    metres -> pixels via X_RES; --strict preserves the preset buffers
     unless explicitly overridden."""
     sys.path.insert(0, SCRIPTS)
     from classify_job import get_cmdargs, params_from_cmdargs
@@ -161,8 +161,8 @@ def test_cli_params_mirror_reference_conversions():
          "--nirsnowthreshold", "0.13", "--greensnowthreshold", "0.12",
          "--mincloudsize", "8"]))
     assert p.eqn17_cloud_prob_thresh == 0.225
-    assert p.cloud_buffer_px == int(150 / p.x_res)
-    assert p.shadow_buffer_px == int(300 / p.x_res)
+    assert p.cloud_buffer_px == int(150 / C.X_RES)
+    assert p.shadow_buffer_px == int(300 / C.X_RES)
     assert (p.nir_snow_thresh, p.green_snow_thresh) == (0.13, 0.12)
     assert p.min_cloud_size_px == 8
 
@@ -170,7 +170,7 @@ def test_cli_params_mirror_reference_conversions():
     assert (strict.cloud_buffer_px, strict.shadow_buffer_px) == (0, 3)
     over = params_from_cmdargs(get_cmdargs(
         ["sf", "--strict", "--cloudbufferdistance", "150"]))
-    assert over.cloud_buffer_px == int(150 / over.x_res)
+    assert over.cloud_buffer_px == int(150 / C.X_RES)
     assert over.shadow_buffer_px == 3
 
     dflt = params_from_cmdargs(get_cmdargs(["sf"]))

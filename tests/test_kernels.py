@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from python_fmask_spark import constants as C
 from python_fmask_spark.operators import kernels
 
 
@@ -150,6 +151,57 @@ def test_shadow_match_known_offset():
     got[matched] = True
     assert (got & potential).sum() == 25  # exact lock onto the block
     assert not (got & ~potential).any()
+
+
+def test_shadow_match_on_row_band_equals_whole():
+    """match_one_shadow on a row band of a taller cell (row0 > 0,
+    img_nrows = cell height) accepts exactly the whole-raster
+    placements and returns cell rows; a band that misses a reachable
+    placement raises instead of matching wrongly."""
+    import pytest
+
+    H, W = 64, 8
+    x_res, y_res = C.X_RES, C.Y_RES
+    temps = (10.0, 5.0, 20.0)  # t_cloudbase, t_low, t_high
+    sun_az, sun_zen, sat_az, sat_zen = 0.2, 0.6, 0.3, 0.05
+    n_matched = 0
+    for seed in range(6):
+        rng = np.random.RandomState(seed)
+        cloud = rng.rand(H, W) > 0.8
+        pot = rng.rand(H, W) > 0.3
+        null = rng.rand(H, W) > 0.95
+        tr = rng.randint(30, 36, size=6).astype(np.uint32)
+        tc = rng.randint(2, 5, size=6).astype(np.uint32)
+        entry = ((tr, tc), sat_az, sat_zen, sun_az, sun_zen)
+        whole = kernels.match_one_shadow(cloud, entry, pot, *temps,
+                                         x_res, y_res, null)
+
+        # rows of the reachable placements (inside the cell)
+        n, place = kernels.shadow_sweep(*temps, sun_az, sun_zen, sat_az,
+                                        sat_zen, x_res, y_res)
+        tnr = int(tr.max() - tr.min()) + 1
+        tnc = int(tc.max() - tc.min()) + 1
+        rows = [int(tr.min()) - ro for ro, co in map(place, range(n))
+                if 0 <= int(tr.min()) - ro <= H - tnr
+                and 0 <= int(tc.min()) - co <= W - tnc]
+        b0, b1 = min(rows), max(rows) + tnr
+        assert 0 < b0 and b1 < H
+
+        band = kernels.match_one_shadow(
+            cloud[b0:b1], entry, pot[b0:b1], *temps, x_res, y_res,
+            null[b0:b1], row0=b0, img_nrows=H)
+        if whole is None:
+            assert band is None
+        else:
+            n_matched += 1
+            np.testing.assert_array_equal(band[0], whole[0])
+            np.testing.assert_array_equal(band[1], whole[1])
+
+        with pytest.raises(AssertionError, match="under-covered"):
+            kernels.match_one_shadow(
+                cloud[b0 + 1:b1], entry, pot[b0 + 1:b1], *temps, x_res,
+                y_res, null[b0 + 1:b1], row0=b0 + 1, img_nrows=H)
+    assert n_matched > 0
 
 
 def test_tile_decomposition_majority():

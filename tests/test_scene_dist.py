@@ -9,6 +9,7 @@ from __future__ import annotations
 import os
 
 import numpy as np
+import pytest
 
 from python_fmask_spark import pipeline
 from python_fmask_spark.operators.scene_dist import classify_distributed
@@ -29,10 +30,21 @@ def _canon(df):
     return rows
 
 
-def test_distributed_equals_scene_kernel(spark, sf_small):
-    register_views(spark, sf_small)
+def _assert_shadows(sf, whole):
+    """sf0.001 has no shadow pixel; at sf_shadow the distributed match
+    must have run and succeeded somewhere, or parity proves nothing
+    about it."""
+    if sf == "sf_shadow":
+        assert any(v[0] == 3 for v in whole.values()), \
+            "no shadow pixel (class 3) at this scale factor"
+
+
+@pytest.mark.parametrize("sf", ["sf_small", "sf_shadow"])
+def test_distributed_equals_scene_kernel(spark, sf, request):
+    register_views(spark, request.getfixturevalue(sf))
     whole = _canon(pipeline.classify(spark))
     dist = _canon(classify_distributed(spark))
+    _assert_shadows(sf, whole)
     assert whole.keys() == dist.keys()
     diffs = {u: (whole[u], dist[u]) for u in whole
              if whole[u] != dist[u]}
@@ -48,7 +60,7 @@ def test_distributed_task_grain_is_bounded(spark, sf_small):
     import pyspark.sql.functions as F
 
     from python_fmask_spark import constants as C
-    from python_fmask_spark.operators import scene_dist
+    from python_fmask_spark.operators import kernels
 
     register_views(spark, sf_small)
     # max window height from the sweep geometry at the engine's angle
@@ -59,9 +71,9 @@ def test_distributed_task_grain_is_bounded(spark, sf_small):
     out = classify_distributed(spark)
     out.count()  # force execution; plan validity is the main check here
 
-    # directly exercise the window builder on a synthetic mega-clump
-    nsteps, *_rest, place = scene_dist._sweep_bounds(
-        t_base=10.0, t_low=5.0, t_high=20.0, sun_az=1.0, sun_zen=1.0,
+    # directly exercise the sweep the windows come from
+    nsteps, place = kernels.shadow_sweep(
+        t_cloudbase=10.0, t_low=5.0, t_high=20.0, sun_az=1.0, sun_zen=1.0,
         sat_az=0.5, sat_zen=0.1, x_res=C.X_RES, y_res=C.Y_RES)
     ends = [place(0), place(nsteps - 1)]
     spread = abs(ends[0][0] - ends[1][0])
@@ -120,19 +132,21 @@ def test_distributed_min_cloud_size_matches_scene_kernel(spark, sf_small):
         "threshold removed no clumps on this fixture; raise it"
 
 
-def test_distributed_s2_no_thermal_matches_scene_kernel(spark, sf_small):
+@pytest.mark.parametrize("sf", ["sf_small", "sf_shadow"])
+def test_distributed_s2_no_thermal_matches_scene_kernel(spark, sf, request):
     """Sensor dispatch on the distributed path: classify_distributed
     (sensor=SENTINEL2) — flat clouds, Tcloudbase=0 sweeps, NaN base
     temps, NULL BT thresholds — must match pipeline.classify's
     no-thermal output bit-for-bit."""
     from python_fmask_spark import oracle
 
-    register_views(spark, sf_small)
+    register_views(spark, request.getfixturevalue(sf))
     offs = oracle.S2_ZERO_OFFSETS
     whole = _canon(pipeline.classify(spark, sensor="SENTINEL2",
                                      s2_offsets=offs))
     dist = _canon(classify_distributed(spark, sensor="SENTINEL2",
                                        s2_offsets=offs))
+    _assert_shadows(sf, whole)
     assert whole.keys() == dist.keys()
     diffs = {u: (whole[u], dist[u]) for u in whole if whole[u] != dist[u]}
     assert not diffs, f"{len(diffs)} mismatching urls, e.g. " \
@@ -156,8 +170,6 @@ def test_classify_auto_mixed_dispatch_matches_classify(spark, sf_small):
 def test_distributed_rejects_cells_with_runner(spark, sf_small, tmp_path):
     """A stage fingerprint that ignored ``cells`` would resume another
     run's rows, so the pair is refused before any stage runs."""
-    import pytest
-
     from python_fmask_spark.plans.lineage import StageRunner
 
     register_views(spark, sf_small)

@@ -29,9 +29,11 @@ def _mask_df(spark, seed=7, density=0.45):
 
 def test_tiled_majority_equals_whole(spark):
     df, mask = _mask_df(spark)
+    # one boolean column on the exchange: the packed-bitmask path with
+    # a single bit
     out = tiling.tiled_neighborhood(
-        df, kernels.majority3_buffer, "flag", "buf", radius=1,
-        tile_rows=16).collect()
+        df, lambda s: {"buf": kernels.majority3_buffer(s["flag"])},
+        ("flag",), ("buf",), radius=1, tile_rows=16).collect()
     whole = kernels.majority3_buffer(mask)
     assert len(out) == H * W
     for row in out:
@@ -42,11 +44,11 @@ def test_tiled_dilate_equals_whole(spark):
     df, mask = _mask_df(spark, seed=13, density=0.1)
     radius = 2
 
-    def k(a):
-        return kernels.dilate(a, radius)
+    def k(slabs):
+        return {"dil": kernels.dilate(slabs["flag"], radius)}
 
-    out = tiling.tiled_neighborhood(df, k, "flag", "dil", radius=radius,
-                                    tile_rows=16).collect()
+    out = tiling.tiled_neighborhood(df, k, ("flag",), ("dil",),
+                                    radius=radius, tile_rows=16).collect()
     whole = kernels.dilate(mask, radius)
     for row in out:
         assert row.dil == bool(whole[row.r, row.c]), (row.r, row.c)
@@ -75,7 +77,7 @@ def test_distributed_ccl_equals_whole(spark, tile_rows):
 
 @pytest.mark.parametrize("tile_rows", [16, 37])
 def test_fused_multi_kernel_equals_whole(spark, tile_rows):
-    """tiled_neighborhood_multi with a composed kernel (majority then
+    """tiled_neighborhood with a composed kernel (majority then
     dilate, halo 1+2) must equal the whole-raster composition — the
     fused single-shuffle path of pipeline.interim_class_kernel."""
     df, mask = _mask_df(spark, seed=31, density=0.3)
@@ -90,7 +92,7 @@ def test_fused_multi_kernel_equals_whole(spark, tile_rows):
         m = maj & ~slabs["nullm"]
         return {"maj": maj, "m": m, "dil": kernels.dilate(m, 2)}
 
-    out = tiling.tiled_neighborhood_multi(
+    out = tiling.tiled_neighborhood(
         df2, fused, in_cols=("flag", "nullm"),
         out_cols=("maj", "m", "dil"), radius=3,
         tile_rows=tile_rows).collect()
