@@ -231,7 +231,7 @@ def _potential_shadow_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     view = pipeline.materialize_pass1(spark)
     src = spark.sql(pipeline.tail_sql_from_pass1(
-        view, "thresholds",
+        view, pipeline.materialize_thresholds(spark), "thresholds",
         f"""SELECT p.url, p.cell_id, p.r, p.c,
               cast(p.nir as bigint) AS nir,
               t.b4_17 * 10000.0 AS nir17_dn
@@ -449,7 +449,7 @@ def _pass2_probthresh_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     view = pipeline.materialize_pass1(spark)
     thr = pipeline.materialize_thresholds(spark)
     return spark.sql(pipeline.tail_sql_from_pass1(
-        view, "pass2",
+        view, thr, "pass2",
         """SELECT p.cell_id,
              cast(sum(p.wprob_pcnt) as bigint) AS sum_wprob,
              cast(sum(p.lprob_pcnt) as bigint) AS sum_lprob,
@@ -458,7 +458,7 @@ def _pass2_probthresh_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
              count(*) AS n_docs
            FROM pass2 p JOIN landthr lt ON lt.cell_id = p.cell_id
            GROUP BY p.cell_id""",
-        thresholds_view=thr, eqn17_cloud_prob_thresh=0.3))
+        eqn17_cloud_prob_thresh=0.3))
 
 
 def _ann_ivf_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -791,7 +791,7 @@ def _pass1_thresholds_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     view = pipeline.materialize_pass1(spark)
     return spark.sql(pipeline.tail_sql_from_pass1(
-        view, "thresholds",
+        view, pipeline.materialize_thresholds(spark), "thresholds",
         """SELECT cell_id, twater, tlow, thigh,
              cast(round(b4_17 * 1000) as int) AS b4_17_milli,
              non_null_count
@@ -802,7 +802,7 @@ def _pass2_probs_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     view = pipeline.materialize_pass1(spark)
     return spark.sql(pipeline.tail_sql_from_pass1(
-        view, "pass2",
+        view, pipeline.materialize_thresholds(spark), "pass2",
         """SELECT p.cell_id,
              cast(sum(p.wprob_pcnt) as bigint) AS sum_wprob,
              cast(sum(p.lprob_pcnt) as bigint) AS sum_lprob,

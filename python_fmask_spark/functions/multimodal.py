@@ -126,12 +126,3 @@ dig AS (
 SELECT url, 'html' AS modality, n_bytes,
   concat_ws(',', {feats}) AS feat_milli
 FROM dig"""
-
-
-def resize_stub(df: DataFrame, payload_col: str = "html",
-                target: tuple[int, int] = (64, 64)) -> DataFrame:
-    """Image-resize plumbing: same mapInPandas shape; the pixel work is
-    NotImplemented in this container by design."""
-    raise NotImplementedError(
-        "image decode/resize requires codecs not present in this "
-        "container; use extract_features for the stubbed feature path")

@@ -23,7 +23,6 @@ from ..dialect import SPARK, explode_series, idiv, md5_slice_int
 
 N_QUERIES = 20
 TOP_K = 5
-DIM = 64
 N_PLANES = 8
 
 

@@ -76,7 +76,10 @@ def label_clumps_distributed(df: DataFrame, flag_col: str,
 
     labeled = src.groupBy("cell_id", "tile").applyInPandas(
         local_label, schema=_local_label_schema())
-    labeled = labeled.persist()
+    # a lazy local checkpoint, not persist(): the ContextCleaner drops it
+    # once nothing references it, where a persisted frame would stay in
+    # the session's CacheManager until the session ends
+    labeled = labeled.localCheckpoint(eager=False)
 
     # Seam edges: 8-adjacent pixel pairs across tile boundaries.
     # local_label values are cell-local linear pixel indexes, so distinct

@@ -44,10 +44,13 @@ def _local_fill_from_sources(img: np.ndarray, nullmask: np.ndarray,
     return out
 
 
+# cap on the fixpoint's halo rounds (each round propagates one tile)
+_MAX_ROUNDS = 64
+
+
 def fill_minima_distributed(df: DataFrame, img_col: str,
                             nullval: int, boundaryval: float = 0.0,
                             tile_rows: int = C.TILE_SIZE,
-                            max_rounds: int = 64,
                             boundary_col: str | None = None) -> DataFrame:
     """Fill local minima of a per-cell raster column, tile-parallel.
 
@@ -79,7 +82,7 @@ def fill_minima_distributed(df: DataFrame, img_col: str,
     bcol = (F.expr(f"first({boundary_col}) AS cell_bval") if boundary_col
             else F.expr(f"cast({boundaryval} as double) AS cell_bval"))
     bmeta = df.groupBy("cell_id").agg(bcol) if boundary_col else None
-    # url never rides the fixpoint: each of the up-to-max_rounds halo
+    # url never rides the fixpoint: each of the up-to-_MAX_ROUNDS halo
     # exchanges would re-ship it as pure passthrough; identity joins
     # back on (cell_id, r, c) at the caller when needed
     base = df.select("cell_id", "r", "c", img_col) \
@@ -154,7 +157,7 @@ def fill_minima_distributed(df: DataFrame, img_col: str,
     from ..tiling import with_halo
 
     state = base
-    for _ in range(max_rounds):
+    for _ in range(_MAX_ROUNDS):
         haloed = with_halo(state, radius=1, tile_rows=tile_rows)
         # the round's changed-pixel count rides the checkpoint job
         # itself (an observed metric), not a second aggregate job

@@ -191,17 +191,6 @@ def classify_scene(pdf: pd.DataFrame, params: FmaskParams = FmaskParams(),
     return res
 
 
-# The kernel's own output carries NO document digest: shipping a 64-byte
-# passthrough string through Arrow both ways is the single biggest
-# non-scaling cost of the stage (measured: ~2x the trivial-kernel
-# plumbing time at 10M rows). pipeline.classify joins text_sha256 back
-# JVM-side after the kernel.
-SCENE_OUT_SCHEMA = ("url string, cell_id string, r int, c int, "
-                    "fmask_class int, cloud_id bigint, "
-                    "cloud_height_du int, cloud_base_temp_c double")
-
-SCENE_OUT_SCHEMA_WITH_SHA = SCENE_OUT_SCHEMA + ", text_sha256 string"
-
 # --- slim scene exchange -----------------------------------------------
 # The groupBy(cell_id) sort feeding applyInPandas exchanges every field
 # as an 8-byte UnsafeRow slot plus variable-length string bytes, and the
@@ -214,6 +203,11 @@ SCENE_OUT_SCHEMA_WITH_SHA = SCENE_OUT_SCHEMA + ", text_sha256 string"
 # shape as the reference streaming uint8 stacks between passes
 # (fmask/fmask.py:459-460).
 
+# The kernel's own output carries NO document digest: shipping a 64-byte
+# passthrough string through Arrow both ways is the single biggest
+# non-scaling cost of the stage (measured: ~2x the trivial-kernel
+# plumbing time at 10M rows). pipeline.classify joins url and
+# text_sha256 back JVM-side after the kernel.
 SCENE_OUT_SCHEMA_SLIM = ("cell_id string, r int, c int, "
                          "fmask_class int, cloud_id bigint, "
                          "cloud_height_du int, cloud_base_temp_c double")
@@ -225,11 +219,15 @@ _FLAG_BITS = (("nullmask", 1), ("water_test", 2), ("snow", 4),
 PX_EXCHANGE_SQL = (
     "cell_id, cast(r as int) AS r, cast(c as int) AS c, "
     "cast(nir as int) AS nir, bt, "
-    "cast(cast(nullmask as int) + 2 * cast(water_test as int) "
-    "+ 4 * cast(snow as int) + 8 * cast(cloud_raw as int) as tinyint) "
-    "AS flags, "
+    "cast(" + " + ".join(f"{bit} * cast({name} as int)"
+                         for name, bit in _FLAG_BITS)
+    + " as tinyint) AS flags, "
     "cast(sat_az_cdn as int) AS sat_az_cdn, "
     "cast(sat_zen_cdn as int) AS sat_zen_cdn")
+
+# the SQL expressions that unpack `flags` back into its booleans
+FLAGS_SQL = tuple(f"(flags & {bit}) != 0 AS {name}"
+                  for name, bit in _FLAG_BITS)
 
 DIM_COLS = ("g_tlow", "g_thigh", "g_b4_17",
             "sun_az", "sun_zen", "sat_az", "sat_zen")

@@ -21,6 +21,13 @@ loops clumps independently, /root/reference/fmask/fmask.py:1100-1185):
                              shift)
   stage 6  buffers+finalize  one fused tiled halo kernel + column CASE
 
+Inputs are pipeline.scene_exchange's three frames, as for the
+whole-cell kernel: the ``dist_p3`` barrier stores the pixel frame with
+its flags unpacked (cell_id, r, c, nir, bt, the four booleans and the
+two view-angle DNs); the fill boundary and the stage-4/5 kernels get
+their per-cell scalars by a broadcast join of the dims frame, and the
+identity frame joins back once at the end.
+
 Stages 4-5 run the whole-cell kernel's own functions
 (kernels.cloud_base, project_shadow, shadow_sweep, match_one_shadow on a
 row band), so both classify paths share one copy of the shadow
@@ -60,7 +67,7 @@ from ..session import ensure_package_on_executors
 from . import kernels
 from .clumps import label_clumps_distributed
 from .fillminima_dist import fill_minima_distributed
-from .scene import FmaskParams
+from .scene import FLAGS_SQL, FmaskParams
 
 if TYPE_CHECKING:
     from ..pipeline import Scene
@@ -196,7 +203,6 @@ def _match_band_kernel(left: pd.DataFrame, right: pd.DataFrame
 
 def classify_distributed(spark: SparkSession, table: str = "documents",
                          params: FmaskParams | None = None,
-                         cells: DataFrame | None = None,
                          runner=None,
                          sensor: str = "LANDSAT8",
                          s2_offsets: dict[str, int] | None = None,
@@ -204,13 +210,6 @@ def classify_distributed(spark: SparkSession, table: str = "documents",
                          s2_cdi: bool = False) -> DataFrame:
     """Full classification with bounded task grains (see module doc).
     Returns the same schema as pipeline.classify.
-
-    ``cells`` (a small DataFrame of cell_id) restricts the run to those
-    cells — pipeline.classify's ``cells_mode="semi"`` — before the
-    dist_p3 barrier, so every stage sees only them; classify_auto
-    routes its mega-cells here this way. It cannot be combined with a
-    ``runner``: the stage fingerprint does not cover the cell subset,
-    so a resume would read another run's rows.
 
     ``runner`` (plans.lineage.StageRunner): materialize each stage
     barrier through a fingerprinted stage TABLE instead of
@@ -227,32 +226,32 @@ def classify_distributed(spark: SparkSession, table: str = "documents",
     return _classify_distributed(
         spark, pipeline.Scene(table, sensor, s2_offsets, s2_cdi, tile_meta,
                               **params.snow_kwargs()),
-        params, cells, runner)
+        params, runner=runner)
 
 
 def _classify_distributed(spark: SparkSession, scene: Scene,
                           params: FmaskParams,
                           cells: DataFrame | None = None,
                           runner=None) -> DataFrame:
+    """``cells`` (a DataFrame of cell_id, no runner) restricts the run
+    to those cells; classify_auto routes its mega-cells here this way."""
     from .. import pipeline, tiling
 
-    if cells is not None and runner is not None:
-        raise ValueError(
-            "classify_distributed: cells= cannot be combined with a "
-            "runner (the stage fingerprint does not cover the cell "
-            "subset, so a resume would read another run's rows)")
     ensure_package_on_executors(spark)
     has_thermal = scene.sensor != "SENTINEL2"
+    eqn17 = params.eqn17_cloud_prob_thresh
     # Stage fingerprint folds in EVERYTHING that changes stage results:
     # the FmaskParams fields (min_cloud_size_px/buffers alter dist_flags
-    # and the finalize), the scene key (rendered pass-1 SQL: sensor
-    # dispatch, offsets, snow floors, angle grids, CDI, derive-formula
-    # version), and the session's registered input identity (per-file
-    # mtime/size) — so resuming in the same workdir after changing
-    # params or rewriting the table re-runs instead of silently reusing
-    # stale stage tables.
+    # and the finalize), the rendered SQL of the per-cell leaf and of
+    # the pixel exchange (the scene key rides in their leaf view names:
+    # sensor dispatch, offsets, snow floors, angle grids, CDI; the
+    # derive formulas of every pass ride in the text), and the
+    # session's registered input identity (per-file mtime/size) — so
+    # resuming in the same workdir after changing params, code or the
+    # table re-runs instead of silently reusing stale stage tables.
     fp = ("" if runner is None else pipeline.stage_fingerprint(
-        spark, f"distv4||{params!r}||{scene.key()}"))
+        spark, f"distv5||{params!r}||{pipeline.thresholds_sql_text(scene)}"
+               f"||{pipeline.px_exchange_sql(scene, eqn17)}"))
 
     def _mat(stage: str, build):
         """Stage barrier: fingerprinted stage table under a runner,
@@ -263,22 +262,11 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
             return runner.run(stage, fp, build)
         return build().localCheckpoint()
 
-    view = pipeline._pass1_leaf(spark, scene, runner=runner)
-    thr = (None if runner is not None
-           else pipeline._thresholds_leaf(spark, scene))
-    cols = ", ".join((*pipeline._KERNEL_COLS, "cell_rows"))
-
-    def build_p3() -> DataFrame:
-        p3 = spark.sql(pipeline.tail_sql_from_pass1(
-            view, "pass3", f"SELECT {cols} FROM pass3", sensor=scene.sensor,
-            thresholds_view=thr,
-            eqn17_cloud_prob_thresh=params.eqn17_cloud_prob_thresh,
-            pass1_cols=(*pipeline._KERNEL_P1_COLS, "cell_rows")))
-        if cells is None:
-            return p3
-        return p3.join(F.broadcast(cells), "cell_id", "left_semi")
-
-    p3 = _mat("dist_p3", build_p3)
+    px_in, dims, ident = pipeline.scene_exchange(
+        spark, scene, eqn17, runner=runner, cells=cells)
+    p3 = _mat("dist_p3", lambda: px_in.selectExpr(
+        "cell_id", "r", "c", "nir", "bt", *FLAGS_SQL,
+        "sat_az_cdn", "sat_zen_cdn"))
 
     # --- stage 1: interim cloud mask, tiled (cloudFinalPass tail)
     raw = p3
@@ -307,8 +295,8 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
     # url never enters ANY intermediate stage: every per-pixel frame is
     # keyed (cell_id, r, c) — int composite keys shuffle/join cheaper
     # than a ~40-byte string, across all five stage barriers and the
-    # fill fixpoint's up-to-64 halo rounds. Identity + digest join back
-    # once at the end.
+    # fill fixpoint's halo rounds. The identity frame joins back once at
+    # the end.
     maj = tiling.tiled_neighborhood(
         raw.select("cell_id", "r", "c", "cloud_raw", "nullmask"),
         lambda slabs: {"maj": kernels.majority3_buffer(slabs["cloud_raw"])},
@@ -324,10 +312,11 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
     # rounds = 120+ stages). Adapt the FILL tile height to the tallest
     # cell: rounds stay ~16 while the per-task slab stays bounded at
     # tile_rows x 8 pixels.
-    h_max = p3.agg(F.expr("max(cell_rows)")).collect()[0][0] or 1
+    h_max = dims.agg(F.expr("max(cell_rows)")).collect()[0][0] or 1
     fill_tile = max(C.TILE_SIZE, -(-int(h_max) // 16))
     filled = fill_minima_distributed(
-        p3.withColumn("nir17_dn", F.expr(f"g_b4_17 * {C.TOA_SCALE}"))
+        p3.join(F.broadcast(dims.selectExpr(
+            "cell_id", f"g_b4_17 * {C.TOA_SCALE} AS nir17_dn")), "cell_id")
         .select("cell_id", "r", "c",
                 F.expr("cast(nir as bigint) as nir"), "nir17_dn"),
         "nir", nullval=C.REF_NULL_DN, boundary_col="nir17_dn",
@@ -344,10 +333,8 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
 
     # per-pixel flag table for windows + finalize (one narrow frame)
     flags = _mat("dist_flags", lambda: (
-        p3.select("cell_id", "r", "c", "nullmask",
-                  "water_test", "snow", "bt", "cell_rows",
-                  "g_tlow", "g_thigh", "sun_az", "sun_zen",
-                  "sat_az_cdn", "sat_zen_cdn")
+        p3.select("cell_id", "r", "c", "nullmask", "water_test", "snow",
+                  "bt", "sat_az_cdn", "sat_zen_cdn")
         .join(cloudmask_df, ["cell_id", "r", "c"])
         .join(pot, ["cell_id", "r", "c"])))
 
@@ -368,8 +355,11 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
     # kernels into one task (their byte size is small); a user-specified
     # repartition survives AQE and keeps the clump grain.
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    cell_scalars = F.broadcast(dims.select(
+        "cell_id", "cell_rows", "g_tlow", "g_thigh", "sun_az", "sun_zen"))
     px = _mat("dist_px", lambda: (
         flags.join(clump_px, ["cell_id", "r", "c"])
+        .join(cell_scalars, "cell_id")
         .repartition(n_part, "cell_id", "cloud_id")
         .groupBy("cell_id", "cloud_id")
         .applyInPandas(
@@ -377,13 +367,7 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
             schema=_PX_SCHEMA)))
 
     # --- stage 5: per-clump windowed shadow match (cogrouped)
-    cell_dim = flags.groupBy("cell_id").agg(
-        F.expr("first(cell_rows) AS cell_rows"),
-        F.expr("first(g_tlow) AS g_tlow"),
-        F.expr("first(g_thigh) AS g_thigh"),
-        F.expr("first(sun_az) AS sun_az"),
-        F.expr("first(sun_zen) AS sun_zen"))
-    tmpl = px.join(F.broadcast(cell_dim), "cell_id")
+    tmpl = px.join(cell_scalars, "cell_id")
 
     # window rows per clump, emitted exactly by the stage-4 kernel
     windows = _mat("dist_windows", lambda: px.groupBy(
@@ -474,9 +458,6 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
         "cast(coalesce(cloud_id, 0) as bigint) AS cloud_id",
         "cast(coalesce(height_du, 0) as int) AS cloud_height_du",
         "base_temp_c AS cloud_base_temp_c")
-    # identity + digest join back, once, at the very end
-    ident = p3.select("url", "cell_id", "r", "c")
     return (out.join(ident, ["cell_id", "r", "c"])
-            .join(pipeline.text_digests(spark, view), "url")
             .select("url", "cell_id", "r", "c", "fmask_class", "cloud_id",
                     "cloud_height_du", "cloud_base_temp_c", "text_sha256"))

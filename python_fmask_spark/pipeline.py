@@ -2,14 +2,17 @@
 
 Plan shape:
   parquet scan (pruned columns)
-    -> declarative pass1/pass2/pass3 (single Catalyst plan; per-cell
-       threshold dim tables joined back — no driver collect barrier)
+    -> pass-1 leaf + per-cell leaf (thresholds, angle scalars and
+       cell_rows; rows == cells): each a session-cached localCheckpoint,
+       or under a StageRunner the stage ``pass1`` / ``thresholds``
+    -> scene_exchange: pass2/pass3 over the leaves -> (px, dims, ident)
     -> shuffle by cell_id -> applyInPandas scene kernel (Arrow batches)
 
-The three reference "passes" are one Catalyst plan here: Spark's optimizer
-sees through the CTE chain, pushes the parquet column pruning, and keeps
-all scalar math in whole-stage codegen. Only the genuinely spatial tail
-(fill-minima, clumps, shadow match) runs in NumPy kernels.
+The leaves are the reference's once-per-scene thresholds and angles
+(fmask/fmask.py:96-221,546-561); scene_exchange decides what every
+classify path (classify, interim_class_kernel, scene_dist) reads. Only
+the genuinely spatial tail (fill-minima, clumps, shadow match) runs in
+NumPy kernels.
 """
 
 from __future__ import annotations
@@ -25,24 +28,9 @@ from .dialect import SPARK
 from .operators.scene import FmaskParams
 from .session import ensure_package_on_executors
 
-# Columns the scene kernel needs (everything else is pruned before the
-# shuffle — keep the exchanged bytes minimal).
-# text (and its sha256 digest) is NOT shuffled through the kernels —
-# the digest is joined back afterwards from the materialized pass-1
-# stage table (see text_digests), so byte-identity never rides the
-# Arrow exchange at all.
-_KERNEL_COLS = ("url", "cell_id", "r", "c", "nir", "bt",
-                "nullmask", "water_test", "snow", "cloud_raw",
-                "g_tlow", "g_thigh", "g_b4_17",
-                "sun_az", "sun_zen", "sat_az", "sat_zen",
-                "sat_az_cdn", "sat_zen_cdn")
-
-# the pass-1-LEVEL subset of _KERNEL_COLS (cloud_raw / g_* are computed
-# by pass 2/3; the rest either ride through or are formula deps added
-# by tail_sql_from_pass1 itself)
-_KERNEL_P1_COLS = ("url", "r", "c", "nir", "snow",
-                   "sun_az", "sun_zen", "sat_az", "sat_zen",
-                   "sat_az_cdn", "sat_zen_cdn")
+# per-cell constants of pass 1 the per-cell leaf carries next to the
+# thresholds (first() per cell: they are constant over a cell's pixels)
+_CELL_CONSTS = ("sun_az", "sun_zen", "sat_az", "sat_zen", "cell_rows")
 
 
 @dataclass(frozen=True)
@@ -105,15 +93,6 @@ def stage_fingerprint(spark: SparkSession, logic: str) -> str:
     return hashlib.sha256(f"{ident}||{logic}".encode()).hexdigest()[:16]
 
 
-def text_digests(spark: SparkSession, view: str) -> DataFrame:
-    """(url, text_sha256) — the byte-identity invariant, computed from
-    the pass-1 leaf ``view`` (materialize_pass1) the caller already
-    built, NOT by re-running the threshold/pass2/pass3 tail or pass 1
-    a second time."""
-    return spark.sql(
-        f"SELECT url, sha2(text, 256) AS text_sha256 FROM {view}")
-
-
 # session -> the pass-1 / thresholds leaf views it has materialized.
 # A leaf is named by its Scene.key(), and the pass-1 stage table is
 # immutable for a given registered input, so every query in a session
@@ -138,7 +117,7 @@ def invalidate_pass1_cache(spark: SparkSession) -> None:
 
 
 def materialize_pass1(spark: SparkSession, table: str = "documents",
-                      reuse: bool = True, runner=None,
+                      runner=None,
                       sensor: str = "LANDSAT8",
                       s2_offsets: dict[str, int] | None = None,
                       s2_cdi: bool = False,
@@ -153,12 +132,11 @@ def materialize_pass1(spark: SparkSession, table: str = "documents",
     localCheckpoint truncates the lineage to a LogicalRDD leaf — the
     reference's own inter-pass temp-raster pattern
     (fmask/fmask.py:206-216 / SURVEY S12) — making every downstream plan
-    small and linear to optimize.
-
-    ``reuse=True`` returns the session's existing materialization when
-    the registered input hasn't changed (register_views invalidates on
-    change): the interim/classify/threshold queries all branch from the
-    same stage table instead of re-deriving pass 1 per query.
+    small and linear to optimize. The session's existing materialization
+    is returned while the registered input hasn't changed
+    (register_views invalidates on change): the interim/classify/
+    threshold queries all branch from the same leaf instead of
+    re-deriving pass 1 per query.
 
     ``runner`` (a plans.lineage.StageRunner): write the materialization
     through a parquet/Iceberg stage table with lineage + fingerprint
@@ -169,39 +147,50 @@ def materialize_pass1(spark: SparkSession, table: str = "documents",
     identical either way."""
     return _pass1_leaf(spark, Scene(table, sensor, s2_offsets, s2_cdi,
                                     tile_meta, nir_snow_thresh,
-                                    green_snow_thresh), reuse, runner)
+                                    green_snow_thresh), runner)
 
 
-def _pass1_leaf(spark: SparkSession, scene: Scene, reuse: bool = True,
-                runner=None) -> str:
-    key = scene.key()
-    view = f"_pass1_mat_{key}"
+def _leaf(spark: SparkSession, view: str, build, runner, stage: str,
+          logic: str) -> str:
+    """Materialize ``build()`` behind the temp view ``view``: the
+    StageRunner stage ``stage`` (fingerprinted by ``logic`` and the
+    registered input) under a ``runner``, else a session-cached
+    localCheckpoint."""
     cache = _PASS1_CACHE.setdefault(spark, set())
-    if reuse and runner is None and view in cache \
-            and spark.catalog.tableExists(view):
-        return view
-
-    def build() -> DataFrame:
-        if scene.s2_cdi:
-            return _cdi_pass1(spark, scene, reuse)
-        return spark.sql(pass1_sql_text(scene))
-
     if runner is not None:
-        p1 = runner.run("pass1", stage_fingerprint(spark, key), build)
-        # do NOT keep the session reuse cache pointing at this view: the
-        # stage table lives in the runner's workdir, whose lifetime the
+        df = runner.run(stage, stage_fingerprint(spark, logic), build)
+        # do NOT keep the session cache pointing at this view: the stage
+        # table lives in the runner's workdir, whose lifetime the
         # session does not control — a later cache hit would read a
         # deleted parquet. Evicting forces the next plain call to
         # rebuild its own localCheckpoint leaf.
         cache.discard(view)
+    elif view in cache and spark.catalog.tableExists(view):
+        return view
     else:
-        p1 = build().localCheckpoint()
+        df = build().localCheckpoint()
         cache.add(view)
-    p1.createOrReplaceTempView(view)
+    df.createOrReplaceTempView(view)
     return view
 
 
-def _cdi_pass1(spark: SparkSession, scene: Scene, reuse: bool) -> DataFrame:
+def _leaf_views(scene: Scene) -> tuple[str, str]:
+    """The (pass-1, per-cell) leaf view names of ``scene``."""
+    key = scene.key()
+    return f"_pass1_mat_{key}", f"_thr_mat_{key}"
+
+
+def _pass1_leaf(spark: SparkSession, scene: Scene, runner=None) -> str:
+    def build() -> DataFrame:
+        if scene.s2_cdi:
+            return _cdi_pass1(spark, scene)
+        return spark.sql(pass1_sql_text(scene))
+
+    return _leaf(spark, _leaf_views(scene)[0], build, runner, "pass1",
+                 scene.key())
+
+
+def _cdi_pass1(spark: SparkSession, scene: Scene) -> DataFrame:
     """The reference applies the CDI displacement test INSIDE pass 1
     when setSen2displacementTest is on (fmask/fmask.py:395-412): pcp
     becomes the CDI-filtered PCP and everything downstream (clear_land,
@@ -210,18 +199,13 @@ def _cdi_pass1(spark: SparkSession, scene: Scene, reuse: bool) -> DataFrame:
     its one dependent column."""
     from pyspark.sql import functions as F
 
-    from .sen2meta import require_s2_offsets
     if scene.sensor != "SENTINEL2":
         raise ValueError("s2_cdi requires sensor='SENTINEL2' "
                          "(fmask/config.py:388-394)")
-    offs = require_s2_offsets(scene.s2_offsets)
-    ensure_package_on_executors(spark)
-    raw_view = _pass1_leaf(spark, replace(scene, s2_cdi=False), reuse)
-    kout = (spark.sql(f"SELECT {_cdi_src_select(offs)} FROM {raw_view}")
-            .groupBy("cell_id").applyInPandas(
-                _cdi_kernel, schema=_CDI_OUT_SCHEMA)
-            .select("cell_id", "r", "c",
-                    F.expr("cast(pcp_final as boolean) AS _pcp_cdi")))
+    raw_view = _pass1_leaf(spark, replace(scene, s2_cdi=False))
+    kout = _cdi_frame(spark, raw_view, scene.s2_offsets).select(
+        "cell_id", "r", "c",
+        F.expr("cast(pcp_final as boolean) AS _pcp_cdi"))
     return (spark.table(raw_view)
             .join(kout, ["cell_id", "r", "c"])
             .withColumn("pcp", F.col("_pcp_cdi"))
@@ -238,22 +222,21 @@ _PASS23_DEPS = frozenset((
     "clear_land", "pcp", "water_test", "nullmask"))
 
 
-def tail_sql_from_pass1(pass1_view: str, upto: str, select: str,
-                        sensor: str = "LANDSAT8",
-                        thresholds_view: str | None = None,
+def tail_sql_from_pass1(pass1_view: str, thresholds_view: str, upto: str,
+                        select: str, sensor: str = "LANDSAT8",
                         eqn17_cloud_prob_thresh: float | None = None,
                         pass1_cols: tuple[str, ...] | None = None
                         ) -> str:
-    """Thresholds/pass2/pass3 CTE chain over a materialized pass-1 view.
+    """Thresholds/pass2/pass3 CTE chain over the materialized pass-1
+    and per-cell leaves (materialize_pass1 / materialize_thresholds).
 
-    ``thresholds_view`` substitutes a materialized thresholds leaf for
-    the (textually large) thresholds CTE — Catalyst re-analyzes the
-    window-function stack per consumer otherwise, which dominates wall
-    time at small scale and is pure waste at any scale (thresholds is a
-    per-cell dim, rows == cells). The Eqn-17 knob renders into the
-    pass-2 landthr CTE fresh per query, so a non-default value composes
-    with the session-cached pass-1/thresholds leaves (which it does not
-    depend on).
+    The per-cell leaf stands in for the (textually large) thresholds
+    CTE — Catalyst re-analyzes the window-function stack per consumer
+    otherwise, which dominates wall time at small scale and is pure
+    waste at any scale (thresholds is a per-cell dim, rows == cells).
+    The Eqn-17 knob renders into the pass-2 landthr CTE fresh per
+    query, so a non-default value composes with the session-cached
+    leaves (which it does not depend on).
 
     ``pass1_cols`` (r6): the pass-1-level columns the caller's final
     ``select`` needs. When given, the pass1 CTE projects to
@@ -264,18 +247,10 @@ def tail_sql_from_pass1(pass1_view: str, upto: str, select: str,
     the exchange" applied at plan-construction time). Requires ``upto``
     in (pass2, pass3); a name the formulas don't cover fails loudly at
     analysis."""
-    if pass1_cols:
-        need = set(pass1_cols) | _PASS23_DEPS
-        if thresholds_view is None:
-            # the inline thresholds CTE aggregates these off pass1
-            need |= {"clear_sky_water", "scaled_bt_bin", "scaled_b4_bin"}
-        p1_select = ", ".join(sorted(need))
-    else:
-        p1_select = "*"
+    p1_select = (", ".join(sorted(set(pass1_cols) | _PASS23_DEPS))
+                 if pass1_cols else "*")
     builders = [f"pass1 AS (SELECT {p1_select} FROM {pass1_view})",
-                (f"thresholds AS (SELECT * FROM {thresholds_view})"
-                 if thresholds_view
-                 else derive.thresholds_sql(SPARK, sensor=sensor))]
+                f"thresholds AS (SELECT * FROM {thresholds_view})"]
     if upto in ("pass2", "pass3"):
         builders.append(derive.pass2_sql(
             SPARK, sensor=sensor,
@@ -293,8 +268,9 @@ def materialize_thresholds(spark: SparkSession, table: str = "documents",
                            tile_meta=None,
                            nir_snow_thresh: float | None = None,
                            green_snow_thresh: float | None = None) -> str:
-    """Materialize the per-cell thresholds dim (rows == cells, tiny)
-    behind a leaf view, session-cached like pass 1. Every tail consumer
+    """Materialize the per-cell leaf (rows == cells, tiny) behind a
+    view, session-cached like pass 1: the thresholds dim plus the
+    per-cell angle scalars and cell_rows. Every tail consumer
     (pass2/pass3/dims) then references a leaf instead of re-analyzing
     the 6-window-function thresholds CTE."""
     return _thresholds_leaf(spark, Scene(table, sensor, s2_offsets, s2_cdi,
@@ -302,27 +278,32 @@ def materialize_thresholds(spark: SparkSession, table: str = "documents",
                                          green_snow_thresh))
 
 
-def _thresholds_leaf(spark: SparkSession, scene: Scene) -> str:
-    view = f"_thr_mat_{scene.key()}"
-    cache = _PASS1_CACHE.setdefault(spark, set())
-    if view in cache and spark.catalog.tableExists(view):
-        return view
-    sql = (f"WITH pass1 AS (SELECT * FROM {_pass1_leaf(spark, scene)}), "
-           f"{derive.thresholds_sql(SPARK, sensor=scene.sensor)} "
-           f"SELECT * FROM thresholds")
-    spark.sql(sql).localCheckpoint().createOrReplaceTempView(view)
-    cache.add(view)
-    return view
+def thresholds_sql_text(scene: Scene) -> str:
+    """The rendered SQL of ``scene``'s per-cell leaf (the thresholds dim
+    plus first() per cell of _CELL_CONSTS), which its stage
+    fingerprint hashes."""
+    consts = ", ".join(f"first({k}) AS {k}" for k in _CELL_CONSTS)
+    picked = ", ".join(f"a.{k}" for k in _CELL_CONSTS)
+    # both sides are per-cell (rows == cells); broadcast the aggregated
+    # side so the join needs no exchange+sort (guide §3.1)
+    return (f"WITH pass1 AS (SELECT * FROM {_leaf_views(scene)[0]}), "
+            f"{derive.thresholds_sql(SPARK, sensor=scene.sensor)}, "
+            f"cell_consts AS (SELECT cell_id, {consts} "
+            f"FROM pass1 GROUP BY cell_id) "
+            f"SELECT /*+ BROADCAST(a) */ t.*, {picked} "
+            f"FROM thresholds t JOIN cell_consts a ON a.cell_id = t.cell_id")
 
 
-def pass3_df(spark: SparkSession, scene: Scene,
-             eqn17_cloud_prob_thresh: float | None = None) -> DataFrame:
-    cols = ", ".join(_KERNEL_COLS)
-    return spark.sql(tail_sql_from_pass1(
-        _pass1_leaf(spark, scene), "pass3", f"SELECT {cols} FROM pass3",
-        sensor=scene.sensor, thresholds_view=_thresholds_leaf(spark, scene),
-        eqn17_cloud_prob_thresh=eqn17_cloud_prob_thresh,
-        pass1_cols=_KERNEL_P1_COLS))
+def _thresholds_leaf(spark: SparkSession, scene: Scene,
+                     runner=None) -> str:
+    sql = thresholds_sql_text(scene)
+
+    def build() -> DataFrame:
+        _pass1_leaf(spark, scene, runner)  # (re)registers the view sql reads
+        return spark.sql(sql)
+
+    return _leaf(spark, _leaf_views(scene)[1], build, runner, "thresholds",
+                 sql)
 
 
 def interim_class_kernel(spark: SparkSession, table: str = "documents",
@@ -338,26 +319,27 @@ def interim_class_kernel(spark: SparkSession, table: str = "documents",
 
     Plan notes: the two morphology stages are fused into a single halo
     shuffle (tiling.tiled_neighborhood) — halo grows from 1+5 to
-    6 rows while shuffle count and Arrow round trips halve; the text
-    digest is joined back JVM-side instead of riding through the Python
-    kernels (it was the largest column in the exchange)."""
+    6 rows while shuffle count and Arrow round trips halve; url and the
+    text digest (scene_exchange's identity frame) are joined back
+    JVM-side instead of riding through the Python kernels."""
     from pyspark.sql import functions as F
 
     from . import tiling
     from .operators import kernels
+    from .operators.scene import FLAGS_SQL
 
     params = params or FmaskParams()
     scene = Scene(table, sensor, s2_offsets, s2_cdi, **params.snow_kwargs())
+    px, _dims, ident = scene_exchange(spark, scene,
+                                      params.eqn17_cloud_prob_thresh)
     # persist: with_halo explodes its input — without a materialization
     # point Spark recomputes the whole pass-1..3 derivation per consumer.
     # (r6 A/B KEPT this: dropping the checkpoint looked like "one fewer
     # job" but measured 0.93 s -> 1.5 s/call at sf0.1 — the halo map
     # stage then carries the whole pass-2/3 tail + dim broadcasts above
-    # a Generate, defeating stage fusion; the narrow 8-column
+    # a Generate, defeating stage fusion; the narrow 7-column
     # checkpoint is the faster shape on repeat calls.)
-    p3 = pass3_df(spark, scene, params.eqn17_cloud_prob_thresh).select(
-        "url", "cell_id", "r", "c", "nullmask",
-        "water_test", "snow", "cloud_raw").localCheckpoint()
+    p3 = px.selectExpr("cell_id", "r", "c", *FLAGS_SQL).localCheckpoint()
 
     rad = int(params.cloud_buffer_px)
 
@@ -367,11 +349,8 @@ def interim_class_kernel(spark: SparkSession, table: str = "documents",
         dil = kernels.dilate(cloud_m, params.cloud_buffer_px)
         return {"cloudbuf": maj, "cloud_m": cloud_m, "clouddil": dil}
 
-    # url (the largest exchanged column) stays out of the halo sort and
-    # joins back on (cell_id, r, c) below, together with the digest —
-    # one JVM-side join instead of a fatter exchange.
     out = tiling.tiled_neighborhood(
-        p3.drop("url"), fused,
+        p3, fused,
         in_cols=("cloud_raw", "nullmask"),
         out_cols=("cloudbuf", "cloud_m", "clouddil"),
         radius=1 + rad,
@@ -385,10 +364,6 @@ def interim_class_kernel(spark: SparkSession, table: str = "documents",
             when snow then {4}
             when water_test then {5}
             else {1} end as int)""").alias("fmask_class"))
-    # same scene -> reuses the leaf p3 already materialized
-    ident = spark.sql(
-        f"""SELECT cell_id, r, c, url, sha2(text, 256) AS text_sha256
-            FROM {_pass1_leaf(spark, scene)}""")
     return (out.join(ident, ["cell_id", "r", "c"])
             .select("url", "cell_id", "r", "c", "cloud_raw", "cloud_m",
                     "clouddil", "nullmask", "water_test", "snow",
@@ -407,6 +382,19 @@ def _cdi_src_select(offs: dict[str, int]) -> str:
   cirrus_band_test, sat_and_bright,
   cast(cast(ref_nir / {ref8a} as float) as double) AS r88,
   cast(cast({ref7} / {ref8a} as float) as double) AS r87"""
+
+
+def _cdi_frame(spark: SparkSession, view: str,
+               s2_offsets: dict[str, int] | None) -> DataFrame:
+    """The per-cell CDI kernel over the Sentinel-2 pass-1 leaf ``view``:
+    (url, cell_id, r, c, cdi_milli, pcp_cdi, pcp_final)."""
+    from .sen2meta import require_s2_offsets
+
+    offs = require_s2_offsets(s2_offsets)
+    ensure_package_on_executors(spark)
+    return (spark.sql(f"SELECT {_cdi_src_select(offs)} FROM {view}")
+            .groupBy("cell_id")
+            .applyInPandas(_cdi_kernel, schema=_CDI_OUT_SCHEMA))
 
 
 def _cdi_kernel(pdf):
@@ -473,72 +461,68 @@ def s2_cdi_pcp(spark: SparkSession, table: str = "documents",
     then region-grown within (cdi < -0.25), PCP restricted to the grown
     selection before the cirrus/saturation OR.
 
-    Plan shape: declarative pass-1 -> shuffle by cell -> per-cell Arrow
-    kernel (focal variance + erosion + fixpoint grow are whole-scene
-    ops, exactly the reference's per-scene stage). Oracle:
-    oracle.q_s2_cdi's SQL form incl. a RECURSIVE region-grow CTE."""
-    from .sen2meta import require_s2_offsets
+    Plan shape: the Sentinel-2 pass-1 leaf (shared with every other S2
+    query of the session) -> shuffle by cell -> per-cell Arrow kernel
+    (focal variance + erosion + fixpoint grow are whole-scene ops,
+    exactly the reference's per-scene stage). Oracle: oracle.q_s2_cdi's
+    SQL form incl. a RECURSIVE region-grow CTE. A missing ``s2_offsets``
+    is an error (fmask/fmask.py:137-149); pre-04.00 products pass
+    oracle.S2_ZERO_OFFSETS explicitly."""
+    view = _pass1_leaf(spark, Scene(table, "SENTINEL2", s2_offsets))
+    return _cdi_frame(spark, view, s2_offsets)
 
-    ensure_package_on_executors(spark)
-    # Mandatory-offset gate (fmask/fmask.py:137-149): a missing dict is an
-    # error, not a silent zero-offset substitution. Pre-04.00 products pass
-    # oracle.S2_ZERO_OFFSETS EXPLICITLY; an empty dict is likewise treated
-    # as an explicit statement (require checks `is None`, not falsiness).
-    offs = require_s2_offsets(s2_offsets)
-    ctes = ",\n".join([
-        derive.features_sql(SPARK, derive.documents_wide_sql(SPARK, table),
-                            angles=False),
-        derive.pass1_sql(SPARK, sensor="SENTINEL2", s2_offsets=offs),
-    ])
-    src = spark.sql(
-        f"WITH {ctes} SELECT {_cdi_src_select(offs)} FROM pass1")
-    return src.groupBy("cell_id").applyInPandas(
-        _cdi_kernel, schema=_CDI_OUT_SCHEMA)
+
+def px_exchange_sql(scene: Scene,
+                    eqn17_cloud_prob_thresh: float | None = None) -> str:
+    """The rendered SQL of ``scene``'s slim pixel frame: pass 2/3 over
+    the two leaves, projected to operators.scene.PX_EXCHANGE_SQL. The
+    distributed path's stage fingerprint hashes this text."""
+    from .operators.scene import PX_EXCHANGE_SQL
+
+    view, thr = _leaf_views(scene)
+    return tail_sql_from_pass1(
+        view, thr, "pass3", f"SELECT {PX_EXCHANGE_SQL} FROM pass3",
+        sensor=scene.sensor,
+        eqn17_cloud_prob_thresh=eqn17_cloud_prob_thresh,
+        pass1_cols=("r", "c", "nir", "snow", "sat_az_cdn", "sat_zen_cdn"))
 
 
 def scene_exchange(spark: SparkSession, scene: Scene,
-                   eqn17_cloud_prob_thresh: float | None = None
-                   ) -> tuple[DataFrame, DataFrame]:
-    """The slim scene-kernel exchange: (pixel frame, per-cell dim frame).
+                   eqn17_cloud_prob_thresh: float | None = None,
+                   runner=None, cells: DataFrame | None = None
+                   ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """What every classify path reads: (px, dims, ident).
 
-    Pixel frame = 8 narrow fields (no url, booleans packed into one
-    tinyint, no repeated per-cell constants) — see
-    operators.scene.PX_EXCHANGE_SQL for the rationale and measurements.
-    Dim frame = 1 row per cell with the threshold + angle scalars,
-    built from the thresholds aggregate and a first()-per-cell pass
-    over the pass-1 leaf (both map-side-combine JVM aggregates)."""
-    from .operators.scene import DIM_COLS, PX_EXCHANGE_SQL
+    px is the slim pixel frame (operators.scene.PX_EXCHANGE_SQL: 8
+    narrow fields, no url, no per-cell constants, the booleans packed
+    into ``flags``, which FLAGS_SQL unpacks); dims is one row per cell,
+    DIM_COLS + cell_rows, from the per-cell leaf; ident is (cell_id, r,
+    c, url, text_sha256) from the pass-1 leaf, joined back once after
+    the kernels. ``runner`` makes the leaves its ``pass1`` and
+    ``thresholds`` stages; ``cells`` semi-joins all three frames."""
+    from pyspark.sql import functions as F
 
-    view = _pass1_leaf(spark, scene)
-    thr = _thresholds_leaf(spark, scene)
-    px = spark.sql(tail_sql_from_pass1(
-        view, "pass3", f"SELECT {PX_EXCHANGE_SQL} FROM pass3",
-        sensor=scene.sensor, thresholds_view=thr,
-        eqn17_cloud_prob_thresh=eqn17_cloud_prob_thresh,
-        pass1_cols=("r", "c", "nir", "snow",
-                    "sat_az_cdn", "sat_zen_cdn")))
-    ang = ", ".join(f"first({k}) AS {k}" for k in DIM_COLS[3:])
-    # both sides are per-cell (rows == cells); broadcast the aggregated
-    # angle side so the dim frame needs no exchange+sort (guide §3.1)
-    dims = spark.sql(tail_sql_from_pass1(
-        view, "thresholds",
-        f"""SELECT /*+ BROADCAST(a) */ t.cell_id,
-              cast(t.tlow as double) AS g_tlow,
-              cast(t.thigh as double) AS g_thigh,
-              t.b4_17 AS g_b4_17,
-              a.sun_az, a.sun_zen, a.sat_az, a.sat_zen
-            FROM thresholds t
-            JOIN (SELECT cell_id, {ang}
-                  FROM pass1 GROUP BY cell_id) a
-              ON a.cell_id = t.cell_id""",
-        sensor=scene.sensor, thresholds_view=thr))
-    return px, dims
+    from .operators.scene import DIM_COLS
+
+    view = _pass1_leaf(spark, scene, runner)
+    thr = _thresholds_leaf(spark, scene, runner)
+    px = spark.sql(px_exchange_sql(scene, eqn17_cloud_prob_thresh))
+    dims = spark.sql(
+        f"""SELECT cell_id, cast(tlow as double) AS g_tlow,
+              cast(thigh as double) AS g_thigh, b4_17 AS g_b4_17,
+              {", ".join(DIM_COLS[3:])}, cell_rows
+            FROM {thr}""")
+    ident = spark.sql(
+        f"""SELECT cell_id, r, c, url, sha2(text, 256) AS text_sha256
+            FROM {view}""")
+    if cells is None:
+        return px, dims, ident
+    return tuple(f.join(F.broadcast(cells), "cell_id", "left_semi")
+                 for f in (px, dims, ident))
 
 
 def classify(spark: SparkSession, table: str = "documents",
              params: FmaskParams | None = None,
-             cells: DataFrame | None = None,
-             cells_mode: str = "semi",
              sensor: str = "LANDSAT8",
              s2_offsets: dict[str, int] | None = None,
              s2_cdi: bool = False,
@@ -547,41 +531,27 @@ def classify(spark: SparkSession, table: str = "documents",
     cloud_id, ..., text_sha256). ``table`` must be a registered view
     with the raw documents schema.
 
-    ``cells`` (a small DataFrame of cell_id) restricts the run to
-    (``cells_mode="semi"``) or excludes (``"anti"``) those cells via a
-    broadcast join — classify_auto uses this to split the workload.
-
-    Plan shape: the per-cell kernel exchanges ONLY the slim pixel frame
-    (scene_exchange — 8 narrow fields, flags bit-packed, per-cell
-    constants cogrouped as a 1-row dim); url and the 64-byte text
-    digest (pure passthrough identity) join back JVM-side on
-    (cell_id, r, c) from the materialized pass-1 leaf, so neither ever
-    rides the groupBy sort that was measured spilling 8.3 GB at 40.96M
-    rows with the full-width row. The digest side reads the pass-1
-    leaf, so the threshold/pass2/pass3 tail never re-derives text."""
+    Plan shape: the per-cell kernel cogroups ONLY scene_exchange's slim
+    pixel frame (8 narrow fields, flags bit-packed) with its 1-row dim;
+    url and the 64-byte text digest (pure passthrough identity) join
+    back JVM-side on (cell_id, r, c) from the identity frame, so neither
+    ever rides the groupBy sort that was measured spilling 8.3 GB at
+    40.96M rows with the full-width row. The identity frame reads the
+    pass-1 leaf, so the threshold/pass2/pass3 tail never re-derives
+    text."""
     params = params or FmaskParams()
     return _classify(spark, Scene(table, sensor, s2_offsets, s2_cdi,
                                   tile_meta, **params.snow_kwargs()),
-                     params, cells, cells_mode)
+                     params)
 
 
 def _classify(spark: SparkSession, scene: Scene, params: FmaskParams,
-              cells: DataFrame | None = None,
-              cells_mode: str = "semi") -> DataFrame:
-    from pyspark.sql import functions as F
-
+              cells: DataFrame | None = None) -> DataFrame:
     from .operators.scene import SCENE_OUT_SCHEMA_SLIM, scene_cogroup_kernel
 
     ensure_package_on_executors(spark)
-    px, dims = scene_exchange(spark, scene, params.eqn17_cloud_prob_thresh)
-    ident = spark.sql(
-        f"""SELECT cell_id, r, c, url, sha2(text, 256) AS text_sha256
-            FROM {_pass1_leaf(spark, scene)}""")
-    if cells is not None:
-        how = "left_semi" if cells_mode == "semi" else "left_anti"
-        px = px.join(F.broadcast(cells), "cell_id", how)
-        dims = dims.join(F.broadcast(cells), "cell_id", how)
-        ident = ident.join(F.broadcast(cells), "cell_id", how)
+    px, dims, ident = scene_exchange(
+        spark, scene, params.eqn17_cloud_prob_thresh, cells=cells)
     out = (px.groupBy("cell_id")
            .cogroup(dims.groupBy("cell_id"))
            .applyInPandas(
@@ -617,14 +587,12 @@ def classify_auto(spark: SparkSession, table: str = "documents",
     round 3 measured the distributed max task staying bounded (~11 s)
     at 4M-row cells while the whole-cell task grows linearly
     (BENCH/BASELINE.md, "Skew + dispatch evidence"). The routing
-    decision reads per-cell counts from the materialized pass-1 leaf
-    (one map-side-combine aggregate); only the mega-cell ID LIST
-    reaches the driver — small by construction (a cell is routed
-    distributed precisely because it is rare and huge). Both halves
-    share the scene's pass-1 and thresholds leaves: classify excludes
-    the mega-cells (``cells_mode="anti"``) and classify_distributed
-    keeps only them (``cells=``). Both paths produce bit-identical
-    output (tests/test_scene_dist.py), so the union is exact."""
+    decision is one per-cell count over the materialized pass-1 leaf
+    (a map-side-combine aggregate, checkpointed; rows == cells); no
+    cell list is collected. Both halves read the scene's one
+    exchange (scene_exchange), each semi-joined to its own cells. Both
+    paths produce bit-identical output (tests/test_scene_dist.py), so
+    the union is exact."""
     from pyspark.sql import functions as F
 
     from .operators.scene_dist import _classify_distributed
@@ -632,14 +600,13 @@ def classify_auto(spark: SparkSession, table: str = "documents",
     params = params or FmaskParams()
     scene = Scene(table, sensor, s2_offsets, s2_cdi, tile_meta,
                   **params.snow_kwargs())
-    big_cells = (spark.table(_pass1_leaf(spark, scene))
-                 .groupBy("cell_id").count()
-                 .filter(F.col("count") >= row_threshold)
-                 .select("cell_id"))
-    if big_cells.count() == 0:
+    counts = (spark.table(_pass1_leaf(spark, scene)).groupBy("cell_id")
+              .agg((F.count("*") >= row_threshold).alias("big"))
+              .localCheckpoint())
+    big = counts.filter("big").select("cell_id")
+    if big.isEmpty():
         return _classify(spark, scene, params)
-    big = big_cells.localCheckpoint()
-    small_out = _classify(spark, scene, params, cells=big,
-                          cells_mode="anti")
+    small_out = _classify(spark, scene, params,
+                          cells=counts.filter("NOT big").select("cell_id"))
     big_out = _classify_distributed(spark, scene, params, cells=big)
     return small_out.unionByName(big_out.select(*small_out.columns))

@@ -52,14 +52,12 @@ def class_rat_df(spark: SparkSession) -> DataFrame:
         "AS rat(class_value, class_name, red, green, blue, alpha)")
 
 
-def write_mask(df: DataFrame, name: str,
-               fmt: str | None = None,
-               partition_col: str = "cell_id") -> str:
-    """Write the mask table through writeTo with the thematic metadata
-    attached; returns the format actually used ('iceberg' or the
-    fallback provider)."""
+def write_mask(df: DataFrame, name: str) -> str:
+    """Write the mask table through writeTo, partitioned by cell_id,
+    with the thematic metadata attached; returns the format actually
+    used ('iceberg' or the parquet fallback)."""
     spark = df.sparkSession
-    used = fmt or "iceberg"
+    used = "iceberg"
     props = {
         "fmask.color_table": json.dumps(COLOR_TABLE),
         "fmask.class_names": json.dumps(CLASS_NAMES),
@@ -80,7 +78,7 @@ def write_mask(df: DataFrame, name: str,
             return True
         for e in entries:
             ok = (e == "_SUCCESS" or e.startswith("_temporary")
-                  or e.startswith(f"{partition_col}=")
+                  or e.startswith("cell_id=")
                   or (e.startswith("part-") and ".parquet" in e)
                   or e.startswith("."))
             if not ok:
@@ -118,7 +116,7 @@ def write_mask(df: DataFrame, name: str,
         clear_stale_location(staging)
         clear_stale_location(name)
         w = df.writeTo(staging).using(provider).partitionedBy(
-            F.col(partition_col))
+            F.col("cell_id"))
         for k, v in props.items():
             w = w.tableProperty(k, v)
         w.create()
@@ -145,7 +143,7 @@ def write_mask(df: DataFrame, name: str,
     try:
         attempt(used)
     except Exception as e:
-        if fmt is not None or not is_provider_missing(e):
+        if not is_provider_missing(e):
             raise
         import warnings
         warnings.warn(

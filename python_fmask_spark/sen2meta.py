@@ -307,10 +307,6 @@ def angle_grid_df(spark, meta: Sen2TileMeta):
 # tile XML; fmask/sen2meta.py reads them alongside the grid values).
 ANGLE_GRID_RES_M = 5000.0
 
-_ANGLE_COLS = ("sun_az", "sun_zen", "sat_az", "sat_zen",
-               "sat_az_cdn", "sat_zen_cdn", "sun_az_cdn", "sun_zen_cdn")
-
-
 def _angle_lit(x: float) -> str:
     # NaN grid points (detector-strip gaps at swath corners, or a tile
     # XML with no view grids at all) become typed NULLs: NULL
@@ -449,16 +445,3 @@ JOIN s2grid h01 ON h01.grid_r = pi AND h01.grid_c = pj + 1
 JOIN s2grid h10 ON h10.grid_r = pi + 1 AND h10.grid_c = pj
 JOIN s2grid h11 ON h11.grid_r = pi + 1 AND h11.grid_c = pj + 1""".strip()
     return ctes, select
-
-
-def s2_grid_angles_sql(d: str, meta: Sen2TileMeta, px_src: str,
-                       carry: tuple[str, ...] = ("url", "cell_id", "r", "c"),
-                       cells_src: str | None = None,
-                       x_res: float | None = None,
-                       y_res: float | None = None) -> str:
-    """Standalone CTE-tail + SELECT form of :func:`s2_grid_angle_parts`
-    (embed as ``WITH {features...}, {this}``)."""
-    ctes, select = s2_grid_angle_parts(
-        d, meta, px_src, carry=carry, cells_src=cells_src,
-        x_res=x_res, y_res=y_res)
-    return f"{ctes}\n{select}"

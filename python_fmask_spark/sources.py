@@ -18,9 +18,6 @@ from .dialect import SPARK
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
-
 # (path, file-identity, reader-conf) -> measured scan split count.
 # Computing the split count costs a plan->RDD conversion (~0.1 s/table);
 # caching it on the file identity makes repeated register_views calls

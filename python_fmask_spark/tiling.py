@@ -30,11 +30,6 @@ from . import constants as C
 from .session import ensure_package_on_executors
 
 
-def with_tiles(df: DataFrame, tile_rows: int = C.TILE_SIZE) -> DataFrame:
-    """Assign each pixel row to its (cell_id, tile) group."""
-    return df.withColumn("tile", F.expr(f"r div {tile_rows}"))
-
-
 def with_halo(df: DataFrame, radius: int,
               tile_rows: int = C.TILE_SIZE) -> DataFrame:
     """Duplicate each tile-boundary row into the neighboring tile as halo.

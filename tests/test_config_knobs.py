@@ -20,7 +20,7 @@ SCRIPTS = str(pathlib.Path(__file__).resolve().parents[1] / "scripts")
 def _land_thresholds(spark, eqn17):
     view = pipeline.materialize_pass1(spark)
     df = spark.sql(pipeline.tail_sql_from_pass1(
-        view, "pass2",
+        view, pipeline.materialize_thresholds(spark), "pass2",
         """SELECT cell_id,
              cast(round(land_threshold * 1000) as int) AS landthr_milli
            FROM landthr""",

@@ -180,6 +180,50 @@ def test_runner_fingerprint_covers_params(spark, sf_small):
         assert "pass1" not in rebuilt
 
 
+def test_runner_fingerprint_covers_pass3_sql(spark, sf_small, monkeypatch):
+    """The distributed stage fingerprint hashes the rendered pass-3
+    exchange SQL: after a change to the pass-3 formulas, a resume in the
+    same workdir rebuilds dist_p3, while the pass-1 and per-cell leaves
+    (which do not depend on pass 3) resume."""
+    from python_fmask_spark import derive
+    from python_fmask_spark.operators.scene_dist import classify_distributed
+
+    register_views(spark, sf_small)
+    with tempfile.TemporaryDirectory() as wd:
+        classify_distributed(spark, runner=StageRunner(spark, wd, "p1"))
+        pass3_sql = derive.pass3_sql
+        monkeypatch.setattr(derive, "pass3_sql", lambda d, sensor="LANDSAT8":
+                            pass3_sql(d, sensor=sensor) + " /* edited */")
+        r2 = StageRunner(spark, wd, "p2")
+        classify_distributed(spark, runner=r2).count()
+        rebuilt = {r.stage for r in r2.lineage()
+                   .filter("run_id = 'p2'").collect()}
+        assert "dist_p3" in rebuilt
+        assert not rebuilt & {"pass1", "thresholds"}
+
+
+def test_dist_p3_holds_only_the_exchange(spark, sf_small):
+    """The dist_p3 stage table is scene_exchange's pixel frame with its
+    flags unpacked: no url, no per-cell constants (thresholds, angle
+    scalars, cell_rows live once per cell in the ``thresholds`` stage,
+    which gets a lineage row of its own)."""
+    from python_fmask_spark.operators.scene_dist import classify_distributed
+
+    register_views(spark, sf_small)
+    with tempfile.TemporaryDirectory() as wd:
+        r = StageRunner(spark, wd, "x")
+        classify_distributed(spark, runner=r).count()
+        cols = spark.read.parquet(os.path.join(wd, "stage_dist_p3")).columns
+        assert cols == ["cell_id", "r", "c", "nir", "bt", "nullmask",
+                        "water_test", "snow", "cloud_raw",
+                        "sat_az_cdn", "sat_zen_cdn"]
+        thr = spark.read.parquet(os.path.join(wd, "stage_thresholds"))
+        assert {"tlow", "thigh", "b4_17", "sun_az", "sun_zen", "sat_az",
+                "sat_zen", "cell_rows"} <= set(thr.columns)
+        assert thr.count() == thr.select("cell_id").distinct().count()
+        assert "thresholds" in {row.stage for row in r.lineage().collect()}
+
+
 def test_distributed_classify_resumes(spark, sf_small):
     """classify_distributed(runner=...) materializes its five barriers
     as fingerprinted stage tables. Simulate a mid-job crash by wiping

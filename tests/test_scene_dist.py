@@ -7,6 +7,7 @@ shadow match, fused buffering) is pinned to the reference semantics."""
 from __future__ import annotations
 
 import os
+import pathlib
 
 import numpy as np
 import pytest
@@ -154,10 +155,9 @@ def test_distributed_s2_no_thermal_matches_scene_kernel(spark, sf, request):
 
 
 def test_classify_auto_mixed_dispatch_matches_classify(spark, sf_small):
-    """A row threshold at the largest cell sends those cells to
-    classify_distributed (cells=) and the rest to classify
-    (cells_mode="anti"); the union equals classify over every cell,
-    text digests included."""
+    """A row threshold at the largest cell sends those cells to the
+    distributed path and the rest to the whole-cell kernel; the union
+    equals classify over every cell, text digests included."""
     register_views(spark, sf_small)
     rows = [r["count"] for r in spark.table(pipeline.materialize_pass1(
         spark)).groupBy("cell_id").count().collect()]
@@ -167,18 +167,96 @@ def test_classify_auto_mixed_dispatch_matches_classify(spark, sf_small):
     assert auto == whole
 
 
-def test_distributed_rejects_cells_with_runner(spark, sf_small, tmp_path):
-    """A stage fingerprint that ignored ``cells`` would resume another
-    run's rows, so the pair is refused before any stage runs."""
-    from python_fmask_spark.plans.lineage import StageRunner
+def test_distributed_leaves_no_cached_frames(spark, sf_small):
+    """No stage of the distributed path pins a frame in the session's
+    CacheManager: a persisted frame stays there until the session ends,
+    so a long session of classify calls would pile them up. Both CCL
+    passes run (min_cloud_size_px > 1 adds the 4-connected one)."""
+    from python_fmask_spark.operators.scene import FmaskParams
 
     register_views(spark, sf_small)
-    cells = spark.createDataFrame([("c",)], "cell_id string")
-    with pytest.raises(ValueError, match="runner"):
-        classify_distributed(
-            spark, cells=cells,
-            runner=StageRunner(spark, str(tmp_path), "x"))
-    assert not os.listdir(os.path.join(tmp_path, "_lineage"))
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # start from an empty cache
+    for params in (FmaskParams(), FmaskParams(min_cloud_size_px=3)):
+        classify_distributed(spark, params=params).collect()
+        assert cache.isEmpty(), params
+
+
+@pytest.fixture(scope="module")
+def sf_nodata(sf_oracle, tmp_path_factory):
+    """sf_oracle with only the nodata documents (pass-1 nullmask) of
+    every other cell left, so about half the cells are all-nodata:
+    no clear pixel, NULL thresholds, nothing to fill or match."""
+    import duckdb
+
+    from python_fmask_spark import oracle
+    from python_fmask_spark.dialect import DUCKDB
+
+    out = tmp_path_factory.mktemp("sf_nodata")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet("
+                f"'{os.path.join(sf_oracle, 'documents.parquet')}')")
+    con.execute(f"""CREATE TABLE p1 AS {oracle._ctes(DUCKDB, "pass1")}
+                    SELECT url, cell_id, nullmask FROM pass1""")
+    con.execute(f"""COPY (
+        SELECT d.* FROM documents d JOIN p1
+          ON p1.url = concat('https://', d.source, '.example/p/',
+                             cast(d.doc_id as varchar))
+        WHERE p1.nullmask OR p1.cell_id NOT IN (
+          SELECT cell_id FROM (
+            SELECT cell_id, row_number() OVER (ORDER BY cell_id) AS k
+            FROM (SELECT DISTINCT cell_id FROM p1))
+          WHERE k % 2 = 1))
+        TO '{out / "documents.parquet"}' (FORMAT parquet)""")
+    return str(out)
+
+
+def test_all_nodata_cells_match_independent_oracle(spark, sf_nodata):
+    """Every classify mode equals the independent straight-line oracle
+    (scripts/independent_oracle.py, over the DuckDB pass-3 frame) on an
+    input where about half the cells hold only nodata documents."""
+    import sys
+
+    import duckdb
+
+    from python_fmask_spark import oracle
+    from python_fmask_spark.dialect import DUCKDB
+
+    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]
+                           / "scripts"))
+    from independent_oracle import classify_scene_independent
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet("
+                f"'{os.path.join(sf_nodata, 'documents.parquet')}')")
+    p3 = con.execute(
+        f"""{oracle._ctes(DUCKDB, "pass3", angles=True)}
+        SELECT url, cell_id, r, c, sha256(text) AS text_sha256, nir, bt,
+          nullmask, water_test, snow, cloud_raw, g_tlow, g_thigh, g_b4_17,
+          sun_az, sun_zen, sat_az, sat_zen, sat_az_cdn, sat_zen_cdn
+        FROM pass3""").df()
+    null_cells = p3.groupby("cell_id")["nullmask"].all()
+    assert 0 < null_cells.sum() < len(null_cells), null_cells
+    want = {}
+    for _, pdf in p3.groupby("cell_id"):
+        for r in classify_scene_independent(
+                pdf.reset_index(drop=True)).itertuples():
+            bt = r.cloud_base_temp_c
+            want[r.url] = (r.fmask_class, r.cloud_id, r.cloud_height_du,
+                           None if np.isnan(bt) else round(bt, 9),
+                           r.text_sha256)
+
+    register_views(spark, sf_nodata)
+    for mode, out in (
+            ("whole", pipeline.classify(spark)),
+            ("distributed", classify_distributed(spark)),
+            ("auto", pipeline.classify_auto(spark, row_threshold=8))):
+        got = _canon(out)
+        diffs = {u: (want.get(u), got.get(u))
+                 for u in want.keys() | got.keys()
+                 if want.get(u) != got.get(u)}
+        assert not diffs, f"{mode}: {len(diffs)} mismatching urls, " \
+            f"e.g. {list(diffs.items())[:3]}"
 
 
 def test_distributed_l47_matches_scene_kernel(spark, sf_small):
