@@ -444,7 +444,7 @@ def _pass2_probthresh_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r6): the raw SQL rendering re-derived pass 1 per CTE reference
     (~20 s/run at sf0.1); this is the same leaf-based tail the default
     pass2_probs row already uses, with the knob rendered into the
-    landthr CTE. Results identical; oracle rendering unchanged."""
+    landthr CTE. The oracle renders the same derive text in DuckDB."""
     register_views(spark, sf_dir)
     view = pipeline.materialize_pass1(spark)
     thr = pipeline.materialize_thresholds(spark)

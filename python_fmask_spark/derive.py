@@ -637,75 +637,49 @@ pass1 AS (
 
 
 # ---------------------------------------------------------------------------
-# global thresholds as SQL CTEs (scoreatpcnt, fmask/fmask.py:482-499,546-561)
+# per-cell thresholds: one GROUP BY cell_id each, the same text in both
+# dialects (scoreatpcnt, fmask/fmask.py:482-499,546-561)
 # ---------------------------------------------------------------------------
 
 
-def scoreatpcnt_cte(hist_cte: str, pcnt: float, out: str) -> str:
-    """Per-cell scoreatpcnt (fmask/fmask.py:482-499): first bin whose
-    cumulative percentage >= pcnt, computed per cell_id (the reference
-    computes thresholds per scene; our scene == cell). Cells absent from
-    the histogram get no row (joins produce NULL == the reference's None)."""
-    return f"""
-{out} AS (
-  SELECT cell_id, min(bin) AS v FROM (
-    SELECT cell_id, bin,
-      cast(sum(cnt) OVER (PARTITION BY cell_id ORDER BY bin) as double) * 100.0 /
-      sum(cnt) OVER (PARTITION BY cell_id) AS cum
-    FROM {hist_cte}) t
-  WHERE cum >= {pcnt} GROUP BY cell_id
-)""".strip()
+def scoreatpcnt(col: str, pcnt: float, mask: str) -> str:
+    """Aggregate: the reference's scoreatpcnt (fmask/fmask.py:482-499)
+    of ``col`` over the group's rows where ``mask`` holds — the first
+    value whose cumulative percentage is >= ``pcnt``, i.e. a discrete
+    percentile. NULL when no row passes ``mask`` (the reference's None).
+    Spark's percentile_disc returns a double; the cast keeps the bin's
+    int type."""
+    return (f"cast(percentile_disc({pcnt / 100}) WITHIN GROUP "
+            f"(ORDER BY {col}) FILTER (WHERE {mask}) as int)")
 
 
-def thresholds_sql(d: str, sensor: str = "LANDSAT8") -> str:
-    """CTEs: per-cell Twater/Tlow/Thigh (Eqns 8,13; fmask/fmask.py:546-561),
-    b4_17 (fmask/fmask.py:315-321), nonNullCount (fmask/fmask.py:285,469).
-
-    This is a small per-cell dimension table — in the Spark pipeline it is
-    broadcast-joined back to the pixels (no global collect barrier).
+def threshold_aggs(sensor: str = "LANDSAT8") -> str:
+    """Select list of the per-cell thresholds aggregate over pass 1:
+    Twater/Tlow/Thigh (Eqns 8,13; fmask/fmask.py:546-561), b4_17
+    (fmask/fmask.py:315-321) and nonNullCount (fmask/fmask.py:285,469).
     SENTINEL2 has no thermal band: the BT thresholds degrade to NULL
     (the reference's None path, fmask/fmask.py:645-666)."""
-    if sensor == "SENTINEL2":
-        thermal_guard, thermal_guard_end = "cast(null as bigint) + 0 * (", ")"
-    else:
-        thermal_guard, thermal_guard_end = "", ""
-    # The four percentile tables are per-cell scalars (rows == cells).
-    # Planned from a stats-free leaf (the materialized pass-1 LogicalRDD)
-    # Spark falls back to SortMergeJoin with an exchange+sort per side;
-    # the hint pins the broadcast at plan time (guide §3.1). DuckDB
-    # rendering unchanged (hint emitted only for Spark).
-    hint = "/*+ BROADCAST(tw, tl, th, b4) */ " if d == SPARK else ""
+    def bt(pcnt: float, mask: str) -> str:
+        t = f"{scoreatpcnt('scaled_bt_bin', pcnt, mask)} - {C.BT_OFFSET}"
+        return (f"cast(null as bigint) + 0 * ({t})" if sensor == "SENTINEL2"
+                else t)
+
+    b4 = scoreatpcnt("scaled_b4_bin", 17.5, "clear_land")
+    return f"""{bt(82.5, 'clear_sky_water')} AS twater,
+    {bt(17.5, 'clear_land')} AS tlow,
+    {bt(82.5, 'clear_land')} AS thigh,
+    coalesce(cast({b4} as double) / {C.B4_SCALE}, 0.01) AS b4_17,
+    cast(sum(case when nullmask then 0 else 1 end) as bigint) AS non_null_count"""
+
+
+def thresholds_sql(sensor: str = "LANDSAT8") -> str:
+    """CTE ``thresholds``: threshold_aggs per cell over pass 1 — a small
+    per-cell dimension table (rows == cells)."""
     return f"""
-wbt_hist AS (
-  SELECT cell_id, scaled_bt_bin AS bin, count(*) AS cnt FROM pass1
-  WHERE clear_sky_water GROUP BY cell_id, scaled_bt_bin
-),
-lbt_hist AS (
-  SELECT cell_id, scaled_bt_bin AS bin, count(*) AS cnt FROM pass1
-  WHERE clear_land GROUP BY cell_id, scaled_bt_bin
-),
-lb4_hist AS (
-  SELECT cell_id, scaled_b4_bin AS bin, count(*) AS cnt FROM pass1
-  WHERE clear_land GROUP BY cell_id, scaled_b4_bin
-),
-{scoreatpcnt_cte('wbt_hist', 82.5, 'twater_t')},
-{scoreatpcnt_cte('lbt_hist', 17.5, 'tlow_t')},
-{scoreatpcnt_cte('lbt_hist', 82.5, 'thigh_t')},
-{scoreatpcnt_cte('lb4_hist', 17.5, 'b4_17_t')},
 thresholds AS (
-  SELECT {hint}cells.cell_id,
-    {thermal_guard}tw.v - {C.BT_OFFSET}{thermal_guard_end} AS twater,
-    {thermal_guard}tl.v - {C.BT_OFFSET}{thermal_guard_end} AS tlow,
-    {thermal_guard}th.v - {C.BT_OFFSET}{thermal_guard_end} AS thigh,
-    coalesce(cast(b4.v as double) / {C.B4_SCALE}, 0.01) AS b4_17,
-    cells.non_null_count
-  FROM (
-    SELECT cell_id, cast(sum(case when nullmask then 0 else 1 end) as bigint) AS non_null_count
-    FROM pass1 GROUP BY cell_id) cells
-  LEFT JOIN twater_t tw ON tw.cell_id = cells.cell_id
-  LEFT JOIN tlow_t tl ON tl.cell_id = cells.cell_id
-  LEFT JOIN thigh_t th ON th.cell_id = cells.cell_id
-  LEFT JOIN b4_17_t b4 ON b4.cell_id = cells.cell_id
+  SELECT cell_id,
+    {threshold_aggs(sensor)}
+  FROM pass1 GROUP BY cell_id
 )
 """.strip()
 
@@ -733,13 +707,11 @@ def pass2_sql(d: str, sensor: str = "LANDSAT8",
     has_cirrus = sensor in ("LANDSAT8", "SENTINEL2")
     cirrus_term = (f"+ p.ref_cirrus / {C.CIRRUS_PROB_RATIO}" if has_cirrus
                    else "+ 0.0")
-    # thresholds / lthr_t / the lprob_hist total are per-cell dims
-    # (rows == cells); broadcast-hint them on the Spark side so the
-    # pixel stream never pays an exchange+sort for these joins
-    # (guide §3.1 — the leaf views are stats-free, so the planner's
-    # default is SortMergeJoin). DuckDB rendering unchanged.
+    # thresholds is a per-cell dim (rows == cells); broadcast-hint it on
+    # the Spark side so the pixel stream never pays an exchange+sort for
+    # this join (guide §3.1 — the leaf views are stats-free, so the
+    # planner's default is SortMergeJoin).
     hint_t = "/*+ BROADCAST(t) */ " if d == SPARK else ""
-    hint_lt = "/*+ BROADCAST(h, lt) */ " if d == SPARK else ""
     return f"""
 pass2 AS (
   SELECT p.*,
@@ -760,22 +732,14 @@ pass2 AS (
     FROM pass1 p JOIN thresholds t ON t.cell_id = p.cell_id
   ) p
 ),
-lprob_hist AS (
-  SELECT cell_id, lprob_pcnt AS bin, count(*) AS cnt FROM pass2
-  WHERE clear_land GROUP BY cell_id, lprob_pcnt
-),
-{scoreatpcnt_cte('lprob_hist', 82.5, 'lthr_t')},
 landthr AS (
-  SELECT {hint_lt}t.cell_id, case
-    when coalesce(h.total, 0) < 0.03 * cast(t.non_null_count as double)
+  SELECT cell_id, case
+    when count_if(clear_land) < 0.03 * cast(max(g_non_null_count) as double)
       then {e17}
-    else coalesce(cast(lt.v as double) / {C.PROB_SCALE} + {e17},
-                  {e17})
+    else coalesce(cast({scoreatpcnt('lprob_pcnt', 82.5, 'clear_land')} as double)
+                  / {C.PROB_SCALE} + {e17}, {e17})
     end AS land_threshold
-  FROM thresholds t
-  LEFT JOIN (SELECT cell_id, sum(cnt) AS total FROM lprob_hist
-             GROUP BY cell_id) h ON h.cell_id = t.cell_id
-  LEFT JOIN lthr_t lt ON lt.cell_id = t.cell_id
+  FROM pass2 GROUP BY cell_id
 )
 """.strip()
 

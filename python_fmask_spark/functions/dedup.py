@@ -429,11 +429,11 @@ def q_url_canonical(d: str) -> str:
     strip a leading ``www.``, strip the scheme's default port
     (:443/:80), strip one trailing slash from the path. Output: the
     per-url canonical form, the host partition key, and the host's
-    document count (the Zipf-skew signal a salting stage reads).
+    document count (the Zipf-skew signal).
 
     Scale: canonicalization is whole-stage-codegen column work; the
-    only exchange is the host window (hash partition by host — a
-    mega-host is exactly the skew case salted_repartition handles).
+    only exchange is the host window (hash partition by host, so a
+    mega-host lands in one task).
     """
     return f"""
 WITH docs AS ({documents_wide_sql(d)}),

@@ -11,7 +11,8 @@ join is an equi-join on cell ids — never a full cross product.
 Scale notes: the polygon edge table is tiny -> broadcast; the PIP join
 cost is |docs| x |edges overlapping the doc's cell| after bbox pruning.
 The kNN neighbor-cell equi-join touches ~9 cells per query; at Zipf
-skew the hot cell fans out via salted_repartition upstream.
+skew the hot cell's join partition is AQE's skew-join case (on in
+session.get_spark).
 """
 
 from __future__ import annotations

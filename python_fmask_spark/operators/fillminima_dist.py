@@ -66,9 +66,11 @@ def fill_minima_distributed(df: DataFrame, img_col: str,
     spark = df.sparkSession
     ensure_package_on_executors(spark)
 
-    # Per-cell extremes and heights (small dim table, broadcast back).
-    meta = (df.withColumn("_nn", F.expr(f"{img_col} != {nullval}"))
-            .groupBy("cell_id")
+    # Per-cell extremes, heights and boundary value (small dim table,
+    # broadcast back).
+    bval = (f"first({boundary_col})" if boundary_col
+            else f"cast({boundaryval} as double)")
+    meta = (df.groupBy("cell_id")
             .agg(F.expr(f"max(case when {img_col} != {nullval} "
                         f"then {img_col} end) AS h_max"),
                  F.expr(f"min(case when {img_col} != {nullval} "
@@ -78,20 +80,13 @@ def fill_minima_distributed(df: DataFrame, img_col: str,
                  F.expr(f"cast(max(case when {img_col} = {nullval} then 1 "
                         f"else 0 end) = 1 "
                         f"or count(*) < (max(r) + 1) * {C.SCENE_WIDTH} "
-                        f"as int) AS cell_has_null")))
-    bcol = (F.expr(f"first({boundary_col}) AS cell_bval") if boundary_col
-            else F.expr(f"cast({boundaryval} as double) AS cell_bval"))
-    bmeta = df.groupBy("cell_id").agg(bcol) if boundary_col else None
+                        f"as int) AS cell_has_null"),
+                 F.expr(f"{bval} AS cell_bval")))
     # url never rides the fixpoint: each of the up-to-_MAX_ROUNDS halo
     # exchanges would re-ship it as pure passthrough; identity joins
     # back on (cell_id, r, c) at the caller when needed
     base = df.select("cell_id", "r", "c", img_col) \
         .join(F.broadcast(meta), "cell_id")
-    if bmeta is not None:
-        base = base.join(F.broadcast(bmeta), "cell_id")
-    else:
-        base = base.withColumn("cell_bval",
-                               F.expr(f"cast({boundaryval} as double)"))
     base = base.withColumn("img2", F.lit(int(_UNSET))).localCheckpoint()
     schema = ("cell_id string, r int, c int, "
               f"{img_col} bigint, h_max bigint, h_min bigint, "

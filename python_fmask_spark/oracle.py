@@ -35,7 +35,7 @@ def _ctes(d: str, upto: str, table: str = "documents",
             d, sensor=sensor, s2_offsets=s2_offsets,
             nir_snow_thresh=nir_snow_thresh,
             green_snow_thresh=green_snow_thresh),
-        "thresholds": lambda d: derive.thresholds_sql(d, sensor=sensor),
+        "thresholds": lambda d: derive.thresholds_sql(sensor),
         "pass2": lambda d: derive.pass2_sql(
             d, sensor=sensor,
             eqn17_cloud_prob_thresh=eqn17_cloud_prob_thresh),
@@ -86,8 +86,9 @@ FROM pass1 GROUP BY cell_id"""
 
 
 def q_pass1_thresholds(d: str) -> str:
-    """Per-cell global thresholds (Eqns 8,13; histogram percentile per
-    fmask/fmask.py:472-499,546-561) + b4_17 scaled to int for stable compare."""
+    """Per-cell global thresholds (Eqns 8,13; the scoreatpcnt percentile
+    of fmask/fmask.py:472-499,546-561 as one GROUP BY cell_id of FILTERed
+    percentile_disc aggregates) + b4_17 scaled to int for stable compare."""
     ctes = _ctes(d, "thresholds")
     return f"""{ctes}
 SELECT cell_id, twater, tlow, thigh,
@@ -313,7 +314,7 @@ def _ctes_s2_cdi(d: str, upto: str, offs: dict[str, int],
     Sentinel-2 chain up to ``upto``: the rendered pass-1 CTE is renamed
     pass1_raw, the recursive CDI block runs over it, and ``pass1`` is
     redefined AS MATERIALIZED (DuckDB inlines CTEs per reference — the
-    thresholds chain references pass1 six times) with pcp and its one
+    thresholds and pass-2 CTEs both read pass1) with pcp and its one
     dependent column clear_land replaced; the thresholds/pass2/pass3/
     majority CTE text then composes unchanged. DuckDB dialect only."""
     full = _ctes(d, upto, sensor="SENTINEL2", s2_offsets=offs,
@@ -353,7 +354,7 @@ def q_fmask_interim_class_s2_cdi(d: str,
     """Interim classification with the CDI displacement test applied
     INSIDE pass 1 (setSen2displacementTest; fmask/fmask.py:395-412):
     pcp becomes the CDI-filtered PCP and every downstream consumer —
-    clear_land, the thresholds histograms, pass 2/3, the majority
+    clear_land, the thresholds, pass 2/3, the majority
     buffer — reads the modified pass 1. DuckDB renders the CDI chain
     as the recursive-CTE SQL form; the Spark engine runs the per-cell
     CDI kernel (pipeline.materialize_pass1(s2_cdi=True)), so the

@@ -127,7 +127,7 @@ def materialize_pass1(spark: SparkSession, table: str = "documents",
     """Materialize pass 1 behind a leaf view and return the view name.
 
     Catalyst inlines deterministic CTEs per reference; the thresholds +
-    pass2 + pass3 chain references pass1 six-plus times, so a single
+    pass2 + pass3 chain references pass1 several times, so a single
     giant plan's optimization time explodes combinatorially.
     localCheckpoint truncates the lineage to a LogicalRDD leaf — the
     reference's own inter-pass temp-raster pattern
@@ -194,7 +194,7 @@ def _cdi_pass1(spark: SparkSession, scene: Scene) -> DataFrame:
     """The reference applies the CDI displacement test INSIDE pass 1
     when setSen2displacementTest is on (fmask/fmask.py:395-412): pcp
     becomes the CDI-filtered PCP and everything downstream (clear_land,
-    the thresholds histograms, pass 2/3) consumes it. Build the raw S2
+    the thresholds, pass 2/3) consumes it. Build the raw S2
     pass-1 leaf, run the per-cell CDI kernel over it, and replace pcp +
     its one dependent column."""
     from pyspark.sql import functions as F
@@ -230,10 +230,8 @@ def tail_sql_from_pass1(pass1_view: str, thresholds_view: str, upto: str,
     """Thresholds/pass2/pass3 CTE chain over the materialized pass-1
     and per-cell leaves (materialize_pass1 / materialize_thresholds).
 
-    The per-cell leaf stands in for the (textually large) thresholds
-    CTE — Catalyst re-analyzes the window-function stack per consumer
-    otherwise, which dominates wall time at small scale and is pure
-    waste at any scale (thresholds is a per-cell dim, rows == cells).
+    The per-cell leaf stands in for the thresholds CTE, so no consumer
+    re-aggregates pass 1 (thresholds is a per-cell dim, rows == cells).
     The Eqn-17 knob renders into the pass-2 landthr CTE fresh per
     query, so a non-default value composes with the session-cached
     leaves (which it does not depend on).
@@ -271,27 +269,20 @@ def materialize_thresholds(spark: SparkSession, table: str = "documents",
     """Materialize the per-cell leaf (rows == cells, tiny) behind a
     view, session-cached like pass 1: the thresholds dim plus the
     per-cell angle scalars and cell_rows. Every tail consumer
-    (pass2/pass3/dims) then references a leaf instead of re-analyzing
-    the 6-window-function thresholds CTE."""
+    (pass2/pass3/dims) then references a leaf instead of re-aggregating
+    pass 1."""
     return _thresholds_leaf(spark, Scene(table, sensor, s2_offsets, s2_cdi,
                                          tile_meta, nir_snow_thresh,
                                          green_snow_thresh))
 
 
 def thresholds_sql_text(scene: Scene) -> str:
-    """The rendered SQL of ``scene``'s per-cell leaf (the thresholds dim
-    plus first() per cell of _CELL_CONSTS), which its stage
-    fingerprint hashes."""
+    """The rendered SQL of ``scene``'s per-cell leaf, which its stage
+    fingerprint hashes: one GROUP BY cell_id over the pass-1 leaf with
+    the thresholds aggregates and first() of each of _CELL_CONSTS."""
     consts = ", ".join(f"first({k}) AS {k}" for k in _CELL_CONSTS)
-    picked = ", ".join(f"a.{k}" for k in _CELL_CONSTS)
-    # both sides are per-cell (rows == cells); broadcast the aggregated
-    # side so the join needs no exchange+sort (guide §3.1)
-    return (f"WITH pass1 AS (SELECT * FROM {_leaf_views(scene)[0]}), "
-            f"{derive.thresholds_sql(SPARK, sensor=scene.sensor)}, "
-            f"cell_consts AS (SELECT cell_id, {consts} "
-            f"FROM pass1 GROUP BY cell_id) "
-            f"SELECT /*+ BROADCAST(a) */ t.*, {picked} "
-            f"FROM thresholds t JOIN cell_consts a ON a.cell_id = t.cell_id")
+    return (f"SELECT cell_id, {derive.threshold_aggs(scene.sensor)}, "
+            f"{consts} FROM {_leaf_views(scene)[0]} GROUP BY cell_id")
 
 
 def _thresholds_leaf(spark: SparkSession, scene: Scene,

@@ -53,8 +53,8 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         # AQE: runtime partition coalescing + skew-join splitting (webtext
-        # cell-size skew is Zipfian; explicit salting is layered on top in
-        # tiling.py, AQE catches what the static salt misses).
+        # cell-size skew is Zipfian; the kernels' (cell_id, tile) key fans
+        # a hot cell out, AQE splits what is left).
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

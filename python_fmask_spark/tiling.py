@@ -1,4 +1,4 @@
-"""Tiling, halo exchange, and skew-aware repartitioning.
+"""Tiling and halo exchange.
 
 A cell's raster (height H, fixed width SCENE_WIDTH) is split into
 horizontal tiles of TILE_SIZE rows. Neighborhood kernels (majority,
@@ -11,10 +11,8 @@ groupBy, so the kernel shuffle is one pass and needs no self-join.
 composition of such kernels over that single shuffle.
 
 Scale notes: halo duplication is O(radius/TILE_SIZE) overhead (<7% for
-radius 2, tiles 32). The (cell_id, tile) grouping key is already salt-like
-— a mega-cell fans out to H/TILE_SIZE independent tasks, which is the
-explicit skew answer required by the north rule; ``salted_repartition``
-covers the columnar stages.
+radius 2, tiles 32). The (cell_id, tile) grouping key is the skew
+answer: a mega-cell fans out to H/TILE_SIZE independent tasks.
 """
 
 from __future__ import annotations
@@ -131,24 +129,3 @@ def tiled_neighborhood(
         return pd.DataFrame(out)
 
     return haloed.groupBy("cell_id", "tile").applyInPandas(run, schema=schema)
-
-
-def salted_repartition(df: DataFrame, target_rows_per_partition: int = 500_000,
-                       key: str = "cell_id") -> DataFrame:
-    """Explicit skew salting (north rule): a cheap count pre-pass derives
-    a per-cell salt factor; rows are repartitioned on (key, salt bucket)
-    so one Zipf-hot cell spreads over ceil(n/target) partitions.
-
-    The salt table is tiny (one row per cell) -> broadcast join."""
-    counts = df.groupBy(key).count() \
-        .withColumn("salt_n", F.expr(
-            f"greatest(1, cast(ceil(count / {target_rows_per_partition}) as int))")) \
-        .drop("count")
-    # explicit partition count: user-specified numbers survive AQE's
-    # small-partition coalescing (which would otherwise undo the salt
-    # fan-out at low volumes)
-    n_parts = max(1, int(counts.agg(F.sum("salt_n")).collect()[0][0] or 1))
-    salted = (df.join(F.broadcast(counts), key)
-                .withColumn("salt", F.expr("pmod(hash(url), salt_n)")))
-    return salted.repartition(n_parts, F.col(key), F.col("salt")) \
-        .drop("salt_n", "salt")

@@ -24,7 +24,9 @@ from pyspark.sql import SparkSession  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
-spark = (SparkSession.builder.master("local[8]")
+# sized to the machine like session.get_spark
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+spark = (SparkSession.builder.master(f"local[{CPUS}]")
          .config("spark.sql.shuffle.partitions", "16")
          .config("spark.ui.enabled", "false").getOrCreate())
 only = set(sys.argv[1:])
