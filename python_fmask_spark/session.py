@@ -1,8 +1,26 @@
 """SparkSession factory tuned for the engine.
 
 Local runs use ``local[$SPARK_GRAFT_CPUS]``, by default every CPU this
-process may run on; on a real cluster the same configs apply per-executor (AQE handles skew/coalescing at runtime, Arrow
-batches feed the pandas-UDF tile kernels).
+process may run on. Under ``spark-submit`` the Python process attaches
+to a driver JVM that is already running, so the master spark-submit was
+given stands. On a real cluster the same configs apply per executor
+(AQE handles skew and coalescing at runtime, Arrow batches feed the
+pandas-UDF tile kernels).
+
+JIT mode. The CLI's unit of work is one process, one cold classify job,
+then exit. HotSpot's tiered compilation spends a third or more of such
+a job's CPU in C2 (optimizing) compiler threads, on code the job stops
+running before the compiled code pays back. So a driver JVM started by
+``get_spark`` compiles with C1 only (``ONE_SHOT_DRIVER_JAVA_OPTIONS``).
+On a 4-core VM (perfbench medians) this took the cold whole-mode job's
+CPU from 63 s to 29.5 s and set-up from 13.3 s to 6.7 s, and the cold
+job's wall time fell a little. The price is speed once the process is
+warm: repeated jobs ran about 45% slower (median over 5 seeds),
+and the test suite took 591 s instead of 466 s. Processes that run many
+jobs (the test session, the 76-query board) pass ``long_lived=True``
+and keep tiered compilation. Only the driver JVM gets the flag; a
+cluster's executors, where the per-row work runs, keep tiered
+compilation.
 """
 
 from __future__ import annotations
@@ -14,6 +32,13 @@ import zipfile
 from pyspark.sql import SparkSession
 
 _PYFILES_SENT: set[int] = set()
+
+# HotSpot flags for a driver JVM that runs one job and exits (module
+# docstring). spark.driver.defaultJavaOptions is prepended to any
+# caller's spark.driver.extraJavaOptions, so both apply.
+# scripts/spark_submit_classify.sh passes the same string to
+# spark-submit, which starts the driver JVM before Python runs.
+ONE_SHOT_DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1"
 
 
 def ensure_package_on_executors(spark: SparkSession) -> None:
@@ -43,15 +68,25 @@ def get_spark(
     master: str | None = None,
     app_name: str = "python-fmask-spark",
     shuffle_partitions: int | None = None,
+    long_lived: bool = False,
 ) -> SparkSession:
+    """The engine's session. ``long_lived=True`` keeps the driver JVM's
+    tiered JIT for a process that runs many jobs; the default compiles
+    with C1 only, for a one-shot job (module docstring)."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
                               len(os.sched_getaffinity(0))))
-    master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
+    builder = SparkSession.builder.appName(app_name)
+    # spark-submit sets PYSPARK_GATEWAY_PORT for the Python process it
+    # starts; its JVM already runs under the master it was given
+    if master or "PYSPARK_GATEWAY_PORT" not in os.environ:
+        builder = builder.master(master or f"local[{cpus}]")
+    if not long_lived:
+        builder = builder.config("spark.driver.defaultJavaOptions",
+                                 ONE_SHOT_DRIVER_JAVA_OPTIONS)
     builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
+        builder
         # AQE: runtime partition coalescing + skew-join splitting (webtext
         # cell-size skew is Zipfian; the kernels' (cell_id, tile) key fans
         # a hot cell out, AQE splits what is left).

@@ -11,7 +11,8 @@ same conversions the reference applies (:255-263):
     converted to pixels by integer division with the pixel size
     (toaImgInfo.xRes there, constants.X_RES here).
 
-Usage:
+Usage (``python scripts/classify_job.py ...`` runs the same job on
+``local[N]``; scripts/spark_submit_classify.sh wraps spark-submit):
   spark-submit --py-files python_fmask_spark.zip scripts/classify_job.py \
       SF_DIR [--sensor LANDSAT8|LANDSAT47|SENTINEL2] \
       [--mincloudsize N] [--cloudbufferdistance M] \
@@ -38,6 +39,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
 
@@ -159,9 +161,12 @@ def params_from_cmdargs(cmdargs):
 
 def main() -> None:
     cmdargs = get_cmdargs()
-    from pyspark.sql import SparkSession
+    from python_fmask_spark.session import (ensure_package_on_executors,
+                                            get_spark)
 
-    spark = SparkSession.builder.appName("fmask-classify").getOrCreate()
+    # one job, then exit: get_spark's one-shot (C1-only) driver JVM
+    spark = get_spark(app_name="fmask-classify")
+    ensure_package_on_executors(spark)
     from python_fmask_spark import oracle, pipeline
     from python_fmask_spark.plans.lineage import StageRunner
     from python_fmask_spark.plans.sinks import write_mask
@@ -213,4 +218,8 @@ def main() -> None:
 
 
 if __name__ == "__main__":
+    # this checkout's root, wherever it lives (spark-submit also ships
+    # the package with --py-files)
+    sys.path.insert(0, os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
     main()

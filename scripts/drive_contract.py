@@ -20,15 +20,13 @@ spec.loader.exec_module(mod)
 
 import duckdb  # noqa: E402
 import pandas as pd  # noqa: E402
-from pyspark.sql import SparkSession  # noqa: E402
+
+from python_fmask_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
-# sized to the machine like session.get_spark
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
-spark = (SparkSession.builder.master(f"local[{CPUS}]")
-         .config("spark.sql.shuffle.partitions", "16")
-         .config("spark.ui.enabled", "false").getOrCreate())
+# 76 queries in one process: keep the tiered JIT
+spark = get_spark(long_lived=True)
 only = set(sys.argv[1:])
 if not only:
     print("ENTRY rows:", len(mod.entry(spark).collect()))

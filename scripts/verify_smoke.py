@@ -16,11 +16,10 @@ mod = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(mod)
 
 import duckdb  # noqa: E402
-from pyspark.sql import SparkSession  # noqa: E402
 
-spark = (SparkSession.builder.master("local[4]")
-         .config("spark.sql.shuffle.partitions", "8")
-         .config("spark.ui.enabled", "false").getOrCreate())
+from python_fmask_spark.session import get_spark  # noqa: E402
+
+spark = get_spark(long_lived=True)
 print("entry rows:", len(mod.entry(spark).collect()))
 
 con = duckdb.connect()

@@ -13,7 +13,9 @@ from python_fmask_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(master="local[4]", app_name="pytest", shuffle_partitions=8)
+    # one session runs the whole suite: keep the tiered JIT
+    s = get_spark(master="local[4]", app_name="pytest", shuffle_partitions=8,
+                  long_lived=True)
     yield s
     s.stop()
 
