@@ -40,8 +40,10 @@ percolating mega-clump is one task there too). What this buys over
 pipeline.classify is that a mega-CELL no longer serializes fill +
 clumps + every clump's match into one task.
 
-Constant-factor cost: ~10 stage barriers and 5 extra shuffles vs the
-single-exchange whole-cell kernel — measured 10-30x total CPU at 1M
+Constant-factor cost: three stage barriers (``dist_p3``, ``dist_flags``,
+``dist_px``, each a plans.lineage.barrier) on top of the exchange's two
+leaves, the clump and fill-minima checkpoints, and 5 extra shuffles vs
+the single-exchange whole-cell kernel — measured 10-30x total CPU at 1M
 rows, shrinking as cells grow. Use pipeline.classify below ~10^5 rows
 per cell; this path exists for the cell sizes where one task would
 straggle or OOM.
@@ -63,6 +65,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import constants as C
+from ..plans.lineage import barrier
 from ..session import ensure_package_on_executors
 from . import kernels
 from .clumps import label_clumps_distributed
@@ -211,12 +214,12 @@ def classify_distributed(spark: SparkSession, table: str = "documents",
     """Full classification with bounded task grains (see module doc).
     Returns the same schema as pipeline.classify.
 
-    ``runner`` (plans.lineage.StageRunner): materialize each stage
-    barrier through a fingerprinted stage TABLE instead of
-    localCheckpoint — the 100-TB shape. localCheckpoint pins executor
-    memory/disk and dies with the session, so a mid-job failure
-    restarts the whole five-barrier chain; stage tables survive
-    restarts and a rerun skips every completed stage
+    ``runner`` (plans.lineage.StageRunner): every barrier (pass1,
+    thresholds, dist_p3, dist_flags, dist_px) becomes a fingerprinted
+    stage TABLE instead of a localCheckpoint — the 100-TB shape.
+    localCheckpoint pins executor memory/disk and dies with the
+    session; stage tables survive restarts and a rerun skips every
+    completed stage
     (tests/test_lineage.py::test_distributed_classify_resumes). The
     reference analogue is its keepIntermediates temp rasters
     (fmask/fmask.py:206-216)."""
@@ -240,31 +243,16 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
     ensure_package_on_executors(spark)
     has_thermal = scene.sensor != "SENTINEL2"
     eqn17 = params.eqn17_cloud_prob_thresh
-    # Stage fingerprint folds in EVERYTHING that changes stage results:
-    # the FmaskParams fields (min_cloud_size_px/buffers alter dist_flags
-    # and the finalize), the rendered SQL of the per-cell leaf and of
-    # the pixel exchange (the scene key rides in their leaf view names:
-    # sensor dispatch, offsets, snow floors, angle grids, CDI; the
-    # derive formulas of every pass ride in the text), and the
-    # session's registered input identity (per-file mtime/size) — so
-    # resuming in the same workdir after changing params, code or the
-    # table re-runs instead of silently reusing stale stage tables.
-    fp = ("" if runner is None else pipeline.stage_fingerprint(
-        spark, f"distv5||{params!r}||{pipeline.thresholds_sql_text(scene)}"
-               f"||{pipeline.px_exchange_sql(scene, eqn17)}"))
-
-    def _mat(stage: str, build):
-        """Stage barrier: fingerprinted stage table under a runner,
-        session-scoped localCheckpoint otherwise. Both return a fresh
-        leaf (LogicalRDD / parquet scan), which also keeps downstream
-        attribute ids unambiguous."""
-        if runner is not None:
-            return runner.run(stage, fp, build)
-        return build().localCheckpoint()
+    # what the dist_* stages depend on beyond the registered input: the
+    # FmaskParams fields and the rendered SQL of the per-cell leaf and
+    # the pixel exchange (the scene key rides in their view names, every
+    # pass's formulas in the text) — a change re-runs the stages
+    logic = (f"distv5||{params!r}||{pipeline.thresholds_sql_text(scene)}"
+             f"||{pipeline.px_exchange_sql(scene, eqn17)}")
 
     px_in, dims, ident = pipeline.scene_exchange(
         spark, scene, eqn17, runner=runner, cells=cells)
-    p3 = _mat("dist_p3", lambda: px_in.selectExpr(
+    p3 = barrier(spark, runner, "dist_p3", logic, lambda: px_in.selectExpr(
         "cell_id", "r", "c", "nir", "bt", *FLAGS_SQL,
         "sat_az_cdn", "sat_zen_cdn"))
 
@@ -294,7 +282,7 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
                .drop("small"))
     # url never enters ANY intermediate stage: every per-pixel frame is
     # keyed (cell_id, r, c) — int composite keys shuffle/join cheaper
-    # than a ~40-byte string, across all five stage barriers and the
+    # than a ~40-byte string, across every stage barrier and the
     # fill fixpoint's halo rounds. The identity frame joins back once at
     # the end.
     maj = tiling.tiled_neighborhood(
@@ -332,7 +320,7 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
         f"{C.EQN19_NIR_FILL_THRESH} as boolean) AS potential_shadow")
 
     # per-pixel flag table for windows + finalize (one narrow frame)
-    flags = _mat("dist_flags", lambda: (
+    flags = barrier(spark, runner, "dist_flags", logic, lambda: (
         p3.select("cell_id", "r", "c", "nullmask", "water_test", "snow",
                   "bt", "sat_az_cdn", "sat_zen_cdn")
         .join(cloudmask_df, ["cell_id", "r", "c"])
@@ -357,7 +345,7 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     cell_scalars = F.broadcast(dims.select(
         "cell_id", "cell_rows", "g_tlow", "g_thigh", "sun_az", "sun_zen"))
-    px = _mat("dist_px", lambda: (
+    px = barrier(spark, runner, "dist_px", logic, lambda: (
         flags.join(clump_px, ["cell_id", "r", "c"])
         .join(cell_scalars, "cell_id")
         .repartition(n_part, "cell_id", "cloud_id")
@@ -369,33 +357,23 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
     # --- stage 5: per-clump windowed shadow match (cogrouped)
     tmpl = px.join(cell_scalars, "cell_id")
 
-    # window rows per clump, emitted exactly by the stage-4 kernel
-    windows = _mat("dist_windows", lambda: px.groupBy(
-        "cell_id", "cloud_id").agg(F.expr("first(win_r0) AS win_r0"),
-                                   F.expr("first(win_r1) AS win_r1")))
-
     # Band the match: every clump whose window STARTS in a row band is
     # matched inside one task against ONE copy of the band raster
     # (halo = max window span), instead of duplicating ~window_span x 8
     # pixels PER CLOUD (measured: the per-cloud join amplified the
     # pixel table ~28x on a clump-dense mega-cell). Band height >= max
     # span keeps duplication <= 2x; parallelism = H / band_rows tasks.
-    span = int(windows.agg(
+    span = int(px.agg(
         F.expr("max(win_r1 - win_r0 + 1)")).collect()[0][0] or 1)
     B = max(1024, span)
     band = f"win_r0 div {B}"
     tmpl_b = tmpl.withColumn("band", F.expr(band))
 
     T = C.TILE_SIZE
-    # fresh leaf: both cogroup sides otherwise derive from dist_px and
-    # share its attribute ids, which the analyzer finds ambiguous
-    bands = _mat("dist_bands",
-                 lambda: windows.selectExpr("cell_id", f"{band} AS band")
-                 .distinct())
-    band_tiles = bands.withColumn(
-        "tile", F.explode(F.expr(
-            f"sequence((band * {B}) div {T}, "
-            f"((band + 1) * {B} + {span} - 1) div {T})")))
+    band_tiles = (px.selectExpr("cell_id", f"{band} AS band").distinct()
+                  .withColumn("tile", F.explode(F.expr(
+                      f"sequence((band * {B}) div {T}, "
+                      f"((band + 1) * {B} + {span} - 1) div {T})"))))
     wflags = flags.select("cell_id", "r", "c", "cloudmask",
                           "potential_shadow", "nullmask") \
         .withColumn("tile", F.expr(f"r div {T}"))

@@ -3,8 +3,8 @@
 Plan shape:
   parquet scan (pruned columns)
     -> pass-1 leaf + per-cell leaf (thresholds, angle scalars and
-       cell_rows; rows == cells): each a session-cached localCheckpoint,
-       or under a StageRunner the stage ``pass1`` / ``thresholds``
+       cell_rows; rows == cells): each a lineage.barrier — a cached
+       localCheckpoint, or the StageRunner stage ``pass1``/``thresholds``
     -> scene_exchange: pass2/pass3 over the leaves -> (px, dims, ident)
     -> shuffle by cell_id -> applyInPandas scene kernel (Arrow batches)
 
@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from . import derive
 from .dialect import SPARK
 from .operators.scene import FmaskParams
+from .plans.lineage import barrier
 from .session import ensure_package_on_executors
 
 # per-cell constants of pass 1 the per-cell leaf carries next to the
@@ -81,18 +82,6 @@ def pass1_sql_text(scene: Scene = Scene()) -> str:
     return f"WITH {p1_ctes} SELECT * FROM pass1"
 
 
-def stage_fingerprint(spark: SparkSession, logic: str) -> str:
-    """Fingerprint for StageRunner stage tables: sha256 over the logic
-    identity (Scene.key() / params repr) PLUS the session's registered
-    input identity (sources.registered_input_identity — sf_dir +
-    per-file mtime/size). Resuming in the same workdir after either the
-    logic or the input data changed re-runs the stage instead of
-    silently reusing a stale table."""
-    from .sources import registered_input_identity
-    ident = registered_input_identity(spark)
-    return hashlib.sha256(f"{ident}||{logic}".encode()).hexdigest()[:16]
-
-
 # session -> the pass-1 / thresholds leaf views it has materialized.
 # A leaf is named by its Scene.key(), and the pass-1 stage table is
 # immutable for a given registered input, so every query in a session
@@ -117,7 +106,6 @@ def invalidate_pass1_cache(spark: SparkSession) -> None:
 
 
 def materialize_pass1(spark: SparkSession, table: str = "documents",
-                      runner=None,
                       sensor: str = "LANDSAT8",
                       s2_offsets: dict[str, int] | None = None,
                       s2_cdi: bool = False,
@@ -138,39 +126,24 @@ def materialize_pass1(spark: SparkSession, table: str = "documents",
     threshold queries all branch from the same leaf instead of
     re-deriving pass 1 per query.
 
-    ``runner`` (a plans.lineage.StageRunner): write the materialization
-    through a parquet/Iceberg stage table with lineage + fingerprint
-    instead of localCheckpoint — the 100-TB shape (localCheckpoint pins
-    executor memory/disk and dies with the session; a stage table
-    survives restarts and makes classify resumable mid-pipeline). Both
-    forms register the same leaf view name, so every downstream plan is
-    identical either way."""
+    classify_distributed(runner=...) registers the same view over its
+    StageRunner stage ``pass1``, so downstream plans are identical."""
     return _pass1_leaf(spark, Scene(table, sensor, s2_offsets, s2_cdi,
                                     tile_meta, nir_snow_thresh,
-                                    green_snow_thresh), runner)
+                                    green_snow_thresh))
 
 
 def _leaf(spark: SparkSession, view: str, build, runner, stage: str,
           logic: str) -> str:
-    """Materialize ``build()`` behind the temp view ``view``: the
-    StageRunner stage ``stage`` (fingerprinted by ``logic`` and the
-    registered input) under a ``runner``, else a session-cached
-    localCheckpoint."""
+    """plans.lineage.barrier(build) behind the temp view ``view``,
+    cached for the session when there is no runner."""
     cache = _PASS1_CACHE.setdefault(spark, set())
-    if runner is not None:
-        df = runner.run(stage, stage_fingerprint(spark, logic), build)
-        # do NOT keep the session cache pointing at this view: the stage
-        # table lives in the runner's workdir, whose lifetime the
-        # session does not control — a later cache hit would read a
-        # deleted parquet. Evicting forces the next plain call to
-        # rebuild its own localCheckpoint leaf.
-        cache.discard(view)
-    elif view in cache and spark.catalog.tableExists(view):
+    if runner is None and view in cache and spark.catalog.tableExists(view):
         return view
-    else:
-        df = build().localCheckpoint()
-        cache.add(view)
-    df.createOrReplaceTempView(view)
+    barrier(spark, runner, stage, logic, build).createOrReplaceTempView(view)
+    # a stage table lives in the runner's workdir, which may be deleted
+    # under the session: only a localCheckpoint leaf stays cached
+    (cache.add if runner is None else cache.discard)(view)
     return view
 
 

@@ -1,6 +1,10 @@
 """Per-stage lineage + metrics and checkpoint resume (north rule).
 
-Every pipeline stage writes its output to a stage table (parquet here;
+``barrier`` is the one materialization point of the classify stages
+(pipeline's two leaves, scene_dist's ``dist_*`` stages): a
+localCheckpoint, or with a StageRunner a fingerprinted stage table.
+
+Every StageRunner stage writes its output to a stage table (parquet here;
 Iceberg in production — same write API) together with a row in the
 ``_lineage`` table:
 
@@ -27,6 +31,7 @@ merging small files into fewer partitions.
 from __future__ import annotations
 
 import glob
+import hashlib
 import json
 import os
 import time
@@ -56,6 +61,29 @@ LINEAGE_SCHEMA = pa.schema([
 _LINEAGE_DDL = ", ".join(
     f"{f.name} {'string' if f.type == pa.string() else 'bigint'}"
     for f in LINEAGE_SCHEMA)
+
+
+def stage_fingerprint(spark: SparkSession, logic: str) -> str:
+    """Fingerprint for StageRunner stage tables: sha256 over the logic
+    identity (Scene.key() / rendered SQL / params repr) PLUS the
+    session's registered input identity (sources.registered_input_identity
+    — sf_dir + per-file mtime/size). Resuming in the same workdir after
+    either the logic or the input data changed re-runs the stage instead
+    of silently reusing a stale table."""
+    from ..sources import registered_input_identity
+    ident = registered_input_identity(spark)
+    return hashlib.sha256(f"{ident}||{logic}".encode()).hexdigest()[:16]
+
+
+def barrier(spark: SparkSession, runner: "StageRunner | None", stage: str,
+            logic: str, build: "callable[[], DataFrame]") -> DataFrame:
+    """``build()`` as a fresh leaf: the runner's stage ``stage``
+    (resumed while ``logic`` and the input are unchanged), else a
+    localCheckpoint — the reference's keepIntermediates temp raster
+    (fmask/fmask.py:206-216)."""
+    if runner is None:
+        return build().localCheckpoint()
+    return runner.run(stage, stage_fingerprint(spark, logic), build)
 
 
 class StageRunner:

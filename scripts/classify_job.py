@@ -20,10 +20,11 @@ Usage (``python scripts/classify_job.py ...`` runs the same job on
       [--nirsnowthreshold T] [--greensnowthreshold T] [--strict] \
       [--mode whole|distributed|auto] [--tempdir DIR] [-o TABLE]
 
-Prints per-class counts as one JSON line. ``--tempdir`` routes the
-distributed path through StageRunner stage tables (resumable, the
-reference's keepintermediates/tempdir lifecycle); ``-o/--output``
-writes the mask through the thematic sink (plans/sinks.write_mask).
+Prints per-class counts as one JSON line. ``--tempdir`` (distributed
+mode only) routes the distributed path through StageRunner stage
+tables (resumable, the reference's keepintermediates/tempdir
+lifecycle); ``-o/--output`` writes the mask through the thematic sink
+(plans/sinks.write_mask).
 
 Precedence note (deliberate inversion vs the reference): the reference
 applies setStrictFmask AFTER all other config setters
@@ -47,9 +48,9 @@ def get_cmdargs(argv=None):
     from python_fmask_spark import constants as C
 
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    p.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.001",
-                   help="Directory of input parquet tables "
-                        "(default=%(default)s)")
+    p.add_argument("sf_dir",
+                   help="Directory of input parquet tables (must hold "
+                        "documents.parquet)")
     p.add_argument("--sensor", default="LANDSAT8",
                    choices=("LANDSAT8", "LANDSAT47", "SENTINEL2"),
                    help="Sensor regime (reference fmask/config.py:33-40)")
@@ -61,9 +62,10 @@ def get_cmdargs(argv=None):
                    help="Write the mask to this table name via the "
                         "thematic sink (color table + class names)")
     p.add_argument("-e", "--tempdir", default="",
-                   help="Stage-table workdir: distributed stages become "
-                        "fingerprinted, crash-resumable parquet tables "
-                        "(the reference's tempdir/keepintermediates)")
+                   help="--mode distributed: stage-table workdir; its "
+                        "stages become fingerprinted, crash-resumable "
+                        "parquet tables (the reference's "
+                        "tempdir/keepintermediates)")
     p.add_argument("-v", "--verbose", action="store_true",
                    help="Print per-stage progress to stderr")
     p.add_argument("--granule-xml", default="",
@@ -123,6 +125,10 @@ def get_cmdargs(argv=None):
         # reference gates the CDI test to S2 (sentinel2Stacked only);
         # reject at parse time, before any SparkSession spins up
         p.error("--parallaxtest requires --sensor SENTINEL2")
+    if args.tempdir and args.mode != "distributed":
+        # only the distributed path writes stage tables; the whole-cell
+        # and auto paths would silently drop the advertised resumability
+        p.error("--tempdir requires --mode distributed")
     # same gate for the two S2 XML sources: they are only parsed inside
     # the SENTINEL2 branch of main(), so accepting them with another
     # sensor would silently produce a different product than the user
@@ -161,6 +167,13 @@ def params_from_cmdargs(cmdargs):
 
 def main() -> None:
     cmdargs = get_cmdargs()
+    docs = os.path.join(cmdargs.sf_dir, "documents.parquet")
+    if not os.path.exists(docs):
+        # register_views skips absent tables, so the job would only fail
+        # later, in analysis; say what is missing before Spark starts
+        print(f"classify_job.py: error: {docs} does not exist "
+              "(SF_DIR must hold the documents table)", file=sys.stderr)
+        sys.exit(2)
     from python_fmask_spark.session import (ensure_package_on_executors,
                                             get_spark)
 
@@ -190,12 +203,6 @@ def main() -> None:
             tile_meta = sen2meta.Sen2TileMeta.from_file(cmdargs.granule_xml)
     kw = dict(params=params, sensor=cmdargs.sensor, s2_offsets=s2_offsets,
               tile_meta=tile_meta, s2_cdi=cmdargs.parallaxtest)
-    if cmdargs.tempdir and cmdargs.mode != "distributed":
-        # stage-table resume is a distributed-path feature (classify /
-        # classify_auto run stage-free whole-cell kernels); say so
-        # instead of silently dropping the advertised resumability
-        print(f"warning: --tempdir applies only to --mode distributed; "
-              f"ignored for --mode {cmdargs.mode}", file=sys.stderr)
     if cmdargs.mode == "auto":
         out = pipeline.classify_auto(spark, **kw)
     elif cmdargs.mode == "distributed":

@@ -2,14 +2,15 @@
 # Cluster launch pattern (north rule: spark-submit --py-files on a
 # multi-executor cluster). Locally this runs the same job on local[N].
 #
-#   ./scripts/spark_submit_classify.sh [master] [sf_dir]
+#   ./scripts/spark_submit_classify.sh MASTER SF_DIR
 #
+# An empty MASTER ("") runs on local[SPARK_GRAFT_CPUS or nproc].
 # On a real cluster: substitute --master spark://... or yarn and set
 # --num-executors for the N / 4N scaling comparison. The job's Spark
 # SQL settings come from session.get_spark inside classify_job.py.
 set -euo pipefail
 MASTER="${1:-local[${SPARK_GRAFT_CPUS:-$(nproc)}]}"
-SF_DIR="${2:-${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}}"
+SF_DIR="${2:?usage: spark_submit_classify.sh MASTER SF_DIR}"
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 
 ZIP="$(mktemp -d)/python_fmask_spark.zip"

@@ -207,3 +207,13 @@ def test_parallaxtest_cli_flag(capsys):
         ok = get_cmdargs(["sf", "--sensor", "SENTINEL2",
                           flag, "/tmp/x.xml"])
         assert getattr(ok, flag[2:].replace("-", "_")) == "/tmp/x.xml"
+
+    # --tempdir: only the distributed path writes stage tables
+    for mode in ("whole", "auto"):
+        with pytest.raises(SystemExit) as ei:
+            get_cmdargs(["sf", "--mode", mode, "--tempdir", "/tmp/wd"])
+        assert ei.value.code == 2
+        assert "--tempdir requires --mode distributed" in \
+            capsys.readouterr().err
+    assert get_cmdargs(["sf", "--mode", "distributed", "--tempdir",
+                        "/tmp/wd"]).tempdir == "/tmp/wd"

@@ -120,9 +120,9 @@ def test_distributed_cdi_pass1_is_staged(spark, sf_small):
     """With the CDI displacement test on, the CDI-modified pass-1 frame
     is a stage table like every other barrier: the first runner records
     a pass1 lineage row, and a second runner on the same workdir resumes
-    it without running the raw pass 1 or the CDI kernel (no Spark job
-    even with the session's leaves dropped), writes no lineage rows and
-    returns identical rows."""
+    the scene exchange's leaves without running the raw pass 1 or the
+    CDI kernel (no Spark job even with the session's leaves dropped),
+    writes no lineage rows and returns identical rows."""
     from python_fmask_spark import pipeline
     from python_fmask_spark.operators.scene_dist import classify_distributed
     from python_fmask_spark.oracle import S2_ZERO_OFFSETS
@@ -137,8 +137,9 @@ def test_distributed_cdi_pass1_is_staged(spark, sf_small):
 
         pipeline.invalidate_pass1_cache(spark)
         r2 = StageRunner(spark, wd, "c2")
+        scene = pipeline.Scene(**kw)
         assert _spark_jobs(spark, "cdi_resume", lambda: pipeline
-                           .materialize_pass1(spark, runner=r2, **kw)) == 0
+                           .scene_exchange(spark, scene, runner=r2)) == 0
         out2 = sorted(map(tuple, classify_distributed(
             spark, runner=r2, **kw).collect()))
         assert r2.lineage().filter("run_id = 'c2'").count() == 0
@@ -158,10 +159,10 @@ def test_runner_fingerprint_covers_params(spark, sf_small):
     with tempfile.TemporaryDirectory() as wd:
         r1 = StageRunner(spark, wd, "f1")
         n1 = classify_distributed(spark, runner=r1).count()
-        dist_stages = {"dist_p3", "dist_flags", "dist_px",
-                       "dist_windows", "dist_bands"}
+        dist_stages = {"dist_p3", "dist_flags", "dist_px"}
         assert {r.stage for r in r1.lineage()
-                .filter("run_id = 'f1'").collect()} >= dist_stages
+                .filter("run_id = 'f1'").collect()} == {
+                    "pass1", "thresholds", *dist_stages}
         # same params + same input -> full resume, nothing rebuilt
         r2 = StageRunner(spark, wd, "f2")
         assert classify_distributed(spark, runner=r2).count() == n1
@@ -226,11 +227,12 @@ def test_dist_p3_holds_only_the_exchange(spark, sf_small):
 
 def test_distributed_classify_resumes(spark, sf_small):
     """classify_distributed(runner=...) materializes its five barriers
-    as fingerprinted stage tables. Simulate a mid-job crash by wiping
-    the LAST stages' markers: the rerun must (a) skip the completed
-    early stages (their stage parquet untouched), (b) rebuild only the
-    tail, (c) produce rows identical to the uninterrupted run and to
-    the session-scoped localCheckpoint path."""
+    (pass1, thresholds, dist_p3, dist_flags, dist_px) as fingerprinted
+    stage tables. Simulate a mid-job crash by wiping the LAST stage's
+    marker: the rerun must (a) skip the completed early stages (their
+    stage parquet untouched), (b) rebuild only the tail, (c) produce
+    rows identical to the uninterrupted run and to the session-scoped
+    localCheckpoint path."""
     import glob
     import os
 
@@ -246,18 +248,14 @@ def test_distributed_classify_resumes(spark, sf_small):
             spark, runner=r1).collect()))
         assert out1 == baseline
         markers = sorted(glob.glob(os.path.join(wd, "stage_*.json")))
-        stages = {os.path.basename(m) for m in markers}
-        assert {"stage_dist_p3._fingerprint.json",
-                "stage_dist_flags._fingerprint.json",
-                "stage_dist_px._fingerprint.json",
-                "stage_dist_windows._fingerprint.json",
-                "stage_dist_bands._fingerprint.json"} <= stages
+        assert {os.path.basename(m) for m in markers} == {
+            f"stage_{st}._fingerprint.json" for st in (
+                "pass1", "thresholds", "dist_p3", "dist_flags", "dist_px")}
 
         early = os.path.join(wd, "stage_dist_p3")
         early_mtime = os.path.getmtime(os.path.join(early, "_SUCCESS"))
-        # crash simulation: the windows + bands stages never finished
-        for st in ("dist_windows", "dist_bands"):
-            os.remove(os.path.join(wd, f"stage_{st}._fingerprint.json"))
+        # crash simulation: the clump stage never finished
+        os.remove(os.path.join(wd, "stage_dist_px._fingerprint.json"))
 
         r2 = StageRunner(spark, wd, "d2")
         out2 = sorted(map(tuple, classify_distributed(
@@ -266,6 +264,6 @@ def test_distributed_classify_resumes(spark, sf_small):
         # completed early stage was NOT rewritten on resume
         assert os.path.getmtime(
             os.path.join(early, "_SUCCESS")) == early_mtime
-        # the torn-down tail stages were rebuilt
+        # only the torn-down tail stage was rebuilt
         lin = r2.lineage().filter("run_id = 'd2'").collect()
-        assert {r.stage for r in lin} == {"dist_windows", "dist_bands"}
+        assert {r.stage for r in lin} == {"dist_px"}

@@ -76,7 +76,7 @@ def test_driver_jvm_runs_c1_only_unless_long_lived(spark, tmp_path):
 
 def test_submit_script_passes_the_session_java_options(tmp_path, sf_small):
     """The wrapper passes session.py's option string and leaves every
-    Spark SQL setting to get_spark."""
+    Spark SQL setting to get_spark; it has no default input."""
     stub = tmp_path / "bin" / "spark-submit"
     stub.parent.mkdir()
     stub.write_text('#!/bin/sh\nprintf "%s\\n" "$@"\n')
@@ -93,6 +93,11 @@ def test_submit_script_passes_the_session_java_options(tmp_path, sf_small):
     assert confs == [
         f"spark.driver.defaultJavaOptions={ONE_SHOT_DRIVER_JAVA_OPTIONS}"]
     assert argv[-2:] == [str(REPO / "scripts" / "classify_job.py"), sf_small]
+    # no default input: SF_DIR is required
+    res = subprocess.run(
+        ["bash", str(REPO / "scripts" / "spark_submit_classify.sh"),
+         "local[1]"], env=env, capture_output=True, text=True, timeout=120)
+    assert res.returncode != 0 and "SF_DIR" in res.stderr
 
 
 def test_cli_counts_match_in_process_classify(spark, sf_oracle, tmp_path):
@@ -112,3 +117,16 @@ def test_cli_counts_match_in_process_classify(spark, sf_oracle, tmp_path):
         cli.kill()
     assert cli.returncode == 0, err[-2000:]
     assert json.loads(out.strip().splitlines()[-1])["class_counts"] == want
+
+
+def test_cli_rejects_a_missing_input(tmp_path):
+    """The CLI has no default input: an SF_DIR without documents.parquet
+    is a usage error naming the missing file, raised before a Spark
+    session starts."""
+    res = subprocess.run(
+        [sys.executable, str(REPO / "scripts" / "classify_job.py"),
+         str(tmp_path)],
+        cwd=tmp_path, capture_output=True, text=True, timeout=120)
+    assert res.returncode == 2
+    assert str(tmp_path / "documents.parquet") in res.stderr
+    assert "SparkContext" not in res.stderr
