@@ -21,6 +21,7 @@ from python_fmask_spark import oracle, pipeline  # noqa: E402
 from python_fmask_spark.dialect import DUCKDB, SPARK  # noqa: E402
 from python_fmask_spark.functions import angles, dedup, geo, inventory, multimodal, relational  # noqa: E402
 from python_fmask_spark.functions import curation, sampling, similarity, text as textfn  # noqa: E402
+from python_fmask_spark.operators.scene_dist import classify_distributed  # noqa: E402
 from python_fmask_spark.sources import register_views  # noqa: E402
 
 SF0001 = "/root/testdata/sf0.001"
@@ -193,16 +194,6 @@ def _fmask_interim_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
                          "text_sha256")
 
 
-def _fmask_final_class(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full classification incl. shadow chain (kernel path; the shadow
-    stages are not SQL-expressible -> rows-only driver check, bit-exact
-    vs the NumPy oracle in tests/)."""
-    register_views(spark, sf_dir)
-    out = pipeline.classify(spark)
-    return out.selectExpr("url", "cell_id", "r", "c", "fmask_class",
-                          "cloud_id", "cloud_height_du", "text_sha256")
-
-
 def _cloud_objects(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cloud object table (Eqns 22-24 aggregates: clump size, base
     temperature, relative top height; fmask/fmask.py:896-951). The
@@ -293,16 +284,85 @@ def _corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corpus_curate(spark)
 
 
-def _fmask_final_class_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Clump-parallel distributed classify (operators/scene_dist.py):
-    every stage's task grain is bounded regardless of cell size. Checked
-    against the SAME independent-replay fixture as fmask_final_class —
-    green means distributed == whole-scene == independent oracle."""
-    from python_fmask_spark.operators.scene_dist import classify_distributed
-    register_views(spark, sf_dir)
-    out = classify_distributed(spark)
-    return out.selectExpr("url", "cell_id", "r", "c", "fmask_class",
-                          "cloud_id", "cloud_height_du", "text_sha256")
+# The shadow-chain rows: full classification incl. the shadow chain,
+# one board row fmask_final_class{mode}{regime} per (mode, regime) pair
+# of _SHADOW_ROWS. The shadow stages are not SQL-expressible, so each
+# row is checked against its regime's independent-replay fixture
+# (DuckDB pass-1..3 SQL + a second, straight-line transcription of the
+# kernels; scripts/make_shadow_fixture.py): green proves mode ==
+# whole-cell == independent oracle under that regime.
+_SHADOW_COLS = ("url", "cell_id", "r", "c", "fmask_class", "cloud_id",
+                "cloud_height_du", "text_sha256")
+
+# mode -> classify entry point: the whole-cell kernel, the clump-parallel
+# distributed stages (operators/scene_dist.py), and cost-based dispatch
+# with a row threshold low enough that both paths run at sf0.01
+_MODES: dict[str, Callable[..., DataFrame]] = {
+    "": pipeline.classify,
+    "_dist": classify_distributed,
+    "_auto": lambda spark, **kw: pipeline.classify_auto(
+        spark, row_threshold=8, **kw),
+}
+
+# regime -> (classify kwargs, extra int columns {name: pass-1 column}
+# joined from the regime's pass-1 leaf, oracle fixture). A callable
+# kwarg is resolved per run, so a corrupt fixture XML fails only its
+# own rows, not queries() construction.
+#  ""        Landsat 8.
+#  _l47      Landsat 4-7: thermal, no cirrus band, 6-band null test,
+#            cloudmask3 active (fmask/config.py:33-40,123-133).
+#  _s2       Sentinel-2 no-thermal: flat 2-D clouds, Tcloudbase = 0,
+#            NULL BT thresholds (fmask/fmask.py:645-649,747-748,913-951);
+#            pre-04.00 product, zero offsets stated explicitly.
+#  _s2_cdi   + the CDI displacement test composed into pass 1
+#            (fmask/fmask.py:395-412); pcp_i carries the composed PCP.
+#  _s2_grid  + the tile XML's sun/view angle grids
+#            (sentinel2makeAnglesImage.py:95-123); the *_cdn columns
+#            carry the XML grid values into the hash.
+_S2 = {"sensor": "SENTINEL2", "s2_offsets": oracle.S2_ZERO_OFFSETS}
+_REGIMES: dict[str, tuple[dict, dict[str, str], str]] = {
+    "": ({}, {}, "shadow_oracle_final.parquet"),
+    "_l47": ({"sensor": "LANDSAT47"}, {},
+             "shadow_oracle_final_l47.parquet"),
+    "_s2": (_S2, {}, "shadow_oracle_final_s2.parquet"),
+    "_s2_cdi": ({**_S2, "s2_cdi": True}, {"pcp_i": "pcp"},
+                "shadow_oracle_final_s2_cdi.parquet"),
+    "_s2_grid": ({**_S2, "tile_meta": _s2_tile_meta},
+                 {c: c for c in ("sat_az_cdn", "sat_zen_cdn",
+                                 "sun_az_cdn", "sun_zen_cdn")},
+                 "shadow_oracle_final_s2_grid.parquet"),
+}
+
+_SHADOW_ROWS: dict[str, tuple[str, ...]] = {
+    "": ("", "_l47", "_s2", "_s2_cdi", "_s2_grid"),
+    "_dist": ("", "_s2", "_s2_cdi", "_s2_grid"),
+    "_auto": ("", "_s2"),
+}
+
+
+def _shadow_row(mode: str, regime: str
+                ) -> Callable[[SparkSession, str], DataFrame]:
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        register_views(spark, sf_dir)
+        kw, extra, _fixture = _REGIMES[regime]
+        kw = {k: v() if callable(v) else v for k, v in kw.items()}
+        out = _MODES[mode](spark, **kw)
+        if extra:
+            cols = ", ".join(f"cast({src} as int) AS {name}"
+                             for name, src in extra.items())
+            leaf = pipeline.materialize_pass1(spark, **kw)
+            out = out.join(spark.sql(f"SELECT cell_id, r, c, {cols} "
+                                     f"FROM {leaf}"), ["cell_id", "r", "c"])
+        return out.select(*_SHADOW_COLS, *extra)
+    return run
+
+
+def _shadow_oracle(regime: str) -> str:
+    _kw, extra, fixture = _REGIMES[regime]
+    return f"""
+SELECT url, cell_id, r, c, fmask_class, cloud_id, cloud_height_du,
+       {", ".join(("text_sha256", *extra))}
+FROM read_parquet('{_FIXTURES}/{fixture}')"""
 
 
 def _fmask_final_class_runner(spark: SparkSession, sf_dir: str
@@ -322,14 +382,11 @@ def _fmask_final_class_runner(spark: SparkSession, sf_dir: str
     import shutil
     import tempfile
 
-    from python_fmask_spark.operators.scene_dist import classify_distributed
     from python_fmask_spark.plans.lineage import StageRunner
 
     register_views(spark, sf_dir)
     wd = tempfile.mkdtemp(prefix="fmask_stage_")
     try:
-        cols = ("url", "cell_id", "r", "c", "fmask_class",
-                "cloud_id", "cloud_height_du", "text_sha256")
         first = classify_distributed(
             spark, runner=StageRunner(spark, wd, run_id="cold"))
         n_first = first.count()
@@ -338,7 +395,7 @@ def _fmask_final_class_runner(spark: SparkSession, sf_dir: str
         # materialize the resumed tail ONCE (checkpoint) while the
         # stage tables still exist, then the row-count assert is a
         # cheap count over the checkpointed RDD, and the workdir can go
-        out = resumed.selectExpr(*cols).localCheckpoint()
+        out = resumed.select(*_SHADOW_COLS).localCheckpoint()
         # explicit raise, not `assert`: python -O strips asserts and
         # would silently drop the resume-specific parity signal
         n_resumed = out.count()
@@ -349,31 +406,6 @@ def _fmask_final_class_runner(spark: SparkSession, sf_dir: str
     finally:
         shutil.rmtree(wd, ignore_errors=True)
     return out
-
-
-def _fmask_final_class_s2_cdi(spark: SparkSession, sf_dir: str
-                              ) -> DataFrame:
-    """FULL shadow-chain classify with the CDI displacement test
-    composed into pass 1 (setSen2displacementTest end-to-end,
-    fmask/fmask.py:395-412 + the no-thermal doFmask): the engine runs
-    the CDI kernel -> modified pass-1 leaf -> thresholds/pass2/pass3 ->
-    slim-exchange scene kernel; the oracle fixture replays the SAME
-    composition from DuckDB SQL (recursive-CTE CDI) through the
-    independent second transcription. pcp_i carries the composed
-    pass-1 PCP so the hash sees the CDI effect directly."""
-    register_views(spark, sf_dir)
-    out = pipeline.classify(spark, sensor="SENTINEL2",
-                            s2_offsets=oracle.S2_ZERO_OFFSETS,
-                            s2_cdi=True)
-    leaf = pipeline.materialize_pass1(
-        spark, sensor="SENTINEL2", s2_offsets=oracle.S2_ZERO_OFFSETS,
-        s2_cdi=True)
-    p1 = spark.sql(
-        f"SELECT cell_id, r, c, cast(pcp as int) AS pcp_i FROM {leaf}")
-    return (out.join(p1, ["cell_id", "r", "c"])
-            .selectExpr("url", "cell_id", "r", "c", "fmask_class",
-                        "cloud_id", "cloud_height_du", "text_sha256",
-                        "pcp_i"))
 
 
 def _fmask_interim_class_s2_cdi(spark: SparkSession, sf_dir: str
@@ -465,169 +497,6 @@ def _ann_ivf_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     from python_fmask_spark.functions.similarity import ann_ivf_frame
     register_views(spark, sf_dir)
     return ann_ivf_frame(spark)
-
-
-def _fmask_final_class_s2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full shadow-chain classify under the Sentinel-2 NO-THERMAL
-    regime: thermal probability terms degenerate to 1, cloudmask3 off,
-    BT thresholds NULL (-> 0/10 sweep defaults), flat 2-D clouds with
-    Tcloudbase = 0 (fmask/fmask.py:645-649,747-748,913-951). Oracle =
-    an S2-regime independent-replay fixture (second transcription,
-    scripts/make_shadow_fixture.py) — green proves the engine's shadow
-    chain under sensor dispatch, not just L8."""
-    register_views(spark, sf_dir)
-    out = pipeline.classify(spark, sensor="SENTINEL2",
-                            s2_offsets=oracle.S2_ZERO_OFFSETS)
-    return out.selectExpr("url", "cell_id", "r", "c", "fmask_class",
-                          "cloud_id", "cloud_height_du", "text_sha256")
-
-
-def _fmask_final_class_s2_grid(spark: SparkSession, sf_dir: str
-                               ) -> DataFrame:
-    """Full S2 no-thermal shadow chain with the tile XML's ANGLE GRIDS
-    wired in end-to-end (S7 + the sentinel2makeAnglesImage.py:95-123
-    grid->pixel bilinear path): pass 1 derives its per-cell sun/view
-    scalars and per-pixel *_cdn DN stack from
-    sen2meta.s2_grid_angle_parts over the parsed fixture XML instead of
-    the synthetic swathe, and the scene kernel consumes them for shadow
-    projection/matching. Oracle = an independent-replay fixture built
-    from the SAME XML; the emitted *_cdn columns (joined back from the
-    grid-angle pass-1 leaf) make the hash provably carry the XML grid
-    values."""
-    register_views(spark, sf_dir)
-    meta = _s2_tile_meta()
-    out = pipeline.classify(spark, sensor="SENTINEL2",
-                            s2_offsets=oracle.S2_ZERO_OFFSETS,
-                            tile_meta=meta)
-    view = pipeline.materialize_pass1(
-        spark, sensor="SENTINEL2", s2_offsets=oracle.S2_ZERO_OFFSETS,
-        tile_meta=meta)
-    ang = spark.sql(
-        f"""SELECT cell_id, r, c,
-              cast(sat_az_cdn as int) AS sat_az_cdn,
-              cast(sat_zen_cdn as int) AS sat_zen_cdn,
-              cast(sun_az_cdn as int) AS sun_az_cdn,
-              cast(sun_zen_cdn as int) AS sun_zen_cdn
-            FROM {view}""")
-    return (out.join(ang, ["cell_id", "r", "c"])
-            .selectExpr("url", "cell_id", "r", "c", "fmask_class",
-                        "cloud_id", "cloud_height_du", "text_sha256",
-                        "sat_az_cdn", "sat_zen_cdn", "sun_az_cdn",
-                        "sun_zen_cdn"))
-
-
-def _fmask_final_class_l47(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full shadow-chain classify under the LANDSAT 4-7 (TM/ETM+)
-    regime: thermal chain like L8 but NO cirrus band — 6-band null
-    test, cirrus_band_test false, no cirrus probability term,
-    cloudmask3 active (fmask/config.py:33-40,123-133;
-    fmask/fmask.py:290-306,747-757). Oracle = an L47-regime
-    independent-replay fixture — green proves the third reference
-    sensor family end-to-end (L8 and S2 ± CDI are the other two)."""
-    register_views(spark, sf_dir)
-    out = pipeline.classify(spark, sensor="LANDSAT47")
-    return out.selectExpr("url", "cell_id", "r", "c", "fmask_class",
-                          "cloud_id", "cloud_height_du", "text_sha256")
-
-
-def _fmask_final_class_dist_s2(spark: SparkSession, sf_dir: str
-                               ) -> DataFrame:
-    """Clump-parallel distributed classify under the NO-THERMAL regime
-    (sensor dispatch on the distributed path: flat clouds, Tcloudbase=0
-    sweeps, NULL BT thresholds). Checked against the SAME S2
-    independent-replay fixture as fmask_final_class_s2 — green proves
-    distributed == whole-cell == independent oracle without thermal."""
-    from python_fmask_spark.operators.scene_dist import classify_distributed
-    register_views(spark, sf_dir)
-    out = classify_distributed(spark, sensor="SENTINEL2",
-                               s2_offsets=oracle.S2_ZERO_OFFSETS)
-    return out.selectExpr("url", "cell_id", "r", "c", "fmask_class",
-                          "cloud_id", "cloud_height_du", "text_sha256")
-
-
-def _fmask_final_class_dist_s2_cdi(spark: SparkSession, sf_dir: str
-                                   ) -> DataFrame:
-    """Clump-parallel distributed classify with the CDI displacement
-    test composed into pass 1 (--parallaxtest on the distributed
-    path): the distributed stages consume the CDI-modified pass-1
-    leaf exactly as the whole-cell path does. Checked against the
-    SAME S2+CDI independent-replay fixture as fmask_final_class_s2_cdi
-    (pcp_i carries the composed PCP into the hash) — green proves
-    distributed == whole-cell == independent oracle under the
-    composed-CDI no-thermal regime."""
-    from python_fmask_spark.operators.scene_dist import classify_distributed
-    register_views(spark, sf_dir)
-    out = classify_distributed(spark, sensor="SENTINEL2",
-                               s2_offsets=oracle.S2_ZERO_OFFSETS,
-                               s2_cdi=True)
-    leaf = pipeline.materialize_pass1(
-        spark, sensor="SENTINEL2", s2_offsets=oracle.S2_ZERO_OFFSETS,
-        s2_cdi=True)
-    p1 = spark.sql(
-        f"SELECT cell_id, r, c, cast(pcp as int) AS pcp_i FROM {leaf}")
-    return (out.join(p1, ["cell_id", "r", "c"])
-            .selectExpr("url", "cell_id", "r", "c", "fmask_class",
-                        "cloud_id", "cloud_height_du", "text_sha256",
-                        "pcp_i"))
-
-
-def _fmask_final_class_dist_s2_grid(spark: SparkSession, sf_dir: str
-                                    ) -> DataFrame:
-    """Clump-parallel distributed classify consuming the tile-XML
-    angle grids (tile_meta threading on the distributed path): the
-    distributed stages read the SAME grid-angle pass-1 leaf as the
-    whole-cell fmask_final_class_s2_grid row and are checked against
-    the SAME fixture, *_cdn columns included — green proves the XML
-    grid values survive the distributed shadow chain unchanged."""
-    from python_fmask_spark.operators.scene_dist import classify_distributed
-    register_views(spark, sf_dir)
-    meta = _s2_tile_meta()
-    out = classify_distributed(spark, sensor="SENTINEL2",
-                               s2_offsets=oracle.S2_ZERO_OFFSETS,
-                               tile_meta=meta)
-    view = pipeline.materialize_pass1(
-        spark, sensor="SENTINEL2", s2_offsets=oracle.S2_ZERO_OFFSETS,
-        tile_meta=meta)
-    ang = spark.sql(
-        f"""SELECT cell_id, r, c,
-              cast(sat_az_cdn as int) AS sat_az_cdn,
-              cast(sat_zen_cdn as int) AS sat_zen_cdn,
-              cast(sun_az_cdn as int) AS sun_az_cdn,
-              cast(sun_zen_cdn as int) AS sun_zen_cdn
-            FROM {view}""")
-    return (out.join(ang, ["cell_id", "r", "c"])
-            .selectExpr("url", "cell_id", "r", "c", "fmask_class",
-                        "cloud_id", "cloud_height_du", "text_sha256",
-                        "sat_az_cdn", "sat_zen_cdn", "sun_az_cdn",
-                        "sun_zen_cdn"))
-
-
-def _fmask_final_class_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cost-based dispatch (pipeline.classify_auto): cells below the
-    row threshold run the whole-cell kernel, cells at/above it run the
-    clump-parallel distributed path. The threshold is set low enough
-    that BOTH paths execute at sf0.01 (mixed dispatch), and the result
-    is checked against the SAME independent-replay fixture — green
-    proves auto == whole-scene == distributed == independent oracle."""
-    register_views(spark, sf_dir)
-    out = pipeline.classify_auto(spark, row_threshold=8)
-    return out.selectExpr("url", "cell_id", "r", "c", "fmask_class",
-                          "cloud_id", "cloud_height_du", "text_sha256")
-
-
-def _fmask_final_class_auto_s2(spark: SparkSession, sf_dir: str
-                               ) -> DataFrame:
-    """Cost-based dispatch under the NO-THERMAL regime: mixed
-    whole-cell + distributed execution (row_threshold=8 forces both
-    branches at sf0.01) with sensor=SENTINEL2, checked against the
-    SAME S2 independent-replay fixture as fmask_final_class_s2 —
-    closes the auto x sensor cross product."""
-    register_views(spark, sf_dir)
-    out = pipeline.classify_auto(spark, row_threshold=8,
-                                 sensor="SENTINEL2",
-                                 s2_offsets=oracle.S2_ZERO_OFFSETS)
-    return out.selectExpr("url", "cell_id", "r", "c", "fmask_class",
-                          "cloud_id", "cloud_height_du", "text_sha256")
 
 
 def _mask_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -969,24 +838,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out["dedup_clusters"] = _dedup_clusters
     out["corpus_curate"] = _corpus_curate
     # kernel-path operators (no SQL oracle -> rows-only driver check)
-    out["fmask_final_class"] = _fmask_final_class
     out["s2_cdi_pcp"] = _s2_cdi
     out["multimodal_features"] = _multimodal_features
     out["potential_shadow_dist"] = _potential_shadow_dist
     out["cloud_objects"] = _cloud_objects
     # round-3 surfaces: distributed classify, sink round-trip, streaming
-    out["fmask_final_class_dist"] = _fmask_final_class_dist
     out["fmask_final_class_runner"] = _fmask_final_class_runner
-    out["fmask_final_class_auto"] = _fmask_final_class_auto
-    out["fmask_final_class_s2"] = _fmask_final_class_s2
-    out["fmask_final_class_s2_grid"] = _fmask_final_class_s2_grid
-    out["fmask_final_class_l47"] = _fmask_final_class_l47
     out["fmask_interim_class_s2_cdi"] = _fmask_interim_class_s2_cdi
-    out["fmask_final_class_s2_cdi"] = _fmask_final_class_s2_cdi
-    out["fmask_final_class_dist_s2"] = _fmask_final_class_dist_s2
-    out["fmask_final_class_dist_s2_cdi"] = _fmask_final_class_dist_s2_cdi
-    out["fmask_final_class_auto_s2"] = _fmask_final_class_auto_s2
-    out["fmask_final_class_dist_s2_grid"] = _fmask_final_class_dist_s2_grid
+    for mode, regimes in _SHADOW_ROWS.items():
+        for regime in regimes:
+            out[f"fmask_final_class{mode}{regime}"] = _shadow_row(mode,
+                                                                  regime)
     out["mask_sink_roundtrip"] = _mask_sink_roundtrip
     out["stream_pass1_counts"] = _stream_pass1
     out["stream_dedup_first"] = _stream_dedup_first
@@ -1007,63 +869,24 @@ def oracle_sql() -> dict[str, str]:
     out["corpus_curate"] = curation.q_corpus_curate_oracle()
     out["s2_cdi_pcp"] = oracle.q_s2_cdi(
         DUCKDB, s2_offsets=oracle.S2_ZERO_OFFSETS)
-    # Shadow-chain oracles: frozen parquet fixtures computed by an
-    # independent replay (DuckDB-dialect pass-1..3 SQL + whole-scene
-    # NumPy kernels; scripts/make_shadow_fixture.py). The Spark side
-    # runs the DISTRIBUTED pipeline, so the compare proves
-    # distributed == whole-scene at sf0.01 (valid at that sf only).
-    out["fmask_final_class"] = f"""
-SELECT url, cell_id, r, c, fmask_class, cloud_id, cloud_height_du,
-       text_sha256
-FROM read_parquet('{_FIXTURES}/shadow_oracle_final.parquet')"""
+    # Shadow-chain oracles: each regime's frozen independent-replay
+    # fixture, shared by every mode of that regime (_SHADOW_ROWS) and,
+    # for L8, by the staged + resumed runner row (valid at sf0.01 only)
+    for mode, regimes in _SHADOW_ROWS.items():
+        for regime in regimes:
+            out[f"fmask_final_class{mode}{regime}"] = _shadow_oracle(regime)
+    out["fmask_final_class_runner"] = out["fmask_final_class"]
     out["cloud_objects"] = f"""
 SELECT cell_id, cloud_id, count(*) AS n_pixels,
   cast(round(max(cloud_base_temp_c) * 1000) as bigint) AS base_temp_milli_c,
   max(cloud_height_du) AS max_height_du,
   min(r) AS min_r, min(c) AS min_c
-FROM read_parquet('{_FIXTURES}/shadow_oracle_final.parquet')
+FROM read_parquet('{_FIXTURES}/{_REGIMES[""][2]}')
 WHERE cloud_id > 0
 GROUP BY cell_id, cloud_id"""
     out["potential_shadow_dist"] = f"""
 SELECT url, cell_id, r, c, nir, filled, potential_shadow
 FROM read_parquet('{_FIXTURES}/shadow_oracle_fill.parquet')"""
-    # distributed classify: SAME independent-replay fixture as the
-    # whole-scene path — green proves distributed == whole-scene
-    out["fmask_final_class_dist"] = out["fmask_final_class"]
-    # StageRunner-staged + resumed distributed classify, same fixture
-    out["fmask_final_class_runner"] = out["fmask_final_class"]
-    # cost-based dispatch: mixed whole-cell + distributed, same fixture
-    out["fmask_final_class_auto"] = out["fmask_final_class"]
-    # Sentinel-2 no-thermal regime, own independent-replay fixture
-    out["fmask_final_class_s2"] = f"""
-SELECT url, cell_id, r, c, fmask_class, cloud_id, cloud_height_du,
-       text_sha256
-FROM read_parquet('{_FIXTURES}/shadow_oracle_final_s2.parquet')"""
-    # distributed no-thermal: same S2 fixture as the whole-cell path
-    out["fmask_final_class_dist_s2"] = out["fmask_final_class_s2"]
-    # auto dispatch, no-thermal: same S2 fixture
-    out["fmask_final_class_auto_s2"] = out["fmask_final_class_s2"]
-    # S2 regime with XML-grid angles wired end-to-end; the *_cdn
-    # columns carry the XML grid values into the hash
-    out["fmask_final_class_s2_grid"] = f"""
-SELECT url, cell_id, r, c, fmask_class, cloud_id, cloud_height_du,
-       text_sha256, sat_az_cdn, sat_zen_cdn, sun_az_cdn, sun_zen_cdn
-FROM read_parquet('{_FIXTURES}/shadow_oracle_final_s2_grid.parquet')"""
-    # distributed + XML grid angles: same fixture as the whole-cell row
-    out["fmask_final_class_dist_s2_grid"] = out["fmask_final_class_s2_grid"]
-    # Landsat 4-7 regime (no cirrus, 6-band null, cloudmask3 active),
-    # own independent-replay fixture
-    out["fmask_final_class_l47"] = f"""
-SELECT url, cell_id, r, c, fmask_class, cloud_id, cloud_height_du,
-       text_sha256
-FROM read_parquet('{_FIXTURES}/shadow_oracle_final_l47.parquet')"""
-    # S2 + CDI composed end-to-end (pcp_i = the composed pass-1 PCP)
-    out["fmask_final_class_s2_cdi"] = f"""
-SELECT url, cell_id, r, c, fmask_class, cloud_id, cloud_height_du,
-       text_sha256, pcp_i
-FROM read_parquet('{_FIXTURES}/shadow_oracle_final_s2_cdi.parquet')"""
-    # distributed + CDI composed: same fixture as the whole-cell row
-    out["fmask_final_class_dist_s2_cdi"] = out["fmask_final_class_s2_cdi"]
     out["mask_sink_roundtrip"] = _mask_sink_oracle()
     out["stream_pass1_counts"] = _stream_pass1_oracle()
     out["stream_dedup_first"] = _stream_dedup_first_oracle()

@@ -64,14 +64,13 @@ def documents_wide_sql(d: str, table: str = "documents") -> str:
 # ---------------------------------------------------------------------------
 
 
-def geo_exprs(d: str, cell_deg: float | None = None) -> dict[str, str]:
-    """domain -> (lat, lon) -> grid cell. Deterministic, SQL-only.
-    ``cell_deg`` overrides the grid resolution (production tuning knob;
-    finer grids mean more, smaller cells)."""
+def geo_exprs(d: str) -> dict[str, str]:
+    """domain -> (lat, lon) -> grid cell of C.CELL_DEG degrees.
+    Deterministic, SQL-only."""
     domain = "split_part(url, '/', 3)"
     lat = f"({_dbl(f'({md5_slice_int(domain, 1, 8, d)} % 180000)')} / 1000.0 - 90.0)"
     lon = f"({_dbl(f'({md5_slice_int(domain, 9, 8, d)} % 360000)')} / 1000.0 - 180.0)"
-    step = cell_deg if cell_deg is not None else C.CELL_DEG
+    step = C.CELL_DEG
     cell_x = f"cast(floor((lon + 180.0) / {step}) as int)"
     cell_y = f"cast(floor((lat + 90.0) / {step}) as int)"
     n_x = int(round(360.0 / step))
@@ -355,7 +354,6 @@ def round_half_away(expr: str, d: str) -> str:
 
 
 def features_sql(d: str, docs_sql: str, layout: bool = True,
-                 cell_deg: float | None = None,
                  angles: bool = True,
                  tile_meta=None) -> str:
     """Full doc_features derivation as a CTE chain over documents_wide.
@@ -382,7 +380,7 @@ def features_sql(d: str, docs_sql: str, layout: bool = True,
     sentinel2makeAnglesImage.py:95-123 path). Requires ``layout`` and
     ``angles``; output schema is identical to the synthetic path so
     every pass-1 tail consumer works unchanged."""
-    geo = geo_exprs(d, cell_deg=cell_deg)
+    geo = geo_exprs(d)
     ang = angle_exprs(d)
     W = C.SCENE_WIDTH
 

@@ -133,15 +133,13 @@ def region_grow(seed: np.ndarray, grow_mask: np.ndarray) -> np.ndarray:
         cur = nxt
 
 
-def calc_cdi(ref_nir: np.ndarray, ref_nir8a: np.ndarray,
-             ref_nir7: np.ndarray, win: int = 7) -> np.ndarray:
+def calc_cdi(ratio_8a8: np.ndarray, ratio_8a7: np.ndarray) -> np.ndarray:
     """Cloud Displacement Index (Frantz 2018; calcCDI,
-    fmask/fmask.py:1412-1429): band ratios -> focal variances ->
-    normalized difference with divide-by-zero guard."""
-    ratio_8a8 = ref_nir / ref_nir8a
-    ratio_8a7 = ref_nir7 / ref_nir8a
-    v8a8 = focal_variance(ratio_8a8, win)
-    v8a7 = focal_variance(ratio_8a7, win)
+    fmask/fmask.py:1412-1429) from the band ratios B8/B8A and B7/B8A:
+    7x7 focal variances -> normalized difference with divide-by-zero
+    guard."""
+    v8a8 = focal_variance(ratio_8a8, 7)
+    v8a7 = focal_variance(ratio_8a7, 7)
     cdi = np.zeros(v8a7.shape, dtype=np.float32)
     div_ok = (v8a7 + v8a8) != 0
     cdi[div_ok] = ((v8a7[div_ok] - v8a8[div_ok])

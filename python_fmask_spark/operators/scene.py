@@ -39,8 +39,9 @@ class FmaskParams:
     green_snow_thresh: float = C.EQN20_GREEN_SNOW_THRESH
 
     def snow_kwargs(self) -> dict:
-        """The Eqn-20 knobs as pipeline kwargs — None when at defaults
-        so the session-cached default pass-1 leaf is shared."""
+        """The Eqn-20 knobs as materialize_pass1/_thresholds kwargs, None
+        at the default. Only perfbench calls it; the engine reads
+        pipeline.Scene.params."""
         return {
             "nir_snow_thresh": (
                 None if self.nir_snow_thresh == C.EQN20_NIR_SNOW_THRESH

@@ -225,15 +225,13 @@ def classify_distributed(spark: SparkSession, table: str = "documents",
     (fmask/fmask.py:206-216)."""
     from .. import pipeline
 
-    params = params or FmaskParams()
     return _classify_distributed(
         spark, pipeline.Scene(table, sensor, s2_offsets, s2_cdi, tile_meta,
-                              **params.snow_kwargs()),
-        params, runner=runner)
+                              params or FmaskParams()),
+        runner=runner)
 
 
 def _classify_distributed(spark: SparkSession, scene: Scene,
-                          params: FmaskParams,
                           cells: DataFrame | None = None,
                           runner=None) -> DataFrame:
     """``cells`` (a DataFrame of cell_id, no runner) restricts the run
@@ -242,16 +240,16 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
 
     ensure_package_on_executors(spark)
     has_thermal = scene.sensor != "SENTINEL2"
-    eqn17 = params.eqn17_cloud_prob_thresh
+    params = scene.params
     # what the dist_* stages depend on beyond the registered input: the
     # FmaskParams fields and the rendered SQL of the per-cell leaf and
     # the pixel exchange (the scene key rides in their view names, every
     # pass's formulas in the text) — a change re-runs the stages
     logic = (f"distv5||{params!r}||{pipeline.thresholds_sql_text(scene)}"
-             f"||{pipeline.px_exchange_sql(scene, eqn17)}")
+             f"||{pipeline.px_exchange_sql(scene)}")
 
     px_in, dims, ident = pipeline.scene_exchange(
-        spark, scene, eqn17, runner=runner, cells=cells)
+        spark, scene, runner=runner, cells=cells)
     p3 = barrier(spark, runner, "dist_p3", logic, lambda: px_in.selectExpr(
         "cell_id", "r", "c", "nir", "bt", *FLAGS_SQL,
         "sat_az_cdn", "sat_zen_cdn"))

@@ -36,31 +36,30 @@ _CELL_CONSTS = ("sun_az", "sun_zen", "sat_az", "sat_zen", "cell_rows")
 
 @dataclass(frozen=True)
 class Scene:
-    """One scene's identity: the input table, the sensor dispatch, the
-    Sentinel-2 offsets and CDI composition, the tile-XML angle grids
-    and the Eqn-20 snow floors — the engine's counterpart of the
-    reference's per-run config, which doFmask carries through every
+    """One classify run's configuration: the input table, the sensor
+    dispatch, the Sentinel-2 offsets and CDI composition, the tile-XML
+    angle grids and the run's FmaskParams — the engine's counterpart of
+    the reference's per-run config, which doFmask carries through every
     pass (fmask/fmask.py:96-221). The keyword entry points (classify,
     classify_auto, classify_distributed, interim_class_kernel,
-    materialize_pass1, materialize_thresholds) each build one and pass
-    it below them."""
+    materialize_pass1, materialize_thresholds, s2_cdi_pcp) each build
+    one and pass it below them."""
 
     table: str = "documents"
     sensor: str = "LANDSAT8"
     s2_offsets: dict[str, int] | None = None
     s2_cdi: bool = False
     tile_meta: object = None  # sen2meta.Sen2TileMeta
-    nir_snow_thresh: float | None = None
-    green_snow_thresh: float | None = None
+    params: FmaskParams = FmaskParams()
 
     def key(self) -> str:
         """Short sha256 naming this scene's pass-1 leaf: the session
         cache key, the leaf view names and the logic part of every
         stage fingerprint. The rendered pass-1 SQL already holds the
-        sensor dispatch, the offsets, the snow floors (None and the
-        default float render alike) and the inlined angle-grid VALUES,
-        so two granules never share a leaf; the CDI flag is the one
-        field applied after that SQL."""
+        sensor dispatch, the offsets, the Eqn-20 snow floors and the
+        inlined angle-grid VALUES, so two granules never share a leaf;
+        the CDI flag is the one field applied after that SQL. The other
+        FmaskParams fields act after pass 1 and stay out of the key."""
         ident = f"{self.table}|cdi={self.s2_cdi}|{pass1_sql_text(self)}"
         return hashlib.sha256(ident.encode()).hexdigest()[:16]
 
@@ -76,8 +75,8 @@ def pass1_sql_text(scene: Scene = Scene()) -> str:
             tile_meta=scene.tile_meta),
         derive.pass1_sql(SPARK, sensor=scene.sensor,
                          s2_offsets=scene.s2_offsets,
-                         nir_snow_thresh=scene.nir_snow_thresh,
-                         green_snow_thresh=scene.green_snow_thresh),
+                         nir_snow_thresh=scene.params.nir_snow_thresh,
+                         green_snow_thresh=scene.params.green_snow_thresh),
     ])
     return f"WITH {p1_ctes} SELECT * FROM pass1"
 
@@ -128,9 +127,15 @@ def materialize_pass1(spark: SparkSession, table: str = "documents",
 
     classify_distributed(runner=...) registers the same view over its
     StageRunner stage ``pass1``, so downstream plans are identical."""
-    return _pass1_leaf(spark, Scene(table, sensor, s2_offsets, s2_cdi,
-                                    tile_meta, nir_snow_thresh,
-                                    green_snow_thresh))
+    return _pass1_leaf(spark, Scene(
+        table, sensor, s2_offsets, s2_cdi, tile_meta,
+        _snow_params(nir_snow_thresh, green_snow_thresh)))
+
+
+def _snow_params(nir: float | None, green: float | None) -> FmaskParams:
+    """FmaskParams with these Eqn-20 floors, None meaning the default."""
+    floors = {"nir_snow_thresh": nir, "green_snow_thresh": green}
+    return FmaskParams(**{k: v for k, v in floors.items() if v is not None})
 
 
 def _leaf(spark: SparkSession, view: str, build, runner, stage: str,
@@ -176,7 +181,7 @@ def _cdi_pass1(spark: SparkSession, scene: Scene) -> DataFrame:
         raise ValueError("s2_cdi requires sensor='SENTINEL2' "
                          "(fmask/config.py:388-394)")
     raw_view = _pass1_leaf(spark, replace(scene, s2_cdi=False))
-    kout = _cdi_frame(spark, raw_view, scene.s2_offsets).select(
+    kout = _cdi_frame(spark, scene).select(
         "cell_id", "r", "c",
         F.expr("cast(pcp_final as boolean) AS _pcp_cdi"))
     return (spark.table(raw_view)
@@ -244,9 +249,9 @@ def materialize_thresholds(spark: SparkSession, table: str = "documents",
     per-cell angle scalars and cell_rows. Every tail consumer
     (pass2/pass3/dims) then references a leaf instead of re-aggregating
     pass 1."""
-    return _thresholds_leaf(spark, Scene(table, sensor, s2_offsets, s2_cdi,
-                                         tile_meta, nir_snow_thresh,
-                                         green_snow_thresh))
+    return _thresholds_leaf(spark, Scene(
+        table, sensor, s2_offsets, s2_cdi, tile_meta,
+        _snow_params(nir_snow_thresh, green_snow_thresh)))
 
 
 def thresholds_sql_text(scene: Scene) -> str:
@@ -292,10 +297,10 @@ def interim_class_kernel(spark: SparkSession, table: str = "documents",
     from .operators import kernels
     from .operators.scene import FLAGS_SQL
 
-    params = params or FmaskParams()
-    scene = Scene(table, sensor, s2_offsets, s2_cdi, **params.snow_kwargs())
-    px, _dims, ident = scene_exchange(spark, scene,
-                                      params.eqn17_cloud_prob_thresh)
+    scene = Scene(table, sensor, s2_offsets, s2_cdi,
+                  params=params or FmaskParams())
+    params = scene.params
+    px, _dims, ident = scene_exchange(spark, scene)
     # persist: with_halo explodes its input — without a materialization
     # point Spark recomputes the whole pass-1..3 derivation per consumer.
     # (r6 A/B KEPT this: dropping the checkpoint looked like "one fewer
@@ -348,13 +353,14 @@ def _cdi_src_select(offs: dict[str, int]) -> str:
   cast(cast({ref7} / {ref8a} as float) as double) AS r87"""
 
 
-def _cdi_frame(spark: SparkSession, view: str,
-               s2_offsets: dict[str, int] | None) -> DataFrame:
-    """The per-cell CDI kernel over the Sentinel-2 pass-1 leaf ``view``:
-    (url, cell_id, r, c, cdi_milli, pcp_cdi, pcp_final)."""
+def _cdi_frame(spark: SparkSession, scene: Scene) -> DataFrame:
+    """The per-cell CDI kernel over ``scene``'s raw (pre-CDI)
+    Sentinel-2 pass-1 leaf: (url, cell_id, r, c, cdi_milli, pcp_cdi,
+    pcp_final)."""
     from .sen2meta import require_s2_offsets
 
-    offs = require_s2_offsets(s2_offsets)
+    offs = require_s2_offsets(scene.s2_offsets)
+    view = _pass1_leaf(spark, replace(scene, s2_cdi=False))
     ensure_package_on_executors(spark)
     return (spark.sql(f"SELECT {_cdi_src_select(offs)} FROM {view}")
             .groupBy("cell_id")
@@ -363,10 +369,10 @@ def _cdi_frame(spark: SparkSession, view: str,
 
 def _cdi_kernel(pdf):
     """One cell's CDI chain (calcCDI, fmask/fmask.py:1412-1429 +
-    application :398-406): 7x7 focal variances of the float32 band
-    ratios, CDI with zero-denominator guard, confident selection
-    eroded then region-grown to fixpoint, PCP restricted to the grown
-    selection before the cirrus/saturation OR."""
+    application :398-406): kernels.calc_cdi over the float32-rounded
+    band ratios, confident selection eroded then region-grown to
+    fixpoint, PCP restricted to the grown selection before the
+    cirrus/saturation OR."""
     import numpy as np
     import pandas as pd
 
@@ -383,19 +389,13 @@ def _cdi_kernel(pdf):
         a[rr, cc] = pdf[col].to_numpy().astype(dtype)
         return a
 
-    r88 = rast("r88", 0.0, np.float64)
-    r87 = rast("r87", 0.0, np.float64)
     pcp6 = rast("pcp6", False, bool)
     null = rast("nullmask", True, bool)
     cirrus = rast("cirrus_band_test", False, bool)
     sat = rast("sat_and_bright", False, bool)
 
-    v88 = kernels.focal_variance(r88, 7)
-    v87 = kernels.focal_variance(r87, 7)
-    cdi = np.zeros((H, W), dtype=np.float32)
-    ok = (v87 + v88) != 0
-    cdi[ok] = (v87[ok] - v88[ok]) / (v87[ok] + v88[ok])
-
+    cdi = kernels.calc_cdi(rast("r88", 0.0, np.float64),
+                           rast("r87", 0.0, np.float64))
     pcp_cdi = kernels.cdi_pcp_filter(pcp6, cdi)
     pcp_final = ~null & (pcp_cdi | cirrus | sat)
     c64 = cdi.astype(np.float64)
@@ -432,12 +432,10 @@ def s2_cdi_pcp(spark: SparkSession, table: str = "documents",
     SQL form incl. a RECURSIVE region-grow CTE. A missing ``s2_offsets``
     is an error (fmask/fmask.py:137-149); pre-04.00 products pass
     oracle.S2_ZERO_OFFSETS explicitly."""
-    view = _pass1_leaf(spark, Scene(table, "SENTINEL2", s2_offsets))
-    return _cdi_frame(spark, view, s2_offsets)
+    return _cdi_frame(spark, Scene(table, "SENTINEL2", s2_offsets))
 
 
-def px_exchange_sql(scene: Scene,
-                    eqn17_cloud_prob_thresh: float | None = None) -> str:
+def px_exchange_sql(scene: Scene) -> str:
     """The rendered SQL of ``scene``'s slim pixel frame: pass 2/3 over
     the two leaves, projected to operators.scene.PX_EXCHANGE_SQL. The
     distributed path's stage fingerprint hashes this text."""
@@ -447,13 +445,12 @@ def px_exchange_sql(scene: Scene,
     return tail_sql_from_pass1(
         view, thr, "pass3", f"SELECT {PX_EXCHANGE_SQL} FROM pass3",
         sensor=scene.sensor,
-        eqn17_cloud_prob_thresh=eqn17_cloud_prob_thresh,
+        eqn17_cloud_prob_thresh=scene.params.eqn17_cloud_prob_thresh,
         pass1_cols=("r", "c", "nir", "snow", "sat_az_cdn", "sat_zen_cdn"))
 
 
-def scene_exchange(spark: SparkSession, scene: Scene,
-                   eqn17_cloud_prob_thresh: float | None = None,
-                   runner=None, cells: DataFrame | None = None
+def scene_exchange(spark: SparkSession, scene: Scene, runner=None,
+                   cells: DataFrame | None = None
                    ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """What every classify path reads: (px, dims, ident).
 
@@ -470,7 +467,7 @@ def scene_exchange(spark: SparkSession, scene: Scene,
 
     view = _pass1_leaf(spark, scene, runner)
     thr = _thresholds_leaf(spark, scene, runner)
-    px = spark.sql(px_exchange_sql(scene, eqn17_cloud_prob_thresh))
+    px = spark.sql(px_exchange_sql(scene))
     dims = spark.sql(
         f"""SELECT cell_id, cast(tlow as double) AS g_tlow,
               cast(thigh as double) AS g_thigh, b4_17 AS g_b4_17,
@@ -503,24 +500,22 @@ def classify(spark: SparkSession, table: str = "documents",
     40.96M rows with the full-width row. The identity frame reads the
     pass-1 leaf, so the threshold/pass2/pass3 tail never re-derives
     text."""
-    params = params or FmaskParams()
     return _classify(spark, Scene(table, sensor, s2_offsets, s2_cdi,
-                                  tile_meta, **params.snow_kwargs()),
-                     params)
+                                  tile_meta, params or FmaskParams()))
 
 
-def _classify(spark: SparkSession, scene: Scene, params: FmaskParams,
+def _classify(spark: SparkSession, scene: Scene,
               cells: DataFrame | None = None) -> DataFrame:
     from .operators.scene import SCENE_OUT_SCHEMA_SLIM, scene_cogroup_kernel
 
     ensure_package_on_executors(spark)
-    px, dims, ident = scene_exchange(
-        spark, scene, params.eqn17_cloud_prob_thresh, cells=cells)
+    px, dims, ident = scene_exchange(spark, scene, cells=cells)
     out = (px.groupBy("cell_id")
            .cogroup(dims.groupBy("cell_id"))
            .applyInPandas(
                scene_cogroup_kernel(
-                   params, has_thermal=(scene.sensor != "SENTINEL2")),
+                   scene.params,
+                   has_thermal=(scene.sensor != "SENTINEL2")),
                schema=SCENE_OUT_SCHEMA_SLIM))
     return (out.join(ident, ["cell_id", "r", "c"])
             .select("url", "cell_id", "r", "c", "fmask_class", "cloud_id",
@@ -561,16 +556,15 @@ def classify_auto(spark: SparkSession, table: str = "documents",
 
     from .operators.scene_dist import _classify_distributed
 
-    params = params or FmaskParams()
     scene = Scene(table, sensor, s2_offsets, s2_cdi, tile_meta,
-                  **params.snow_kwargs())
+                  params or FmaskParams())
     counts = (spark.table(_pass1_leaf(spark, scene)).groupBy("cell_id")
               .agg((F.count("*") >= row_threshold).alias("big"))
               .localCheckpoint())
     big = counts.filter("big").select("cell_id")
     if big.isEmpty():
-        return _classify(spark, scene, params)
-    small_out = _classify(spark, scene, params,
+        return _classify(spark, scene)
+    small_out = _classify(spark, scene,
                           cells=counts.filter("NOT big").select("cell_id"))
-    big_out = _classify_distributed(spark, scene, params, cells=big)
+    big_out = _classify_distributed(spark, scene, cells=big)
     return small_out.unionByName(big_out.select(*small_out.columns))

@@ -27,11 +27,14 @@ from __future__ import annotations
 
 import os
 import tempfile
+import weakref
 import zipfile
 
 from pyspark.sql import SparkSession
 
-_PYFILES_SENT: set[int] = set()
+# sessions that have the package zip: the objects, not id(spark), whose
+# integer a new session can reuse after the old one is collected
+_PYFILES_SENT: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 
 # HotSpot flags for a driver JVM that runs one job and exits (module
 # docstring). spark.driver.defaultJavaOptions is prepended to any
@@ -46,8 +49,7 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
     pattern). Required for pandas-UDF kernels when the driver process was
     not started inside the repo; no-op if already shipped or importable
     via a shared filesystem."""
-    key = id(spark)
-    if key in _PYFILES_SENT:
+    if spark in _PYFILES_SENT:
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     zpath = os.path.join(tempfile.gettempdir(),
@@ -61,7 +63,7 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
                         rel = os.path.relpath(full, os.path.dirname(pkg_dir))
                         z.write(full, rel)
     spark.sparkContext.addPyFile(zpath)
-    _PYFILES_SENT.add(key)
+    _PYFILES_SENT.add(spark)
 
 
 def get_spark(

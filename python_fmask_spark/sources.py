@@ -40,7 +40,7 @@ def _file_identity(path: str) -> str:
 
 
 def _spread_small_scan(spark: SparkSession, df: DataFrame,
-                       path: str | None = None) -> DataFrame:
+                       path: str) -> DataFrame:
     """Scale-adaptive input parallelism (guide §2.5 input skew / §6).
 
     A small input (one parquet file with one row group) yields ONE scan
@@ -55,33 +55,27 @@ def _spread_small_scan(spark: SparkSession, df: DataFrame,
     more splits than cores) and the scan is returned untouched — no
     shuffle is ever added to a big input."""
     target = spark.sparkContext.defaultParallelism
-    key = None
-    if path is not None:
-        # fold the split-relevant reader conf into the key: the split
-        # count depends on maxPartitionBytes/openCost, so a second
-        # session in this process with different settings must not
-        # reuse the first session's measurement
-        def _cget(c: str) -> str:
-            try:
-                return spark.conf.get(c)
-            except Exception:
-                return "?"
-        conf = "|".join(_cget(c)
-                        for c in ("spark.sql.files.maxPartitionBytes",
-                                  "spark.sql.files.openCostInBytes"))
-        key = (path, _file_identity(path), conf)
-        n = _SPLITS_CACHE.get(key, -1)
-        if n >= 0:
-            return df.repartition(target) if 0 < n < target else df
-    try:
-        n = df.rdd.getNumPartitions()
-    except Exception:
-        return df
-    if key is not None:
+
+    # fold the split-relevant reader conf into the key: the split count
+    # depends on maxPartitionBytes/openCost, so a second session in this
+    # process with different settings must not reuse the first
+    # session's measurement
+    def _cget(c: str) -> str:
+        try:
+            return spark.conf.get(c)
+        except Exception:
+            return "?"
+    conf = "|".join(_cget(c) for c in ("spark.sql.files.maxPartitionBytes",
+                                       "spark.sql.files.openCostInBytes"))
+    key = (path, _file_identity(path), conf)
+    n = _SPLITS_CACHE.get(key, -1)
+    if n < 0:
+        try:
+            n = df.rdd.getNumPartitions()
+        except Exception:
+            return df
         _SPLITS_CACHE[key] = n
-    if 0 < n < target:
-        return df.repartition(target)
-    return df
+    return df.repartition(target) if 0 < n < target else df
 
 
 # Tables whose downstream derivations are compute-heavy per row (tens
@@ -149,26 +143,11 @@ def register_views(spark: SparkSession, sf_dir: str,
             load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def load_documents_wide(spark: SparkSession, sf_dir: str,
-                        replicate: int = 1) -> DataFrame:
+def load_documents_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The input_hint-shaped documents table
     (url, warc_ts, html, text, lang), derived deterministically from the
-    driver's documents parquet.
-
-    ``replicate`` > 1 deterministically expands the table for bench runs:
-    each copy gets a distinct domain suffix (spreading cells) and url.
-    """
+    driver's documents parquet."""
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _note_input_change(spark, f"{sf_dir}!rep{replicate}")
-    if replicate == 1:
-        return spark.sql(documents_wide_sql(SPARK, "documents"))
-    rep = spark.sql(
-        f"""SELECT concat('https://', source, '-k', k, '.example/p/',
-                  cast(doc_id as string)) AS url,
-           timestamp '2024-01-01 00:00:00'
-             + make_interval(0, 0, 0, 0, 0, 0, doc_id) AS warc_ts,
-           encode(concat('<html>', text, '</html>'), 'UTF-8') AS html,
-           text, lang
-        FROM documents
-        LATERAL VIEW explode(sequence(0, {replicate - 1})) t AS k""")
-    return rep
+    # "!rep1": one copy of the input, the identity this view registers
+    _note_input_change(spark, f"{sf_dir}!rep1")
+    return spark.sql(documents_wide_sql(SPARK, "documents"))

@@ -10,8 +10,8 @@ groupBy, so the kernel shuffle is one pass and needs no self-join.
 ``tiled_neighborhood`` is the one halo-kernel helper: it runs any
 composition of such kernels over that single shuffle.
 
-Scale notes: halo duplication is O(radius/TILE_SIZE) overhead (<7% for
-radius 2, tiles 32). The (cell_id, tile) grouping key is the skew
+Scale notes: halo duplication is 2*radius/TILE_SIZE overhead (about 3%
+for radius 2 at TILE_SIZE 128). The (cell_id, tile) grouping key is the skew
 answer: a mega-cell fans out to H/TILE_SIZE independent tasks.
 """
 

@@ -60,7 +60,7 @@ def test_cdi_uniform_is_zero_and_filter_passthrough():
     nir = np.full((16, 16), 0.5)
     nir8a = np.full((16, 16), 0.25)
     nir7 = np.full((16, 16), 1.0)
-    cdi = kernels.calc_cdi(nir, nir8a, nir7)
+    cdi = kernels.calc_cdi(nir / nir8a, nir7 / nir8a)
     assert np.allclose(cdi, 0.0)  # both variances 0 -> guard path
     pcp = np.zeros((16, 16), dtype=bool)
     pcp[4:8, 4:8] = True

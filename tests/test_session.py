@@ -130,3 +130,32 @@ def test_cli_rejects_a_missing_input(tmp_path):
     assert res.returncode == 2
     assert str(tmp_path / "documents.parquet") in res.stderr
     assert "SparkContext" not in res.stderr
+
+
+def test_package_ships_to_each_new_session():
+    """ensure_package_on_executors sends the package zip once per
+    session object. A session made after an earlier one was collected
+    must still get it, also when it reuses the collected one's id()."""
+    import gc
+
+    from python_fmask_spark.session import ensure_package_on_executors
+
+    class _Context:
+        def __init__(self):
+            self.sent: list[str] = []
+
+        def addPyFile(self, path: str) -> None:
+            self.sent.append(path)
+
+    class _Session:
+        def __init__(self):
+            self.sparkContext = _Context()
+
+    for _ in range(20):
+        s = _Session()
+        ensure_package_on_executors(s)
+        ensure_package_on_executors(s)
+        assert len(s.sparkContext.sent) == 1
+        assert s.sparkContext.sent[0].endswith(".zip")
+        del s
+        gc.collect()
