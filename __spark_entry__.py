@@ -21,6 +21,7 @@ from python_fmask_spark import oracle, pipeline  # noqa: E402
 from python_fmask_spark.dialect import DUCKDB, SPARK  # noqa: E402
 from python_fmask_spark.functions import angles, dedup, geo, inventory, multimodal, relational  # noqa: E402
 from python_fmask_spark.functions import curation, sampling, similarity, text as textfn  # noqa: E402
+from python_fmask_spark.operators.scene import FmaskParams  # noqa: E402
 from python_fmask_spark.operators.scene_dist import classify_distributed  # noqa: E402
 from python_fmask_spark.sources import register_views  # noqa: E402
 
@@ -175,25 +176,6 @@ _SQL_QUERIES: dict[str, Callable[[str], str]] = {
 }
 
 
-def _cloud_interim_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark side runs the tiled-kernel morphology (the scale path);
-    the DuckDB oracle runs the equivalent declarative self-join SQL —
-    the driver compare proves kernel == SQL."""
-    register_views(spark, sf_dir)
-    df = pipeline.interim_class_kernel(spark)
-    return df.selectExpr(
-        "url", "cell_id", "r", "c",
-        "cast(case when cloud_raw then 1 else 0 end as int) AS cloud_raw_i",
-        "cast(case when cloud_m then 1 else 0 end as int) AS cloud_i")
-
-
-def _fmask_interim_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    df = pipeline.interim_class_kernel(spark)
-    return df.selectExpr("url", "cell_id", "r", "c", "fmask_class",
-                         "text_sha256")
-
-
 def _cloud_objects(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cloud object table (Eqns 22-24 aggregates: clump size, base
     temperature, relative top height; fmask/fmask.py:896-951). The
@@ -220,14 +202,11 @@ def _potential_shadow_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
         fill_minima_distributed,
     )
     register_views(spark, sf_dir)
-    view = pipeline.materialize_pass1(spark)
-    src = spark.sql(pipeline.tail_sql_from_pass1(
-        view, pipeline.materialize_thresholds(spark), "thresholds",
-        f"""SELECT p.url, p.cell_id, p.r, p.c,
-              cast(p.nir as bigint) AS nir,
+    src = _leaf_tail(spark, "thresholds", """SELECT p.url, p.cell_id, p.r,
+              p.c, cast(p.nir as bigint) AS nir,
               t.b4_17 * 10000.0 AS nir17_dn
-            FROM pass1 p JOIN thresholds t ON t.cell_id = p.cell_id"""))
-    src = src.localCheckpoint()
+            FROM pass1 p JOIN thresholds t ON t.cell_id = p.cell_id"""
+                     ).localCheckpoint()
     filled = fill_minima_distributed(src, "nir", nullval=0,
                                      boundary_col="nir17_dn")
     # identity joins back on the composite key — the fill fixpoint is
@@ -319,8 +298,10 @@ _MODES: dict[str, Callable[..., DataFrame]] = {
 #  _s2_grid  + the tile XML's sun/view angle grids
 #            (sentinel2makeAnglesImage.py:95-123); the *_cdn columns
 #            carry the XML grid values into the hash.
+#  _s2_offset  Sentinel-2 04.00+ product: the radiometric offsets of
+#            the product-XML fixture (interim rows only, no fixture).
 _S2 = {"sensor": "SENTINEL2", "s2_offsets": oracle.S2_ZERO_OFFSETS}
-_REGIMES: dict[str, tuple[dict, dict[str, str], str]] = {
+_REGIMES: dict[str, tuple[dict, dict[str, str], str | None]] = {
     "": ({}, {}, "shadow_oracle_final.parquet"),
     "_l47": ({"sensor": "LANDSAT47"}, {},
              "shadow_oracle_final_l47.parquet"),
@@ -331,6 +312,8 @@ _REGIMES: dict[str, tuple[dict, dict[str, str], str]] = {
                  {c: c for c in ("sat_az_cdn", "sat_zen_cdn",
                                  "sun_az_cdn", "sun_zen_cdn")},
                  "shadow_oracle_final_s2_grid.parquet"),
+    "_s2_offset": ({"sensor": "SENTINEL2", "s2_offsets": _s2_fixture_offsets},
+                   {}, None),
 }
 
 _SHADOW_ROWS: dict[str, tuple[str, ...]] = {
@@ -340,20 +323,32 @@ _SHADOW_ROWS: dict[str, tuple[str, ...]] = {
 }
 
 
+def _regime_kwargs(regime: str) -> dict:
+    return {k: v() if callable(v) else v
+            for k, v in _REGIMES[regime][0].items()}
+
+
+def _with_pass1_ints(spark: SparkSession, out: DataFrame, kw: dict,
+                     extra: dict[str, str], cols) -> DataFrame:
+    """``out``'s ``cols`` plus ``extra`` ({name: pass-1 column}) cast
+    to int, joined on (cell_id, r, c) from the pass-1 leaf of the scene
+    ``kw`` names."""
+    if extra:
+        ints = ", ".join(f"cast({src} as int) AS {name}"
+                         for name, src in extra.items())
+        leaf = pipeline.materialize_pass1(spark, **kw)
+        out = out.join(spark.sql(f"SELECT cell_id, r, c, {ints} FROM {leaf}"),
+                       ["cell_id", "r", "c"])
+    return out.select(*cols, *extra)
+
+
 def _shadow_row(mode: str, regime: str
                 ) -> Callable[[SparkSession, str], DataFrame]:
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_views(spark, sf_dir)
-        kw, extra, _fixture = _REGIMES[regime]
-        kw = {k: v() if callable(v) else v for k, v in kw.items()}
-        out = _MODES[mode](spark, **kw)
-        if extra:
-            cols = ", ".join(f"cast({src} as int) AS {name}"
-                             for name, src in extra.items())
-            leaf = pipeline.materialize_pass1(spark, **kw)
-            out = out.join(spark.sql(f"SELECT cell_id, r, c, {cols} "
-                                     f"FROM {leaf}"), ["cell_id", "r", "c"])
-        return out.select(*_SHADOW_COLS, *extra)
+        kw = _regime_kwargs(regime)
+        return _with_pass1_ints(spark, _MODES[mode](spark, **kw), kw,
+                                _REGIMES[regime][1], _SHADOW_COLS)
     return run
 
 
@@ -363,6 +358,86 @@ def _shadow_oracle(regime: str) -> str:
 SELECT url, cell_id, r, c, fmask_class, cloud_id, cloud_height_du,
        {", ".join(("text_sha256", *extra))}
 FROM read_parquet('{_FIXTURES}/{fixture}')"""
+
+
+# The interim rows: pipeline.interim_class_kernel (the fused tiled-kernel
+# morphology, one halo shuffle) on the Spark side, the declarative
+# self-join SQL of _SQL_QUERIES in the oracle, so green proves kernel
+# == SQL under the row's regime. The S2 rows class from the majority
+# flag (cloud_m), not the dilated mask, as q_fmask_interim_class_s2
+# does. The CDI row's pcp_i/clear_land_i are the CDI-modified pass-1
+# columns (fmask/fmask.py:395-412), so its hash sees the CDI effect
+# itself (66/500 rows differ at sf0.01), not just the smoothed class.
+# name -> (regime, output expressions over the kernel's columns, extra
+# int columns {name: pass-1 column} from the regime's pass-1 leaf)
+_S2_INTERIM_CLASS_EXPR = (
+    "cast(case when nullmask then 0 when cloud_m then 2 "
+    "when snow then 4 when water_test then 5 else 1 end as int)"
+    " AS fmask_class")
+_INTERIM_ROWS: dict[str, tuple[str, tuple[str, ...], dict[str, str]]] = {
+    "cloud_interim": ("", (
+        "cast(case when cloud_raw then 1 else 0 end as int) AS cloud_raw_i",
+        "cast(case when cloud_m then 1 else 0 end as int) AS cloud_i"), {}),
+    "fmask_interim_class": ("", ("fmask_class", "text_sha256"), {}),
+    "fmask_interim_class_s2": ("_s2", (_S2_INTERIM_CLASS_EXPR,), {}),
+    "fmask_interim_class_s2_offset": (
+        "_s2_offset", (_S2_INTERIM_CLASS_EXPR,), {}),
+    "fmask_interim_class_s2_cdi": (
+        "_s2_cdi", (_S2_INTERIM_CLASS_EXPR,),
+        {"pcp_i": "pcp", "clear_land_i": "clear_land"}),
+}
+
+
+def _interim_row(name: str) -> Callable[[SparkSession, str], DataFrame]:
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        register_views(spark, sf_dir)
+        regime, exprs, extra = _INTERIM_ROWS[name]
+        kw = _regime_kwargs(regime)
+        out = pipeline.interim_class_kernel(spark, **kw).selectExpr(
+            "url", "cell_id", "r", "c", *exprs)
+        return _with_pass1_ints(spark, out, kw, extra, out.columns)
+    return run
+
+
+# The leaf-tail rows: the thresholds/pass-2 CTEs over the session's
+# pass-1 and per-cell leaves (pipeline.tail_sql_from_pass1), where the
+# oracle's single-CTE rendering re-derives pass 1 per CTE reference
+# (~20 s/run at sf0.1, 5x the plan-optimization time).
+# name -> (upto, SELECT over the CTEs, the run's FmaskParams: the Eqn-17
+# knob renders into the landthr CTE)
+_PASS2_PROBS_SQL = """SELECT p.cell_id,
+             cast(sum(p.wprob_pcnt) as bigint) AS sum_wprob,
+             cast(sum(p.lprob_pcnt) as bigint) AS sum_lprob,
+             cast(round(max(lt.land_threshold) * 1000) as int)
+               AS land_threshold_milli,
+             count(*) AS n_docs
+           FROM pass2 p JOIN landthr lt ON lt.cell_id = p.cell_id
+           GROUP BY p.cell_id"""
+_TAIL_ROWS: dict[str, tuple[str, str, FmaskParams]] = {
+    "pass1_thresholds": ("thresholds", """SELECT cell_id, twater, tlow,
+             thigh, cast(round(b4_17 * 1000) as int) AS b4_17_milli,
+             non_null_count
+           FROM thresholds""", FmaskParams()),
+    "pass2_probs": ("pass2", _PASS2_PROBS_SQL, FmaskParams()),
+    "pass2_probthresh_knob": ("pass2", _PASS2_PROBS_SQL,
+                              FmaskParams(eqn17_cloud_prob_thresh=0.3)),
+}
+
+
+def _leaf_tail(spark: SparkSession, upto: str, select: str,
+               params: FmaskParams = FmaskParams()) -> DataFrame:
+    """``select`` over the default (Landsat 8) scene's tail CTEs."""
+    pipeline.materialize_pass1(spark)
+    pipeline.materialize_thresholds(spark)
+    return spark.sql(pipeline.tail_sql_from_pass1(
+        pipeline.Scene(params=params), upto, select))
+
+
+def _tail_row(name: str) -> Callable[[SparkSession, str], DataFrame]:
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        register_views(spark, sf_dir)
+        return _leaf_tail(spark, *_TAIL_ROWS[name])
+    return run
 
 
 def _fmask_final_class_runner(spark: SparkSession, sf_dir: str
@@ -406,91 +481,6 @@ def _fmask_final_class_runner(spark: SparkSession, sf_dir: str
     finally:
         shutil.rmtree(wd, ignore_errors=True)
     return out
-
-
-def _fmask_interim_class_s2_cdi(spark: SparkSession, sf_dir: str
-                                ) -> DataFrame:
-    """CDI displacement test COMPOSED with the pipeline (the reference
-    applies it inside pass 1 and everything downstream consumes it,
-    fmask/fmask.py:395-412): Spark materializes a CDI-modified pass-1
-    leaf (per-cell Arrow kernel) and runs thresholds/pass2/pass3/
-    morphology over it; the oracle renders the same composition in
-    pure SQL (recursive-CTE CDI + redefined pass1). pcp_i/clear_land_i
-    expose the modified pass-1 columns so the hash is sensitive to the
-    CDI effect itself (66/500 rows differ at sf0.01), not just the
-    smoothed final class."""
-    register_views(spark, sf_dir)
-    df = pipeline.interim_class_kernel(
-        spark, sensor="SENTINEL2", s2_offsets=oracle.S2_ZERO_OFFSETS,
-        s2_cdi=True)
-    # class from the MAJORITY buffer (cloud_m == cloudbuf AND NOT null),
-    # matching the S2 interim oracle form (q_fmask_interim_class_s2's
-    # CASE uses cloudbuf_flag, not the dilated mask)
-    df = df.selectExpr("url", "cell_id", "r", "c",
-                       _S2_INTERIM_CLASS_EXPR)
-    leaf = pipeline.materialize_pass1(
-        spark, sensor="SENTINEL2", s2_offsets=oracle.S2_ZERO_OFFSETS,
-        s2_cdi=True)
-    p1 = spark.sql(f"""SELECT cell_id, r, c,
-        cast(pcp as int) AS pcp_i,
-        cast(clear_land as int) AS clear_land_i FROM {leaf}""")
-    return (df.join(p1, ["cell_id", "r", "c"])
-            .select("url", "cell_id", "r", "c", "fmask_class",
-                    "pcp_i", "clear_land_i"))
-
-
-# the S2 interim oracle's OUTCODE CASE (majority flag, not the dilated
-# mask) — single definition shared by the S2 and S2+CDI kernel rows
-_S2_INTERIM_CLASS_EXPR = (
-    "cast(case when nullmask then 0 when cloud_m then 2 "
-    "when snow then 4 when water_test then 5 else 1 end as int)"
-    " AS fmask_class")
-
-
-def _interim_class_s2_kernel(offs):
-    """Kernel-path Spark side for the S2 interim rows (r6): the raw SQL
-    rendering ran the 3x3 majority as a 9-offset self-join over the full
-    pass-1..3 derivation (measured 14-16 s/run at sf0.1); the fused
-    tiled-kernel path computes the same morphology in ONE halo shuffle
-    and matched 47x faster. Same class CASE as the oracle
-    (q_fmask_interim_class_s2 uses the majority flag, not the dilated
-    mask); the oracle rendering is unchanged, so the driver compare
-    still proves kernel == SQL under the S2 regime.
-
-    ``offs`` may be a dict or a zero-arg callable resolved per
-    invocation — the callable keeps fixture parsing OUT of queries()
-    construction, so a missing/corrupt fixture XML fails only this row,
-    not the whole board."""
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir)
-        o = offs() if callable(offs) else offs
-        df = pipeline.interim_class_kernel(spark, sensor="SENTINEL2",
-                                           s2_offsets=o)
-        return df.selectExpr("url", "cell_id", "r", "c",
-                             _S2_INTERIM_CLASS_EXPR)
-    return run
-
-
-def _pass2_probthresh_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """pass2_probs with the Eqn-17 knob via the materialized leaves
-    (r6): the raw SQL rendering re-derived pass 1 per CTE reference
-    (~20 s/run at sf0.1); this is the same leaf-based tail the default
-    pass2_probs row already uses, with the knob rendered into the
-    landthr CTE. The oracle renders the same derive text in DuckDB."""
-    register_views(spark, sf_dir)
-    view = pipeline.materialize_pass1(spark)
-    thr = pipeline.materialize_thresholds(spark)
-    return spark.sql(pipeline.tail_sql_from_pass1(
-        view, thr, "pass2",
-        """SELECT p.cell_id,
-             cast(sum(p.wprob_pcnt) as bigint) AS sum_wprob,
-             cast(sum(p.lprob_pcnt) as bigint) AS sum_lprob,
-             cast(round(max(lt.land_threshold) * 1000) as int)
-               AS land_threshold_milli,
-             count(*) AS n_docs
-           FROM pass2 p JOIN landthr lt ON lt.cell_id = p.cell_id
-           GROUP BY p.cell_id""",
-        eqn17_cloud_prob_thresh=0.3))
 
 
 def _ann_ivf_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -654,34 +644,6 @@ def _make_sql_query(builder: Callable[[str], str]):
     return run
 
 
-def _pass1_thresholds_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark side via the materialized pass-1 leaf (same results as the
-    oracle's single-CTE rendering, 5x less plan-optimization time)."""
-    register_views(spark, sf_dir)
-    view = pipeline.materialize_pass1(spark)
-    return spark.sql(pipeline.tail_sql_from_pass1(
-        view, pipeline.materialize_thresholds(spark), "thresholds",
-        """SELECT cell_id, twater, tlow, thigh,
-             cast(round(b4_17 * 1000) as int) AS b4_17_milli,
-             non_null_count
-           FROM thresholds"""))
-
-
-def _pass2_probs_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    view = pipeline.materialize_pass1(spark)
-    return spark.sql(pipeline.tail_sql_from_pass1(
-        view, pipeline.materialize_thresholds(spark), "pass2",
-        """SELECT p.cell_id,
-             cast(sum(p.wprob_pcnt) as bigint) AS sum_wprob,
-             cast(sum(p.lprob_pcnt) as bigint) AS sum_lprob,
-             cast(round(max(lt.land_threshold) * 1000) as int)
-               AS land_threshold_milli,
-             count(*) AS n_docs
-           FROM pass2 p JOIN landthr lt ON lt.cell_id = p.cell_id
-           GROUP BY p.cell_id"""))
-
-
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: per-cell PCP/water/snow classification counts at sf0.001."""
     register_views(spark, SF0001)
@@ -814,22 +776,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for name, builder in _SQL_QUERIES.items():
         out[name] = _make_sql_query(builder)
-    # Spark side on the tiled-kernel path, oracle stays declarative SQL:
-    # the driver compare proves kernel morphology == SQL semantics.
-    out["cloud_interim"] = _cloud_interim_kernel
-    out["fmask_interim_class"] = _fmask_interim_kernel
-    # Spark side via materialized pass-1 leaf (results identical to the
-    # oracle's single-CTE SQL; far less Catalyst planning time)
-    out["pass1_thresholds"] = _pass1_thresholds_fast
-    out["pass2_probs"] = _pass2_probs_fast
-    out["pass2_probthresh_knob"] = _pass2_probthresh_fast
-    # S2 interim rows on the fused tiled-kernel morphology path (the
-    # oracle keeps the declarative self-join SQL — compare proves
-    # kernel == SQL under the S2 regime)
-    out["fmask_interim_class_s2"] = _interim_class_s2_kernel(
-        oracle.S2_ZERO_OFFSETS)
-    out["fmask_interim_class_s2_offset"] = _interim_class_s2_kernel(
-        _s2_fixture_offsets)
+    # the interim and leaf-tail rows replace their SQL renderings on
+    # the Spark side; the oracle keeps the declarative SQL
+    for name in _INTERIM_ROWS:
+        out[name] = _interim_row(name)
+    for name in _TAIL_ROWS:
+        out[name] = _tail_row(name)
     # IVF on the NumPy-matmul assignment kernel (r6; the n x K dot
     # passes are one integer matmul per Arrow batch — see
     # similarity.ann_ivf_frame); oracle keeps the declarative SQL
@@ -844,7 +796,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out["cloud_objects"] = _cloud_objects
     # round-3 surfaces: distributed classify, sink round-trip, streaming
     out["fmask_final_class_runner"] = _fmask_final_class_runner
-    out["fmask_interim_class_s2_cdi"] = _fmask_interim_class_s2_cdi
     for mode, regimes in _SHADOW_ROWS.items():
         for regime in regimes:
             out[f"fmask_final_class{mode}{regime}"] = _shadow_row(mode,

@@ -141,3 +141,29 @@ def label_clumps_distributed(df: DataFrame, flag_col: str,
         out = labeled.withColumnRenamed("local_label", "clump_id") \
             .select("cell_id", "r", "c", "clump_id")
     return out
+
+
+def drop_small_clouds(df: DataFrame, min_px: int) -> DataFrame:
+    """The reference's minimum cloud size (fmask/fmask.py:762-767):
+    ``df`` with cloud_raw switched off on every 4-CONNECTED clump of
+    fewer than ``min_px`` pixels, before the majority filter — exactly
+    classify_scene's sizes[clumps0] < min masking, and distinct from
+    the 8-connected cloud clumps. Cross-tile 4-conn CCL over cloud_raw,
+    then per-clump counts (map-side combinable). ``min_px`` of at most
+    1 removes nothing, and ``df`` itself is returned. The tiled classify
+    paths (pipeline.interim_class_kernel, scene_dist) both call it."""
+    if min_px <= 1:
+        return df
+    lab4 = label_clumps_distributed(
+        df.select("cell_id", "r", "c", "cloud_raw"),
+        "cloud_raw", eight_connected=False)
+    small_px = (lab4
+                .join(lab4.groupBy("cell_id", "clump_id").count()
+                      .filter(F.col("count") < int(min_px))
+                      .select("cell_id", "clump_id"),
+                      ["cell_id", "clump_id"], "left_semi")
+                .select("cell_id", "r", "c")
+                .withColumn("small", F.lit(True)))
+    return (df.join(small_px, ["cell_id", "r", "c"], "left")
+            .withColumn("cloud_raw", F.expr("cloud_raw and small is null"))
+            .drop("small"))

@@ -68,9 +68,9 @@ from .. import constants as C
 from ..plans.lineage import barrier
 from ..session import ensure_package_on_executors
 from . import kernels
-from .clumps import label_clumps_distributed
+from .clumps import drop_small_clouds, label_clumps_distributed
 from .fillminima_dist import fill_minima_distributed
-from .scene import FLAGS_SQL, FmaskParams
+from .scene import FLAGS_SQL
 
 if TYPE_CHECKING:
     from ..pipeline import Scene
@@ -205,14 +205,10 @@ def _match_band_kernel(left: pd.DataFrame, right: pd.DataFrame
 
 
 def classify_distributed(spark: SparkSession, table: str = "documents",
-                         params: FmaskParams | None = None,
-                         runner=None,
-                         sensor: str = "LANDSAT8",
-                         s2_offsets: dict[str, int] | None = None,
-                         tile_meta=None,
-                         s2_cdi: bool = False) -> DataFrame:
+                         runner=None, **scene) -> DataFrame:
     """Full classification with bounded task grains (see module doc).
-    Returns the same schema as pipeline.classify.
+    Returns the same schema as pipeline.classify; ``scene`` is
+    pipeline.Scene's fields but ``table``.
 
     ``runner`` (plans.lineage.StageRunner): every barrier (pass1,
     thresholds, dist_p3, dist_flags, dist_px) becomes a fingerprinted
@@ -225,10 +221,8 @@ def classify_distributed(spark: SparkSession, table: str = "documents",
     (fmask/fmask.py:206-216)."""
     from .. import pipeline
 
-    return _classify_distributed(
-        spark, pipeline.Scene(table, sensor, s2_offsets, s2_cdi, tile_meta,
-                              params or FmaskParams()),
-        runner=runner)
+    return _classify_distributed(spark, pipeline.Scene(table, **scene),
+                                 runner=runner)
 
 
 def _classify_distributed(spark: SparkSession, scene: Scene,
@@ -255,29 +249,7 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
         "sat_az_cdn", "sat_zen_cdn"))
 
     # --- stage 1: interim cloud mask, tiled (cloudFinalPass tail)
-    raw = p3
-    if params.min_cloud_size_px > 1:
-        # The reference's size filter labels 4-CONNECTED
-        # (fmask/fmask.py:762-767) — distinct from the 8-connected cloud
-        # clumps of stage 3. Cross-tile 4-conn CCL over cloud_raw,
-        # per-clump counts (map-side combinable), and the sub-threshold
-        # clumps' pixels flip cloud_raw off before the majority filter —
-        # exactly classify_scene's sizes[clumps0] < min masking.
-        lab4 = label_clumps_distributed(
-            raw.select("cell_id", "r", "c", "cloud_raw"),
-            "cloud_raw", eight_connected=False)
-        small_px = (lab4
-                    .join(lab4.groupBy("cell_id", "clump_id").count()
-                          .filter(F.col("count") <
-                                  int(params.min_cloud_size_px))
-                          .select("cell_id", "clump_id"),
-                          ["cell_id", "clump_id"], "left_semi")
-                    .select("cell_id", "r", "c")
-                    .withColumn("small", F.lit(True)))
-        raw = (raw.join(small_px, ["cell_id", "r", "c"], "left")
-               .withColumn("cloud_raw",
-                           F.expr("cloud_raw and small is null"))
-               .drop("small"))
+    raw = drop_small_clouds(p3, params.min_cloud_size_px)
     # url never enters ANY intermediate stage: every per-pixel frame is
     # keyed (cell_id, r, c) — int composite keys shuffle/join cheaper
     # than a ~40-byte string, across every stage barrier and the

@@ -13,6 +13,9 @@ The leaves are the reference's once-per-scene thresholds and angles
 classify path (classify, interim_class_kernel, scene_dist) reads. Only
 the genuinely spatial tail (fill-minima, clumps, shadow match) runs in
 NumPy kernels.
+
+A run's configuration is one Scene: the keyword entry points forward
+its fields to it, and every function below them takes the Scene.
 """
 
 from __future__ import annotations
@@ -40,10 +43,13 @@ class Scene:
     dispatch, the Sentinel-2 offsets and CDI composition, the tile-XML
     angle grids and the run's FmaskParams — the engine's counterpart of
     the reference's per-run config, which doFmask carries through every
-    pass (fmask/fmask.py:96-221). The keyword entry points (classify,
-    classify_auto, classify_distributed, interim_class_kernel,
-    materialize_pass1, materialize_thresholds, s2_cdi_pcp) each build
-    one and pass it below them."""
+    pass (fmask/fmask.py:96-221). It is the one place a scene's fields
+    and their defaults are declared: classify, classify_auto,
+    scene_dist.classify_distributed, materialize_pass1 and
+    materialize_thresholds forward their keywords as ``Scene(table,
+    **scene)`` (a misspelled one is a TypeError before any Spark job),
+    and interim_class_kernel and s2_cdi_pcp name the subset they
+    support. Everything below them takes the Scene."""
 
     table: str = "documents"
     sensor: str = "LANDSAT8"
@@ -105,12 +111,9 @@ def invalidate_pass1_cache(spark: SparkSession) -> None:
 
 
 def materialize_pass1(spark: SparkSession, table: str = "documents",
-                      sensor: str = "LANDSAT8",
-                      s2_offsets: dict[str, int] | None = None,
-                      s2_cdi: bool = False,
-                      tile_meta=None,
                       nir_snow_thresh: float | None = None,
-                      green_snow_thresh: float | None = None) -> str:
+                      green_snow_thresh: float | None = None,
+                      **scene) -> str:
     """Materialize pass 1 behind a leaf view and return the view name.
 
     Catalyst inlines deterministic CTEs per reference; the thresholds +
@@ -125,17 +128,23 @@ def materialize_pass1(spark: SparkSession, table: str = "documents",
     threshold queries all branch from the same leaf instead of
     re-deriving pass 1 per query.
 
-    classify_distributed(runner=...) registers the same view over its
-    StageRunner stage ``pass1``, so downstream plans are identical."""
-    return _pass1_leaf(spark, Scene(
-        table, sensor, s2_offsets, s2_cdi, tile_meta,
-        _snow_params(nir_snow_thresh, green_snow_thresh)))
+    ``scene`` is Scene's other fields but ``params``: the two Eqn-20
+    floors (None = the default) are the only FmaskParams fields pass 1
+    reads. classify_distributed(runner=...) registers the same view
+    over its StageRunner stage ``pass1``, so downstream plans are
+    identical."""
+    return _pass1_leaf(spark, _snow_scene(
+        table, nir_snow_thresh, green_snow_thresh, **scene))
 
 
-def _snow_params(nir: float | None, green: float | None) -> FmaskParams:
-    """FmaskParams with these Eqn-20 floors, None meaning the default."""
+def _snow_scene(table: str, nir: float | None, green: float | None,
+                **scene) -> Scene:
+    """Scene(table, **scene) whose FmaskParams has these Eqn-20 floors,
+    None meaning the default; a ``params`` key in ``scene`` is a
+    TypeError, as in the wrappers' signatures."""
     floors = {"nir_snow_thresh": nir, "green_snow_thresh": green}
-    return FmaskParams(**{k: v for k, v in floors.items() if v is not None})
+    return Scene(table, params=FmaskParams(
+        **{k: v for k, v in floors.items() if v is not None}), **scene)
 
 
 def _leaf(spark: SparkSession, view: str, build, runner, stage: str,
@@ -200,19 +209,18 @@ _PASS23_DEPS = frozenset((
     "clear_land", "pcp", "water_test", "nullmask"))
 
 
-def tail_sql_from_pass1(pass1_view: str, thresholds_view: str, upto: str,
-                        select: str, sensor: str = "LANDSAT8",
-                        eqn17_cloud_prob_thresh: float | None = None,
-                        pass1_cols: tuple[str, ...] | None = None
-                        ) -> str:
-    """Thresholds/pass2/pass3 CTE chain over the materialized pass-1
-    and per-cell leaves (materialize_pass1 / materialize_thresholds).
+def tail_sql_from_pass1(scene: Scene, upto: str, select: str,
+                        pass1_cols: tuple[str, ...] | None = None) -> str:
+    """Thresholds/pass2/pass3 CTE chain over ``scene``'s two leaf views
+    (_leaf_views; the caller materializes them, e.g. through
+    materialize_thresholds or scene_exchange), with its sensor's
+    formulas.
 
     The per-cell leaf stands in for the thresholds CTE, so no consumer
     re-aggregates pass 1 (thresholds is a per-cell dim, rows == cells).
-    The Eqn-17 knob renders into the pass-2 landthr CTE fresh per
-    query, so a non-default value composes with the session-cached
-    leaves (which it does not depend on).
+    ``scene.params.eqn17_cloud_prob_thresh`` renders into the pass-2
+    landthr CTE fresh per query, so a non-default value composes with
+    the session-cached leaves (whose key it is not part of).
 
     ``pass1_cols`` (r6): the pass-1-level columns the caller's final
     ``select`` needs. When given, the pass1 CTE projects to
@@ -225,33 +233,30 @@ def tail_sql_from_pass1(pass1_view: str, thresholds_view: str, upto: str,
     analysis."""
     p1_select = (", ".join(sorted(set(pass1_cols) | _PASS23_DEPS))
                  if pass1_cols else "*")
-    builders = [f"pass1 AS (SELECT {p1_select} FROM {pass1_view})",
-                f"thresholds AS (SELECT * FROM {thresholds_view})"]
+    view, thr = _leaf_views(scene)
+    builders = [f"pass1 AS (SELECT {p1_select} FROM {view})",
+                f"thresholds AS (SELECT * FROM {thr})"]
     if upto in ("pass2", "pass3"):
         builders.append(derive.pass2_sql(
-            SPARK, sensor=sensor,
-            eqn17_cloud_prob_thresh=eqn17_cloud_prob_thresh))
+            SPARK, sensor=scene.sensor,
+            eqn17_cloud_prob_thresh=scene.params.eqn17_cloud_prob_thresh))
     if upto == "pass3":
-        builders.append(derive.pass3_sql(SPARK, sensor=sensor))
+        builders.append(derive.pass3_sql(SPARK, sensor=scene.sensor))
     ctes = ",\n".join(builders)
     return f"WITH {ctes} {select}"
 
 
 def materialize_thresholds(spark: SparkSession, table: str = "documents",
-                           sensor: str = "LANDSAT8",
-                           s2_offsets: dict[str, int] | None = None,
-                           s2_cdi: bool = False,
-                           tile_meta=None,
                            nir_snow_thresh: float | None = None,
-                           green_snow_thresh: float | None = None) -> str:
+                           green_snow_thresh: float | None = None,
+                           **scene) -> str:
     """Materialize the per-cell leaf (rows == cells, tiny) behind a
     view, session-cached like pass 1: the thresholds dim plus the
     per-cell angle scalars and cell_rows. Every tail consumer
     (pass2/pass3/dims) then references a leaf instead of re-aggregating
-    pass 1."""
-    return _thresholds_leaf(spark, Scene(
-        table, sensor, s2_offsets, s2_cdi, tile_meta,
-        _snow_params(nir_snow_thresh, green_snow_thresh)))
+    pass 1. Keywords as materialize_pass1's."""
+    return _thresholds_leaf(spark, _snow_scene(
+        table, nir_snow_thresh, green_snow_thresh, **scene))
 
 
 def thresholds_sql_text(scene: Scene) -> str:
@@ -276,15 +281,18 @@ def _thresholds_leaf(spark: SparkSession, scene: Scene,
 
 
 def interim_class_kernel(spark: SparkSession, table: str = "documents",
-                         params: FmaskParams | None = None,
+                         params: FmaskParams = FmaskParams(),
                          sensor: str = "LANDSAT8",
                          s2_offsets: dict[str, int] | None = None,
                          s2_cdi: bool = False) -> DataFrame:
     """Interim classification (no shadow chain) via the tiled-kernel path:
-    pass3 columns -> ONE fused tile pass (3x3 majority + mask + circular
-    dilation, halo = 1 + buffer radius) -> precedence CASE. Matches the
-    declarative SQL oracle bit-for-bit (driver-checked) while running the
-    morphology tile-parallel — the 100-TB plan shape.
+    pass3 columns -> the minimum-cloud-size filter
+    (clumps.drop_small_clouds, a no-op at the default; the reported
+    cloud_raw is its output) -> ONE fused tile pass (3x3 majority +
+    mask + circular dilation, halo = 1 + buffer radius) -> precedence
+    CASE. Matches the declarative SQL oracle bit-for-bit
+    (driver-checked) while running the morphology tile-parallel — the
+    100-TB plan shape.
 
     Plan notes: the two morphology stages are fused into a single halo
     shuffle (tiling.tiled_neighborhood) — halo grows from 1+5 to
@@ -295,12 +303,11 @@ def interim_class_kernel(spark: SparkSession, table: str = "documents",
 
     from . import tiling
     from .operators import kernels
+    from .operators.clumps import drop_small_clouds
     from .operators.scene import FLAGS_SQL
 
-    scene = Scene(table, sensor, s2_offsets, s2_cdi,
-                  params=params or FmaskParams())
-    params = scene.params
-    px, _dims, ident = scene_exchange(spark, scene)
+    px, _dims, ident = scene_exchange(
+        spark, Scene(table, sensor, s2_offsets, s2_cdi, params=params))
     # persist: with_halo explodes its input — without a materialization
     # point Spark recomputes the whole pass-1..3 derivation per consumer.
     # (r6 A/B KEPT this: dropping the checkpoint looked like "one fewer
@@ -308,7 +315,9 @@ def interim_class_kernel(spark: SparkSession, table: str = "documents",
     # stage then carries the whole pass-2/3 tail + dim broadcasts above
     # a Generate, defeating stage fusion; the narrow 7-column
     # checkpoint is the faster shape on repeat calls.)
-    p3 = px.selectExpr("cell_id", "r", "c", *FLAGS_SQL).localCheckpoint()
+    p3 = drop_small_clouds(
+        px.selectExpr("cell_id", "r", "c", *FLAGS_SQL).localCheckpoint(),
+        params.min_cloud_size_px)
 
     rad = int(params.cloud_buffer_px)
 
@@ -441,11 +450,8 @@ def px_exchange_sql(scene: Scene) -> str:
     distributed path's stage fingerprint hashes this text."""
     from .operators.scene import PX_EXCHANGE_SQL
 
-    view, thr = _leaf_views(scene)
     return tail_sql_from_pass1(
-        view, thr, "pass3", f"SELECT {PX_EXCHANGE_SQL} FROM pass3",
-        sensor=scene.sensor,
-        eqn17_cloud_prob_thresh=scene.params.eqn17_cloud_prob_thresh,
+        scene, "pass3", f"SELECT {PX_EXCHANGE_SQL} FROM pass3",
         pass1_cols=("r", "c", "nir", "snow", "sat_az_cdn", "sat_zen_cdn"))
 
 
@@ -483,14 +489,10 @@ def scene_exchange(spark: SparkSession, scene: Scene, runner=None,
 
 
 def classify(spark: SparkSession, table: str = "documents",
-             params: FmaskParams | None = None,
-             sensor: str = "LANDSAT8",
-             s2_offsets: dict[str, int] | None = None,
-             s2_cdi: bool = False,
-             tile_meta=None) -> DataFrame:
+             **scene) -> DataFrame:
     """Full classification: returns (url, cell_id, r, c, fmask_class,
     cloud_id, ..., text_sha256). ``table`` must be a registered view
-    with the raw documents schema.
+    with the raw documents schema; ``scene`` is Scene's other fields.
 
     Plan shape: the per-cell kernel cogroups ONLY scene_exchange's slim
     pixel frame (8 narrow fields, flags bit-packed) with its 1-row dim;
@@ -500,8 +502,7 @@ def classify(spark: SparkSession, table: str = "documents",
     40.96M rows with the full-width row. The identity frame reads the
     pass-1 leaf, so the threshold/pass2/pass3 tail never re-derives
     text."""
-    return _classify(spark, Scene(table, sensor, s2_offsets, s2_cdi,
-                                  tile_meta, params or FmaskParams()))
+    return _classify(spark, Scene(table, **scene))
 
 
 def _classify(spark: SparkSession, scene: Scene,
@@ -523,12 +524,7 @@ def _classify(spark: SparkSession, scene: Scene,
 
 
 def classify_auto(spark: SparkSession, table: str = "documents",
-                  params: FmaskParams | None = None,
-                  row_threshold: int = 2_000_000,
-                  sensor: str = "LANDSAT8",
-                  s2_offsets: dict[str, int] | None = None,
-                  tile_meta=None,
-                  s2_cdi: bool = False) -> DataFrame:
+                  row_threshold: int = 2_000_000, **scene) -> DataFrame:
     """Cost-based per-cell dispatch between the whole-cell kernel and
     the clump-parallel distributed path (one entry point; mirrors RIOS
     picking the window grain, fmask/fmask.py:234).
@@ -551,13 +547,12 @@ def classify_auto(spark: SparkSession, table: str = "documents",
     cell list is collected. Both halves read the scene's one
     exchange (scene_exchange), each semi-joined to its own cells. Both
     paths produce bit-identical output (tests/test_scene_dist.py), so
-    the union is exact."""
+    the union is exact. ``scene`` is Scene's fields but ``table``."""
     from pyspark.sql import functions as F
 
     from .operators.scene_dist import _classify_distributed
 
-    scene = Scene(table, sensor, s2_offsets, s2_cdi, tile_meta,
-                  params or FmaskParams())
+    scene = Scene(table, **scene)
     counts = (spark.table(_pass1_leaf(spark, scene)).groupBy("cell_id")
               .agg((F.count("*") >= row_threshold).alias("big"))
               .localCheckpoint())

@@ -121,13 +121,6 @@ def registered_input_identity(spark: SparkSession) -> str:
     return _REGISTERED.get(spark, "")
 
 
-def _note_input_change(spark: SparkSession, identity: str) -> None:
-    if _REGISTERED.get(spark) != identity:
-        from .pipeline import invalidate_pass1_cache
-        invalidate_pass1_cache(spark)
-        _REGISTERED[spark] = identity
-
-
 def register_views(spark: SparkSession, sf_dir: str,
                    tables: tuple[str, ...] = TABLES) -> None:
     # NOTE: always re-register. An identity-based skip was tried in r6
@@ -136,7 +129,11 @@ def register_views(spark: SparkSession, sf_dir: str,
     # session identity cannot see — the skip then kept the stale view.
     # The repeat-call cost is bounded by the _SPLITS_CACHE (no plan->RDD
     # probe after the first registration of a given file identity).
-    _note_input_change(spark, _input_fingerprint(sf_dir, tables))
+    identity = _input_fingerprint(sf_dir, tables)
+    if _REGISTERED.get(spark) != identity:
+        from .pipeline import invalidate_pass1_cache
+        invalidate_pass1_cache(spark)
+        _REGISTERED[spark] = identity
     for name in tables:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(path):
@@ -146,8 +143,8 @@ def register_views(spark: SparkSession, sf_dir: str,
 def load_documents_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The input_hint-shaped documents table
     (url, warc_ts, html, text, lang), derived deterministically from the
-    driver's documents parquet."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    # "!rep1": one copy of the input, the identity this view registers
-    _note_input_change(spark, f"{sf_dir}!rep1")
+    driver's documents parquet. The input registers through
+    register_views, so the session's pass-1 leaves over the same
+    directory stay cached."""
+    register_views(spark, sf_dir)
     return spark.sql(documents_wide_sql(SPARK, "documents"))

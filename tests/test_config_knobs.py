@@ -18,13 +18,14 @@ from python_fmask_spark.sources import register_views
 SCRIPTS = str(pathlib.Path(__file__).resolve().parents[1] / "scripts")
 
 def _land_thresholds(spark, eqn17):
-    view = pipeline.materialize_pass1(spark)
+    pipeline.materialize_pass1(spark)
+    pipeline.materialize_thresholds(spark)
     df = spark.sql(pipeline.tail_sql_from_pass1(
-        view, pipeline.materialize_thresholds(spark), "pass2",
+        pipeline.Scene(params=FmaskParams(eqn17_cloud_prob_thresh=eqn17)),
+        "pass2",
         """SELECT cell_id,
              cast(round(land_threshold * 1000) as int) AS landthr_milli
-           FROM landthr""",
-        eqn17_cloud_prob_thresh=eqn17))
+           FROM landthr"""))
     return {r.cell_id: r.landthr_milli for r in df.collect()}
 
 

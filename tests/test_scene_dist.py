@@ -133,6 +133,43 @@ def test_distributed_min_cloud_size_matches_scene_kernel(spark, sf_small):
         "threshold removed no clumps on this fixture; raise it"
 
 
+def test_interim_min_cloud_size_matches_numpy(spark, sf_small):
+    """interim_class_kernel applies min_cloud_size_px as classify does:
+    its cloud_m equals a whole-cell NumPy reference — the 4-connected
+    label_components size filter over cloud_raw, then
+    majority3_buffer, masked by nullmask (fmask/fmask.py:761-776)."""
+    from python_fmask_spark import constants as C
+    from python_fmask_spark.operators import kernels
+    from python_fmask_spark.operators.scene import FmaskParams
+
+    min_px = 3
+    register_views(spark, sf_small)
+    base = pipeline.interim_class_kernel(spark).select(
+        "cell_id", "r", "c", "cloud_raw", "nullmask", "cloud_m").toPandas()
+    got = {(t.cell_id, t.r, t.c): bool(t.cloud_m)
+           for t in pipeline.interim_class_kernel(
+               spark, params=FmaskParams(min_cloud_size_px=min_px))
+           .select("cell_id", "r", "c", "cloud_m").toPandas().itertuples()}
+    want = {}
+    for cell, g in base.groupby("cell_id"):
+        rr, cc = g["r"].to_numpy(), g["c"].to_numpy()
+        shape = (int(rr.max()) + 1, C.SCENE_WIDTH)
+        cloud = np.zeros(shape, dtype=bool)
+        null = np.ones(shape, dtype=bool)  # ghost slots are null
+        cloud[rr, cc] = g["cloud_raw"].to_numpy().astype(bool)
+        null[rr, cc] = g["nullmask"].to_numpy().astype(bool)
+        lab, _n = kernels.label_components(cloud, eight_connected=False)
+        sizes = np.bincount(lab.ravel())
+        sizes[0] = 0
+        cloud[sizes[lab] < min_px] = False
+        m = kernels.majority3_buffer(cloud) & ~null
+        want.update({(cell, r, c): bool(m[r, c]) for r, c in zip(rr, cc)})
+    assert got == want
+    # the filter must bite here, or the comparison proves nothing
+    assert any(want[(t.cell_id, t.r, t.c)] != bool(t.cloud_m)
+               for t in base.itertuples())
+
+
 @pytest.mark.parametrize("sf", ["sf_small", "sf_shadow"])
 def test_distributed_s2_no_thermal_matches_scene_kernel(spark, sf, request):
     """Sensor dispatch on the distributed path: classify_distributed

@@ -152,11 +152,10 @@ def test_cell_thresholds_match_np_transcription(spark, sf_oracle, sensor):
                for r in spark.table(thr_view).collect()}
     assert got_thr == want_thr
 
-    p1_view = pipeline.materialize_pass1(spark, sensor=sensor,
-                                         s2_offsets=offs)
+    pipeline.materialize_pass1(spark, sensor=sensor, s2_offsets=offs)
     lt = spark.sql(pipeline.tail_sql_from_pass1(
-        p1_view, thr_view, "pass2",
-        "SELECT cell_id, land_threshold FROM landthr", sensor=sensor))
+        pipeline.Scene(sensor=sensor, s2_offsets=offs), "pass2",
+        "SELECT cell_id, land_threshold FROM landthr"))
     got_lt = {r.cell_id: r.land_threshold for r in lt.collect()}
     assert got_lt == pytest.approx(want_lt, abs=1e-12)
     duck_lt = dict(con.execute(
