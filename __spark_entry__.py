@@ -467,20 +467,20 @@ def _fmask_final_class_runner(spark: SparkSession, sf_dir: str
         n_first = first.count()
         resumed = classify_distributed(
             spark, runner=StageRunner(spark, wd, run_id="resume"))
-        # materialize the resumed tail ONCE (checkpoint) while the
-        # stage tables still exist, then the row-count assert is a
-        # cheap count over the checkpointed RDD, and the workdir can go
-        out = resumed.select(*_SHADOW_COLS).localCheckpoint()
-        # explicit raise, not `assert`: python -O strips asserts and
-        # would silently drop the resume-specific parity signal
-        n_resumed = out.count()
+        # the count is the resumed frame's first action: it computes
+        # and caches the frame's cut while the stage tables still
+        # exist, so the workdir can go and the frame returned below
+        # reads the cached rows. Explicit raise, not `assert`: python -O
+        # strips asserts and would silently drop the resume-specific
+        # parity signal
+        n_resumed = resumed.count()
         if n_resumed != n_first:
             raise RuntimeError(
                 f"resume changed the row count: {n_first} staged vs "
                 f"{n_resumed} resumed")
     finally:
         shutil.rmtree(wd, ignore_errors=True)
-    return out
+    return resumed.select(*_SHADOW_COLS)
 
 
 def _ann_ivf_frame(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -65,7 +65,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import constants as C
-from ..plans.lineage import barrier
+from ..plans.lineage import barrier, output_cut
 from ..session import ensure_package_on_executors
 from . import kernels
 from .clumps import drop_small_clouds, label_clumps_distributed
@@ -218,11 +218,16 @@ def classify_distributed(spark: SparkSession, table: str = "documents",
     completed stage
     (tests/test_lineage.py::test_distributed_classify_resumes). The
     reference analogue is its keepIntermediates temp rasters
-    (fmask/fmask.py:206-216)."""
+    (fmask/fmask.py:206-216).
+
+    The returned frame is cut once, as pipeline.classify's is
+    (plans.lineage.output_cut): calling this runs the barriers and the
+    shuffle stages after them, and the first action on the frame
+    computes and caches the rows every later action reads."""
     from .. import pipeline
 
-    return _classify_distributed(spark, pipeline.Scene(table, **scene),
-                                 runner=runner)
+    return output_cut(_classify_distributed(
+        spark, pipeline.Scene(table, **scene), runner=runner))
 
 
 def _classify_distributed(spark: SparkSession, scene: Scene,

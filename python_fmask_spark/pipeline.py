@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from . import derive
 from .dialect import SPARK
 from .operators.scene import FmaskParams
-from .plans.lineage import barrier
+from .plans.lineage import barrier, output_cut
 from .session import ensure_package_on_executors
 
 # per-cell constants of pass 1 the per-cell leaf carries next to the
@@ -501,8 +501,14 @@ def classify(spark: SparkSession, table: str = "documents",
     ever rides the groupBy sort that was measured spilling 8.3 GB at
     40.96M rows with the full-width row. The identity frame reads the
     pass-1 leaf, so the threshold/pass2/pass3 tail never re-derives
-    text."""
-    return _classify(spark, Scene(table, **scene))
+    text.
+
+    The returned frame is cut once (plans.lineage.output_cut): calling
+    classify runs the plan's shuffle stages, the first action on the
+    frame computes and caches its rows, and every later action (the
+    counts after a sink's write) reads that cache instead of running
+    the kernel again."""
+    return output_cut(_classify(spark, Scene(table, **scene)))
 
 
 def _classify(spark: SparkSession, scene: Scene,
@@ -547,7 +553,9 @@ def classify_auto(spark: SparkSession, table: str = "documents",
     cell list is collected. Both halves read the scene's one
     exchange (scene_exchange), each semi-joined to its own cells. Both
     paths produce bit-identical output (tests/test_scene_dist.py), so
-    the union is exact. ``scene`` is Scene's fields but ``table``."""
+    the union is exact. ``scene`` is Scene's fields but ``table``.
+    The returned frame (the union, when both halves run) is cut once,
+    as classify's is."""
     from pyspark.sql import functions as F
 
     from .operators.scene_dist import _classify_distributed
@@ -558,8 +566,9 @@ def classify_auto(spark: SparkSession, table: str = "documents",
               .localCheckpoint())
     big = counts.filter("big").select("cell_id")
     if big.isEmpty():
-        return _classify(spark, scene)
+        return output_cut(_classify(spark, scene))
     small_out = _classify(spark, scene,
                           cells=counts.filter("NOT big").select("cell_id"))
     big_out = _classify_distributed(spark, scene, cells=big)
-    return small_out.unionByName(big_out.select(*small_out.columns))
+    return output_cut(
+        small_out.unionByName(big_out.select(*small_out.columns)))

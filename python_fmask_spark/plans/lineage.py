@@ -3,6 +3,8 @@
 ``barrier`` is the one materialization point of the classify stages
 (pipeline's two leaves, scene_dist's ``dist_*`` stages): a
 localCheckpoint, or with a StageRunner a fingerprinted stage table.
+``output_cut`` is the one cut of a classify entry point's result, so a
+job's sink and counts share one run of the plan.
 
 Every StageRunner stage writes its output to a stage table (parquet here;
 Iceberg in production — same write API) together with a row in the
@@ -84,6 +86,17 @@ def barrier(spark: SparkSession, runner: "StageRunner | None", stage: str,
     if runner is None:
         return build().localCheckpoint()
     return runner.run(stage, stage_fingerprint(spark, logic), build)
+
+
+def output_cut(df: DataFrame) -> DataFrame:
+    """A classify entry point's result, cut once: a lazy
+    localCheckpoint. Its first action (the sink's write, or the counts
+    when there is no sink) computes and caches the rows; every later
+    action reads the cached blocks instead of re-planning the classify
+    plan and re-running its kernels. Under AQE the shuffle map stages
+    below the cut run here; only the result stage waits for that first
+    action."""
+    return df.localCheckpoint(eager=False)
 
 
 class StageRunner:

@@ -10,7 +10,8 @@ color table + raster attribute table of class names
   table-properties survive engine restarts), falling back to the
   session catalog's parquet provider in this sandbox — the API surface
   (writeTo / tableProperty / partitionedBy / createOrReplace) is
-  identical either way.
+  identical either way. A provider check (provider_resolves) comes
+  first, so a session without Iceberg never plans a doomed write.
 * S4 — the color table + class-name RAT as (a) TBLPROPERTIES on the
   mask table (``fmask.color_table`` / ``fmask.class_names`` JSON) and
   (b) a first-class ``<name>_rat`` dimension table joinable onto the
@@ -52,10 +53,38 @@ def class_rat_df(spark: SparkSession) -> DataFrame:
         "AS rat(class_value, class_name, red, green, blue, alpha)")
 
 
+def provider_resolves(spark: SparkSession, provider: str) -> bool:
+    """Whether the session's JVM resolves the data source ``provider``
+    the way Spark's own lookup does (DataSource.lookupDataSource): a
+    DataSourceRegister whose shortName() it is, found by ServiceLoader
+    over the context-or-Spark class loader, else a loadable class
+    ``provider`` or ``provider.DefaultSource``. Spark's last step, the
+    Python data-source registry, is left out: asking it starts a Python
+    worker (lookup_data_sources), and Iceberg is a JVM source."""
+    jvm = spark.sparkContext._jvm
+    utils = jvm.org.apache.spark.util.Utils
+    loader = utils.getContextOrSparkClassLoader()
+    register = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.sources.DataSourceRegister", False, loader)
+    found = jvm.java.util.ServiceLoader.load(register, loader).iterator()
+    while found.hasNext():
+        if found.next().shortName().lower() == provider.lower():
+            return True
+    return any(utils.classIsLoadable(c)
+               for c in (provider, f"{provider}.DefaultSource"))
+
+
 def write_mask(df: DataFrame, name: str) -> str:
     """Write the mask table through writeTo, partitioned by cell_id,
     with the thematic metadata attached; returns the format actually
-    used ('iceberg' or the parquet fallback)."""
+    used ('iceberg' or the parquet fallback).
+
+    Iceberg is tried only when provider_resolves says the session has
+    it; otherwise the write goes straight to parquet, with the same
+    RuntimeWarning the failed attempt gives, so a session without
+    Iceberg plans (and, for a lazily cut frame, computes) the mask
+    write once. A session that has it keeps the attempt and its
+    is_provider_missing fallback."""
     spark = df.sparkSession
     used = "iceberg"
     props = {
@@ -140,15 +169,21 @@ def write_mask(df: DataFrame, name: str) -> str:
             "catalog plugin", "classnotfound", "not a valid spark sql"
             " data source", "unsupported data source type"))
 
-    try:
-        attempt(used)
-    except Exception as e:
-        if not is_provider_missing(e):
-            raise
+    missing = None
+    if provider_resolves(spark, used):
+        try:
+            attempt(used)
+        except Exception as e:
+            if not is_provider_missing(e):
+                raise
+            missing = e
+    else:
+        missing = f"no data source resolves '{used}'"
+    if missing is not None:
         import warnings
         warnings.warn(
             f"write_mask: provider 'iceberg' unavailable in this session "
-            f"({e}); downgrading to the session catalog's parquet "
+            f"({missing}); downgrading to the session catalog's parquet "
             f"provider", RuntimeWarning, stacklevel=2)
         used = "parquet"
         attempt(used)

@@ -25,6 +25,7 @@ compilation.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import weakref
@@ -44,25 +45,45 @@ _PYFILES_SENT: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 ONE_SHOT_DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1"
 
 
+def _package_zip() -> str:
+    """This checkout's package (its .py files) as a zip named by their
+    content hash, in a per-user cache directory: a zip is never reused
+    for other code, and one code version leaves one zip. The write is
+    atomic (a pid-named temp file, then a rename), as _native.py's
+    build is, so concurrent processes race benignly."""
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    files = []
+    digest = hashlib.sha256()
+    for root, _dirs, names in sorted(os.walk(pkg_dir)):
+        for fn in sorted(names):
+            if fn.endswith(".py"):
+                full = os.path.join(root, fn)
+                with open(full, "rb") as f:
+                    data = f.read()
+                rel = os.path.relpath(full, os.path.dirname(pkg_dir))
+                digest.update(f"{rel}\0{len(data)}\0".encode() + data)
+                files.append((rel, data))
+    cache = os.path.join(tempfile.gettempdir(), f"pfs_pyfiles_{os.getuid()}")
+    os.makedirs(cache, exist_ok=True)
+    zpath = os.path.join(
+        cache, f"python_fmask_spark_{digest.hexdigest()[:16]}.zip")
+    if not os.path.exists(zpath):
+        tmp = f"{zpath}.{os.getpid()}"
+        with zipfile.ZipFile(tmp, "w") as z:
+            for rel, data in files:
+                z.writestr(rel, data)
+        os.replace(tmp, zpath)
+    return zpath
+
+
 def ensure_package_on_executors(spark: SparkSession) -> None:
     """Ship python_fmask_spark to executors (the spark-submit --py-files
-    pattern). Required for pandas-UDF kernels when the driver process was
-    not started inside the repo; no-op if already shipped or importable
-    via a shared filesystem."""
+    pattern) as _package_zip(). Required for pandas-UDF kernels when the
+    driver process was not started inside the repo; no-op if already
+    shipped or importable via a shared filesystem."""
     if spark in _PYFILES_SENT:
         return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(tempfile.gettempdir(),
-                         f"python_fmask_spark_{os.getpid()}.zip")
-    if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as z:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fn in files:
-                    if fn.endswith(".py"):
-                        full = os.path.join(root, fn)
-                        rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                        z.write(full, rel)
-    spark.sparkContext.addPyFile(zpath)
+    spark.sparkContext.addPyFile(_package_zip())
     _PYFILES_SENT.add(spark)
 
 

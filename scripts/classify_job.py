@@ -24,7 +24,10 @@ Prints per-class counts as one JSON line. ``--tempdir`` (distributed
 mode only) routes the distributed path through StageRunner stage
 tables (resumable, the reference's keepintermediates/tempdir
 lifecycle); ``-o/--output`` writes the mask through the thematic sink
-(plans/sinks.write_mask).
+(plans/sinks.write_mask). The classify plan runs once per job: every
+mode returns its frame cut once (plans/lineage.output_cut), so the
+sink's write computes and caches the rows and the counts read that
+cut (without ``-o`` the counts are its first action).
 
 Precedence note (deliberate inversion vs the reference): the reference
 applies setStrictFmask AFTER all other config setters

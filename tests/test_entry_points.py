@@ -1,7 +1,10 @@
-"""The keyword entry points forward pipeline.Scene's fields, and the
-input registration keeps the session's pass-1 leaves."""
+"""The keyword entry points forward pipeline.Scene's fields, the input
+registration keeps the session's pass-1 leaves, and a classify frame
+runs its plan once."""
 
 from __future__ import annotations
+
+from collections import Counter
 
 import pytest
 
@@ -57,3 +60,33 @@ def test_load_documents_wide_keeps_the_pass1_cache(spark, sf_small):
     sources.load_documents_wide(spark, sf_small)
     assert view in pipeline._PASS1_CACHE.get(spark, set())
     assert sources.registered_input_identity(spark) == ident
+
+
+# the classify entry points, each with the arguments that make it run
+# its whole path on sf0.001 (row_threshold=8 sends cells both ways)
+CLASSIFY = {
+    "classify": lambda spark: pipeline.classify(spark),
+    "classify_auto": lambda spark: pipeline.classify_auto(
+        spark, row_threshold=8),
+    "classify_distributed": lambda spark: classify_distributed(spark),
+}
+
+
+@pytest.mark.parametrize("name", sorted(CLASSIFY))
+def test_classify_runs_its_plan_once(spark, sf_small, name):
+    """After one action on a classify frame, a later aggregate over it
+    reads the cut's cached rows (an ExistingRDD scan) and runs no
+    pandas kernel: the CLI's counts after the sink's write do not run
+    the classify plan a second time."""
+    register_views(spark, sf_small)
+    out = CLASSIFY[name](spark)
+    rows = sorted(map(tuple, out.collect()))
+    agg = out.groupBy("fmask_class").count()
+    counts = {r.fmask_class: r["count"] for r in agg.collect()}
+    plan = agg._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in plan or "LogicalRDD" in plan, plan
+    for node in ("FlatMapCoGroupsInPandas", "FlatMapGroupsInPandas"):
+        assert node not in plan, plan
+    assert counts == dict(Counter(r[out.columns.index("fmask_class")]
+                                  for r in rows))
+    assert sorted(map(tuple, out.collect())) == rows

@@ -23,6 +23,21 @@ REPO = pathlib.Path(__file__).resolve().parents[1]
 ONE_SHOT_FLAGS = ONE_SHOT_DRIVER_JAVA_OPTIONS.split()
 
 
+class _Context:
+    def __init__(self):
+        self.sent: list[str] = []
+
+    def addPyFile(self, path: str) -> None:
+        self.sent.append(path)
+
+
+class _Session:
+    """A stand-in session: records the files it is asked to ship."""
+
+    def __init__(self):
+        self.sparkContext = _Context()
+
+
 def _builder_options(monkeypatch, **kw) -> dict:
     """get_spark's builder settings, without starting a JVM."""
     monkeypatch.setattr(SparkSession.Builder, "getOrCreate",
@@ -140,17 +155,6 @@ def test_package_ships_to_each_new_session():
 
     from python_fmask_spark.session import ensure_package_on_executors
 
-    class _Context:
-        def __init__(self):
-            self.sent: list[str] = []
-
-        def addPyFile(self, path: str) -> None:
-            self.sent.append(path)
-
-    class _Session:
-        def __init__(self):
-            self.sparkContext = _Context()
-
     for _ in range(20):
         s = _Session()
         ensure_package_on_executors(s)
@@ -159,3 +163,28 @@ def test_package_ships_to_each_new_session():
         assert s.sparkContext.sent[0].endswith(".zip")
         del s
         gc.collect()
+
+
+def test_package_zip_is_the_current_code(monkeypatch, tmp_path):
+    """The zip shipped to executors holds this checkout's files, also
+    when a zip from an earlier process with the same pid (other code)
+    sits at the temp path the zip used to be named by."""
+    import tempfile
+    import zipfile
+
+    from python_fmask_spark.session import ensure_package_on_executors
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    stale = tmp_path / f"python_fmask_spark_{os.getpid()}.zip"
+    with zipfile.ZipFile(stale, "w") as z:
+        z.writestr("python_fmask_spark/pipeline.py", "raise ImportError\n")
+
+    sessions = [_Session(), _Session()]
+    for s in sessions:
+        ensure_package_on_executors(s)
+    (sent,), (again,) = (s.sparkContext.sent for s in sessions)
+    # one zip per code version, under the per-user cache directory
+    assert sent == again and sent.startswith(str(tmp_path))
+    with zipfile.ZipFile(sent) as z:
+        shipped = z.read("python_fmask_spark/pipeline.py")
+    assert shipped == (REPO / "python_fmask_spark" / "pipeline.py").read_bytes()

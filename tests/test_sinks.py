@@ -3,6 +3,9 @@
 
 from __future__ import annotations
 
+import pytest
+from pyspark.sql import DataFrameWriterV2
+
 from python_fmask_spark.plans import sinks
 
 
@@ -53,3 +56,52 @@ def test_write_mask_partitioned_by_cell(spark):
     finally:
         spark.sql("DROP TABLE IF EXISTS test_mask_sink_p")
         spark.sql("DROP TABLE IF EXISTS test_mask_sink_p_rat")
+
+
+def test_provider_check_matches_the_session(spark):
+    """The tier-1 session has the parquet source and no Iceberg."""
+    assert sinks.provider_resolves(spark, "parquet")
+    assert not sinks.provider_resolves(spark, "iceberg")
+
+
+def _write_warned(spark, name: str) -> tuple[str, str]:
+    """write_mask's return value and the text of its one warning."""
+    try:
+        with pytest.warns(RuntimeWarning) as warned:
+            used = sinks.write_mask(_mask_df(spark), name)
+        assert spark.table(name).count() == 64
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        spark.sql(f"DROP TABLE IF EXISTS {name}_rat")
+    (w,) = warned
+    return used, str(w.message)
+
+
+def test_no_iceberg_goes_straight_to_parquet(spark, monkeypatch):
+    """Without Iceberg the sink plans no Iceberg write at all; the
+    fallback's warning and return value are unchanged."""
+    attempts = []
+    writer = DataFrameWriterV2.using
+
+    def using(self, provider):
+        attempts.append(provider)
+        return writer(self, provider)
+
+    monkeypatch.setattr(DataFrameWriterV2, "using", using)
+    used, msg = _write_warned(spark, "test_mask_sink_noice")
+    assert used == "parquet" and attempts == ["parquet", "parquet"]
+    assert msg.startswith("write_mask: provider 'iceberg' unavailable in "
+                          "this session (")
+    assert msg.endswith("downgrading to the session catalog's parquet "
+                        "provider")
+
+
+def test_resolving_iceberg_keeps_the_attempt(spark, monkeypatch):
+    """When the check says the session has Iceberg, the sink tries it
+    and falls back through is_provider_missing as before the check."""
+    monkeypatch.setattr(sinks, "provider_resolves", lambda spark, p: True)
+    used, msg = _write_warned(spark, "test_mask_sink_ice")
+    assert used == "parquet"
+    # the warning carries Spark's own lookup error, not the check's
+    assert "failed to find" in msg.lower() and "iceberg" in msg.lower()
+    assert "no data source resolves" not in msg
