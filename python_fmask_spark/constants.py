@@ -14,15 +14,6 @@ OUTCODE_SHADOW = 3
 OUTCODE_SNOW = 4
 OUTCODE_WATER = 5
 
-CLASS_NAMES = {
-    OUTCODE_NULL: "Null",
-    OUTCODE_CLEAR: "Valid",
-    OUTCODE_CLOUD: "Cloud",
-    OUTCODE_SHADOW: "Cloud Shadow",
-    OUTCODE_SNOW: "Snow",
-    OUTCODE_WATER: "Water",
-}
-
 # ---- Histogram / scaling constants (fmask/fmask.py:224-234,564-565) ----
 BT_OFFSET = 176
 BT_HISTSIZE = 256

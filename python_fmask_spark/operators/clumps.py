@@ -54,8 +54,8 @@ def label_clumps_distributed(df: DataFrame, flag_col: str,
         r = pdf["r"].to_numpy()
         lo = int(r.min())
         h = int(r.max()) - lo + 1
-        arr = np.zeros((h, W), dtype=bool)
-        arr[r - lo, pdf["c"].to_numpy()] = True
+        arr = kernels.raster(r - lo, pdf["c"].to_numpy(), True, (h, W),
+                             False, bool)
         lab, _n = kernels.label_components(
             arr, eight_connected=eight_connected)
         # Globalize: local component id -> its min linear pixel index

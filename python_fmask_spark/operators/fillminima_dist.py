@@ -48,28 +48,27 @@ def _local_fill_from_sources(img: np.ndarray, nullmask: np.ndarray,
 _MAX_ROUNDS = 64
 
 
-def fill_minima_distributed(df: DataFrame, img_col: str,
-                            nullval: int, boundaryval: float = 0.0,
-                            tile_rows: int = C.TILE_SIZE,
-                            boundary_col: str | None = None) -> DataFrame:
+def fill_minima_distributed(df: DataFrame, img_col: str, boundary_col: str,
+                            tile_rows: int = C.TILE_SIZE) -> DataFrame:
     """Fill local minima of a per-cell raster column, tile-parallel.
 
-    df columns: cell_id, r, c, <img_col> (+ ``boundary_col`` for a
-    per-cell boundary value, e.g. the NIR 17.5-percentile DN the
-    reference uses, fmask/fmask.py:806; extra columns are ignored).
-    Returns (cell_id, r, c, <img_col>, ``filled``) — ``filled`` bigint,
-    == <img_col> for null pixels, like the reference. No identity
-    column rides the fixpoint; join url back on (cell_id, r, c). Results equal the whole-scene ``kernels.fill_minima``
-    exactly (property-tested in tests/test_fillminima_dist.py).
+    df columns: cell_id, r, c, <img_col> and ``boundary_col``, the
+    per-cell boundary value (the NIR 17.5-percentile DN the reference
+    uses, fmask/fmask.py:806); extra columns are ignored. A DN of
+    C.REF_NULL_DN is nodata. Returns (cell_id, r, c, <img_col>,
+    ``filled``) — ``filled`` bigint, == <img_col> for null pixels, like
+    the reference. No identity column rides the fixpoint; join url back
+    on (cell_id, r, c). Results equal the whole-scene
+    ``kernels.fill_minima`` exactly (property-tested in
+    tests/test_fillminima_dist.py).
     """
     W = C.SCENE_WIDTH
+    nullval = C.REF_NULL_DN
     spark = df.sparkSession
     ensure_package_on_executors(spark)
 
     # Per-cell extremes, heights and boundary value (small dim table,
     # broadcast back).
-    bval = (f"first({boundary_col})" if boundary_col
-            else f"cast({boundaryval} as double)")
     meta = (df.groupBy("cell_id")
             .agg(F.expr(f"max(case when {img_col} != {nullval} "
                         f"then {img_col} end) AS h_max"),
@@ -81,7 +80,7 @@ def fill_minima_distributed(df: DataFrame, img_col: str,
                         f"else 0 end) = 1 "
                         f"or count(*) < (max(r) + 1) * {C.SCENE_WIDTH} "
                         f"as int) AS cell_has_null"),
-                 F.expr(f"{bval} AS cell_bval")))
+                 F.expr(f"first({boundary_col}) AS cell_bval")))
     # url never rides the fixpoint: each of the up-to-_MAX_ROUNDS halo
     # exchanges would re-ship it as pure passthrough; identity joins
     # back on (cell_id, r, c) at the caller when needed
@@ -114,15 +113,15 @@ def fill_minima_distributed(df: DataFrame, img_col: str,
         cell_has_null = bool(pdf["cell_has_null"].iloc[0])
         b = int(min(max(float(pdf["cell_bval"].iloc[0]), h_min), h_max))
 
-        img = np.zeros((h, W), dtype=np.int64)
-        img[rr - lo, cc] = pdf[img_col].to_numpy()
-        present = np.zeros((h, W), dtype=bool)
-        present[rr - lo, cc] = True
+        img = kernels.raster(rr - lo, cc, pdf[img_col].to_numpy(), (h, W),
+                             0, np.int64)
+        present = kernels.raster(rr - lo, cc, True, (h, W), False, bool)
         nullmask = ~present | (img == nullval)
-        seed = np.full((h, W), _UNSET, dtype=np.int64)
         # halo rows carry their current img2 as sources
-        seed[rr[halo] - lo, cc[halo]] = np.minimum(
-            pdf["img2"].to_numpy()[halo], _UNSET)
+        seed = kernels.raster(
+            rr[halo] - lo, cc[halo],
+            np.minimum(pdf["img2"].to_numpy()[halo], _UNSET), (h, W),
+            _UNSET, np.int64)
         # The reference seeds EITHER the null-adjacent inner ring OR
         # (when the scene has no nulls at all) the raster edge — never
         # both (fmask/fillminima.py:55-65). cell_has_null is the global

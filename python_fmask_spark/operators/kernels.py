@@ -16,6 +16,17 @@ import numpy as np
 from .. import constants as C
 
 
+def raster(rows: np.ndarray, cols: np.ndarray, values, shape: tuple[int, int],
+           fill, dtype) -> np.ndarray:
+    """The one rows -> raster scatter: a ``shape`` raster of ``dtype``
+    holding ``values`` (an array or a scalar) at (rows, cols). Slots no
+    row names (the ghost slots past a cell's last document) keep
+    ``fill``."""
+    out = np.full(shape, fill, dtype=dtype)
+    out[rows, cols] = np.asarray(values).astype(dtype)
+    return out
+
+
 # ---------------------------------------------------------------------------
 # reflect-indexed neighborhood primitives
 # ---------------------------------------------------------------------------
@@ -429,29 +440,13 @@ def cloud_base(bt_cloud: np.ndarray) -> tuple[float, np.ndarray]:
     return t_base, np.round(h_rel * C.CLOUD_HEIGHT_SCALE).astype(np.uint8)
 
 
-def cloud_shape_and_base_temp(
-    clumps: np.ndarray, bt: np.ndarray
-) -> tuple[np.ndarray, dict[int, float]]:
-    """Relative cloud-top height image (uint8, x CLOUD_HEIGHT_SCALE) and
-    per-clump cloud-base temperature (Eqns 22-24)."""
-    cloud_shape = np.zeros(bt.shape, dtype=np.uint8)
-    cloud_base_temp: dict[int, float] = {}
-    ncols = bt.shape[1]
-    for cloud_id, flat_ndx in clump_groups(clumps):
-        ndx = (flat_ndx // ncols, flat_ndx % ncols)
-        t_base, cloud_shape[ndx] = cloud_base(bt[ndx])
-        cloud_base_temp[int(cloud_id)] = t_base
-    return cloud_shape, cloud_base_temp
-
-
 # ---------------------------------------------------------------------------
 # shadow projection + matching (fmask/fmask.py:959-1060, 1188-1308)
 # ---------------------------------------------------------------------------
 
 
 def project_shadow(rows: np.ndarray, cols: np.ndarray, height: np.ndarray,
-                   sun_az: float, sun_zen: float, nrows: int, ncols: int,
-                   x_res: float, y_res: float
+                   sun_az: float, sun_zen: float, nrows: int, ncols: int
                    ) -> tuple[np.ndarray, np.ndarray]:
     """Project one clump's cloud-top pixels (rows, cols; ``height`` in
     CLOUD_HEIGHT_SCALE units) along the sun vector onto the cloud-base
@@ -459,59 +454,56 @@ def project_shadow(rows: np.ndarray, cols: np.ndarray, height: np.ndarray,
     nrows x ncols raster (makeCloudShadowShapes, fmask/fmask.py:1021-1052)."""
     cloud_hgt = C.METRES_PER_KM * height.astype(np.float64) \
         / C.CLOUD_HEIGHT_SCALE
-    x = cols * x_res
-    y = rows * y_res
+    x = cols * C.X_RES
+    y = rows * C.Y_RES
     d = cloud_hgt * np.tan(sun_zen).astype(np.float32)
     x_dash = x - d * float(np.sin(sun_az))
     y_dash = y - d * float(np.cos(sun_az))
-    tr = (y_dash / y_res).astype(np.uint32).clip(0, nrows - 1)
-    tc = (x_dash / x_res).astype(np.uint32).clip(0, ncols - 1)
+    tr = (y_dash / C.Y_RES).astype(np.uint32).clip(0, nrows - 1)
+    tc = (x_dash / C.X_RES).astype(np.uint32).clip(0, ncols - 1)
     return tr, tc
 
 
-def make_shadow_shapes(
-    clumps: np.ndarray,
-    cloud_shape: np.ndarray,
-    angles: dict[str, float],
-    x_res: float = C.X_RES,
-    y_res: float = C.Y_RES,
-    sat_az_img: np.ndarray | None = None,
-    sat_zen_img: np.ndarray | None = None,
-) -> dict[int, tuple[tuple[np.ndarray, np.ndarray], float, float, float, float]]:
-    """Shadow templates of every clump (makeCloudShadowShapes,
-    fmask/fmask.py:959-1060; the cheap cloud-top-only variant,
-    duplicates kept, fmask/fmask.py:1021-1052).
+def clump_shadow(rows: np.ndarray, cols: np.ndarray, bt: np.ndarray | None,
+                 sat_az_cdn: np.ndarray, sat_zen_cdn: np.ndarray,
+                 sun_az: float, sun_zen: float, shape: tuple[int, int]
+                 ) -> tuple[float, np.ndarray, tuple]:
+    """One clump's shadow step, the body of the reference's per-clump
+    loops (cloudShapeFunc, fmask/fmask.py:896-951; makeCloudShadowShapes,
+    :959-1060, the cheap cloud-top-only variant with duplicates kept,
+    :1021-1052). ``rows``/``cols`` are the clump's pixels in scan order
+    and ``bt``, ``sat_az_cdn``, ``sat_zen_cdn`` their brightness
+    temperatures and view-angle DNs. Returns (t_base, heights, entry):
+    the cloud-base temperature, the uint8 relative heights
+    (x CLOUD_HEIGHT_SCALE) and match_one_shadow's ``shadow_entry``.
 
-    ``sat_az_img``/``sat_zen_img`` (radians): per-pixel view-angle grids
-    (the makeAngles stack); when given, each clump's sat angles are the
-    mean over its pixels — AnglesFileInfo.getView*Angle semantics
-    (fmask/config.py:736-746, fmask/fmask.py:982-985). Otherwise the
-    constant ``angles`` values are used (AnglesByPoint variant)."""
-    nrows, ncols = clumps.shape
-    sun_az, sun_zen = angles["sun_az"], angles["sun_zen"]
-    out = {}
-    for cloud_id, flat_ndx in clump_groups(clumps):
-        ndx = (flat_ndx // ncols, flat_ndx % ncols)
-        if sat_az_img is not None:
-            sat_az = float(sat_az_img[ndx].mean())
-            sat_zen = float(sat_zen_img[ndx].mean())
-        else:
-            sat_az, sat_zen = angles["sat_az"], angles["sat_zen"]
-        tr, tc = project_shadow(ndx[0], ndx[1], cloud_shape[ndx], sun_az,
-                                sun_zen, nrows, ncols, x_res, y_res)
-        out[int(cloud_id)] = ((tr, tc), sat_az, sat_zen, sun_az, sun_zen)
-    return out
+    ``bt=None`` is the no-thermal regime: the cloud is a flat 2-D shape
+    with a NaN base temperature (fmask/fmask.py:913-951 else-branch).
+    The view angles are the mean of the pixels' DNs x 0.01 rad
+    (AnglesFileInfo scaleToRadians and getView*Angle, fmask/config.py:691,
+    736-746; fmask/fmask.py:982-985)."""
+    if bt is None:
+        t_base, heights = float("nan"), np.zeros(len(rows), dtype=np.uint8)
+    else:
+        t_base, heights = cloud_base(bt)
+    sat_az = float((np.asarray(sat_az_cdn).astype(np.int64) * 0.01).mean())
+    sat_zen = float((np.asarray(sat_zen_cdn).astype(np.int64) * 0.01).mean())
+    tr, tc = project_shadow(rows, cols, heights, sun_az, sun_zen, *shape)
+    return t_base, heights, ((tr, tc), sat_az, sat_zen, sun_az, sun_zen)
 
 
 def shadow_sweep(t_cloudbase: float, t_low, t_high, sun_az: float,
-                 sun_zen: float, sat_az: float, sat_zen: float,
-                 x_res: float, y_res: float):
+                 sun_zen: float, sat_az: float, sat_zen: float):
     """The height sweep of matchOneShadow (fmask/fmask.py:1188-1246):
     returns (num_steps, place), where ``place(i)`` is step i's
     (row_off, col_off) template shift. The offsets are linear in i, so
     the end placements bound the intermediate ones (scene_dist sizes its
     search windows from them). ``t_low``/``t_high`` None means the scene
-    has no thermal thresholds."""
+    has no thermal thresholds; a NaN ``t_cloudbase`` (clump_shadow's
+    no-thermal regime) sweeps from 0, as matchShadows does with an empty
+    cloudBaseTemp (fmask/fmask.py:1148-1152)."""
+    if np.isnan(t_cloudbase):
+        t_cloudbase = 0.0
     if t_low is None:
         t_low = 0.0
     if t_high is None:
@@ -533,7 +525,7 @@ def shadow_sweep(t_cloudbase: float, t_low, t_high, sun_az: float,
     y_off_min, y_off_max = d_min * cos_sun_az, d_max * cos_sun_az
 
     longest_shift = max(abs(x_off_max - x_off_min), abs(y_off_max - y_off_min))
-    num_steps = max(1, int(np.ceil(longest_shift / x_res)))
+    num_steps = max(1, int(np.ceil(longest_shift / C.X_RES)))
     x_step = (x_off_max - x_off_min) / num_steps
     y_step = (y_off_max - y_off_min) / num_steps
 
@@ -543,7 +535,7 @@ def shadow_sweep(t_cloudbase: float, t_low, t_high, sun_az: float,
         x_view, y_view = d_view * sin_sat_az, d_view * cos_sat_az
         x_off = x_off_min + i * x_step - x_view
         y_off = y_off_min + i * y_step - y_view
-        return int(y_off / y_res), int(x_off / x_res)
+        return int(y_off / C.Y_RES), int(x_off / C.X_RES)
 
     return num_steps, place
 
@@ -555,8 +547,6 @@ def match_one_shadow(
     t_cloudbase: float,
     t_low,
     t_high,
-    x_res: float,
-    y_res: float,
     nullmask: np.ndarray,
     row0: int = 0,
     img_nrows: int | None = None,
@@ -575,13 +565,13 @@ def match_one_shadow(
         img_nrows = band_nrows
     (shape_ndx, sat_az, sat_zen, sun_az, sun_zen) = shadow_entry
     num_steps, place = shadow_sweep(t_cloudbase, t_low, t_high, sun_az,
-                                    sun_zen, sat_az, sat_zen, x_res, y_res)
+                                    sun_zen, sat_az, sat_zen)
 
     trow0, trow_n = int(shape_ndx[0].min()), int(shape_ndx[0].max())
     tcol0, tcol_n = int(shape_ndx[1].min()), int(shape_ndx[1].max())
     nrows, ncols = trow_n - trow0 + 1, tcol_n - tcol0 + 1
-    shadow_template = np.zeros((nrows, ncols), dtype=bool)
-    shadow_template[shape_ndx[0] - trow0, shape_ndx[1] - tcol0] = True
+    shadow_template = raster(shape_ndx[0] - trow0, shape_ndx[1] - tcol0,
+                             True, (nrows, ncols), False, bool)
 
     best_similarity = 0.0
     best_rc = (0, 0)

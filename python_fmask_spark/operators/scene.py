@@ -15,6 +15,7 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 
+from .. import bitpack
 from .. import constants as C
 from . import kernels
 
@@ -62,10 +63,9 @@ class FmaskParams:
         return cls(**base)
 
 
-def _to_raster(pdf: pd.DataFrame, col: str, H: int, W: int, fill, dtype):
-    arr = np.full((H, W), fill, dtype=dtype)
-    arr[pdf["r"].to_numpy(), pdf["c"].to_numpy()] = pdf[col].to_numpy().astype(dtype)
-    return arr
+def _opt(v) -> float | None:
+    """A nullable threshold as the kernels expect it: NaN/None -> None."""
+    return None if pd.isna(v) else float(v)
 
 
 def classify_scene(pdf: pd.DataFrame, params: FmaskParams = FmaskParams(),
@@ -77,29 +77,39 @@ def classify_scene(pdf: pd.DataFrame, params: FmaskParams = FmaskParams(),
                        (cloudFinalPass, fmask/fmask.py:722-778)
       potential shadow = fillMinima on NIR + Eqn19 (fmask/fmask.py:781-830)
       clumps         = 8-conn label (fmask/fmask.py:833-844)
-      3-D clouds     = Eqns 22-24 (fmask/fmask.py:896-951)
-      shadow shapes  = sun-vector projection (fmask/fmask.py:959-1060)
-      shadow match   = height sweep, accept sim > 0.3 (fmask/fmask.py:1100-1308)
+      per clump      = kernels.clump_shadow (3-D cloud, Eqns 22-24, and
+                       its sun-vector shadow template; fmask/fmask.py:
+                       896-1060), then the height-sweep match, accept
+                       sim > 0.3 (fmask/fmask.py:1100-1308)
       finalize       = buffers + precedence merge (fmask/fmask.py:1357-1396)
-    """
-    H = int(pdf["r"].max()) + 1
+
+    Without thermal the clouds are flat 2-D shapes and every match runs
+    at Tcloudbase = 0 (fmask/fmask.py:913-951 else-branch,
+    matchShadows:1148-1152); scene_dist's clump kernel calls the same
+    clump_shadow."""
+    rr = pdf["r"].to_numpy()
+    cc = pdf["c"].to_numpy()
+    H = int(rr.max()) + 1
     W = C.SCENE_WIDTH
 
+    def raster(col, fill, dtype):
+        return kernels.raster(rr, cc, pdf[col].to_numpy(), (H, W), fill,
+                              dtype)
+
     # Ghost slots (beyond the last document) are null pixels.
-    nullmask = np.ones((H, W), dtype=bool)
-    nullmask[pdf["r"].to_numpy(), pdf["c"].to_numpy()] = \
-        pdf["nullmask"].to_numpy().astype(bool)
-    cloud_raw = _to_raster(pdf, "cloud_raw", H, W, False, bool)
-    water = _to_raster(pdf, "water_test", H, W, False, bool)
-    snow = _to_raster(pdf, "snow", H, W, False, bool)
-    nir_dn = _to_raster(pdf, "nir", H, W, 0, np.int64)
-    bt = _to_raster(pdf, "bt", H, W, 0.0, np.float64)
+    nullmask = raster("nullmask", True, bool)
+    cloud_raw = raster("cloud_raw", False, bool)
+    water = raster("water_test", False, bool)
+    snow = raster("snow", False, bool)
+    nir_dn = raster("nir", 0, np.int64)
+    bt = raster("bt", 0.0, np.float64)
+    sat_az_cdn = raster("sat_az_cdn", 0, np.int64)
+    sat_zen_cdn = raster("sat_zen_cdn", 0, np.int64)
 
     row0 = pdf.iloc[0]
-    t_low = None if pd.isna(row0["g_tlow"]) else float(row0["g_tlow"])
-    t_high = None if pd.isna(row0["g_thigh"]) else float(row0["g_thigh"])
+    t_low, t_high = _opt(row0["g_tlow"]), _opt(row0["g_thigh"])
     b4_17 = float(row0["g_b4_17"])
-    angles = {k: float(row0[k]) for k in ("sun_az", "sun_zen", "sat_az", "sat_zen")}
+    sun_az, sun_zen = float(row0["sun_az"]), float(row0["sun_zen"])
 
     # --- interim cloud mask (cloudFinalPass tail, fmask/fmask.py:761-776)
     cloudmask = cloud_raw.copy()
@@ -121,39 +131,20 @@ def classify_scene(pdf: pd.DataFrame, params: FmaskParams = FmaskParams(),
     # --- clump clouds (fmask/fmask.py:833-844, 8-connected)
     clumps, _n = kernels.label_components(cloudmask, eight_connected=True)
 
-    # --- 3-D clouds (fmask/fmask.py:896-951). Without thermal the
-    # clouds are flat 2-D shapes — cloudShape all zero, cloudBaseTemp
-    # EMPTY so every shadow match runs at Tcloudbase = 0
-    # (fmask/fmask.py:913-951 else-branch + matchShadows:1148-1152).
-    if has_thermal:
-        cloud_shape, base_temp = \
-            kernels.cloud_shape_and_base_temp(clumps, bt)
-    else:
-        cloud_shape = np.zeros(clumps.shape, dtype=np.uint8)
-        base_temp = {}
-    bt_lut = np.full(int(clumps.max()) + 1, np.nan)
-    for cid, tb in base_temp.items():
-        bt_lut[cid] = tb
-    base_temp_img = bt_lut[clumps]
-
-    # --- shadow shapes + matching (fmask/fmask.py:959-1060,1100-1185)
-    # Per-pixel view angles from the makeAngles DN stack (P28): each
-    # clump's sat angles are the mean over its pixels x 0.01 rad
-    # (AnglesFileInfo scaleToRadians, fmask/config.py:691,736-746).
-    sat_az_img = sat_zen_img = None
-    if "sat_az_cdn" in pdf.columns:
-        sat_az_img = _to_raster(pdf, "sat_az_cdn", H, W, 0, np.int64) * 0.01
-        sat_zen_img = _to_raster(pdf, "sat_zen_cdn", H, W, 0, np.int64) * 0.01
-    shapes = kernels.make_shadow_shapes(clumps, cloud_shape, angles,
-                                        C.X_RES, C.Y_RES,
-                                        sat_az_img=sat_az_img,
-                                        sat_zen_img=sat_zen_img)
+    # --- per clump: 3-D cloud, shadow template and match
+    # (fmask/fmask.py:896-1060,1100-1185)
+    cloud_shape = np.zeros((H, W), dtype=np.uint8)
+    base_temp_img = np.full((H, W), np.nan)
     shadowmask = np.zeros((H, W), dtype=bool)
-    for cloud_id, entry in shapes.items():
-        t_base = base_temp.get(cloud_id, 0)
+    for _cloud_id, flat_ndx in kernels.clump_groups(clumps):
+        ndx = (flat_ndx // W, flat_ndx % W)
+        t_base, cloud_shape[ndx], entry = kernels.clump_shadow(
+            ndx[0], ndx[1], bt[ndx] if has_thermal else None,
+            sat_az_cdn[ndx], sat_zen_cdn[ndx], sun_az, sun_zen, (H, W))
+        base_temp_img[ndx] = t_base
         matched = kernels.match_one_shadow(
             cloudmask, entry, potential_shadow, t_base, t_low, t_high,
-            C.X_RES, C.Y_RES, nullmask)
+            nullmask)
         if matched is not None:
             shadowmask[matched] = True
     if params.shadow_buffer_px > 0:
@@ -169,8 +160,6 @@ def classify_scene(pdf: pd.DataFrame, params: FmaskParams = FmaskParams(),
     out[cloud_final] = C.OUTCODE_CLOUD
     out[nullmask] = C.OUTCODE_NULL
 
-    rr = pdf["r"].to_numpy()
-    cc = pdf["c"].to_numpy()
     cols = {}
     if "url" in pdf.columns:
         # direct (non-pipeline) callers still pass the identity through;
@@ -213,22 +202,18 @@ SCENE_OUT_SCHEMA_SLIM = ("cell_id string, r int, c int, "
                          "fmask_class int, cloud_id bigint, "
                          "cloud_height_du int, cloud_base_temp_c double")
 
-# bitmask layout of the slim exchange's `flags` tinyint
-_FLAG_BITS = (("nullmask", 1), ("water_test", 2), ("snow", 4),
-              ("cloud_raw", 8))
+# the booleans packed into the slim exchange's `flags` tinyint
+_FLAGS = ("nullmask", "water_test", "snow", "cloud_raw")
 
 PX_EXCHANGE_SQL = (
     "cell_id, cast(r as int) AS r, cast(c as int) AS c, "
     "cast(nir as int) AS nir, bt, "
-    "cast(" + " + ".join(f"{bit} * cast({name} as int)"
-                         for name, bit in _FLAG_BITS)
-    + " as tinyint) AS flags, "
+    f"{bitpack.pack_sql(_FLAGS)} AS flags, "
     "cast(sat_az_cdn as int) AS sat_az_cdn, "
     "cast(sat_zen_cdn as int) AS sat_zen_cdn")
 
 # the SQL expressions that unpack `flags` back into its booleans
-FLAGS_SQL = tuple(f"(flags & {bit}) != 0 AS {name}"
-                  for name, bit in _FLAG_BITS)
+FLAGS_SQL = bitpack.unpack_sql(_FLAGS, "flags")
 
 DIM_COLS = ("g_tlow", "g_thigh", "g_b4_17",
             "sun_az", "sun_zen", "sat_az", "sat_zen")
@@ -247,16 +232,14 @@ def unpack_exchange(px: pd.DataFrame, dims: pd.DataFrame) -> pd.DataFrame:
     """Reconstitute the full-width per-cell frame classify_scene expects
     from the slim pixel frame + 1-row cell dim frame (pure pandas column
     assignment — no Arrow cost; scalar assignment broadcasts)."""
-    flags = px["flags"].to_numpy()
     pdf = pd.DataFrame({
         "cell_id": px["cell_id"].to_numpy(),
         "r": px["r"].to_numpy(), "c": px["c"].to_numpy(),
         "nir": px["nir"].to_numpy(), "bt": px["bt"].to_numpy(),
         "sat_az_cdn": px["sat_az_cdn"].to_numpy(),
         "sat_zen_cdn": px["sat_zen_cdn"].to_numpy(),
+        **bitpack.unpack(px["flags"].to_numpy(), _FLAGS),
     })
-    for name, bit in _FLAG_BITS:
-        pdf[name] = (flags & bit) != 0
     d0 = dims.iloc[0]
     for k in DIM_COLS:
         pdf[k] = d0[k]

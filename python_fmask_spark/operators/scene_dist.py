@@ -5,7 +5,7 @@
 mega-cell is a straggler/OOM unit. This module re-expresses the same
 chain with every stage's task grain BOUNDED regardless of cell size,
 mirroring the reference's own per-clump independence (matchShadows
-loops clumps independently, /root/reference/fmask/fmask.py:1100-1185):
+loops clumps independently, fmask/fmask.py:1100-1185):
 
   stage 1  morphology        tiled (cell_id, tile) halo kernel
   stage 2  potential shadow  distributed fill-minima (tile fixpoint)
@@ -28,10 +28,10 @@ two view-angle DNs); the fill boundary and the stage-4/5 kernels get
 their per-cell scalars by a broadcast join of the dims frame, and the
 identity frame joins back once at the end.
 
-Stages 4-5 run the whole-cell kernel's own functions
-(kernels.cloud_base, project_shadow, shadow_sweep, match_one_shadow on a
-row band), so both classify paths share one copy of the shadow
-algorithm and its arithmetic.
+Stage 4 calls kernels.clump_shadow on each clump, the per-clump step
+classify_scene loops over a cell's clumps; stage 5 calls
+kernels.match_one_shadow on a row band. Both classify paths thus share
+one copy of the shadow algorithm and its arithmetic.
 
 Task-grain bounds: stages 1-3 and 6 are bounded by TILE (independent
 of cell size); stages 4-5 are bounded by CLUMP extent — the
@@ -70,15 +70,10 @@ from ..session import ensure_package_on_executors
 from . import kernels
 from .clumps import drop_small_clouds, label_clumps_distributed
 from .fillminima_dist import fill_minima_distributed
-from .scene import FLAGS_SQL
+from .scene import FLAGS_SQL, _opt
 
 if TYPE_CHECKING:
     from ..pipeline import Scene
-
-
-def _opt(v) -> float | None:
-    """A nullable Spark double as the kernels expect it: NaN/None -> None."""
-    return None if pd.isna(v) else float(v)
 
 
 # stage-4 per-pixel output: 3-D shape + projection, one row per clump
@@ -92,39 +87,28 @@ _PX_SCHEMA = ("cell_id string, cloud_id bigint, r int, c int, "
 
 def _clump_kernel(pdf: pd.DataFrame,
                   has_thermal: bool = True) -> pd.DataFrame:
-    """One clump's 3-D cloud (kernels.cloud_base), shadow template
-    (kernels.project_shadow) and search window: the rows the height
-    sweep's end placements (kernels.shadow_sweep) span. The scan-order
-    sort reproduces the whole-cell kernel's pixel order bit-for-bit.
-    Without thermal the cloud is a flat 2-D shape and the match runs at
-    Tcloudbase = 0 with NaN reported as the base temperature, matching
-    classify_scene's no-thermal regime (fmask/fmask.py:913-951,
-    matchShadows:1148-1152)."""
+    """One clump's shadow step (kernels.clump_shadow, the call
+    classify_scene makes per clump, with ``bt=None`` as its no-thermal
+    regime) and its search window: the rows the height sweep's end
+    placements (kernels.shadow_sweep) span. The scan-order sort
+    reproduces the whole-cell kernel's pixel order bit-for-bit."""
     pdf = pdf.sort_values(["r", "c"]).reset_index(drop=True)
     n_pix = len(pdf)
-    if has_thermal:
-        t_base, height_du = kernels.cloud_base(pdf["bt"].to_numpy())
-    else:
-        t_base = float("nan")
-        height_du = np.zeros(n_pix, dtype=np.uint8)
-
     g0 = pdf.iloc[0]
-    sun_az, sun_zen = float(g0["sun_az"]), float(g0["sun_zen"])
-    sat_az = float((pdf["sat_az_cdn"].to_numpy().astype(np.int64)
-                    * 0.01).mean())
-    sat_zen = float((pdf["sat_zen_cdn"].to_numpy().astype(np.int64)
-                     * 0.01).mean())
     rows = pdf["r"].to_numpy()
-    tr, tc = kernels.project_shadow(
-        rows, pdf["c"].to_numpy(), height_du, sun_az, sun_zen,
-        int(g0["cell_rows"]), C.SCENE_WIDTH, C.X_RES, C.Y_RES)
+    t_base, height_du, entry = kernels.clump_shadow(
+        rows, pdf["c"].to_numpy(),
+        pdf["bt"].to_numpy() if has_thermal else None,
+        pdf["sat_az_cdn"].to_numpy(), pdf["sat_zen_cdn"].to_numpy(),
+        float(g0["sun_az"]), float(g0["sun_zen"]),
+        (int(g0["cell_rows"]), C.SCENE_WIDTH))
+    (tr, tc), sat_az, sat_zen, sun_az, sun_zen = entry
 
     # The match calls shadow_sweep again on the same doubles, so these
     # end placements are exactly the ones it will try.
     num_steps, place = kernels.shadow_sweep(
-        t_base if has_thermal else 0.0, _opt(g0["g_tlow"]),
-        _opt(g0["g_thigh"]), sun_az, sun_zen, sat_az, sat_zen,
-        C.X_RES, C.Y_RES)
+        t_base, _opt(g0["g_tlow"]), _opt(g0["g_thigh"]), sun_az, sun_zen,
+        sat_az, sat_zen)
     trow0 = int(tr.min())
     ends = [trow0 - place(i)[0] for i in (0, num_steps - 1)]
     win_r0 = max(0, min(ends))
@@ -147,6 +131,9 @@ def _clump_kernel(pdf: pd.DataFrame,
 
 
 _MATCH_SCHEMA = "cell_id string, r int, c int"
+_NO_MATCH = pd.DataFrame({"cell_id": pd.Series(dtype=object),
+                          "r": pd.Series(dtype=np.int32),
+                          "c": pd.Series(dtype=np.int32)})
 
 
 def _match_band_kernel(left: pd.DataFrame, right: pd.DataFrame
@@ -162,41 +149,36 @@ def _match_band_kernel(left: pd.DataFrame, right: pd.DataFrame
     independent tasks), mirroring the reference's independent per-clump
     loop (fmask/fmask.py:1100-1185) at a grouped grain."""
     if left.empty or right.empty:
-        return pd.DataFrame({"cell_id": pd.Series(dtype=object),
-                             "r": pd.Series(dtype=np.int32),
-                             "c": pd.Series(dtype=np.int32)})
-    W = C.SCENE_WIDTH
+        return _NO_MATCH
     H = int(left["cell_rows"].iloc[0])
     wr = right["r"].to_numpy()
     win_r0 = int(wr.min())
-    wh = int(wr.max()) - win_r0 + 1
-    cloud = np.zeros((wh, W), dtype=bool)
-    pot = np.zeros((wh, W), dtype=bool)
-    null = np.ones((wh, W), dtype=bool)  # ghost slots are null
-    wc = right["c"].to_numpy()
-    cloud[wr - win_r0, wc] = right["cloudmask"].to_numpy().astype(bool)
-    pot[wr - win_r0, wc] = right["potential_shadow"].to_numpy().astype(bool)
-    null[wr - win_r0, wc] = right["nullmask"].to_numpy().astype(bool)
+    shape = (int(wr.max()) - win_r0 + 1, C.SCENE_WIDTH)
+
+    def raster(col, fill):
+        return kernels.raster(wr - win_r0, right["c"].to_numpy(),
+                              right[col].to_numpy(), shape, fill, bool)
+
+    cloud = raster("cloudmask", False)
+    pot = raster("potential_shadow", False)
+    null = raster("nullmask", True)  # ghost slots are null
 
     out_r: list[np.ndarray] = []
     out_c: list[np.ndarray] = []
     for _cid, grp in left.groupby("cloud_id", sort=True):
         g0 = grp.iloc[0]
-        t_base = float(g0["base_temp_c"])
         entry = ((grp["tr"].to_numpy(), grp["tc"].to_numpy()),
                  float(g0["sat_az_m"]), float(g0["sat_zen_m"]),
                  float(g0["sun_az"]), float(g0["sun_zen"]))
         res = kernels.match_one_shadow(
-            cloud, entry, pot, 0.0 if np.isnan(t_base) else t_base,
-            _opt(g0["g_tlow"]), _opt(g0["g_thigh"]), C.X_RES, C.Y_RES,
-            null, row0=win_r0, img_nrows=H)
+            cloud, entry, pot, float(g0["base_temp_c"]),
+            _opt(g0["g_tlow"]), _opt(g0["g_thigh"]), null, row0=win_r0,
+            img_nrows=H)
         if res is not None:
             out_r.append(res[0].astype(np.int32))
             out_c.append(res[1].astype(np.int32))
     if not out_r:
-        return pd.DataFrame({"cell_id": pd.Series(dtype=object),
-                             "r": pd.Series(dtype=np.int32),
-                             "c": pd.Series(dtype=np.int32)})
+        return _NO_MATCH
     rr = np.concatenate(out_r)
     cc = np.concatenate(out_c)
     return pd.DataFrame({
@@ -282,8 +264,7 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
             "cell_id", f"g_b4_17 * {C.TOA_SCALE} AS nir17_dn")), "cell_id")
         .select("cell_id", "r", "c",
                 F.expr("cast(nir as bigint) as nir"), "nir17_dn"),
-        "nir", nullval=C.REF_NULL_DN, boundary_col="nir17_dn",
-        tile_rows=fill_tile)
+        "nir", "nir17_dn", tile_rows=fill_tile)
     pot = filled.selectExpr(
         "cell_id", "r", "c",
         # two-division form (filled/scale - nir/scale) matches

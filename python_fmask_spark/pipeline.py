@@ -301,6 +301,7 @@ def interim_class_kernel(spark: SparkSession, table: str = "documents",
     JVM-side instead of riding through the Python kernels."""
     from pyspark.sql import functions as F
 
+    from . import constants as C
     from . import tiling
     from .operators import kernels
     from .operators.clumps import drop_small_clouds
@@ -337,11 +338,11 @@ def interim_class_kernel(spark: SparkSession, table: str = "documents",
         "cell_id", "r", "c", "cloud_raw", "cloud_m", "clouddil",
         "nullmask", "water_test", "snow",
         F.expr(f"""cast(case
-            when nullmask then {0}
-            when clouddil then {2}
-            when snow then {4}
-            when water_test then {5}
-            else {1} end as int)""").alias("fmask_class"))
+            when nullmask then {C.OUTCODE_NULL}
+            when clouddil then {C.OUTCODE_CLOUD}
+            when snow then {C.OUTCODE_SNOW}
+            when water_test then {C.OUTCODE_WATER}
+            else {C.OUTCODE_CLEAR} end as int)""").alias("fmask_class"))
     return (out.join(ident, ["cell_id", "r", "c"])
             .select("url", "cell_id", "r", "c", "cloud_raw", "cloud_m",
                     "clouddil", "nullmask", "water_test", "snow",
@@ -388,15 +389,12 @@ def _cdi_kernel(pdf):
     from . import constants as C
     from .operators import kernels
 
-    H = int(pdf["r"].max()) + 1
-    W = C.SCENE_WIDTH
     rr = pdf["r"].to_numpy()
     cc = pdf["c"].to_numpy()
+    shape = (int(rr.max()) + 1, C.SCENE_WIDTH)
 
     def rast(col, fill, dtype):
-        a = np.full((H, W), fill, dtype=dtype)
-        a[rr, cc] = pdf[col].to_numpy().astype(dtype)
-        return a
+        return kernels.raster(rr, cc, pdf[col].to_numpy(), shape, fill, dtype)
 
     pcp6 = rast("pcp6", False, bool)
     null = rast("nullmask", True, bool)

@@ -91,7 +91,6 @@ def write_mask(df: DataFrame, name: str) -> str:
         "fmask.color_table": json.dumps(COLOR_TABLE),
         "fmask.class_names": json.dumps(CLASS_NAMES),
     }
-    staging = f"{name}__staging"
 
     def looks_like_managed_mask_output(path: str) -> bool:
         # Refuse to delete a directory that merely SHARES the table's
@@ -131,33 +130,39 @@ def write_mask(df: DataFrame, name: str) -> str:
                 and looks_like_managed_mask_output(path):
             shutil.rmtree(path, ignore_errors=True)
 
-    def attempt(provider: str) -> None:
+    def replace(tbl: str, frame: DataFrame, provider: str,
+                mask: bool) -> None:
+        # ``mask``: the mask table, partitioned by cell_id and carrying
+        # the thematic TBLPROPERTIES; otherwise the RAT dimension table
         from pyspark.sql import functions as F
         # Atomic-ish replace without RTAS (the V1 session catalog — the
         # parquet fallback — has no createOrReplace): create under a
         # staging name first, and only drop + rename once the create has
         # SUCCEEDED — a failed create leaves the previous table intact.
         # KNOWN WINDOW: between the DROP below and the RENAME there is
-        # no live table under ``name``; a crash in that window leaves
+        # no live table under ``tbl``; a crash in that window leaves
         # the finished staging table to recover from manually. True
         # atomic swap needs a V2/Iceberg catalog (REPLACE TABLE).
+        staging = f"{tbl}__staging"
         spark.sql(f"DROP TABLE IF EXISTS {staging}")
         clear_stale_location(staging)
-        clear_stale_location(name)
-        w = df.writeTo(staging).using(provider).partitionedBy(
-            F.col("cell_id"))
-        for k, v in props.items():
-            w = w.tableProperty(k, v)
+        clear_stale_location(tbl)
+        w = frame.writeTo(staging).using(provider)
+        if mask:
+            w = w.partitionedBy(F.col("cell_id"))
+            for k, v in props.items():
+                w = w.tableProperty(k, v)
         w.create()
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        spark.sql(f"ALTER TABLE {staging} RENAME TO {name}")
-        try:
-            # The V1 catalog drops the partition registry on rename;
-            # recover it. Iceberg/unpartitioned providers don't need (or
-            # support) MSCK — ignore.
-            spark.sql(f"MSCK REPAIR TABLE {name}")
-        except Exception:
-            pass
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        spark.sql(f"ALTER TABLE {staging} RENAME TO {tbl}")
+        if mask:
+            try:
+                # The V1 catalog drops the partition registry on rename;
+                # recover it. Iceberg/unpartitioned providers don't need
+                # (or support) MSCK — ignore.
+                spark.sql(f"MSCK REPAIR TABLE {tbl}")
+            except Exception:
+                pass
 
     def is_provider_missing(e: Exception) -> bool:
         # Only the "Iceberg isn't installed in this session" error class
@@ -172,7 +177,7 @@ def write_mask(df: DataFrame, name: str) -> str:
     missing = None
     if provider_resolves(spark, used):
         try:
-            attempt(used)
+            replace(name, df, used, mask=True)
         except Exception as e:
             if not is_provider_missing(e):
                 raise
@@ -186,14 +191,9 @@ def write_mask(df: DataFrame, name: str) -> str:
             f"({missing}); downgrading to the session catalog's parquet "
             f"provider", RuntimeWarning, stacklevel=2)
         used = "parquet"
-        attempt(used)
+        replace(name, df, used, mask=True)
 
-    spark.sql(f"DROP TABLE IF EXISTS {name}_rat__staging")
-    clear_stale_location(f"{name}_rat__staging")
-    clear_stale_location(f"{name}_rat")
-    class_rat_df(spark).writeTo(f"{name}_rat__staging").using(used).create()
-    spark.sql(f"DROP TABLE IF EXISTS {name}_rat")
-    spark.sql(f"ALTER TABLE {name}_rat__staging RENAME TO {name}_rat")
+    replace(f"{name}_rat", class_rat_df(spark), used, mask=False)
     return used
 
 

@@ -343,9 +343,7 @@ def _bilinear(prefix: str, col: str, fy: str, fx: str) -> str:
 
 def s2_grid_angle_parts(d: str, meta: Sen2TileMeta, px_src: str,
                         carry: tuple[str, ...] = ("url", "cell_id", "r", "c"),
-                        cells_src: str | None = None,
-                        x_res: float | None = None,
-                        y_res: float | None = None) -> tuple[str, str]:
+                        cells_src: str | None = None) -> tuple[str, str]:
     """(ctes, final_select) computing the 8 grid-derived angle columns
     for every row of ``px_src`` (must expose cell_id, r, c). Embed as
     ``WITH {features...}, {ctes}, out AS ({final_select})``; ``carry``
@@ -358,7 +356,7 @@ def s2_grid_angle_parts(d: str, meta: Sen2TileMeta, px_src: str,
     Semantics ([spec] — engine quantization/layout choices):
       * each cell anchors at a deterministic fractional grid point
         (md5(cell_id)-derived, uniform over the grid interior), its
-        pixels advancing from the anchor at x/y_res metres per pixel
+        pixels advancing from the anchor at C.X_RES/C.Y_RES metres per pixel
         over the 5000 m grid step — one tile XML serves every cell the
         way one MTL serves every window in the reference;
       * per-cell sun/view radians (sun_az..sat_zen) interpolate AT the
@@ -377,8 +375,6 @@ def s2_grid_angle_parts(d: str, meta: Sen2TileMeta, px_src: str,
     sz = meta.sun_zenith_grid
     gh, gw = sz.shape
     gh1, gw1 = gh - 1, gw - 1
-    xres = C.X_RES if x_res is None else x_res
-    yres = C.Y_RES if y_res is None else y_res
     gres = ANGLE_GRID_RES_M
     ay = md5_slice_int("cell_id", 21, 6, d)
     ax = md5_slice_int("cell_id", 27, 6, d)
@@ -425,9 +421,9 @@ s2ang_px AS (
     gy - floor(gy) AS pfy, gx - floor(gx) AS pfx
   FROM (
     SELECT {dim_hint}b.*, d.g_sun_az, d.g_sun_zen, d.g_sat_az, d.g_sat_zen,
-      greatest(0.0, least(d.cgy + ((b.r + 0.5) * {yres} / {gres}),
+      greatest(0.0, least(d.cgy + ((b.r + 0.5) * {C.Y_RES} / {gres}),
                           {gh1} - 1e-9)) AS gy,
-      greatest(0.0, least(d.cgx + ((b.c + 0.5) * {xres} / {gres}),
+      greatest(0.0, least(d.cgx + ((b.c + 0.5) * {C.X_RES} / {gres}),
                           {gw1} - 1e-9)) AS gx
     FROM {px_src} b JOIN s2ang_cdim d ON d.cell_id = b.cell_id
   ) s2ang_b

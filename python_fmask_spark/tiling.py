@@ -24,7 +24,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import bitpack
 from . import constants as C
+from .operators import kernels
 from .session import ensure_package_on_executors
 
 
@@ -79,9 +81,8 @@ def tiled_neighborhood(
     Rows are keyed (cell_id, r, c): callers join other columns (url,
     digests) back on that key instead of shipping them through the halo
     sort. Every boolean input/passthrough column rides the exchange
-    packed into ONE tinyint bitmask: the sort feeding applyInPandas
-    stores each field in an 8-byte UnsafeRow slot, so k booleans would
-    cost 8k bytes there; the kernel and the output see plain booleans."""
+    packed into ONE tinyint (the bitpack format); the kernel and the
+    output see plain booleans."""
     W = C.SCENE_WIDTH
     ensure_package_on_executors(df.sparkSession)
     passthrough = tuple(p for p in passthrough if p not in in_cols)
@@ -89,11 +90,8 @@ def tiled_neighborhood(
     data_cols = (*in_cols, *passthrough)
     packed = tuple(n for n in data_cols if dtypes[n] == "boolean")
     unpacked = tuple(n for n in data_cols if n not in packed)
-    pack_expr = " + ".join(f"{1 << i} * cast({n} as int)"
-                           for i, n in enumerate(packed)) or "0"
     haloed = with_halo(df.select(
-        "cell_id", "r", "c",
-        F.expr(f"cast({pack_expr} as tinyint)").alias("_bf"),
+        "cell_id", "r", "c", F.expr(bitpack.pack_sql(packed)).alias("_bf"),
         *unpacked), radius, tile_rows)
 
     schema = ("cell_id string, r int, c int"
@@ -105,14 +103,11 @@ def tiled_neighborhood(
         slab_lo = r.min()
         h = r.max() - slab_lo + 1
         cc_all = pdf["c"].to_numpy()
-        bf = pdf["_bf"].to_numpy()
-        cols = {name: (bf & (1 << i)) != 0 for i, name in enumerate(packed)}
+        cols = bitpack.unpack(pdf["_bf"].to_numpy(), packed)
         cols.update({name: pdf[name].to_numpy() for name in unpacked})
-        slabs = {}
-        for name in in_cols:
-            arr = np.zeros((h, W), dtype=bool)
-            arr[r - slab_lo, cc_all] = cols[name].astype(bool)
-            slabs[name] = arr
+        slabs = {name: kernels.raster(r - slab_lo, cc_all, cols[name],
+                                      (h, W), False, bool)
+                 for name in in_cols}
         res = kernel(slabs)
         core = ~pdf["is_halo"].to_numpy()
         rr = r[core]

@@ -49,9 +49,9 @@ def test_distributed_fill_equals_whole(spark, nulls, tile_rows, bval):
     rows = [("u%s%04d" % (cell, r * W + c), cell, r, c, int(img[r, c]))
             for cell, img in cells.items()
             for r in range(img.shape[0]) for c in range(W)]
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["url", "cell_id", "r", "c", "nir"]))
-    out = fill_minima_distributed(df, "nir", nullval=0, boundaryval=bval,
+    pdf = pd.DataFrame(rows, columns=["url", "cell_id", "r", "c", "nir"])
+    pdf["bval"] = float(bval)
+    out = fill_minima_distributed(spark.createDataFrame(pdf), "nir", "bval",
                                   tile_rows=tile_rows).collect()
     got = {(r.cell_id, r.r, r.c): r.filled for r in out}
     assert len(got) == len(rows)

@@ -82,9 +82,9 @@ def test_mutated_shadow_threshold_is_caught(pass3_cells, monkeypatch):
     orig_match = kernels.match_one_shadow
 
     def loose_match(cloudmask, entry, potential_shadow, t_base, t_low,
-                    t_high, x_res, y_res, nullmask):
+                    t_high, nullmask):
         res = orig_match(cloudmask, entry, potential_shadow, t_base,
-                         t_low, t_high, x_res, y_res, nullmask)
+                         t_low, t_high, nullmask)
         if res is not None:
             return res
         # accept the template at its unshifted position instead of None

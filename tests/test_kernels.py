@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from python_fmask_spark import constants as C
 from python_fmask_spark.operators import kernels
 
 
@@ -120,10 +119,14 @@ def test_cloud_shape_small_clump_uses_min():
     clumps[2:4, 2:4] = 1  # 4 px -> R < 8 -> Tcloudbase = min
     bt = np.full((6, 6), 10.0)
     bt[2, 2] = -3.0
-    shape, base = kernels.cloud_shape_and_base_temp(clumps, bt)
-    assert base[1] == -3.0
+    ((cid, flat),) = kernels.clump_groups(clumps)
+    rows, cols = flat // 6, flat % 6
+    dn = np.zeros(len(flat), dtype=np.int64)
+    base, shape, _entry = kernels.clump_shadow(
+        rows, cols, bt[rows, cols], dn, dn, 0.0, 0.0, clumps.shape)
+    assert cid == 1 and base == -3.0
     # heights: (Tbase - clipped bt)/6.5 ... all bt > base -> clipped to base -> 0
-    assert (shape[clumps == 1] == 0).all()
+    assert (shape == 0).all()
 
 
 def test_shadow_match_known_offset():
@@ -133,19 +136,19 @@ def test_shadow_match_known_offset():
     H = W = 40
     cloudmask = np.zeros((H, W), dtype=bool)
     cloudmask[5:10, 20:25] = True
-    clumps = cloudmask.astype(np.int64)
-    cloud_shape = np.zeros((H, W), dtype=np.uint8)
-    angles = {"sun_az": np.pi / 2, "sun_zen": 0.1, "sat_az": 0.0, "sat_zen": 0.0}
-    shapes = kernels.make_shadow_shapes(clumps, cloud_shape, angles, 30.0, -30.0)
-    assert 1 in shapes
-    (rows, cols), *_ = shapes[1]
+    ((cid, flat),) = kernels.clump_groups(cloudmask.astype(np.int64))
+    dn = np.zeros(len(flat), dtype=np.int64)  # sat angles 0
+    t_base, _heights, entry = kernels.clump_shadow(
+        flat // W, flat % W, None, dn, dn, np.pi / 2, 0.1, (H, W))
+    assert cid == 1 and np.isnan(t_base)  # no thermal: a flat cloud
+    (rows, cols), *_ = entry
     assert rows.min() == 5 and cols.min() == 20  # height 0: template == cloud
     potential = np.zeros((H, W), dtype=bool)
     potential[5:10, 13:18] = True  # 7 px west of the cloud
     null = np.zeros((H, W), dtype=bool)
     matched = kernels.match_one_shadow(
-        cloudmask, shapes[1], potential, t_cloudbase=0.0, t_low=0.0,
-        t_high=10.0, x_res=30.0, y_res=-30.0, nullmask=null)
+        cloudmask, entry, potential, t_cloudbase=0.0, t_low=0.0,
+        t_high=10.0, nullmask=null)
     assert matched is not None
     got = np.zeros((H, W), dtype=bool)
     got[matched] = True
@@ -161,7 +164,6 @@ def test_shadow_match_on_row_band_equals_whole():
     import pytest
 
     H, W = 64, 8
-    x_res, y_res = C.X_RES, C.Y_RES
     temps = (10.0, 5.0, 20.0)  # t_cloudbase, t_low, t_high
     sun_az, sun_zen, sat_az, sat_zen = 0.2, 0.6, 0.3, 0.05
     n_matched = 0
@@ -173,12 +175,11 @@ def test_shadow_match_on_row_band_equals_whole():
         tr = rng.randint(30, 36, size=6).astype(np.uint32)
         tc = rng.randint(2, 5, size=6).astype(np.uint32)
         entry = ((tr, tc), sat_az, sat_zen, sun_az, sun_zen)
-        whole = kernels.match_one_shadow(cloud, entry, pot, *temps,
-                                         x_res, y_res, null)
+        whole = kernels.match_one_shadow(cloud, entry, pot, *temps, null)
 
         # rows of the reachable placements (inside the cell)
         n, place = kernels.shadow_sweep(*temps, sun_az, sun_zen, sat_az,
-                                        sat_zen, x_res, y_res)
+                                        sat_zen)
         tnr = int(tr.max() - tr.min()) + 1
         tnc = int(tc.max() - tc.min()) + 1
         rows = [int(tr.min()) - ro for ro, co in map(place, range(n))
@@ -188,8 +189,8 @@ def test_shadow_match_on_row_band_equals_whole():
         assert 0 < b0 and b1 < H
 
         band = kernels.match_one_shadow(
-            cloud[b0:b1], entry, pot[b0:b1], *temps, x_res, y_res,
-            null[b0:b1], row0=b0, img_nrows=H)
+            cloud[b0:b1], entry, pot[b0:b1], *temps, null[b0:b1],
+            row0=b0, img_nrows=H)
         if whole is None:
             assert band is None
         else:
@@ -199,8 +200,8 @@ def test_shadow_match_on_row_band_equals_whole():
 
         with pytest.raises(AssertionError, match="under-covered"):
             kernels.match_one_shadow(
-                cloud[b0 + 1:b1], entry, pot[b0 + 1:b1], *temps, x_res,
-                y_res, null[b0 + 1:b1], row0=b0 + 1, img_nrows=H)
+                cloud[b0 + 1:b1], entry, pot[b0 + 1:b1], *temps,
+                null[b0 + 1:b1], row0=b0 + 1, img_nrows=H)
     assert n_matched > 0
 
 

@@ -75,7 +75,7 @@ def test_distributed_task_grain_is_bounded(spark, sf_small):
     # directly exercise the sweep the windows come from
     nsteps, place = kernels.shadow_sweep(
         t_cloudbase=10.0, t_low=5.0, t_high=20.0, sun_az=1.0, sun_zen=1.0,
-        sat_az=0.5, sat_zen=0.1, x_res=C.X_RES, y_res=C.Y_RES)
+        sat_az=0.5, sat_zen=0.1)
     ends = [place(0), place(nsteps - 1)]
     spread = abs(ends[0][0] - ends[1][0])
     assert spread <= max_shift_rows
