@@ -21,7 +21,9 @@ from python_fmask_spark import oracle, pipeline  # noqa: E402
 from python_fmask_spark.dialect import DUCKDB, SPARK  # noqa: E402
 from python_fmask_spark.functions import angles, dedup, geo, inventory, multimodal, relational  # noqa: E402
 from python_fmask_spark.functions import curation, sampling, similarity, text as textfn  # noqa: E402
-from python_fmask_spark.operators.scene import FmaskParams  # noqa: E402
+from python_fmask_spark import constants as C  # noqa: E402
+from python_fmask_spark.operators.scene import (  # noqa: E402
+    POTENTIAL_SHADOW_SQL, FmaskParams, class_sql)
 from python_fmask_spark.operators.scene_dist import classify_distributed  # noqa: E402
 from python_fmask_spark.sources import register_views  # noqa: E402
 
@@ -202,9 +204,9 @@ def _potential_shadow_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
         fill_minima_distributed,
     )
     register_views(spark, sf_dir)
-    src = _leaf_tail(spark, "thresholds", """SELECT p.url, p.cell_id, p.r,
+    src = _leaf_tail(spark, "thresholds", f"""SELECT p.url, p.cell_id, p.r,
               p.c, cast(p.nir as bigint) AS nir,
-              t.b4_17 * 10000.0 AS nir17_dn
+              t.b4_17 * {C.TOA_SCALE} AS nir17_dn
             FROM pass1 p JOIN thresholds t ON t.cell_id = p.cell_id"""
                      ).localCheckpoint()
     filled = fill_minima_distributed(src, "nir", "nir17_dn")
@@ -212,11 +214,9 @@ def _potential_shadow_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     # url-free (no passthrough through up to 64 halo rounds)
     return (filled.join(src.select("url", "cell_id", "r", "c"),
                         ["cell_id", "r", "c"])
-            .selectExpr(
-        "url", "cell_id", "r", "c", "nir", "filled",
-        "cast(cast(filled as double) / 10000.0 -"
-        " cast(nir as double) / 10000.0 > 0.02 as int)"
-        " AS potential_shadow"))
+            .selectExpr("url", "cell_id", "r", "c", "nir", "filled",
+                        f"cast({POTENTIAL_SHADOW_SQL} as int)"
+                        " AS potential_shadow"))
 
 
 def _s2_cdi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -369,10 +369,7 @@ FROM read_parquet('{_FIXTURES}/{fixture}')"""
 # itself (66/500 rows differ at sf0.01), not just the smoothed class.
 # name -> (regime, output expressions over the kernel's columns, extra
 # int columns {name: pass-1 column} from the regime's pass-1 leaf)
-_S2_INTERIM_CLASS_EXPR = (
-    "cast(case when nullmask then 0 when cloud_m then 2 "
-    "when snow then 4 when water_test then 5 else 1 end as int)"
-    " AS fmask_class")
+_S2_INTERIM_CLASS_EXPR = class_sql("cloud_m")
 _INTERIM_ROWS: dict[str, tuple[str, tuple[str, ...], dict[str, str]]] = {
     "cloud_interim": ("", (
         "cast(case when cloud_raw then 1 else 0 end as int) AS cloud_raw_i",

@@ -57,9 +57,10 @@ SCENE_WIDTH = 8
 # into TILE_SIZE-row horizontal bands distributed across executors,
 # mirroring the reference's 512x512 RIOS windows, fmask/fmask.py:234).
 # Sizing: halo duplication is 2*radius/TILE_SIZE of all exchanged rows
-# (the fused interim pass has radius 6 -> 9% at 128 vs 37% at 32), and
-# the per-group pandas overhead amortizes over TILE_SIZE*SCENE_WIDTH
-# pixels; 128 keeps a 10M-row cell at ~1000 independent tasks.
+# (the fused cloud-mask pass has radius 1 + CLOUD_BUFFER_SIZE = 3 -> 5%
+# at 128 vs 19% at 32), and the per-group pandas overhead amortizes over
+# TILE_SIZE*SCENE_WIDTH pixels; 128 keeps a 10M-row cell at ~1000
+# independent tasks.
 TILE_SIZE = 128
 # Grid resolution for the pseudo-H3 cell index (degrees per cell).
 CELL_DEG = 30.0

@@ -28,22 +28,6 @@ from . import kernels
 _UNSET = np.int64(2 ** 62)
 
 
-def _local_fill_from_sources(img: np.ndarray, nullmask: np.ndarray,
-                             seed_img2: np.ndarray,
-                             h_min: int, h_max: int) -> np.ndarray:
-    """Hierarchical-queue reconstruction given explicit sources:
-    pixels with seed_img2 < UNSET are sources at their seed level; the
-    rest start at h_max (the c_src/fillminima.c:270-299 loop with a
-    generalized seed set)."""
-    img2 = np.where(seed_img2 >= h_max, h_max, seed_img2).astype(np.int64)
-    img2[nullmask] = h_max  # nulls never propagate
-    kernels.hq_fill(np.asarray(img, dtype=np.int64), nullmask, img2,
-                    h_min, h_max)
-    out = img2.copy()
-    out[nullmask] = _UNSET
-    return out
-
-
 # cap on the fixpoint's halo rounds (each round propagates one tile)
 _MAX_ROUNDS = 64
 
@@ -122,27 +106,12 @@ def fill_minima_distributed(df: DataFrame, img_col: str, boundary_col: str,
             rr[halo] - lo, cc[halo],
             np.minimum(pdf["img2"].to_numpy()[halo], _UNSET), (h, W),
             _UNSET, np.int64)
-        # The reference seeds EITHER the null-adjacent inner ring OR
-        # (when the scene has no nulls at all) the raster edge — never
-        # both (fmask/fillminima.py:55-65). cell_has_null is the global
-        # flag; nullmask here additionally covers ghost slots.
-        if cell_has_null:
-            if nullmask.any() and not nullmask.all():
-                dil = kernels._bool_dilate3(nullmask)
-                ring = dil ^ nullmask
-                seed[ring & present] = np.minimum(seed[ring & present], b)
-        else:
-            edge = np.zeros((h, W), dtype=bool)
-            edge[:, 0] = edge[:, -1] = True
-            if lo == 0:
-                edge[0, :] = True
-            if lo + h == cell_h:
-                edge[-1, :] = True
-            # only non-hmax border pixels seed (fmask/fillminima.py:61-65)
-            edge &= (img != h_max) & present & ~nullmask
-            seed[edge] = np.minimum(seed[edge], b)
-
-        res = _local_fill_from_sources(img, nullmask, seed, h_min, h_max)
+        # the tile's own null ring or cell edge, as the whole raster's
+        # (cell_has_null is the cell-wide flag; nullmask here also
+        # covers ghost slots)
+        res = kernels.fill_seeded(img, nullmask, b, h_min, h_max,
+                                  cell_has_null, lo == 0, lo + h == cell_h,
+                                  sources=seed)
         out_img2 = res[rr[core] - lo, cc[core]]
         out["changed"] = (out_img2 != out["img2"].to_numpy()).astype(np.int32)
         out["img2"] = out_img2

@@ -357,44 +357,55 @@ def _hq_fill_py(img: np.ndarray, nullmask: np.ndarray, img2: np.ndarray,
     img2[:] = np.asarray(i2l, dtype=np.int64).reshape(nrows, ncols)
 
 
+def fill_seeded(img: np.ndarray, nullmask: np.ndarray, b: int,
+                h_min: int, h_max: int, null_ring: bool, top: bool,
+                bottom: bool, sources: np.ndarray | None = None
+                ) -> np.ndarray:
+    """fillMinima's seeding (fmask/fillminima.py:55-65) followed by
+    hq_fill: the int64 img2 of ``img`` (int64), nulls at ``h_max``.
+
+    The reference seeds EITHER the inner ring of non-null pixels next to
+    a null (``null_ring``: the scene has nulls) OR the raster edge minus
+    its pixels already at ``h_max`` — never both. ``top``/``bottom`` say
+    whether the first/last row is the scene's own edge (a tile's are not
+    unless it holds them). ``sources`` (a tile's halo estimates, values
+    >= h_max meaning none) start below h_max too; every seed starts at
+    the lower of its source and ``b``."""
+    shape = img.shape
+    img2 = (np.full(shape, h_max, dtype=np.int64) if sources is None
+            else np.minimum(sources, h_max).astype(np.int64))
+    if null_ring:
+        seeds = _bool_dilate3(nullmask) & ~nullmask
+    else:
+        seeds = np.zeros(shape, dtype=bool)
+        seeds[:, 0] = seeds[:, -1] = True
+        seeds[0, :] |= top
+        seeds[-1, :] |= bottom
+        seeds &= (img != h_max) & ~nullmask
+    img2[seeds] = np.minimum(img2[seeds], b)
+    img2[nullmask] = h_max  # nulls never propagate
+    hq_fill(img, nullmask, img2, h_min, h_max)
+    return img2
+
+
 def fill_minima(img: np.ndarray, nullval: int, boundaryval: float) -> np.ndarray:
     """Fill local minima, bounded below by ``boundaryval``.
 
     Faithful transcription of fillMinima (fmask/fillminima.py:40-78) and
     the C hierarchical-queue kernel (c_src/fillminima.c:209-301):
-    4-connected flood from the boundary ring, levels processed ascending,
-    ``img2[p] = max(level, img[p])`` on first visit. The result is
-    independent of intra-level queue order, so this matches the C version
-    bit-for-bit."""
+    4-connected flood from the boundary ring (fill_seeded over the whole
+    raster), levels processed ascending, ``img2[p] = max(level, img[p])``
+    on first visit. The result is independent of intra-level queue
+    order, so this matches the C version bit-for-bit."""
     img = np.asarray(img)
     nullmask = img == nullval
-    non_null = ~nullmask
-    if not non_null.any():
+    if nullmask.all():
         return img.copy()
-    h_max = int(img[non_null].max())
-    h_min = int(img[non_null].min())
-    boundaryval = max(boundaryval, h_min)
-    boundaryval = int(min(boundaryval, h_max))
-    nrows, ncols = img.shape
-    img2 = np.full((nrows, ncols), h_max, dtype=np.int64)
-
-    if nullmask.sum() > 0:
-        dil = _bool_dilate3(nullmask)
-        inner_boundary = dil ^ nullmask
-        brows, bcols = np.where(inner_boundary)
-    else:
-        # The wrapper seeds img2's border with img values and takes
-        # boundary = (img2 != hMax) (fmask/fillminima.py:61-65): border
-        # pixels already at hMax are NOT seeds.
-        edge = np.zeros((nrows, ncols), dtype=bool)
-        edge[0, :] = edge[-1, :] = True
-        edge[:, 0] = edge[:, -1] = True
-        brows, bcols = np.where(edge & (img != h_max))
-
-    img2[brows, bcols] = boundaryval
-    img2[nullmask] = h_max  # nulls never propagate
-    hq_fill(np.asarray(img, dtype=np.int64), nullmask, img2, h_min, h_max)
-
+    h_max = int(img[~nullmask].max())
+    h_min = int(img[~nullmask].min())
+    b = int(min(max(boundaryval, h_min), h_max))
+    img2 = fill_seeded(np.asarray(img, dtype=np.int64), nullmask, b,
+                       h_min, h_max, bool(nullmask.any()), True, True)
     out = img2.astype(img.dtype)
     out[nullmask] = nullval
     return out

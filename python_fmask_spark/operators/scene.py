@@ -147,12 +147,10 @@ def classify_scene(pdf: pd.DataFrame, params: FmaskParams = FmaskParams(),
             nullmask)
         if matched is not None:
             shadowmask[matched] = True
-    if params.shadow_buffer_px > 0:
-        shadowmask = kernels.dilate(shadowmask, params.shadow_buffer_px)
+    shadowmask = kernels.dilate(shadowmask, params.shadow_buffer_px)
 
     # --- finalize (maskAndBuffer, fmask/fmask.py:1357-1396)
-    cloud_final = kernels.dilate(cloudmask, params.cloud_buffer_px) \
-        if params.cloud_buffer_px > 0 else cloudmask
+    cloud_final = kernels.dilate(cloudmask, params.cloud_buffer_px)
     out = np.full((H, W), C.OUTCODE_CLEAR, dtype=np.uint8)
     out[water] = C.OUTCODE_WATER
     out[snow] = C.OUTCODE_SNOW
@@ -188,7 +186,7 @@ def classify_scene(pdf: pd.DataFrame, params: FmaskParams = FmaskParams(),
 # form cuts the exchanged row from 19 fields + url (~210 B) to 8 fields
 # (~90 B): url is dropped entirely (identity joins back JVM-side on
 # (cell_id, r, c)), the four booleans pack into ONE tinyint bitmask, and
-# the seven per-cell constants ride a separate 1-row-per-cell dim frame
+# the five per-cell constants ride a separate 1-row-per-cell dim frame
 # through cogroup instead of repeating on every pixel row — the same
 # shape as the reference streaming uint8 stacks between passes
 # (fmask/fmask.py:459-460).
@@ -215,8 +213,30 @@ PX_EXCHANGE_SQL = (
 # the SQL expressions that unpack `flags` back into its booleans
 FLAGS_SQL = bitpack.unpack_sql(_FLAGS, "flags")
 
-DIM_COLS = ("g_tlow", "g_thigh", "g_b4_17",
-            "sun_az", "sun_zen", "sat_az", "sat_zen")
+DIM_COLS = ("g_tlow", "g_thigh", "g_b4_17", "sun_az", "sun_zen")
+
+# Eqn 19 over a frame's `filled` and `nir` DNs, in the two-division form
+# (filled/scale - nir/scale) of classify_scene and the reference
+# doPotentialShadows (fmask/fmask.py:781-830): the one-division
+# (filled-nir)/scale flips the comparison for integer DNs with
+# filled-nir == 200, exactly at the threshold.
+POTENTIAL_SHADOW_SQL = (
+    f"cast(filled as double) / {C.TOA_SCALE} - "
+    f"cast(nir as double) / {C.TOA_SCALE} > {C.EQN19_NIR_FILL_THRESH}")
+
+
+def class_sql(cloud: str, shadow: str | None = None) -> str:
+    """The class precedence merge (maskAndBuffer, fmask/fmask.py:
+    1357-1396) as a SQL column over a frame's nullmask, snow and
+    water_test and the named cloud [and shadow] masks: null, then cloud,
+    [then shadow,] then snow, then water, else clear."""
+    shadow_when = (f"when {shadow} then {C.OUTCODE_SHADOW} "
+                   if shadow else "")
+    return (f"cast(case when nullmask then {C.OUTCODE_NULL} "
+            f"when {cloud} then {C.OUTCODE_CLOUD} {shadow_when}"
+            f"when snow then {C.OUTCODE_SNOW} "
+            f"when water_test then {C.OUTCODE_WATER} "
+            f"else {C.OUTCODE_CLEAR} end as int) AS fmask_class")
 
 _EMPTY_SLIM = pd.DataFrame({
     "cell_id": pd.Series(dtype=object),

@@ -7,7 +7,9 @@ chain with every stage's task grain BOUNDED regardless of cell size,
 mirroring the reference's own per-clump independence (matchShadows
 loops clumps independently, fmask/fmask.py:1100-1185):
 
-  stage 1  morphology        tiled (cell_id, tile) halo kernel
+  stage 1  cloud mask +      cloud_layers: one tiled (cell_id, tile)
+           cloud buffer      halo kernel, shared with
+                             pipeline.interim_class_kernel
   stage 2  potential shadow  distributed fill-minima (tile fixpoint)
   stage 3  cloud clumps      cross-tile CCL, renumbered to scan order
   stage 4  3-D clouds +      applyInPandas over (cell_id, cloud_id) —
@@ -19,7 +21,8 @@ loops clumps independently, fmask/fmask.py:1100-1185):
                              equi-joined, never a range scan; window
                              height <= clump extent + max sun-vector
                              shift)
-  stage 6  buffers+finalize  one fused tiled halo kernel + column CASE
+  stage 6  shadow buffer +   one tiled halo kernel + scene.class_sql
+           finalize
 
 Inputs are pipeline.scene_exchange's three frames, as for the
 whole-cell kernel: the ``dist_p3`` barrier stores the pixel frame with
@@ -65,12 +68,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import constants as C
+from .. import tiling
 from ..plans.lineage import barrier, output_cut
 from ..session import ensure_package_on_executors
 from . import kernels
 from .clumps import drop_small_clouds, label_clumps_distributed
 from .fillminima_dist import fill_minima_distributed
-from .scene import FLAGS_SQL, _opt
+from .scene import (FLAGS_SQL, POTENTIAL_SHADOW_SQL, FmaskParams, _opt,
+                    class_sql)
 
 if TYPE_CHECKING:
     from ..pipeline import Scene
@@ -83,6 +88,28 @@ _PX_SCHEMA = ("cell_id string, cloud_id bigint, r int, c int, "
               "height_du int, base_temp_c double, "
               "sat_az_m double, sat_zen_m double, tr int, tc int, "
               "win_r0 int, win_r1 int")
+
+
+def cloud_layers(p3: DataFrame, params: FmaskParams) -> DataFrame:
+    """Stage 1 of both tiled classify paths, the interim cloud mask and
+    its buffer (cloudFinalPass's tail, fmask/fmask.py:761-776, and the
+    cloud half of maskAndBuffer, :1357-1396): ``p3`` (cell_id, r, c and
+    the four FLAGS_SQL booleans) through clumps.drop_small_clouds, then
+    ONE tile pass of 3x3 majority, ``& ~nullmask`` and the cloud-buffer
+    dilation (halo 1 + buffer radius). Returns (cell_id, r, c, cloud_m,
+    clouddil, cloud_raw, nullmask, water_test, snow); cloud_raw is the
+    size filter's output."""
+    def fused(slabs: dict) -> dict:
+        cloud_m = (kernels.majority3_buffer(slabs["cloud_raw"])
+                   & ~slabs["nullmask"])
+        return {"cloud_m": cloud_m,
+                "clouddil": kernels.dilate(cloud_m, params.cloud_buffer_px)}
+
+    return tiling.tiled_neighborhood(
+        drop_small_clouds(p3, params.min_cloud_size_px), fused,
+        in_cols=("cloud_raw", "nullmask"), out_cols=("cloud_m", "clouddil"),
+        radius=1 + int(params.cloud_buffer_px),
+        passthrough=("water_test", "snow"))
 
 
 def _clump_kernel(pdf: pd.DataFrame,
@@ -217,7 +244,7 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
                           runner=None) -> DataFrame:
     """``cells`` (a DataFrame of cell_id, no runner) restricts the run
     to those cells; classify_auto routes its mega-cells here this way."""
-    from .. import pipeline, tiling
+    from .. import pipeline
 
     ensure_package_on_executors(spark)
     has_thermal = scene.sensor != "SENTINEL2"
@@ -226,7 +253,7 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
     # FmaskParams fields and the rendered SQL of the per-cell leaf and
     # the pixel exchange (the scene key rides in their view names, every
     # pass's formulas in the text) — a change re-runs the stages
-    logic = (f"distv5||{params!r}||{pipeline.thresholds_sql_text(scene)}"
+    logic = (f"distv6||{params!r}||{pipeline.thresholds_sql_text(scene)}"
              f"||{pipeline.px_exchange_sql(scene)}")
 
     px_in, dims, ident = pipeline.scene_exchange(
@@ -235,20 +262,13 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
         "cell_id", "r", "c", "nir", "bt", *FLAGS_SQL,
         "sat_az_cdn", "sat_zen_cdn"))
 
-    # --- stage 1: interim cloud mask, tiled (cloudFinalPass tail)
-    raw = drop_small_clouds(p3, params.min_cloud_size_px)
+    # --- stage 1: interim cloud mask and its buffer, tiled
     # url never enters ANY intermediate stage: every per-pixel frame is
     # keyed (cell_id, r, c) — int composite keys shuffle/join cheaper
     # than a ~40-byte string, across every stage barrier and the
     # fill fixpoint's halo rounds. The identity frame joins back once at
     # the end.
-    maj = tiling.tiled_neighborhood(
-        raw.select("cell_id", "r", "c", "cloud_raw", "nullmask"),
-        lambda slabs: {"maj": kernels.majority3_buffer(slabs["cloud_raw"])},
-        ("cloud_raw",), ("maj",), radius=1, passthrough=("nullmask",))
-    cloudmask_df = maj.withColumn(
-        "cloudmask", F.expr("maj and not nullmask")) \
-        .select("cell_id", "r", "c", "cloudmask")
+    layers = cloud_layers(p3, params)
 
     # --- stage 2: potential shadow via distributed fill-minima.
     # The fixpoint needs ~H/tile_rows rounds for a fill wave to cross a
@@ -266,20 +286,14 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
                 F.expr("cast(nir as bigint) as nir"), "nir17_dn"),
         "nir", "nir17_dn", tile_rows=fill_tile)
     pot = filled.selectExpr(
-        "cell_id", "r", "c",
-        # two-division form (filled/scale - nir/scale) matches
-        # classify_scene and the reference doPotentialShadows exactly at
-        # the threshold boundary (one-division (filled-nir)/scale flips
-        # the comparison for integer DNs with filled-nir == 200).
-        f"cast(cast(filled as double) / {C.TOA_SCALE} - "
-        f"cast(nir as double) / {C.TOA_SCALE} > "
-        f"{C.EQN19_NIR_FILL_THRESH} as boolean) AS potential_shadow")
+        "cell_id", "r", "c", f"{POTENTIAL_SHADOW_SQL} AS potential_shadow")
 
     # per-pixel flag table for windows + finalize (one narrow frame)
     flags = barrier(spark, runner, "dist_flags", logic, lambda: (
-        p3.select("cell_id", "r", "c", "nullmask", "water_test", "snow",
-                  "bt", "sat_az_cdn", "sat_zen_cdn")
-        .join(cloudmask_df, ["cell_id", "r", "c"])
+        p3.select("cell_id", "r", "c", "bt", "sat_az_cdn", "sat_zen_cdn")
+        .join(layers.selectExpr(
+            "cell_id", "r", "c", "nullmask", "water_test", "snow",
+            "cloud_m AS cloudmask", "clouddil"), ["cell_id", "r", "c"])
         .join(pot, ["cell_id", "r", "c"])))
 
     # --- stage 3: clumps (cross-tile CCL), renumbered to the
@@ -352,46 +366,31 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
                               schema=_MATCH_SCHEMA)
                .distinct())
 
-    # --- stage 6: fused buffers (shadow r=3, cloud r=2) + finalize
+    # --- stage 6: shadow buffer + finalize (the cloud buffer is
+    # stage 1's clouddil)
     shadow_px = matched.withColumn("shadow_raw", F.lit(True))
-    base = (flags.select("cell_id", "r", "c", "cloudmask",
+    base = (flags.select("cell_id", "r", "c", "clouddil",
                          "nullmask", "water_test", "snow")
             .join(shadow_px, ["cell_id", "r", "c"], "left")
             .withColumn("shadow_raw",
                         F.expr("coalesce(shadow_raw, false)")))
-
     sh_rad = params.shadow_buffer_px
-    cl_rad = params.cloud_buffer_px
-
-    def fused(slabs):
-        sh = kernels.dilate(slabs["shadow_raw"], sh_rad) \
-            if sh_rad > 0 else slabs["shadow_raw"]
-        cl = kernels.dilate(slabs["cloudmask"], cl_rad) \
-            if cl_rad > 0 else slabs["cloudmask"]
-        return {"shadow_dil": sh, "cloud_dil": cl}
-
-    rad = int(max(sh_rad, cl_rad, 1))
     buf = tiling.tiled_neighborhood(
-        base, fused, in_cols=("shadow_raw", "cloudmask"),
-        out_cols=("shadow_dil", "cloud_dil"), radius=rad,
-        passthrough=("nullmask", "water_test", "snow"))
+        base,
+        lambda slabs: {"shadow_dil": kernels.dilate(slabs["shadow_raw"],
+                                                    sh_rad)},
+        in_cols=("shadow_raw",), out_cols=("shadow_dil",),
+        radius=max(int(sh_rad), 1),
+        passthrough=("clouddil", "nullmask", "water_test", "snow"))
 
     out = buf.join(
         px.select("cell_id", "r", "c", "cloud_id", "height_du",
                   "base_temp_c"),
         ["cell_id", "r", "c"], "left")
     out = out.selectExpr(
-        "cell_id", "r", "c",
-        f"""cast(case
-            when nullmask then {C.OUTCODE_NULL}
-            when cloud_dil then {C.OUTCODE_CLOUD}
-            when shadow_dil then {C.OUTCODE_SHADOW}
-            when snow then {C.OUTCODE_SNOW}
-            when water_test then {C.OUTCODE_WATER}
-            else {C.OUTCODE_CLEAR} end as int) AS fmask_class""",
+        "cell_id", "r", "c", class_sql("clouddil", "shadow_dil"),
         "cast(coalesce(cloud_id, 0) as bigint) AS cloud_id",
         "cast(coalesce(height_du, 0) as int) AS cloud_height_du",
         "base_temp_c AS cloud_base_temp_c")
     return (out.join(ident, ["cell_id", "r", "c"])
-            .select("url", "cell_id", "r", "c", "fmask_class", "cloud_id",
-                    "cloud_height_du", "cloud_base_temp_c", "text_sha256"))
+            .select(*pipeline.CLASSIFY_COLS))

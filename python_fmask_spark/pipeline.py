@@ -34,7 +34,7 @@ from .session import ensure_package_on_executors
 
 # per-cell constants of pass 1 the per-cell leaf carries next to the
 # thresholds (first() per cell: they are constant over a cell's pixels)
-_CELL_CONSTS = ("sun_az", "sun_zen", "sat_az", "sat_zen", "cell_rows")
+_CELL_CONSTS = ("sun_az", "sun_zen", "cell_rows")
 
 
 @dataclass(frozen=True)
@@ -286,26 +286,16 @@ def interim_class_kernel(spark: SparkSession, table: str = "documents",
                          s2_offsets: dict[str, int] | None = None,
                          s2_cdi: bool = False) -> DataFrame:
     """Interim classification (no shadow chain) via the tiled-kernel path:
-    pass3 columns -> the minimum-cloud-size filter
-    (clumps.drop_small_clouds, a no-op at the default; the reported
-    cloud_raw is its output) -> ONE fused tile pass (3x3 majority +
-    mask + circular dilation, halo = 1 + buffer radius) -> precedence
-    CASE. Matches the declarative SQL oracle bit-for-bit
-    (driver-checked) while running the morphology tile-parallel — the
-    100-TB plan shape.
-
-    Plan notes: the two morphology stages are fused into a single halo
-    shuffle (tiling.tiled_neighborhood) — halo grows from 1+5 to
-    6 rows while shuffle count and Arrow round trips halve; url and the
-    text digest (scene_exchange's identity frame) are joined back
-    JVM-side instead of riding through the Python kernels."""
-    from pyspark.sql import functions as F
-
-    from . import constants as C
-    from . import tiling
-    from .operators import kernels
-    from .operators.clumps import drop_small_clouds
-    from .operators.scene import FLAGS_SQL
+    pass3 columns -> scene_dist.cloud_layers, the one stage 1 of both
+    tiled paths (the minimum-cloud-size filter, then ONE fused tile pass
+    of 3x3 majority + mask + circular dilation, halo = 1 + buffer
+    radius, 3 at the default) -> precedence CASE (class_sql). Matches
+    the declarative SQL oracle bit-for-bit (driver-checked) while
+    running the morphology tile-parallel — the 100-TB plan shape. url
+    and the text digest (scene_exchange's identity frame) are joined
+    back JVM-side instead of riding through the Python kernels."""
+    from .operators.scene import FLAGS_SQL, class_sql
+    from .operators.scene_dist import cloud_layers
 
     px, _dims, ident = scene_exchange(
         spark, Scene(table, sensor, s2_offsets, s2_cdi, params=params))
@@ -316,33 +306,9 @@ def interim_class_kernel(spark: SparkSession, table: str = "documents",
     # stage then carries the whole pass-2/3 tail + dim broadcasts above
     # a Generate, defeating stage fusion; the narrow 7-column
     # checkpoint is the faster shape on repeat calls.)
-    p3 = drop_small_clouds(
+    out = cloud_layers(
         px.selectExpr("cell_id", "r", "c", *FLAGS_SQL).localCheckpoint(),
-        params.min_cloud_size_px)
-
-    rad = int(params.cloud_buffer_px)
-
-    def fused(slabs: dict) -> dict:
-        maj = kernels.majority3_buffer(slabs["cloud_raw"])
-        cloud_m = maj & ~slabs["nullmask"]
-        dil = kernels.dilate(cloud_m, params.cloud_buffer_px)
-        return {"cloudbuf": maj, "cloud_m": cloud_m, "clouddil": dil}
-
-    out = tiling.tiled_neighborhood(
-        p3, fused,
-        in_cols=("cloud_raw", "nullmask"),
-        out_cols=("cloudbuf", "cloud_m", "clouddil"),
-        radius=1 + rad,
-        passthrough=("water_test", "snow"))
-    out = out.select(
-        "cell_id", "r", "c", "cloud_raw", "cloud_m", "clouddil",
-        "nullmask", "water_test", "snow",
-        F.expr(f"""cast(case
-            when nullmask then {C.OUTCODE_NULL}
-            when clouddil then {C.OUTCODE_CLOUD}
-            when snow then {C.OUTCODE_SNOW}
-            when water_test then {C.OUTCODE_WATER}
-            else {C.OUTCODE_CLEAR} end as int)""").alias("fmask_class"))
+        params).selectExpr("*", class_sql("clouddil"))
     return (out.join(ident, ["cell_id", "r", "c"])
             .select("url", "cell_id", "r", "c", "cloud_raw", "cloud_m",
                     "clouddil", "nullmask", "water_test", "snow",
@@ -486,6 +452,11 @@ def scene_exchange(spark: SparkSession, scene: Scene, runner=None,
                  for f in (px, dims, ident))
 
 
+# the output columns of every full classify path
+CLASSIFY_COLS = ("url", "cell_id", "r", "c", "fmask_class", "cloud_id",
+                 "cloud_height_du", "cloud_base_temp_c", "text_sha256")
+
+
 def classify(spark: SparkSession, table: str = "documents",
              **scene) -> DataFrame:
     """Full classification: returns (url, cell_id, r, c, fmask_class,
@@ -522,9 +493,7 @@ def _classify(spark: SparkSession, scene: Scene,
                    scene.params,
                    has_thermal=(scene.sensor != "SENTINEL2")),
                schema=SCENE_OUT_SCHEMA_SLIM))
-    return (out.join(ident, ["cell_id", "r", "c"])
-            .select("url", "cell_id", "r", "c", "fmask_class", "cloud_id",
-                    "cloud_height_du", "cloud_base_temp_c", "text_sha256"))
+    return out.join(ident, ["cell_id", "r", "c"]).select(*CLASSIFY_COLS)
 
 
 def classify_auto(spark: SparkSession, table: str = "documents",

@@ -3,6 +3,9 @@ for any tiling (the W6 tile-fixpoint property, SURVEY §7)."""
 
 from __future__ import annotations
 
+import pathlib
+import sys
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -12,6 +15,11 @@ from python_fmask_spark.operators import kernels
 from python_fmask_spark.operators.fillminima_dist import (
     fill_minima_distributed,
 )
+
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]
+                        / "scripts"))
+
+from independent_oracle import fill_minima_fixpoint  # noqa: E402
 
 W = C.SCENE_WIDTH
 
@@ -61,4 +69,10 @@ def test_distributed_fill_equals_whole(spark, nulls, tile_rows, bval):
         bad += [(cell, r, c, got[(cell, r, c)], int(want[r, c]))
                 for r in range(img.shape[0]) for c in range(W)
                 if got[(cell, r, c)] != int(want[r, c])]
+        # both paths seed through kernels.fill_seeded: also check every
+        # cell against the independent Jacobi fixpoint transcription
+        fix = fill_minima_fixpoint(img, 0, bval)
+        bad += [(cell, r, c, got[(cell, r, c)], int(fix[r, c]), "fixpoint")
+                for r in range(img.shape[0]) for c in range(W)
+                if got[(cell, r, c)] != int(fix[r, c])]
     assert not bad, f"{len(bad)} mismatches, first: {bad[:5]}"

@@ -219,8 +219,11 @@ def test_dist_p3_holds_only_the_exchange(spark, sf_small):
                         "water_test", "snow", "cloud_raw",
                         "sat_az_cdn", "sat_zen_cdn"]
         thr = spark.read.parquet(os.path.join(wd, "stage_thresholds"))
-        assert {"tlow", "thigh", "b4_17", "sun_az", "sun_zen", "sat_az",
-                "sat_zen", "cell_rows"} <= set(thr.columns)
+        assert {"tlow", "thigh", "b4_17", "sun_az", "sun_zen",
+                "cell_rows"} <= set(thr.columns)
+        # no kernel reads the per-cell view angles (each clump averages
+        # the per-pixel sat_*_cdn), so the leaf does not carry them
+        assert not {"sat_az", "sat_zen"} & set(thr.columns)
         assert thr.count() == thr.select("cell_id").distinct().count()
         assert "thresholds" in {row.stage for row in r.lineage().collect()}
 
