@@ -85,6 +85,18 @@ def dilate(mask: np.ndarray, radius: float) -> np.ndarray:
     return neighbor_count(mask, buffer_offsets(radius)) > 0
 
 
+def interim_cloud(cloud_raw: np.ndarray, nullmask: np.ndarray,
+                  buffer_px: float) -> tuple[np.ndarray, np.ndarray]:
+    """The interim cloud mask and its buffer (cloudFinalPass's tail,
+    fmask/fmask.py:769-776, and the cloud half of maskAndBuffer,
+    :1379-1380): 3x3 majority of ``cloud_raw``, off where ``nullmask``,
+    then dilated by ``buffer_px``. ``nullmask`` must be True on ghost
+    slots (raster positions no pixel fills), or a ghost slot that wins
+    the majority dilates cloud onto its real neighbours."""
+    cloud_m = majority3_buffer(cloud_raw) & ~nullmask
+    return cloud_m, dilate(cloud_m, buffer_px)
+
+
 def box_mean(img: np.ndarray, win: int) -> np.ndarray:
     """Uniform (box) filter mean with reflect borders — float analogue of
     neighbor_count, used by focal variance."""

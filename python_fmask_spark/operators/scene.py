@@ -112,14 +112,15 @@ def classify_scene(pdf: pd.DataFrame, params: FmaskParams = FmaskParams(),
     sun_az, sun_zen = float(row0["sun_az"]), float(row0["sun_zen"])
 
     # --- interim cloud mask (cloudFinalPass tail, fmask/fmask.py:761-776)
+    # and its buffer, which finalize below uses
     cloudmask = cloud_raw.copy()
     if params.min_cloud_size_px > 1:
         clumps0, _ = kernels.label_components(cloudmask, eight_connected=False)
         sizes = np.bincount(clumps0.ravel())
         sizes[0] = 0
         cloudmask[sizes[clumps0] < params.min_cloud_size_px] = False
-    cloudmask = kernels.majority3_buffer(cloudmask)
-    cloudmask[nullmask] = False
+    cloudmask, cloud_final = kernels.interim_cloud(
+        cloudmask, nullmask, params.cloud_buffer_px)
 
     # --- potential shadow (doPotentialShadows, fmask/fmask.py:781-830)
     nir17_dn = b4_17 * C.TOA_SCALE  # NIRoffset 0 (fmask/fmask.py:800-806)
@@ -150,7 +151,6 @@ def classify_scene(pdf: pd.DataFrame, params: FmaskParams = FmaskParams(),
     shadowmask = kernels.dilate(shadowmask, params.shadow_buffer_px)
 
     # --- finalize (maskAndBuffer, fmask/fmask.py:1357-1396)
-    cloud_final = kernels.dilate(cloudmask, params.cloud_buffer_px)
     out = np.full((H, W), C.OUTCODE_CLEAR, dtype=np.uint8)
     out[water] = C.OUTCODE_WATER
     out[snow] = C.OUTCODE_SNOW

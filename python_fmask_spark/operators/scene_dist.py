@@ -95,15 +95,15 @@ def cloud_layers(p3: DataFrame, params: FmaskParams) -> DataFrame:
     its buffer (cloudFinalPass's tail, fmask/fmask.py:761-776, and the
     cloud half of maskAndBuffer, :1357-1396): ``p3`` (cell_id, r, c and
     the four FLAGS_SQL booleans) through clumps.drop_small_clouds, then
-    ONE tile pass of 3x3 majority, ``& ~nullmask`` and the cloud-buffer
-    dilation (halo 1 + buffer radius). Returns (cell_id, r, c, cloud_m,
-    clouddil, cloud_raw, nullmask, water_test, snow); cloud_raw is the
-    size filter's output."""
+    ONE tile pass of kernels.interim_cloud: 3x3 majority, ``& ~nullmask``
+    and the cloud-buffer dilation (halo 1 + buffer radius), with a
+    ragged last row's ghost slots null as in classify_scene. Returns
+    (cell_id, r, c, cloud_m, clouddil, cloud_raw, nullmask, water_test,
+    snow); cloud_raw is the size filter's output."""
     def fused(slabs: dict) -> dict:
-        cloud_m = (kernels.majority3_buffer(slabs["cloud_raw"])
-                   & ~slabs["nullmask"])
-        return {"cloud_m": cloud_m,
-                "clouddil": kernels.dilate(cloud_m, params.cloud_buffer_px)}
+        cloud_m, clouddil = kernels.interim_cloud(
+            slabs["cloud_raw"], slabs["nullmask"], params.cloud_buffer_px)
+        return {"cloud_m": cloud_m, "clouddil": clouddil}
 
     return tiling.tiled_neighborhood(
         drop_small_clouds(p3, params.min_cloud_size_px), fused,
@@ -253,7 +253,7 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
     # FmaskParams fields and the rendered SQL of the per-cell leaf and
     # the pixel exchange (the scene key rides in their view names, every
     # pass's formulas in the text) — a change re-runs the stages
-    logic = (f"distv6||{params!r}||{pipeline.thresholds_sql_text(scene)}"
+    logic = (f"distv7||{params!r}||{pipeline.thresholds_sql_text(scene)}"
              f"||{pipeline.px_exchange_sql(scene)}")
 
     px_in, dims, ident = pipeline.scene_exchange(

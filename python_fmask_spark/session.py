@@ -7,26 +7,41 @@ given stands. On a real cluster the same configs apply per executor
 (AQE handles skew and coalescing at runtime, Arrow batches feed the
 pandas-UDF tile kernels).
 
-JIT mode. The CLI's unit of work is one process, one cold classify job,
-then exit. HotSpot's tiered compilation spends a third or more of such
-a job's CPU in C2 (optimizing) compiler threads, on code the job stops
-running before the compiled code pays back. So a driver JVM started by
-``get_spark`` compiles with C1 only (``ONE_SHOT_DRIVER_JAVA_OPTIONS``).
-On a 4-core VM (perfbench medians) this took the cold whole-mode job's
-CPU from 63 s to 29.5 s and set-up from 13.3 s to 6.7 s, and the cold
-job's wall time fell a little. The price is speed once the process is
-warm: repeated jobs ran about 45% slower (median over 5 seeds),
-and the test suite took 591 s instead of 466 s. Processes that run many
-jobs (the test session, the 76-query board) pass ``long_lived=True``
-and keep tiered compilation. Only the driver JVM gets the flag; a
-cluster's executors, where the per-row work runs, keep tiered
-compilation.
+One-shot JVM options: JIT and collector. The CLI's unit of work is one
+process, one cold classify job, then exit, and a driver JVM started by
+``get_spark`` is tuned for that (``ONE_SHOT_DRIVER_JAVA_OPTIONS``).
+
+- JIT: C1 only. HotSpot's tiered compilation spends a third or more of
+  such a job's CPU in C2 (optimizing) compiler threads, on code the job
+  stops running before the compiled code pays back. On a 4-core VM
+  (perfbench medians) C1 only took the cold whole-mode job's CPU from
+  63 s to 29.5 s and set-up from 13.3 s to 6.7 s, and the cold job's
+  wall time fell a little. The price is speed once the process is
+  warm: repeated jobs ran about 45% slower (median over 5 seeds), and
+  the test suite took 591 s instead of 466 s.
+- Collector: Parallel. G1, the default, suits a long-lived,
+  latency-bound service; it lets its young generation grow to 60% of
+  the heap, and a cold job touches all of that Eden before its first
+  collection. Parallel's ergonomic young generation is a third of the
+  heap, and its young collections run on every core. Under a fixed
+  2 GB heap (``-Xms2g``, as perfbench runs) this cut a cold job's peak
+  memory by 35-38% (perfbench medians), all of it in the driver JVM.
+  Two collector flags stop a JVM from starting, so a launch that
+  already names a collector keeps it and gets no collector flag from
+  here (``one_shot_java_options``).
+
+Processes that run many jobs (the test session, the 76-query board)
+pass ``long_lived=True`` and keep the JVM's defaults: tiered
+compilation and G1. Only the driver JVM gets these flags; a cluster's
+executors, where the per-row work runs, keep the defaults too.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+import re
+import shlex
 import tempfile
 import weakref
 import zipfile
@@ -40,9 +55,48 @@ _PYFILES_SENT: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 # HotSpot flags for a driver JVM that runs one job and exits (module
 # docstring). spark.driver.defaultJavaOptions is prepended to any
 # caller's spark.driver.extraJavaOptions, so both apply.
-# scripts/spark_submit_classify.sh passes the same string to
+# scripts/spark_submit_classify.sh passes one_shot_java_options() to
 # spark-submit, which starts the driver JVM before Python runs.
-ONE_SHOT_DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1"
+ONE_SHOT_DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1 -XX:+UseParallelGC"
+
+# a HotSpot collector choice: -XX:+UseG1GC, -XX:-UseParallelGC, ...
+_GC_FLAG = re.compile(r"-XX:[+-]Use\w*GC\b")
+
+
+def _caller_java_options() -> list[str]:
+    """The JVM options a driver launch gets from its caller: the
+    environment the java launcher and the JVM read, spark-submit's
+    SPARK_SUBMIT_OPTS, and spark.driver.extraJavaOptions from
+    PYSPARK_SUBMIT_ARGS or spark-defaults.conf."""
+    opts = [os.environ.get(v, "") for v in (
+        "JDK_JAVA_OPTIONS", "JAVA_TOOL_OPTIONS", "SPARK_SUBMIT_OPTS")]
+    args = shlex.split(os.environ.get("PYSPARK_SUBMIT_ARGS", ""))
+    for flag, val in zip(args, args[1:]):
+        if flag == "--driver-java-options":
+            opts.append(val)
+        elif flag == "--conf" and val.startswith(
+                "spark.driver.extraJavaOptions="):
+            opts.append(val.split("=", 1)[1])
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(
+        os.environ.get("SPARK_HOME", ""), "conf")
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf")) as f:
+            opts += re.findall(
+                r"^\s*spark\.driver\.extraJavaOptions[\s=:]+(.*)$",
+                f.read(), re.M)
+    except OSError:
+        pass
+    return opts
+
+
+def one_shot_java_options() -> str:
+    """ONE_SHOT_DRIVER_JAVA_OPTIONS, less its collector flag when the
+    caller's launch already names a collector: a JVM given two stops at
+    start ("Multiple garbage collectors selected")."""
+    if not any(_GC_FLAG.search(o) for o in _caller_java_options()):
+        return ONE_SHOT_DRIVER_JAVA_OPTIONS
+    return " ".join(f for f in ONE_SHOT_DRIVER_JAVA_OPTIONS.split()
+                    if not _GC_FLAG.fullmatch(f))
 
 
 def _package_zip() -> str:
@@ -94,8 +148,9 @@ def get_spark(
     long_lived: bool = False,
 ) -> SparkSession:
     """The engine's session. ``long_lived=True`` keeps the driver JVM's
-    tiered JIT for a process that runs many jobs; the default compiles
-    with C1 only, for a one-shot job (module docstring)."""
+    defaults for a process that runs many jobs; the default is a
+    one-shot JVM, C1 only and the Parallel collector (module
+    docstring)."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
                               len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
@@ -107,7 +162,7 @@ def get_spark(
         builder = builder.master(master or f"local[{cpus}]")
     if not long_lived:
         builder = builder.config("spark.driver.defaultJavaOptions",
-                                 ONE_SHOT_DRIVER_JAVA_OPTIONS)
+                                 one_shot_java_options())
     builder = (
         builder
         # AQE: runtime partition coalescing + skew-join splitting (webtext

@@ -76,7 +76,10 @@ def tiled_neighborhood(
     radius] rows and only core rows are emitted, so seam rows equal the
     whole-raster result exactly (property-tested); the slab's synthetic
     edges are only reached where the halo is truncated by the true
-    raster border, where reflect is the correct semantic anyway.
+    raster border, where reflect is the correct semantic anyway. A slab
+    position no row fills (a ragged last row's ghost slots) reads False,
+    except in a ``nullmask`` slab, where it reads True: ghost slots are
+    null, as in classify_scene.
 
     Rows are keyed (cell_id, r, c): callers join other columns (url,
     digests) back on that key instead of shipping them through the halo
@@ -106,7 +109,7 @@ def tiled_neighborhood(
         cols = bitpack.unpack(pdf["_bf"].to_numpy(), packed)
         cols.update({name: pdf[name].to_numpy() for name in unpacked})
         slabs = {name: kernels.raster(r - slab_lo, cc_all, cols[name],
-                                      (h, W), False, bool)
+                                      (h, W), name == "nullmask", bool)
                  for name in in_cols}
         res = kernel(slabs)
         core = ~pdf["is_halo"].to_numpy()

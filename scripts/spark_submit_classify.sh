@@ -17,9 +17,10 @@ ZIP="$(mktemp -d)/python_fmask_spark.zip"
 (cd "$REPO" && zip -qr "$ZIP" python_fmask_spark -i '*.py')
 
 # spark-submit starts the driver JVM before Python runs, so get_spark
-# cannot choose its JIT mode; pass session.py's one-shot options here
+# cannot choose its JIT and collector; pass session.py's one-shot
+# options here (less the collector flag if the caller names one)
 JAVA_OPTS="$(cd "$REPO" && "${PYSPARK_PYTHON:-python3}" -c \
-  'from python_fmask_spark.session import ONE_SHOT_DRIVER_JAVA_OPTIONS as o; print(o)')"
+  'from python_fmask_spark.session import one_shot_java_options as o; print(o())')"
 
 spark-submit \
   --master "$MASTER" \

@@ -248,32 +248,39 @@ def sf_nodata(sf_oracle, tmp_path_factory):
     return str(out)
 
 
-def test_all_nodata_cells_match_independent_oracle(spark, sf_nodata):
-    """Every classify mode equals the independent straight-line oracle
-    (scripts/independent_oracle.py, over the DuckDB pass-3 frame) on an
-    input where about half the cells hold only nodata documents."""
-    import sys
-
+def _pass3_frame(sf_dir: str):
+    """DuckDB's pass-3 frame over ``sf_dir``: the kernel input of the
+    independent straight-line oracle (scripts/independent_oracle.py)."""
     import duckdb
 
     from python_fmask_spark import oracle
     from python_fmask_spark.dialect import DUCKDB
 
-    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]
-                           / "scripts"))
-    from independent_oracle import classify_scene_independent
-
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet("
-                f"'{os.path.join(sf_nodata, 'documents.parquet')}')")
-    p3 = con.execute(
+                f"'{os.path.join(sf_dir, 'documents.parquet')}')")
+    return con.execute(
         f"""{oracle._ctes(DUCKDB, "pass3", angles=True)}
         SELECT url, cell_id, r, c, sha256(text) AS text_sha256, nir, bt,
           nullmask, water_test, snow, cloud_raw, g_tlow, g_thigh, g_b4_17,
           sun_az, sun_zen, sat_az, sat_zen, sat_az_cdn, sat_zen_cdn
         FROM pass3""").df()
-    null_cells = p3.groupby("cell_id")["nullmask"].all()
-    assert 0 < null_cells.sum() < len(null_cells), null_cells
+
+
+def _independent_oracle():
+    import sys
+
+    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]
+                           / "scripts"))
+    import independent_oracle
+    return independent_oracle
+
+
+def _oracle_canon(p3) -> dict:
+    """The independent oracle's classification of ``p3``, canonicalized
+    as _canon does a Spark frame."""
+    classify_scene_independent = \
+        _independent_oracle().classify_scene_independent
     want = {}
     for _, pdf in p3.groupby("cell_id"):
         for r in classify_scene_independent(
@@ -282,18 +289,105 @@ def test_all_nodata_cells_match_independent_oracle(spark, sf_nodata):
             want[r.url] = (r.fmask_class, r.cloud_id, r.cloud_height_du,
                            None if np.isnan(bt) else round(bt, 9),
                            r.text_sha256)
+    return want
+
+
+def _assert_same(label: str, want: dict, got: dict) -> None:
+    diffs = {u: (want.get(u), got.get(u))
+             for u in want.keys() | got.keys()
+             if want.get(u) != got.get(u)}
+    assert not diffs, f"{label}: {len(diffs)} mismatching urls, " \
+        f"e.g. {list(diffs.items())[:3]}"
+
+
+def test_all_nodata_cells_match_independent_oracle(spark, sf_nodata):
+    """Every classify mode equals the independent straight-line oracle
+    (scripts/independent_oracle.py, over the DuckDB pass-3 frame) on an
+    input where about half the cells hold only nodata documents."""
+    p3 = _pass3_frame(sf_nodata)
+    null_cells = p3.groupby("cell_id")["nullmask"].all()
+    assert 0 < null_cells.sum() < len(null_cells), null_cells
+    want = _oracle_canon(p3)
 
     register_views(spark, sf_nodata)
     for mode, out in (
             ("whole", pipeline.classify(spark)),
             ("distributed", classify_distributed(spark)),
             ("auto", pipeline.classify_auto(spark, row_threshold=8))):
-        got = _canon(out)
-        diffs = {u: (want.get(u), got.get(u))
-                 for u in want.keys() | got.keys()
-                 if want.get(u) != got.get(u)}
-        assert not diffs, f"{mode}: {len(diffs)} mismatching urls, " \
-            f"e.g. {list(diffs.items())[:3]}"
+        _assert_same(mode, want, _canon(out))
+
+
+_VOCAB = ("spark window merge table column vector stream value data small "
+          "join filter big group hash customer sort order slow line part "
+          "fast row the agg key query a scan batch").split()
+
+
+@pytest.fixture(scope="module")
+def sf_ragged(tmp_path_factory):
+    """120 seeded documents from two sources. One cell's raster ends in
+    a ragged row whose ghost slots (positions past the cell's last
+    document) include one that wins the 3x3 cloud majority."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(152)
+    n = 120
+    texts = [" ".join(rng.choice(_VOCAB, size=rng.integers(10, 101)))
+             for _ in range(n)]
+    langs = rng.choice(["en", "zh", "es", "fr", "de"], size=n).tolist()
+    sources = [f"src{k}" for k in rng.integers(0, 2, size=n)]
+    out = tmp_path_factory.mktemp("sf_ragged")
+    pq.write_table(pa.table({
+        "doc_id": pa.array(np.arange(n, dtype=np.int64)),
+        "text": texts, "lang": langs, "source": sources,
+        "n_chars": pa.array([len(t) for t in texts], pa.int64()),
+    }), out / "documents.parquet")
+    return str(out)
+
+
+def test_ragged_row_ghost_slot_is_null(spark, sf_ragged):
+    """A ghost slot that wins the 3x3 cloud majority is null, not cloud,
+    so the cloud buffer spreads nothing from it onto real pixels. The
+    whole-cell, distributed and independent classifications agree, and
+    interim_class_kernel's class equals the whole-cell interim mask:
+    null, then the buffered majority cloud, snow, water, clear."""
+    from python_fmask_spark import constants as C
+    from python_fmask_spark.operators.scene import FmaskParams
+
+    ind = _independent_oracle()
+    buf = FmaskParams().cloud_buffer_px
+    assert buf > 0
+    p3 = _pass3_frame(sf_ragged)
+    interim, ghost_wins = {}, 0
+    for _, g in p3.groupby("cell_id"):
+        rr, cc = g["r"].to_numpy(), g["c"].to_numpy()
+        shape = (int(rr.max()) + 1, C.SCENE_WIDTH)
+
+        def rast(col, fill):
+            a = np.full(shape, fill)
+            a[rr, cc] = g[col].to_numpy().astype(bool)
+            return a
+
+        null = rast("nullmask", True)  # ghost slots are null
+        majority = ind.majority3(rast("cloud_raw", False))
+        ghost = np.ones(shape, dtype=bool)
+        ghost[rr, cc] = False
+        ghost_wins += int((majority & ghost).sum())
+        cls = np.select(
+            [null, ind.dilate_circular(majority & ~null, buf),
+             rast("snow", False), rast("water_test", False)],
+            [C.OUTCODE_NULL, C.OUTCODE_CLOUD, C.OUTCODE_SNOW,
+             C.OUTCODE_WATER], C.OUTCODE_CLEAR)
+        interim.update(zip(g["url"], cls[rr, cc].tolist()))
+    assert ghost_wins, "no ghost slot wins the majority on this input"
+    want = _oracle_canon(p3)
+
+    register_views(spark, sf_ragged)
+    _assert_same("whole", want, _canon(pipeline.classify(spark)))
+    _assert_same("distributed", want, _canon(classify_distributed(spark)))
+    got = {r.url: r.fmask_class for r in pipeline.interim_class_kernel(
+        spark).select("url", "fmask_class").collect()}
+    assert got == interim
 
 
 def test_distributed_l47_matches_scene_kernel(spark, sf_small):

@@ -1,7 +1,8 @@
 """session.get_spark's launch settings and the entry points that use it.
 
-A one-shot driver JVM (the default) compiles with C1 only; the test
-session runs ``long_lived`` and keeps tiered compilation. The CLI and
+A one-shot driver JVM (the default) compiles with C1 only and runs the
+Parallel collector, unless its caller names a collector; the test
+session runs ``long_lived`` and keeps the JVM's defaults. The CLI and
 the spark-submit wrapper must start the same session the engine tunes.
 """
 
@@ -13,14 +14,21 @@ import pathlib
 import subprocess
 import sys
 
+import pytest
 from pyspark.sql import SparkSession
 
 from python_fmask_spark import pipeline
-from python_fmask_spark.session import ONE_SHOT_DRIVER_JAVA_OPTIONS, get_spark
+from python_fmask_spark.session import (ONE_SHOT_DRIVER_JAVA_OPTIONS,
+                                        get_spark, one_shot_java_options)
 from python_fmask_spark.sources import register_views
 
 REPO = pathlib.Path(__file__).resolve().parents[1]
 ONE_SHOT_FLAGS = ONE_SHOT_DRIVER_JAVA_OPTIONS.split()
+PARALLEL_GC = {"PS Scavenge", "PS MarkSweep"}
+# the launch settings a caller can name a collector in
+CALLER_OPTION_ENV = ("JDK_JAVA_OPTIONS", "JAVA_TOOL_OPTIONS",
+                     "SPARK_SUBMIT_OPTS", "PYSPARK_SUBMIT_ARGS",
+                     "SPARK_CONF_DIR")
 
 
 class _Context:
@@ -67,47 +75,117 @@ def test_spark_submit_keeps_its_master(monkeypatch):
         "spark.master"] == "local[2]"
 
 
-def test_driver_jvm_runs_c1_only_unless_long_lived(spark, tmp_path):
+def _jvm_flags_and_collectors(mx) -> tuple[list[str], set[str]]:
+    """A driver JVM's input arguments and garbage-collector MXBeans."""
+    return (list(mx.getRuntimeMXBean().getInputArguments()),
+            {b.getName() for b in mx.getGarbageCollectorMXBeans()})
+
+
+def _one_shot_jvm(tmp_path, **env) -> tuple[list[str], set[str]]:
+    """_jvm_flags_and_collectors of a one-shot get_spark session started
+    in a fresh process under ``env``."""
     probe = (
         "import json, sys\n"
         f"sys.path.insert(0, {str(REPO)!r})\n"
         "from python_fmask_spark.session import get_spark\n"
         "s = get_spark(master='local[1]')\n"
         "mx = s.sparkContext._jvm.java.lang.management.ManagementFactory\n"
-        "print(json.dumps(list(mx.getRuntimeMXBean().getInputArguments())))\n"
+        "print(json.dumps([list(mx.getRuntimeMXBean().getInputArguments()),\n"
+        "  [b.getName() for b in mx.getGarbageCollectorMXBeans()]]))\n"
+        "s.range(10).count()\n"
         "s.stop()\n")
-    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g", **env}
     res = subprocess.run([sys.executable, "-c", probe], cwd=tmp_path,
                          env=env, capture_output=True, text=True,
                          timeout=300)
     assert res.returncode == 0, res.stderr[-2000:]
-    one_shot = json.loads(res.stdout.strip().splitlines()[-1])
-    assert all(f in one_shot for f in ONE_SHOT_FLAGS), one_shot
-    # the suite's fixture session is long-lived
-    mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
-    long_lived = list(mx.getRuntimeMXBean().getInputArguments())
-    assert not any(f in long_lived for f in ONE_SHOT_FLAGS), long_lived
+    flags, collectors = json.loads(res.stdout.strip().splitlines()[-1])
+    return flags, set(collectors)
+
+
+def test_driver_jvm_runs_c1_and_parallel_gc_unless_long_lived(spark,
+                                                             tmp_path):
+    """A one-shot driver JVM compiles with C1 only and runs the
+    Parallel collector; the suite's long-lived session has neither."""
+    flags, collectors = _one_shot_jvm(tmp_path)
+    assert all(f in flags for f in ONE_SHOT_FLAGS), flags
+    assert collectors == PARALLEL_GC, collectors
+    flags, collectors = _jvm_flags_and_collectors(
+        spark.sparkContext._jvm.java.lang.management.ManagementFactory)
+    assert not any(f in flags for f in ONE_SHOT_FLAGS), flags
+    assert not collectors & PARALLEL_GC, collectors
+
+
+def test_caller_collector_wins(tmp_path):
+    """A caller who names a collector in spark.driver.extraJavaOptions
+    gets a session that starts and runs that collector: two collector
+    flags would stop the JVM at start."""
+    flags, collectors = _one_shot_jvm(tmp_path, PYSPARK_SUBMIT_ARGS=(
+        "--conf 'spark.driver.extraJavaOptions=-XX:+UseSerialGC' "
+        "pyspark-shell"))
+    assert "-XX:+UseSerialGC" in flags and "-XX:+UseParallelGC" not in flags
+    assert "-XX:TieredStopAtLevel=1" in flags, flags
+    assert collectors == {"Copy", "MarkSweepCompact"}, collectors
+
+
+@pytest.mark.parametrize("var, value", [
+    ("JDK_JAVA_OPTIONS", "-XX:+UseG1GC"),
+    ("JAVA_TOOL_OPTIONS", "-Xss4m -XX:+UseZGC"),
+    ("SPARK_SUBMIT_OPTS", "-XX:-UseParallelGC"),
+    ("PYSPARK_SUBMIT_ARGS", "--driver-java-options -XX:+UseSerialGC "
+                            "pyspark-shell"),
+    ("SPARK_CONF_DIR", "spark.driver.extraJavaOptions -XX:+UseSerialGC\n"),
+])
+def test_one_shot_options_drop_the_collector_a_caller_names(
+        monkeypatch, tmp_path, var, value):
+    for v in CALLER_OPTION_ENV:
+        monkeypatch.delenv(v, raising=False)
+    monkeypatch.setenv("SPARK_HOME", str(tmp_path / "no_spark_home"))
+    assert one_shot_java_options() == ONE_SHOT_DRIVER_JAVA_OPTIONS
+    # flags that only mention GC are not a collector choice
+    monkeypatch.setenv("JAVA_TOOL_OPTIONS",
+                       "-XX:+UseGCOverheadLimit "
+                       "-XX:+UseDynamicNumberOfGCThreads")
+    assert one_shot_java_options() == ONE_SHOT_DRIVER_JAVA_OPTIONS
+    monkeypatch.delenv("JAVA_TOOL_OPTIONS")
+    if var == "SPARK_CONF_DIR":
+        (tmp_path / "spark-defaults.conf").write_text(value)
+        value = str(tmp_path)
+    monkeypatch.setenv(var, value)
+    assert one_shot_java_options() == "-XX:TieredStopAtLevel=1"
 
 
 def test_submit_script_passes_the_session_java_options(tmp_path, sf_small):
-    """The wrapper passes session.py's option string and leaves every
-    Spark SQL setting to get_spark; it has no default input."""
+    """The wrapper passes session.one_shot_java_options() and leaves
+    every Spark SQL setting to get_spark; a collector named in
+    spark-defaults.conf keeps the wrapper's collector flag out. It has
+    no default input."""
     stub = tmp_path / "bin" / "spark-submit"
     stub.parent.mkdir()
     stub.write_text('#!/bin/sh\nprintf "%s\\n" "$@"\n')
     stub.chmod(0o755)
-    env = {**os.environ, "PATH": f"{stub.parent}:{os.environ['PATH']}",
+    env = {**{k: v for k, v in os.environ.items()
+              if k not in CALLER_OPTION_ENV},
+           "PATH": f"{stub.parent}:{os.environ['PATH']}",
            "PYSPARK_PYTHON": sys.executable, "TMPDIR": str(tmp_path)}
-    res = subprocess.run(
-        ["bash", str(REPO / "scripts" / "spark_submit_classify.sh"),
-         "local[1]", sf_small],
-        env=env, capture_output=True, text=True, timeout=120)
-    assert res.returncode == 0, res.stderr
-    argv = res.stdout.splitlines()
-    confs = [argv[i + 1] for i, a in enumerate(argv) if a == "--conf"]
-    assert confs == [
-        f"spark.driver.defaultJavaOptions={ONE_SHOT_DRIVER_JAVA_OPTIONS}"]
-    assert argv[-2:] == [str(REPO / "scripts" / "classify_job.py"), sf_small]
+    conf_dir = tmp_path / "conf"
+    conf_dir.mkdir()
+    (conf_dir / "spark-defaults.conf").write_text(
+        "spark.driver.extraJavaOptions=-XX:+UseSerialGC\n")
+    for extra, want in (
+            ({}, ONE_SHOT_DRIVER_JAVA_OPTIONS),
+            ({"SPARK_CONF_DIR": str(conf_dir)}, "-XX:TieredStopAtLevel=1")):
+        res = subprocess.run(
+            ["bash", str(REPO / "scripts" / "spark_submit_classify.sh"),
+             "local[1]", sf_small],
+            env={**env, **extra}, capture_output=True, text=True,
+            timeout=120)
+        assert res.returncode == 0, res.stderr
+        argv = res.stdout.splitlines()
+        confs = [argv[i + 1] for i, a in enumerate(argv) if a == "--conf"]
+        assert confs == [f"spark.driver.defaultJavaOptions={want}"]
+        assert argv[-2:] == [str(REPO / "scripts" / "classify_job.py"),
+                             sf_small]
     # no default input: SF_DIR is required
     res = subprocess.run(
         ["bash", str(REPO / "scripts" / "spark_submit_classify.sh"),
