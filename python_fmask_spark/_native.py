@@ -11,13 +11,14 @@ count scales with raster height while each wave is <= ~16 px — so the
 fix is compilation, not vectorization.
 
 Build strategy: the C source below is compiled to a shared object with
-the system ``cc`` at FIRST USE, cached under a content-hash name in a
-per-user temp dir, and loaded via ctypes. On a multi-executor cluster
-each worker host compiles once lazily (same content hash -> same cache
-file; the build is atomic via write-to-pid-file + rename, so concurrent
-workers race benignly). If no compiler is available the caller falls
-back to the pure-Python queue — same results, just slower (measured
-~40-80x on the fill-heavy scene kernels).
+the system ``cc`` at FIRST USE, cached under a content-hash name in the
+per-user cache (``cache.cache_dir``), and loaded via ctypes. On a
+multi-executor cluster each worker host compiles once lazily (same
+content hash -> same cache file; the build is atomic via
+write-to-pid-file + rename, so concurrent workers race benignly). If
+no compiler or no writable cache is available the caller falls back to
+the pure-Python queue — same results, just slower (measured ~40-80x on
+the fill-heavy scene kernels).
 
 Queue representation: one ``next``-pointer array forming per-level
 singly-linked lists (every pixel enqueues at most once), instead of
@@ -30,7 +31,8 @@ import ctypes
 import hashlib
 import os
 import subprocess
-import tempfile
+
+from .cache import cache_dir
 
 _SRC = r"""
 #include <stdint.h>
@@ -111,16 +113,12 @@ int hq_fill_c(const int64_t *img, const uint8_t *nullf, int64_t *i2,
 _LIB: list = []  # [lib] once loaded, [None] if build failed
 
 
-def _cache_dir() -> str:
-    d = os.environ.get("SPARK_GRAFT_NATIVE_DIR") or os.path.join(
-        tempfile.gettempdir(), f"pfs_native_{os.getuid()}")
-    os.makedirs(d, exist_ok=True)
-    return d
-
-
 def _build() -> ctypes.CDLL | None:
     key = hashlib.sha256(_SRC.encode()).hexdigest()[:16]
-    cache = _cache_dir()
+    try:
+        cache = cache_dir("native")
+    except OSError:
+        return None
     so = os.path.join(cache, f"hqfill_{key}.so")
     if not os.path.exists(so):
         csrc = os.path.join(cache, f"hqfill_{key}.c")
@@ -154,7 +152,8 @@ def _build() -> ctypes.CDLL | None:
 
 def get_hq_fill():
     """Return the compiled hq_fill entry point, or None when no compiler
-    is available (callers fall back to the Python queue)."""
+    or no writable cache is available (callers fall back to the Python
+    queue)."""
     if not _LIB:
         _LIB.append(_build())
     lib = _LIB[0]

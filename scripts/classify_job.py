@@ -13,7 +13,7 @@ same conversions the reference applies (:255-263):
 
 Usage (``python scripts/classify_job.py ...`` runs the same job on
 ``local[N]``; scripts/spark_submit_classify.sh wraps spark-submit):
-  spark-submit --py-files python_fmask_spark.zip scripts/classify_job.py \
+  spark-submit scripts/classify_job.py \
       SF_DIR [--sensor LANDSAT8|LANDSAT47|SENTINEL2] \
       [--mincloudsize N] [--cloudbufferdistance M] \
       [--shadowbufferdistance M] [--cloudprobthreshold PCT] \
@@ -180,7 +180,7 @@ def main() -> None:
     from python_fmask_spark.session import (ensure_package_on_executors,
                                             get_spark)
 
-    # one job, then exit: get_spark's one-shot (C1-only) driver JVM
+    # one job, then exit: get_spark's one-shot driver JVM
     spark = get_spark(app_name="fmask-classify")
     ensure_package_on_executors(spark)
     from python_fmask_spark import oracle, pipeline
@@ -188,7 +188,9 @@ def main() -> None:
     from python_fmask_spark.plans.sinks import write_mask
     from python_fmask_spark.sources import register_views
 
-    register_views(spark, cmdargs.sf_dir)
+    # classify reads only the documents table; registering the others
+    # would scan them too (one Spark job each)
+    register_views(spark, cmdargs.sf_dir, ("documents",))
     params = params_from_cmdargs(cmdargs)
     if cmdargs.verbose:
         print(f"params: {params}", file=sys.stderr)
@@ -228,8 +230,7 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    # this checkout's root, wherever it lives (spark-submit also ships
-    # the package with --py-files)
+    # this checkout's root, wherever it lives
     sys.path.insert(0, os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))))
     main()
