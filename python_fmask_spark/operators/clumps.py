@@ -19,13 +19,55 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import constants as C
+from .. import tiling
 from ..session import ensure_package_on_executors
 from . import kernels
 
 
-def _local_label_schema() -> str:
-    return ("cell_id string, r int, c int, "
-            "tile int, local_label bigint")
+def local_label(pdf: pd.DataFrame, eight_connected: bool) -> pd.DataFrame:
+    """One (cell_id, tile) group of the tile-local CCL: ``pdf`` holds the
+    tile's True pixels (cell_id, r, c, tile). Each pixel's local_label is
+    the least linear index (r * W + c) over its tile-local component."""
+    r = pdf["r"].to_numpy()
+    c = pdf["c"].to_numpy()
+    w = tiling.Window(pdf)
+    lab, _n = kernels.label_components(w.raster(True),
+                                       eight_connected=eight_connected)
+    px = w.gather(lab)
+    ids = np.full(px.max() + 1, np.iinfo(np.int64).max, dtype=np.int64)
+    np.minimum.at(ids, px, r.astype(np.int64) * C.SCENE_WIDTH + c)
+    return pd.DataFrame({
+        "cell_id": pdf["cell_id"].to_numpy(),
+        "r": r.astype(np.int32),
+        "c": c.astype(np.int32),
+        "tile": pdf["tile"].to_numpy().astype(np.int32),
+        "local_label": ids[px],
+    })
+
+
+def seam_roots(edges) -> list[tuple]:
+    """Union-find over seam edges, (cell_id, lab_a, lab_b) each: returns
+    (cell_id, local_label, root) for every label an edge names, root
+    being the least label of its cross-tile component. Keys carry
+    cell_id, since local labels are cell-local pixel indexes that
+    distinct cells routinely share."""
+    parent: dict[tuple, tuple] = {}
+
+    def find(x: tuple) -> tuple:
+        parent.setdefault(x, x)
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for cell, lab_a, lab_b in edges:
+        a, b = find((cell, int(lab_a))), find((cell, int(lab_b)))
+        if a != b:
+            # same cell by construction: the lesser label is the root
+            parent[max(a, b)] = min(a, b)
+    return [(k[0], k[1], find(k)[1]) for k in list(parent)]
 
 
 def label_clumps_distributed(df: DataFrame, flag_col: str,
@@ -44,52 +86,26 @@ def label_clumps_distributed(df: DataFrame, flag_col: str,
     the linear index (r * W + c) of the component's first pixel in scan
     order — deterministic across any tiling/partitioning.
     """
-    W = C.SCENE_WIDTH
     ensure_package_on_executors(df.sparkSession)
     src = df.select("cell_id", "r", "c", flag_col) \
             .filter(F.col(flag_col)) \
-            .withColumn("tile", F.expr(f"r div {tile_rows}"))
-
-    def local_label(pdf: pd.DataFrame) -> pd.DataFrame:
-        r = pdf["r"].to_numpy()
-        lo = int(r.min())
-        h = int(r.max()) - lo + 1
-        arr = kernels.raster(r - lo, pdf["c"].to_numpy(), True, (h, W),
-                             False, bool)
-        lab, _n = kernels.label_components(
-            arr, eight_connected=eight_connected)
-        # Globalize: local component id -> its min linear pixel index
-        # within this tile (min over the component of (r*W + c)).
-        lin = (np.arange(h)[:, None] + lo) * W + np.arange(W)[None, :]
-        ids = np.full(lab.max() + 1, np.iinfo(np.int64).max, dtype=np.int64)
-        np.minimum.at(ids, lab.ravel(), lin.ravel())
-        ids[0] = 0
-        rows = pdf["r"].to_numpy()
-        cols = pdf["c"].to_numpy()
-        return pd.DataFrame({
-            "cell_id": pdf["cell_id"].to_numpy(),
-            "r": rows.astype(np.int32),
-            "c": cols.astype(np.int32),
-            "tile": pdf["tile"].to_numpy().astype(np.int32),
-            "local_label": ids[lab[rows - lo, cols]],
-        })
+            .withColumn("tile", F.expr(tiling.tile_sql(tile_rows)))
 
     labeled = src.groupBy("cell_id", "tile").applyInPandas(
-        local_label, schema=_local_label_schema())
+        lambda pdf: local_label(pdf, eight_connected),
+        schema="cell_id string, r int, c int, tile int, local_label bigint")
     # a lazy local checkpoint, not persist(): the ContextCleaner drops it
     # once nothing references it, where a persisted frame would stay in
     # the session's CacheManager until the session ends
     labeled = labeled.localCheckpoint(eager=False)
 
-    # Seam edges: 8-adjacent pixel pairs across tile boundaries.
-    # local_label values are cell-local linear pixel indexes, so distinct
-    # cells routinely share label values — every key below carries
-    # cell_id (union-find, mapping, and the apply join) to keep seam
-    # merges from leaking across cells.
-    top = labeled.filter(F.expr(f"pmod(r, {tile_rows}) = 0")) \
+    # Seam edges: 8-adjacent pixel pairs across tile boundaries, keyed
+    # by cell_id like every merge below (local labels are cell-local).
+    first_row, last_row = tiling.seam_rows_sql(tile_rows)
+    top = labeled.filter(F.expr(first_row)) \
         .select(F.col("cell_id").alias("cell_b"), "r", "c",
                 F.col("local_label").alias("lab_b"))
-    bottom = labeled.filter(F.expr(f"pmod(r, {tile_rows}) = {tile_rows - 1}")) \
+    bottom = labeled.filter(F.expr(last_row)) \
         .select(F.col("cell_id").alias("cell_a"),
                 F.col("r").alias("r_a"), F.col("c").alias("c_a"),
                 F.col("local_label").alias("lab_a"))
@@ -100,32 +116,8 @@ def label_clumps_distributed(df: DataFrame, flag_col: str,
         & (F.abs(top.c - bottom.c_a) <= seam_e))
         .select("cell_a", "lab_a", "lab_b").distinct())
 
-    edge_rows = edges.collect()  # O(perimeter), see module docstring
-
-    Key = tuple  # (cell_id, local_label)
-    parent: dict[tuple, tuple] = {}
-
-    def find(x: tuple) -> tuple:
-        parent.setdefault(x, x)
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    for e in edge_rows:
-        ka = Key((e.cell_a, int(e.lab_a)))
-        kb = Key((e.cell_a, int(e.lab_b)))
-        a, b = find(ka), find(kb)
-        if a != b:
-            # same cell by construction; order by label value
-            if a[1] < b[1]:
-                parent[b] = a
-            else:
-                parent[a] = b
-
-    mapping = [(k[0], k[1], find(k)[1]) for k in list(parent)]
+    # O(perimeter), see module docstring
+    mapping = seam_roots(edges.collect())
     spark = df.sparkSession
     if mapping:
         # from pandas, the frame ships as Arrow batches (get_spark turns

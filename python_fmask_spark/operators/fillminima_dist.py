@@ -12,6 +12,7 @@ sources. Halo estimates only ever decrease, so each round's output is
 monotonically non-increasing and the iteration converges in at most
 (tiles a basin spans) rounds — at 10^12 scale, each round is one
 halo-exchange shuffle, and basins rarely span more than a few tiles.
+A run that has not converged after ``_MAX_ROUNDS`` rounds raises.
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ from pyspark.sql import functions as F
 
 from .. import constants as C
 from ..session import ensure_package_on_executors
+from ..tiling import Window, with_halo
 from . import kernels
 
 _UNSET = np.int64(2 ** 62)
@@ -30,6 +32,39 @@ _UNSET = np.int64(2 ** 62)
 
 # cap on the fixpoint's halo rounds (each round propagates one tile)
 _MAX_ROUNDS = 64
+
+
+def fill_round(pdf: pd.DataFrame, img_col: str) -> pd.DataFrame:
+    """One (cell_id, tile) group of one fixpoint round: ``pdf`` holds the
+    state columns and is_halo. Returns the core rows' state with the
+    round's img2 and ``changed`` (1 where img2 moved)."""
+    w = Window(pdf)
+    out = pdf.loc[w.core, ["cell_id", "r", "c", img_col, "h_max", "h_min",
+                           "cell_h", "cell_has_null", "cell_bval", "img2"]
+                  ].reset_index(drop=True)
+    g0 = pdf.iloc[0]
+    if pd.isna(g0["h_max"]):
+        # all-nodata cell: nothing to fill, every pixel keeps
+        # nullval (as kernels.fill_minima returns), nothing changes
+        out["changed"] = np.zeros(len(out), dtype=np.int32)
+        return out
+    h_max, h_min = int(g0["h_max"]), int(g0["h_min"])
+    b = int(min(max(float(g0["cell_bval"]), h_min), h_max))
+
+    img_v = pdf[img_col].to_numpy()
+    img = w.raster(img_v, 0, np.int64)
+    # halo rows carry their current img2 as sources
+    seed = w.raster(np.where(w.core, _UNSET, pdf["img2"]), _UNSET, np.int64)
+    # the tile's own null ring or cell edge, as the whole raster's
+    # (cell_has_null is the cell-wide flag; the window's nullmask also
+    # covers ghost slots)
+    res = kernels.fill_seeded(img, w.null(img_v == C.REF_NULL_DN), b, h_min,
+                              h_max, bool(g0["cell_has_null"]), w.lo == 0,
+                              w.lo + w.h == int(g0["cell_h"]), sources=seed)
+    out_img2 = w.gather(res)
+    out["changed"] = (out_img2 != out["img2"].to_numpy()).astype(np.int32)
+    out["img2"] = out_img2
+    return out
 
 
 def fill_minima_distributed(df: DataFrame, img_col: str, boundary_col: str,
@@ -44,12 +79,11 @@ def fill_minima_distributed(df: DataFrame, img_col: str, boundary_col: str,
     the reference. No identity column rides the fixpoint; join url back
     on (cell_id, r, c). Results equal the whole-scene
     ``kernels.fill_minima`` exactly (property-tested in
-    tests/test_fillminima_dist.py).
+    tests/test_fillminima_dist.py and tests/test_tile_replay.py). Raises
+    RuntimeError if pixels still change after ``_MAX_ROUNDS`` rounds.
     """
-    W = C.SCENE_WIDTH
     nullval = C.REF_NULL_DN
-    spark = df.sparkSession
-    ensure_package_on_executors(spark)
+    ensure_package_on_executors(df.sparkSession)
 
     # Per-cell extremes, heights and boundary value (small dim table,
     # broadcast back).
@@ -75,49 +109,6 @@ def fill_minima_distributed(df: DataFrame, img_col: str, boundary_col: str,
               f"{img_col} bigint, h_max bigint, h_min bigint, "
               "cell_h int, cell_has_null int, cell_bval double, "
               "img2 bigint, changed int")
-    state_cols = ["cell_id", "r", "c", img_col, "h_max", "h_min", "cell_h",
-                  "cell_has_null", "cell_bval", "img2"]
-
-    def one_round(pdf: pd.DataFrame) -> pd.DataFrame:
-        halo = pdf["is_halo"].to_numpy()
-        core = ~halo
-        out = pdf.loc[core, state_cols].reset_index(drop=True)
-        if pd.isna(pdf["h_max"].iloc[0]):
-            # all-nodata cell: nothing to fill, every pixel keeps
-            # nullval (as kernels.fill_minima returns), nothing changes
-            out["changed"] = np.zeros(len(out), dtype=np.int32)
-            return out
-        rr = pdf["r"].to_numpy()
-        lo = int(rr.min())
-        h = int(rr.max()) - lo + 1
-        cc = pdf["c"].to_numpy()
-        h_max = int(pdf["h_max"].iloc[0])
-        h_min = int(pdf["h_min"].iloc[0])
-        cell_h = int(pdf["cell_h"].iloc[0])
-        cell_has_null = bool(pdf["cell_has_null"].iloc[0])
-        b = int(min(max(float(pdf["cell_bval"].iloc[0]), h_min), h_max))
-
-        img = kernels.raster(rr - lo, cc, pdf[img_col].to_numpy(), (h, W),
-                             0, np.int64)
-        present = kernels.raster(rr - lo, cc, True, (h, W), False, bool)
-        nullmask = ~present | (img == nullval)
-        # halo rows carry their current img2 as sources
-        seed = kernels.raster(
-            rr[halo] - lo, cc[halo],
-            np.minimum(pdf["img2"].to_numpy()[halo], _UNSET), (h, W),
-            _UNSET, np.int64)
-        # the tile's own null ring or cell edge, as the whole raster's
-        # (cell_has_null is the cell-wide flag; nullmask here also
-        # covers ghost slots)
-        res = kernels.fill_seeded(img, nullmask, b, h_min, h_max,
-                                  cell_has_null, lo == 0, lo + h == cell_h,
-                                  sources=seed)
-        out_img2 = res[rr[core] - lo, cc[core]]
-        out["changed"] = (out_img2 != out["img2"].to_numpy()).astype(np.int32)
-        out["img2"] = out_img2
-        return out
-
-    from ..tiling import with_halo
 
     state = base
     for _ in range(_MAX_ROUNDS):
@@ -126,11 +117,17 @@ def fill_minima_distributed(df: DataFrame, img_col: str, boundary_col: str,
         # itself (an observed metric), not a second aggregate job
         obs = Observation()
         state = (haloed.groupBy("cell_id", "tile")
-                 .applyInPandas(one_round, schema=schema)
+                 .applyInPandas(lambda pdf: fill_round(pdf, img_col),
+                                schema=schema)
                  .observe(obs, F.sum("changed").alias("n_changed"))
                  .localCheckpoint())
-        if not obs.get["n_changed"]:
+        n_changed = obs.get["n_changed"]
+        if not n_changed:
             break
+    else:
+        raise RuntimeError(
+            f"fill_minima_distributed: {n_changed} pixels still changed "
+            f"after {_MAX_ROUNDS} rounds; no fixpoint")
 
     return state.withColumn(
         "filled",

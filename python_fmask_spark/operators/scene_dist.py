@@ -16,13 +16,19 @@ loops clumps independently, fmask/fmask.py:1100-1185):
            shadow template   task size == clump size; also emits each
            + search window   clump's search-window rows
   stage 5  shadow match      cogrouped applyInPandas over (cell_id, row
-                             band): the band's template pixels x the
-                             band's flag pixels (tile-bucket
-                             equi-joined, never a range scan; window
-                             height <= clump extent + max sun-vector
-                             shift)
+                             band): the templates of the clumps whose
+                             search window starts in band b x the flag
+                             rows [bB, (b+1)B + span) (span = the
+                             widest window, <= clump extent + max
+                             sun-vector shift)
   stage 6  shadow buffer +   one tiled halo kernel + scene.class_sql
            finalize
+
+Every tiled stage takes its groups and windows from ``tiling``
+(stage 5's band b is a ``with_halo`` group of rows [bB, (b+1)B + span),
+B >= span, so no flag row is copied more than twice). A halo is as wide
+as its kernel's reach, even past one tile (stage 1's 1 + cloud buffer,
+stage 6's shadow buffer), so any buffer distance stays exact.
 
 Inputs are pipeline.scene_exchange's three frames, as for the
 whole-cell kernel: the ``dist_p3`` barrier stores the pixel frame with
@@ -178,17 +184,10 @@ def _match_band_kernel(left: pd.DataFrame, right: pd.DataFrame
     if left.empty or right.empty:
         return _NO_MATCH
     H = int(left["cell_rows"].iloc[0])
-    wr = right["r"].to_numpy()
-    win_r0 = int(wr.min())
-    shape = (int(wr.max()) - win_r0 + 1, C.SCENE_WIDTH)
-
-    def raster(col, fill):
-        return kernels.raster(wr - win_r0, right["c"].to_numpy(),
-                              right[col].to_numpy(), shape, fill, bool)
-
-    cloud = raster("cloudmask", False)
-    pot = raster("potential_shadow", False)
-    null = raster("nullmask", True)  # ghost slots are null
+    w = tiling.Window(right)
+    cloud = w.raster(right["cloudmask"])
+    pot = w.raster(right["potential_shadow"])
+    null = w.null(right["nullmask"])
 
     out_r: list[np.ndarray] = []
     out_c: list[np.ndarray] = []
@@ -199,7 +198,7 @@ def _match_band_kernel(left: pd.DataFrame, right: pd.DataFrame
                  float(g0["sun_az"]), float(g0["sun_zen"]))
         res = kernels.match_one_shadow(
             cloud, entry, pot, float(g0["base_temp_c"]),
-            _opt(g0["g_tlow"]), _opt(g0["g_thigh"]), null, row0=win_r0,
+            _opt(g0["g_tlow"]), _opt(g0["g_thigh"]), null, row0=w.lo,
             img_nrows=H)
         if res is not None:
             out_r.append(res[0].astype(np.int32))
@@ -253,7 +252,7 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
     # FmaskParams fields and the rendered SQL of the per-cell leaf and
     # the pixel exchange (the scene key rides in their view names, every
     # pass's formulas in the text) — a change re-runs the stages
-    logic = (f"distv7||{params!r}||{pipeline.thresholds_sql_text(scene)}"
+    logic = (f"distv8||{params!r}||{pipeline.thresholds_sql_text(scene)}"
              f"||{pipeline.px_exchange_sql(scene)}")
 
     px_in, dims, ident = pipeline.scene_exchange(
@@ -327,34 +326,27 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
     # --- stage 5: per-clump windowed shadow match (cogrouped)
     tmpl = px.join(cell_scalars, "cell_id")
 
-    # Band the match: every clump whose window STARTS in a row band is
-    # matched inside one task against ONE copy of the band raster
-    # (halo = max window span), instead of duplicating ~window_span x 8
-    # pixels PER CLOUD (measured: the per-cloud join amplified the
-    # pixel table ~28x on a clump-dense mega-cell). Band height >= max
-    # span keeps duplication <= 2x; parallelism = H / band_rows tasks.
+    # Band the match: every clump whose window STARTS in band b is
+    # matched in one task against ONE copy of the band's flag rows
+    # (tiling.with_halo, a one-sided reach of the max window span),
+    # instead of duplicating ~window_span x 8 pixels PER CLOUD
+    # (measured: ~28x on a clump-dense mega-cell). Parallelism = H / B
+    # tasks; bands no window starts in are dropped before the shuffle.
     span = int(px.agg(
         F.expr("max(win_r1 - win_r0 + 1)")).collect()[0][0] or 1)
     B = max(1024, span)
-    band = f"win_r0 div {B}"
+    band = tiling.tile_sql(B, "win_r0")
     tmpl_b = tmpl.withColumn("band", F.expr(band))
-
-    T = C.TILE_SIZE
-    band_tiles = (px.selectExpr("cell_id", f"{band} AS band").distinct()
-                  .withColumn("tile", F.explode(F.expr(
-                      f"sequence((band * {B}) div {T}, "
-                      f"((band + 1) * {B} + {span} - 1) div {T})"))))
-    wflags = flags.select("cell_id", "r", "c", "cloudmask",
-                          "potential_shadow", "nullmask") \
-        .withColumn("tile", F.expr(f"r div {T}"))
-    # right-side keys aliased: cell_id/band would otherwise carry the
-    # same attribute ids as the template side (checkpoints preserve
-    # exprIds) and trip the analyzer's ambiguous-self-join check
-    band_px = (wflags.join(band_tiles, ["cell_id", "tile"])
-               .filter(f"r >= band * {B} "
-                       f"and r < (band + 1) * {B} + {span}")
+    # right-side keys aliased: cell_id would otherwise carry the same
+    # attribute id as the template side (checkpoints preserve exprIds)
+    # and trip the analyzer's ambiguous-self-join check
+    band_px = (tiling.with_halo(
+        flags.select("cell_id", "r", "c", "cloudmask", "potential_shadow",
+                     "nullmask"), radius=span, tile_rows=B, above=0)
+               .join(px.selectExpr("cell_id", f"{band} AS tile").distinct(),
+                     ["cell_id", "tile"], "left_semi")
                .select(F.col("cell_id").alias("bcell"),
-                       F.col("band").alias("bband"), "r", "c",
+                       F.col("tile").alias("bband"), "r", "c",
                        "cloudmask", "potential_shadow", "nullmask"))
 
     matched = (tmpl_b.repartition(n_part, "cell_id", "band")

@@ -1,18 +1,21 @@
-"""Tiling and halo exchange.
+"""Tile geometry: which rows a tiled group holds, and its raster window.
 
-A cell's raster (height H, fixed width SCENE_WIDTH) is split into
-horizontal tiles of TILE_SIZE rows. Neighborhood kernels (majority,
-dilation, focal variance) need ``radius`` rows of context across tile
-seams — the reference gets this via RIOS overlap reads
-(fmask/fmask.py:262-263,706-711,1326); we get it with ``with_halo``:
-one explode copies each boundary row into the adjacent tile BEFORE the
-groupBy, so the kernel shuffle is one pass and needs no self-join.
-``tiled_neighborhood`` is the one halo-kernel helper: it runs any
-composition of such kernels over that single shuffle.
+A cell's raster (height H, width SCENE_WIDTH) splits into horizontal
+tiles of T rows (TILE_SIZE by default). ``with_halo`` is the one place
+rows are assigned to groups, by one explode before the groupBy (so a
+kernel shuffle is one pass with no self-join; RIOS overlap reads give
+the reference the same context, fmask/fmask.py:234,262-263): tile j
+holds rows [jT - above, (j+1)T + radius), ``above`` = ``radius`` except
+in stage 5's match bands (scene_dist: band b holds rows [bB, (b+1)B +
+span)). Radius rule: a halo wider than a tile reaches as many tiles as
+the radius needs. ``Window`` turns a group's rows into rasters and
+back. The per-group functions (``neighborhood_group``,
+``fillminima_dist.fill_round``, ``clumps.local_label`` and
+``seam_roots``) need no Spark; tests/test_tile_replay.py replays them.
 
-Scale notes: halo duplication is 2*radius/TILE_SIZE overhead (about 3%
-for radius 2 at TILE_SIZE 128). The (cell_id, tile) grouping key is the skew
-answer: a mega-cell fans out to H/TILE_SIZE independent tasks.
+Halo duplication is (above + radius)/T (about 3% for radius 2 at
+TILE_SIZE 128); the (cell_id, tile) key is the skew answer: a mega-cell
+fans out to H/T independent tasks.
 """
 
 from __future__ import annotations
@@ -30,63 +33,102 @@ from .operators import kernels
 from .session import ensure_package_on_executors
 
 
-def with_halo(df: DataFrame, radius: int,
-              tile_rows: int = C.TILE_SIZE) -> DataFrame:
-    """Duplicate each tile-boundary row into the neighboring tile as halo.
-
-    Returns df + columns (tile, is_halo). Implemented as a single-pass
-    explode: each row emits its core (tile, is_halo=false) entry plus up
-    to two halo entries for adjacent tiles. One scan of the input — no
-    union (a union re-evaluates an unmaterialized upstream plan once per
-    branch) and no join; the only shuffle is the consumer's groupBy on
-    (cell_id, tile)."""
-    entries = (
-        f"filter(array("
-        f"  named_struct('tile', r div {tile_rows}, 'is_halo', false),"
-        f"  if(pmod(r, {tile_rows}) < {radius} and r div {tile_rows} > 0,"
-        f"     named_struct('tile', r div {tile_rows} - 1, 'is_halo', true),"
-        f"     null),"
-        f"  if(pmod(r, {tile_rows}) >= {tile_rows} - {radius},"
-        f"     named_struct('tile', r div {tile_rows} + 1, 'is_halo', true),"
-        f"     null)"
-        f"), x -> x is not null)")
-    return (df.withColumn("_t", F.explode(F.expr(entries)))
-              .withColumn("tile", F.col("_t.tile"))
-              .withColumn("is_halo", F.col("_t.is_halo"))
-              .drop("_t"))
+def tile_sql(tile_rows: int, row: str = "r") -> str:
+    """The SQL tile index of the row column ``row``."""
+    return f"{row} div {tile_rows}"
 
 
-def tiled_neighborhood(
-    df: DataFrame,
-    kernel: Callable[[dict[str, np.ndarray]], dict[str, np.ndarray]],
-    in_cols: tuple[str, ...],
-    out_cols: tuple[str, ...],
-    radius: int,
-    tile_rows: int = C.TILE_SIZE,
-    passthrough: tuple[str, ...] = (),
-) -> DataFrame:
+def seam_rows_sql(tile_rows: int) -> tuple[str, str]:
+    """SQL predicates for a row being its tile's first and last row."""
+    return (f"pmod(r, {tile_rows}) = 0",
+            f"pmod(r, {tile_rows}) = {tile_rows - 1}")
+
+
+def with_halo(df: DataFrame, radius: int, tile_rows: int = C.TILE_SIZE,
+              above: int | None = None) -> DataFrame:
+    """df + columns (tile, is_halo): one row per tile whose window
+    holds it, is_halo false in its own tile; tile j's window is rows
+    [jT - above, (j+1)T + radius), ``above`` defaulting to ``radius``.
+    One scan of the input: no union (a union re-evaluates an
+    unmaterialized upstream plan once per branch) and no join; the only
+    shuffle is the consumer's groupBy on (cell_id, tile). A window past
+    a cell's last tile holds halo rows only."""
+    above = radius if above is None else above
+    tiles = (f"sequence(greatest({tile_sql(tile_rows, f'(r - {radius})')}, 0),"
+             f" {tile_sql(tile_rows, f'(r + {above})')})")
+    return (df.withColumn("tile", F.explode(F.expr(tiles)))
+              .withColumn("is_halo", F.expr(f"tile != {tile_sql(tile_rows)}")))
+
+
+class Window:
+    """A group's rows (``pdf``: r, c and, from with_halo, is_halo) as one
+    raster window of its cell: rows [lo, lo + h) from the group's first
+    to last row, SCENE_WIDTH columns. The core rows (all rows when there
+    is no is_halo) are the ones the group emits."""
+
+    def __init__(self, pdf: pd.DataFrame):
+        r = pdf["r"].to_numpy()
+        self.lo = int(r.min())
+        self.h = int(r.max()) - self.lo + 1
+        self._rc = (r - self.lo, pdf["c"].to_numpy())
+        self.core = (~pdf["is_halo"].to_numpy() if "is_halo" in pdf
+                     else np.ones(len(r), dtype=bool))
+
+    def raster(self, values, fill=False, dtype=bool) -> np.ndarray:
+        """The rows' ``values`` as a raster; slots no row names: ``fill``."""
+        return kernels.raster(*self._rc, values, (self.h, C.SCENE_WIDTH),
+                              fill, dtype)
+
+    def null(self, values) -> np.ndarray:
+        """A nullmask raster: a ghost slot (no row) reads null."""
+        return self.raster(values, True)
+
+    def gather(self, arr: np.ndarray) -> np.ndarray:
+        """``arr`` (a window raster) at the core rows, in group order."""
+        return arr[self._rc[0][self.core], self._rc[1][self.core]]
+
+
+def neighborhood_group(pdf: pd.DataFrame, kernel, in_cols: tuple[str, ...],
+                       out_cols: tuple[str, ...], packed: tuple[str, ...],
+                       unpacked: tuple[str, ...]) -> pd.DataFrame:
+    """One (cell_id, tile) group of ``tiled_neighborhood``: ``pdf`` holds
+    cell_id, r, c, is_halo, the bitpacked ``packed`` columns as ``_bf``
+    and the ``unpacked`` columns. Returns the core rows with every
+    ``out_cols`` kernel output and the data columns."""
+    cols = bitpack.unpack(pdf["_bf"].to_numpy(), packed)
+    cols.update({name: pdf[name].to_numpy() for name in unpacked})
+    w = Window(pdf)
+    res = kernel({name: (w.null if name == "nullmask" else w.raster)(
+        cols[name]) for name in in_cols})
+    out = {k: pdf[k].to_numpy()[w.core] for k in ("cell_id", "r", "c")}
+    out.update({name: w.gather(res[name]) for name in out_cols})
+    out.update({name: v[w.core] for name, v in cols.items()})
+    return pd.DataFrame(out)
+
+
+def tiled_neighborhood(df: DataFrame, kernel: Callable[[dict], dict],
+                       in_cols: tuple[str, ...], out_cols: tuple[str, ...],
+                       radius: int, tile_rows: int = C.TILE_SIZE,
+                       passthrough: tuple[str, ...] = ()) -> DataFrame:
     """Run 2-D neighborhood kernels tile-parallel over ONE halo shuffle.
 
     ``kernel`` maps {in_col: bool raster slab} -> {out_col: same-shape
     bool array}; it must use reflect borders (all kernels in
     operators/kernels.py do). ``radius`` must cover the composed reach
-    (e.g. majority(1) then dilate(5) -> 6): composing k local operators
-    into one tile pass costs one shuffle and one Arrow round trip
-    instead of k. The slab covers [tile_start - radius, tile_end +
-    radius] rows and only core rows are emitted, so seam rows equal the
-    whole-raster result exactly (property-tested); the slab's synthetic
-    edges are only reached where the halo is truncated by the true
-    raster border, where reflect is the correct semantic anyway. A slab
-    position no row fills (a ragged last row's ghost slots) reads False,
-    except in a ``nullmask`` slab, where it reads True: ghost slots are
-    null, as in classify_scene.
+    (e.g. majority(1) then dilate(5) -> 6), and may exceed
+    ``tile_rows``: composing k local operators into one tile pass costs
+    one shuffle and one Arrow round trip instead of k. Only core rows
+    are emitted, so seam rows equal the whole-raster result exactly
+    (property-tested); reflect borders act only where the true raster
+    border truncates the halo. A slab position no row fills (a ragged
+    last row's ghost slots) reads False, except in a ``nullmask`` slab,
+    where it reads True (``Window.null``).
 
     Rows are keyed (cell_id, r, c): callers join other columns (url,
     digests) back on that key instead of shipping them through the halo
     sort. Every boolean input/passthrough column rides the exchange
     packed into ONE tinyint (the bitpack format); the kernel and the
     output see plain booleans."""
-    W = C.SCENE_WIDTH
     ensure_package_on_executors(df.sparkSession)
     passthrough = tuple(p for p in passthrough if p not in in_cols)
     dtypes = dict(df.dtypes)
@@ -100,30 +142,6 @@ def tiled_neighborhood(
     schema = ("cell_id string, r int, c int"
               + "".join(f", {name} boolean" for name in out_cols)
               + "".join(f", {name} {dtypes[name]}" for name in data_cols))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        r = pdf["r"].to_numpy()
-        slab_lo = r.min()
-        h = r.max() - slab_lo + 1
-        cc_all = pdf["c"].to_numpy()
-        cols = bitpack.unpack(pdf["_bf"].to_numpy(), packed)
-        cols.update({name: pdf[name].to_numpy() for name in unpacked})
-        slabs = {name: kernels.raster(r - slab_lo, cc_all, cols[name],
-                                      (h, W), name == "nullmask", bool)
-                 for name in in_cols}
-        res = kernel(slabs)
-        core = ~pdf["is_halo"].to_numpy()
-        rr = r[core]
-        cc = cc_all[core]
-        out = {
-            "cell_id": pdf["cell_id"].to_numpy()[core],
-            "r": rr.astype(np.int32),
-            "c": cc.astype(np.int32),
-        }
-        for name in out_cols:
-            out[name] = res[name][rr - slab_lo, cc]
-        for name in data_cols:
-            out[name] = cols[name][core]
-        return pd.DataFrame(out)
-
-    return haloed.groupBy("cell_id", "tile").applyInPandas(run, schema=schema)
+    return haloed.groupBy("cell_id", "tile").applyInPandas(
+        lambda pdf: neighborhood_group(pdf, kernel, in_cols, out_cols,
+                                       packed, unpacked), schema=schema)

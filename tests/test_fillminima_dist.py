@@ -11,7 +11,7 @@ import pandas as pd
 import pytest
 
 from python_fmask_spark import constants as C
-from python_fmask_spark.operators import kernels
+from python_fmask_spark.operators import fillminima_dist, kernels
 from python_fmask_spark.operators.fillminima_dist import (
     fill_minima_distributed,
 )
@@ -76,3 +76,23 @@ def test_distributed_fill_equals_whole(spark, nulls, tile_rows, bval):
                 for r in range(img.shape[0]) for c in range(W)
                 if got[(cell, r, c)] != int(fix[r, c])]
     assert not bad, f"{len(bad)} mismatches, first: {bad[:5]}"
+
+
+def test_no_fixpoint_raises(spark, monkeypatch):
+    """A fill wave that crosses 6 tiles needs 7 rounds: a 1-pixel
+    channel walled on three sides drains only through the cell's top
+    edge, so each round lowers it one tile further. Capped at 3 rounds,
+    the run must raise instead of returning the unconverged state."""
+    H = 24
+    img = np.full((H, W), 100, dtype=np.int64)
+    img[:, 2] = img[:, 4] = 200
+    img[:, 3] = 10
+    img[-1, 3] = 200
+    pdf = pd.DataFrame([("cellC", r, c, int(img[r, c]), 0.0)
+                        for r in range(H) for c in range(W)],
+                       columns=["cell_id", "r", "c", "nir", "bval"])
+    monkeypatch.setattr(fillminima_dist, "_MAX_ROUNDS", 3)
+    with pytest.raises(RuntimeError,
+                       match=r"[1-9]\d* pixels still changed after 3 rounds"):
+        fill_minima_distributed(spark.createDataFrame(pdf), "nir", "bval",
+                                tile_rows=4).collect()

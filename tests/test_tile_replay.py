@@ -1,0 +1,286 @@
+"""Spark-free replay of the tiled stages against the whole-raster kernels.
+
+A NumPy tiler forms the groups ``tiling.with_halo`` forms (tile j of
+height T holds rows [j*T - above, (j+1)*T + radius) of its cell, is_halo
+outside its own rows) and feeds them, as pandas frames in the columns
+Spark ships, to the module-level per-group functions: the halo-kernel
+tile (``tiling.neighborhood_group``), the fill-minima round
+(``fillminima_dist.fill_round``, iterated to the fixpoint as
+``fill_minima_distributed`` iterates it) and the tile-local CCL plus the
+seam union-find (``clumps.local_label``, ``clumps.seam_roots``). Cases
+cover tile heights 2-16, halos wider than a tile, ragged last rows,
+all-null cells, fill basins that cross 3 or more tiles and clumps that
+cross seams.
+
+No test here needs a SparkSession, and the module fails any attempt to
+launch a JVM. Run alone, it takes seconds:
+
+    python -m pytest tests/test_tile_replay.py -q
+"""
+
+from __future__ import annotations
+
+import numpy as np
+import pandas as pd
+import pytest
+
+from python_fmask_spark import constants as C
+from python_fmask_spark import tiling
+from python_fmask_spark.operators import clumps, fillminima_dist, kernels
+
+W = C.SCENE_WIDTH
+NULL = C.REF_NULL_DN
+
+
+@pytest.fixture(autouse=True)
+def _no_jvm(monkeypatch):
+    import pyspark.context
+    import pyspark.java_gateway
+
+    def refuse(*_a, **_k):
+        raise AssertionError("the tile replay must not start a JVM")
+
+    monkeypatch.setattr(pyspark.java_gateway, "launch_gateway", refuse)
+    monkeypatch.setattr(pyspark.context, "launch_gateway", refuse)
+
+
+def _pixels(H: int, n: int) -> tuple[np.ndarray, np.ndarray]:
+    """(r, c) of a cell's first ``n`` pixels of an H x W raster in
+    row-major order: a ragged last row when n % W != 0."""
+    idx = np.arange(n)
+    return (idx // W).astype(np.int32), (idx % W).astype(np.int32)
+
+
+def _ragged(rng, H: int) -> int:
+    return H * W - int(rng.randint(0, W)) if rng.rand() < 0.5 else H * W
+
+
+def _groups(r: np.ndarray, tile_rows: int, radius: int, above=None):
+    """(row indexes, is_halo) of every group with_halo forms."""
+    above = radius if above is None else above
+    for j in range((int(r.max()) + above) // tile_rows + 1):
+        sel = np.flatnonzero((r >= j * tile_rows - above)
+                             & (r < (j + 1) * tile_rows + radius))
+        if len(sel):
+            yield sel, r[sel] // tile_rows != j
+
+
+def _whole(r, c, values, fill, dtype=bool):
+    return kernels.raster(r, c, values, (int(r.max()) + 1, W), fill, dtype)
+
+
+# --- halo kernels (tiled_neighborhood) --------------------------------------
+
+
+def _replay_neighborhood(frame: pd.DataFrame, kernel, in_cols, out_cols,
+                         radius: int, tile_rows: int) -> pd.DataFrame:
+    bits = sum(frame[n].to_numpy().astype(np.int8) << i
+               for i, n in enumerate(in_cols))
+    shipped = frame[["cell_id", "r", "c"]].assign(_bf=bits.astype(np.int8))
+    r = frame["r"].to_numpy()
+    out = pd.concat([
+        tiling.neighborhood_group(
+            shipped.iloc[sel].assign(is_halo=halo).reset_index(drop=True),
+            kernel, in_cols, out_cols, in_cols, ())
+        for sel, halo in _groups(r, tile_rows, radius)])
+    return out.sort_values(["r", "c"]).reset_index(drop=True)
+
+
+@pytest.mark.parametrize("seed", range(6))
+def test_interim_cloud_replay_equals_whole(seed):
+    """Stage 1's tile pass (majority, ``& ~nullmask``, cloud buffer) at
+    random tile heights and buffers, halo wider than a tile included:
+    ghost slots of a ragged last row must read null, as the whole
+    raster's nullmask has them."""
+    rng = np.random.RandomState(seed)
+    for _ in range(20):
+        H = int(rng.randint(1, 33))
+        r, c = _pixels(H, _ragged(rng, H))
+        T = int(rng.randint(2, 17))
+        buf = int(rng.choice([0, 1, 2, rng.randint(0, T + 4)]))
+        null_p = 1.0 if rng.rand() < 0.1 else rng.rand() * 0.2
+        frame = pd.DataFrame({
+            "cell_id": "x", "r": r, "c": c,
+            "cloud_raw": rng.rand(len(r)) < rng.rand(),
+            "nullmask": rng.rand(len(r)) < null_p})
+
+        def fused(slabs):
+            cloud_m, clouddil = kernels.interim_cloud(
+                slabs["cloud_raw"], slabs["nullmask"], buf)
+            return {"cloud_m": cloud_m, "clouddil": clouddil}
+
+        got = _replay_neighborhood(frame, fused, ("cloud_raw", "nullmask"),
+                                   ("cloud_m", "clouddil"), 1 + buf, T)
+        cloud_m, clouddil = kernels.interim_cloud(
+            _whole(r, c, frame["cloud_raw"], False),
+            _whole(r, c, frame["nullmask"], True), buf)
+        case = (seed, H, len(r), T, buf)
+        assert len(got) == len(r), case
+        np.testing.assert_array_equal(got["cloud_m"], cloud_m[r, c], str(case))
+        np.testing.assert_array_equal(got["clouddil"], clouddil[r, c],
+                                      str(case))
+        np.testing.assert_array_equal(got["nullmask"], frame["nullmask"])
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_shadow_buffer_replay_equals_whole(seed):
+    """Stage 6's dilation, sparse seeds so that a too-narrow halo would
+    show, radius up to the tile height + 3."""
+    rng = np.random.RandomState(100 + seed)
+    for _ in range(15):
+        H = int(rng.randint(1, 33))
+        r, c = _pixels(H, _ragged(rng, H))
+        T = int(rng.randint(2, 9))
+        rad = int(rng.randint(1, T + 4))
+        frame = pd.DataFrame({"cell_id": "x", "r": r, "c": c,
+                              "shadow_raw": rng.rand(len(r)) < 0.02})
+        got = _replay_neighborhood(
+            frame, lambda s: {"dil": kernels.dilate(s["shadow_raw"], rad)},
+            ("shadow_raw",), ("dil",), rad, T)
+        want = kernels.dilate(_whole(r, c, frame["shadow_raw"], False), rad)
+        np.testing.assert_array_equal(got["dil"], want[r, c],
+                                      str((seed, H, T, rad)))
+
+
+# --- fill-minima rounds ------------------------------------------------------
+
+
+def _replay_fill(img: np.ndarray, r, c, bval: float, tile_rows: int):
+    """(filled, rounds): fill_minima_distributed's per-cell meta and
+    rounds, replayed to the fixpoint."""
+    valid = img != NULL
+    nan = float("nan")
+    state = pd.DataFrame({
+        "cell_id": "x", "r": r, "c": c, "nir": img,
+        "h_max": img[valid].max() if valid.any() else nan,
+        "h_min": img[valid].min() if valid.any() else nan,
+        "cell_h": int(r.max()) + 1,
+        "cell_has_null": int((~valid).any()
+                             or len(r) < (int(r.max()) + 1) * W),
+        "cell_bval": float(bval),
+        "img2": fillminima_dist._UNSET})
+    for rounds in range(1, 200):
+        rr = state["r"].to_numpy()
+        state = pd.concat([
+            fillminima_dist.fill_round(
+                state.iloc[sel].assign(is_halo=halo).reset_index(drop=True),
+                "nir")
+            for sel, halo in _groups(rr, tile_rows, 1)])
+        state = state.sort_values(["r", "c"]).reset_index(drop=True)
+        if not state["changed"].sum():
+            break
+    filled = np.where(state["nir"] == NULL, NULL, state["img2"])
+    return filled, rounds
+
+
+def _terrain(rng, H: int) -> np.ndarray:
+    img = rng.randint(50, 200, size=(H, W)).astype(np.int64)
+    for _ in range(int(rng.randint(0, 4))):
+        img[rng.randint(0, H), rng.randint(0, W)] = rng.randint(1, 20)
+    if rng.rand() < 0.4:
+        r0 = rng.randint(0, H)
+        img[r0:r0 + rng.randint(1, 4), rng.randint(0, W):] = NULL
+    return img
+
+
+def _channel(H: int) -> np.ndarray:
+    """A 1-pixel channel at c=3 walled on three sides, draining only
+    through the cell's top edge: its fill level reaches a tile one round
+    after the tile above it, so the fill wave crosses every tile."""
+    img = np.full((H, W), 100, dtype=np.int64)
+    img[:, 2] = img[:, 4] = 200
+    img[:, 3] = 10
+    img[-1, 3] = 200
+    return img
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_fill_replay_equals_whole(seed):
+    """Random terrain with null patches, ragged last rows and all-null
+    cells, to the fixpoint, against the whole-raster kernels.fill_minima
+    (a ghost slot is a null pixel there)."""
+    rng = np.random.RandomState(200 + seed)
+    for k in range(25):
+        H = int(rng.randint(1, 25))
+        img = (np.zeros((H, W), dtype=np.int64) if k % 12 == 0
+               else _terrain(rng, H))
+        r, c = _pixels(H, _ragged(rng, H))
+        T = int(rng.randint(2, 17))
+        bval = float(rng.choice([0, 80, 120]))
+        got, _ = _replay_fill(img[r, c], r, c, bval, T)
+        want = kernels.fill_minima(_whole(r, c, img[r, c], NULL, np.int64),
+                                   NULL, bval)
+        np.testing.assert_array_equal(got, want[r, c],
+                                      str((seed, k, H, len(r), T, bval)))
+
+
+@pytest.mark.parametrize("tile_rows", [2, 3, 4, 8])
+def test_fill_basin_across_tiles_takes_rounds(tile_rows):
+    """The channel's fill wave crosses every tile (3 to 12 of them): one
+    round per tile, then one round that changes nothing."""
+    H = 24
+    img = _channel(H)
+    r, c = _pixels(H, H * W)
+    got, rounds = _replay_fill(img[r, c], r, c, 0.0, tile_rows)
+    np.testing.assert_array_equal(got, kernels.fill_minima(img, NULL, 0.0)
+                                  [r, c])
+    assert rounds == -(-H // tile_rows) + 1
+
+
+# --- cross-tile CCL ---------------------------------------------------------
+
+
+def _replay_ccl(cells: dict, tile_rows: int, eight: bool) -> dict:
+    """{(cell, r, c): clump_id} for the True pixels of ``cells`` (cell ->
+    (r, c) arrays): tile-local labels, seam edges between each tile's
+    last row and the next tile's first row, one union-find."""
+    local = {}
+    for cell, (r, c) in cells.items():
+        tile = r // tile_rows
+        for t in np.unique(tile):
+            sel = tile == t
+            out = clumps.local_label(pd.DataFrame(
+                {"cell_id": cell, "r": r[sel], "c": c[sel], "tile": t}),
+                eight)
+            local.update({(cell, int(a), int(b)): int(lab) for a, b, lab in
+                          zip(out["r"], out["c"], out["local_label"])})
+    reach = (-1, 0, 1) if eight else (0,)
+    edges = {(cell, lab, local[(cell, r + 1, c + d)])
+             for (cell, r, c), lab in local.items()
+             if r % tile_rows == tile_rows - 1
+             for d in reach if (cell, r + 1, c + d) in local}
+    root = {(cell, lab): rt for cell, lab, rt in
+            clumps.seam_roots(sorted(edges))}
+    return {k: root.get((k[0], lab), lab) for k, lab in local.items()}
+
+
+@pytest.mark.parametrize("seed", range(6))
+def test_ccl_replay_equals_whole(seed):
+    """Two cells per case through one seam union-find (labels are
+    cell-local, so a merge must not leak across cells), 4- and
+    8-connected, against label_components canonicalized to each
+    component's first pixel."""
+    rng = np.random.RandomState(300 + seed)
+    merged = 0
+    for k in range(30):
+        T = int(rng.randint(2, 17))
+        eight = bool(k % 2)
+        cells, want = {}, {}
+        for cell in ("a", "b"):
+            H = int(rng.randint(1, 41))
+            r, c = _pixels(H, _ragged(rng, H))
+            mask = _whole(r, c, rng.rand(len(r)) < rng.rand() * 0.7, False)
+            lab, _n = kernels.label_components(mask, eight_connected=eight)
+            first = {}
+            for rr, cc in zip(*np.nonzero(mask)):
+                first.setdefault(lab[rr, cc], int(rr) * W + int(cc))
+            sel = mask[r, c]
+            cells[cell] = (r[sel], c[sel])
+            want.update({(cell, int(rr), int(cc)): first[lab[rr, cc]]
+                         for rr, cc in zip(r[sel], c[sel])})
+        got = _replay_ccl(cells, T, eight)
+        assert got == want, (seed, k, T, eight)
+        merged += sum(v != k[1] * W + k[2] and k[1] // T != v // W // T
+                      for k, v in got.items())
+    # some clumps cross seams
+    assert merged

@@ -54,6 +54,22 @@ def test_tiled_dilate_equals_whole(spark):
         assert row.dil == bool(whole[row.r, row.c]), (row.r, row.c)
 
 
+def test_halo_wider_than_a_tile_equals_whole(spark):
+    """A kernel reach beyond one tile (radius 9 over 4-row tiles, as a
+    buffer of more than 128 px is over 128-row tiles): each row must
+    reach every tile within the radius, not only the adjacent ones."""
+    df, mask = _mask_df(spark, seed=41, density=0.01)
+    radius, tile_rows = 9, 4
+    out = tiling.tiled_neighborhood(
+        df, lambda s: {"dil": kernels.dilate(s["flag"], radius)},
+        ("flag",), ("dil",), radius=radius, tile_rows=tile_rows).collect()
+    whole = kernels.dilate(mask, radius)
+    assert len(out) == H * W
+    bad = [(row.r, row.c) for row in out
+           if row.dil != bool(whole[row.r, row.c])]
+    assert not bad, f"{len(bad)} pixels differ, first: {bad[:5]}"
+
+
 @pytest.mark.parametrize("tile_rows", [8, 16, 37])
 def test_distributed_ccl_equals_whole(spark, tile_rows):
     df, mask = _mask_df(spark, seed=23, density=0.4)
