@@ -209,7 +209,7 @@ def _potential_shadow_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
               t.b4_17 * {C.TOA_SCALE} AS nir17_dn
             FROM pass1 p JOIN thresholds t ON t.cell_id = p.cell_id"""
                      ).localCheckpoint()
-    filled = fill_minima_distributed(src, "nir", "nir17_dn")
+    filled = fill_minima_distributed(src, "nir17_dn")
     # identity joins back on the composite key — the fill fixpoint is
     # url-free (no passthrough through up to 64 halo rounds)
     return (filled.join(src.select("url", "cell_id", "r", "c"),

@@ -32,32 +32,31 @@ def raster(rows: np.ndarray, cols: np.ndarray, values, shape: tuple[int, int],
 # ---------------------------------------------------------------------------
 
 
-def _reflect_idx(idx: np.ndarray, n: int) -> np.ndarray:
-    """Single-mirror reflect; -1 marks indexes that stay out of range."""
-    out = idx.copy()
-    neg = idx < 0
-    out[neg] = -idx[neg] - 1
-    over = idx >= n
-    out[over] = 2 * n - idx[over] - 1
-    out[(out < 0) | (out >= n)] = -1
+def _reflect_idx(n: int, d: int) -> tuple[np.ndarray, np.ndarray]:
+    """arange(n) + d under a single-mirror reflect: (the index clipped
+    into range, whether it was in range after the one mirror)."""
+    idx = np.arange(n) + d
+    idx = np.where(idx < 0, -idx - 1, np.where(idx >= n, 2 * n - idx - 1, idx))
+    return np.clip(idx, 0, n - 1), (idx >= 0) & (idx < n)
+
+
+def _offset_sum(img: np.ndarray, offsets) -> np.ndarray:
+    """Sum of ``img`` shifted by each (dr, dc) of ``offsets`` with reflect
+    borders (an out-of-range position adds 0); each distinct row and
+    column offset is reflected once."""
+    h, w = img.shape
+    rows = {dr: _reflect_idx(h, dr) for dr in {dr for dr, _ in offsets}}
+    cols = {dc: _reflect_idx(w, dc) for dc in {dc for _, dc in offsets}}
+    out = np.zeros((h, w), dtype=img.dtype)
+    for dr, dc in offsets:
+        (rr, r_ok), (cc, c_ok) = rows[dr], cols[dc]
+        out += np.where(r_ok[:, None] & c_ok[None, :], img[np.ix_(rr, cc)], 0)
     return out
 
 
 def neighbor_count(mask: np.ndarray, offsets: list[tuple[int, int]]) -> np.ndarray:
     """Count of True neighbors over the given offsets with reflect borders."""
-    h, w = mask.shape
-    out = np.zeros((h, w), dtype=np.int32)
-    rows_base = np.arange(h)
-    cols_base = np.arange(w)
-    m = mask.astype(np.int32)
-    for dr, dc in offsets:
-        rr = _reflect_idx(rows_base + dr, h)
-        cc = _reflect_idx(cols_base + dc, w)
-        valid = (rr >= 0)[:, None] & (cc >= 0)[None, :]
-        rr_c = np.clip(rr, 0, h - 1)
-        cc_c = np.clip(cc, 0, w - 1)
-        out += np.where(valid, m[np.ix_(rr_c, cc_c)], 0)
-    return out
+    return _offset_sum(mask.astype(np.int32), offsets)
 
 
 _OFFS3 = [(dr, dc) for dr in (-1, 0, 1) for dc in (-1, 0, 1)]
@@ -100,21 +99,9 @@ def interim_cloud(cloud_raw: np.ndarray, nullmask: np.ndarray,
 def box_mean(img: np.ndarray, win: int) -> np.ndarray:
     """Uniform (box) filter mean with reflect borders — float analogue of
     neighbor_count, used by focal variance."""
-    h, w = img.shape
-    half = (win - 1) // 2
-    out = np.zeros((h, w), dtype=np.float64)
-    rows_base = np.arange(h)
-    cols_base = np.arange(w)
-    for dr in range(-half, half + 1):
-        rr = _reflect_idx(rows_base + dr, h)
-        rr_c = np.clip(rr, 0, h - 1)
-        row_valid = (rr >= 0)
-        for dc in range(-half, half + 1):
-            cc = _reflect_idx(cols_base + dc, w)
-            cc_c = np.clip(cc, 0, w - 1)
-            valid = row_valid[:, None] & (cc >= 0)[None, :]
-            out += np.where(valid, img[np.ix_(rr_c, cc_c)], 0.0)
-    return out / (win * win)
+    offs = range(-((win - 1) // 2), (win - 1) // 2 + 1)
+    return _offset_sum(np.asarray(img, dtype=np.float64),
+                       [(dr, dc) for dr in offs for dc in offs]) / (win * win)
 
 
 def focal_variance(img: np.ndarray, win: int) -> np.ndarray:

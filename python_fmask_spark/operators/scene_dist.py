@@ -51,7 +51,8 @@ clumps + every clump's match into one task.
 
 Constant-factor cost: three stage barriers (``dist_p3``, ``dist_flags``,
 ``dist_px``, each a plans.lineage.barrier) on top of the exchange's two
-leaves, the clump and fill-minima checkpoints, and 5 extra shuffles vs
+leaves, the clump checkpoint, one fill-minima checkpoint per fill round
+(one round when every cell fits in one fill tile), and 5 extra shuffles vs
 the single-exchange whole-cell kernel — measured 10-30x total CPU at 1M
 rows, shrinking as cells grow. Use pipeline.classify below ~10^5 rows
 per cell; this path exists for the cell sizes where one task would
@@ -269,21 +270,14 @@ def _classify_distributed(spark: SparkSession, scene: Scene,
     # the end.
     layers = cloud_layers(p3, params)
 
-    # --- stage 2: potential shadow via distributed fill-minima.
-    # The fixpoint needs ~H/tile_rows rounds for a fill wave to cross a
-    # cell (each round propagates one halo), so a fixed 128-row tile
-    # degenerates on mega-cells (measured: a 16k-row cell took ~60
-    # rounds = 120+ stages). Adapt the FILL tile height to the tallest
-    # cell: rounds stay ~16 while the per-task slab stays bounded at
-    # tile_rows x 8 pixels.
-    h_max = dims.agg(F.expr("max(cell_rows)")).collect()[0][0] or 1
-    fill_tile = max(C.TILE_SIZE, -(-int(h_max) // 16))
+    # --- stage 2: potential shadow via distributed fill-minima (its
+    # per-cell tile height and stopping rule are fillminima_dist's)
     filled = fill_minima_distributed(
         p3.join(F.broadcast(dims.selectExpr(
             "cell_id", f"g_b4_17 * {C.TOA_SCALE} AS nir17_dn")), "cell_id")
         .select("cell_id", "r", "c",
                 F.expr("cast(nir as bigint) as nir"), "nir17_dn"),
-        "nir", "nir17_dn", tile_rows=fill_tile)
+        "nir17_dn")
     pot = filled.selectExpr(
         "cell_id", "r", "c", f"{POTENTIAL_SHADOW_SQL} AS potential_shadow")
 

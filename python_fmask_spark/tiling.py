@@ -33,8 +33,8 @@ from .operators import kernels
 from .session import ensure_package_on_executors
 
 
-def tile_sql(tile_rows: int, row: str = "r") -> str:
-    """The SQL tile index of the row column ``row``."""
+def tile_sql(tile_rows: int | str, row: str = "r") -> str:
+    """The SQL tile index of the row column ``row`` (``tile_rows`` may be SQL)."""
     return f"{row} div {tile_rows}"
 
 
@@ -44,15 +44,17 @@ def seam_rows_sql(tile_rows: int) -> tuple[str, str]:
             f"pmod(r, {tile_rows}) = {tile_rows - 1}")
 
 
-def with_halo(df: DataFrame, radius: int, tile_rows: int = C.TILE_SIZE,
+def with_halo(df: DataFrame, radius: int, tile_rows: int | str = C.TILE_SIZE,
               above: int | None = None) -> DataFrame:
     """df + columns (tile, is_halo): one row per tile whose window
     holds it, is_halo false in its own tile; tile j's window is rows
     [jT - above, (j+1)T + radius), ``above`` defaulting to ``radius``.
-    One scan of the input: no union (a union re-evaluates an
-    unmaterialized upstream plan once per branch) and no join; the only
-    shuffle is the consumer's groupBy on (cell_id, tile). A window past
-    a cell's last tile holds halo rows only."""
+    The tile height T is ``tile_rows``, an int or a SQL expression over
+    df's columns (fill-minima's per-cell rule over ``cell_h``). One scan
+    of the input: no union (a union re-evaluates an unmaterialized
+    upstream plan once per branch) and no join; the only shuffle is the
+    consumer's groupBy on (cell_id, tile). A window past a cell's last
+    tile holds halo rows only."""
     above = radius if above is None else above
     tiles = (f"sequence(greatest({tile_sql(tile_rows, f'(r - {radius})')}, 0),"
              f" {tile_sql(tile_rows, f'(r + {above})')})")
@@ -89,14 +91,13 @@ class Window:
 
 
 def neighborhood_group(pdf: pd.DataFrame, kernel, in_cols: tuple[str, ...],
-                       out_cols: tuple[str, ...], packed: tuple[str, ...],
-                       unpacked: tuple[str, ...]) -> pd.DataFrame:
+                       out_cols: tuple[str, ...], packed: tuple[str, ...]
+                       ) -> pd.DataFrame:
     """One (cell_id, tile) group of ``tiled_neighborhood``: ``pdf`` holds
-    cell_id, r, c, is_halo, the bitpacked ``packed`` columns as ``_bf``
-    and the ``unpacked`` columns. Returns the core rows with every
-    ``out_cols`` kernel output and the data columns."""
+    cell_id, r, c, is_halo and the boolean ``packed`` columns bitpacked
+    as ``_bf``. Returns the core rows with every ``out_cols`` kernel
+    output and the ``packed`` columns."""
     cols = bitpack.unpack(pdf["_bf"].to_numpy(), packed)
-    cols.update({name: pdf[name].to_numpy() for name in unpacked})
     w = Window(pdf)
     res = kernel({name: (w.null if name == "nullmask" else w.raster)(
         cols[name]) for name in in_cols})
@@ -126,22 +127,22 @@ def tiled_neighborhood(df: DataFrame, kernel: Callable[[dict], dict],
 
     Rows are keyed (cell_id, r, c): callers join other columns (url,
     digests) back on that key instead of shipping them through the halo
-    sort. Every boolean input/passthrough column rides the exchange
-    packed into ONE tinyint (the bitpack format); the kernel and the
-    output see plain booleans."""
+    sort. The ``in_cols`` and ``passthrough`` columns must be boolean
+    (TypeError otherwise, before any job runs): they ride the exchange
+    packed into ONE tinyint (the bitpack format)."""
     ensure_package_on_executors(df.sparkSession)
-    passthrough = tuple(p for p in passthrough if p not in in_cols)
+    packed = (*in_cols, *(p for p in passthrough if p not in in_cols))
     dtypes = dict(df.dtypes)
-    data_cols = (*in_cols, *passthrough)
-    packed = tuple(n for n in data_cols if dtypes[n] == "boolean")
-    unpacked = tuple(n for n in data_cols if n not in packed)
+    bad = [f"{n} ({dtypes[n]})" for n in packed if dtypes[n] != "boolean"]
+    if bad:
+        raise TypeError("tiled_neighborhood: non-boolean columns "
+                        + ", ".join(bad))
     haloed = with_halo(df.select(
-        "cell_id", "r", "c", F.expr(bitpack.pack_sql(packed)).alias("_bf"),
-        *unpacked), radius, tile_rows)
+        "cell_id", "r", "c", F.expr(bitpack.pack_sql(packed)).alias("_bf")),
+        radius, tile_rows)
 
     schema = ("cell_id string, r int, c int"
-              + "".join(f", {name} boolean" for name in out_cols)
-              + "".join(f", {name} {dtypes[name]}" for name in data_cols))
+              + "".join(f", {name} boolean" for name in (*out_cols, *packed)))
     return haloed.groupBy("cell_id", "tile").applyInPandas(
         lambda pdf: neighborhood_group(pdf, kernel, in_cols, out_cols,
-                                       packed, unpacked), schema=schema)
+                                       packed), schema=schema)

@@ -81,7 +81,7 @@ def _replay_neighborhood(frame: pd.DataFrame, kernel, in_cols, out_cols,
     out = pd.concat([
         tiling.neighborhood_group(
             shipped.iloc[sel].assign(is_halo=halo).reset_index(drop=True),
-            kernel, in_cols, out_cols, in_cols, ())
+            kernel, in_cols, out_cols, in_cols)
         for sel, halo in _groups(r, tile_rows, radius)])
     return out.sort_values(["r", "c"]).reset_index(drop=True)
 
@@ -163,8 +163,7 @@ def _replay_fill(img: np.ndarray, r, c, bval: float, tile_rows: int):
         rr = state["r"].to_numpy()
         state = pd.concat([
             fillminima_dist.fill_round(
-                state.iloc[sel].assign(is_halo=halo).reset_index(drop=True),
-                "nir")
+                state.iloc[sel].assign(is_halo=halo).reset_index(drop=True))
             for sel, halo in _groups(rr, tile_rows, 1)])
         state = state.sort_values(["r", "c"]).reset_index(drop=True)
         if not state["changed"].sum():
@@ -212,6 +211,27 @@ def test_fill_replay_equals_whole(seed):
                                    NULL, bval)
         np.testing.assert_array_equal(got, want[r, c],
                                       str((seed, k, H, len(r), T, bval)))
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_fill_in_one_tile_takes_one_round(seed):
+    """A cell that fits in one tile (tile height >= H) has no halo
+    source: random terrain, ragged last rows and all-null cells reach
+    the whole-raster fill in exactly one round."""
+    rng = np.random.RandomState(400 + seed)
+    for k in range(25):
+        H = int(rng.randint(1, 25))
+        img = (np.zeros((H, W), dtype=np.int64) if k % 8 == 0
+               else _terrain(rng, H))
+        r, c = _pixels(H, _ragged(rng, H))
+        T = H + int(rng.randint(0, 4))
+        bval = float(rng.choice([0, 80, 120]))
+        got, rounds = _replay_fill(img[r, c], r, c, bval, T)
+        want = kernels.fill_minima(_whole(r, c, img[r, c], NULL, np.int64),
+                                   NULL, bval)
+        case = str((seed, k, H, len(r), T, bval))
+        np.testing.assert_array_equal(got, want[r, c], case)
+        assert rounds == 1, case
 
 
 @pytest.mark.parametrize("tile_rows", [2, 3, 4, 8])

@@ -7,6 +7,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from python_fmask_spark import constants as C
 from python_fmask_spark import tiling
@@ -151,6 +152,22 @@ def test_distributed_ccl_multi_cell_no_label_leak(spark):
     # cell A's root 6*W+3)
     assert got[("cellB", 8, 3)] == 8 * W + 3
     assert got[("cellB", 0, 0)] == 0
+
+
+def test_non_boolean_columns_raise(spark):
+    """Every column rides one bitpacked tinyint, so a non-boolean in_cols
+    or passthrough column is refused by name before any job runs."""
+    df, _ = _mask_df(spark)
+    df = df.withColumn("n", F.lit(3))
+    tracker = spark.sparkContext.statusTracker()
+    jobs = tracker.getJobIdsForGroup()
+    for cols in (dict(in_cols=("flag", "n")),
+                 dict(in_cols=("flag",), passthrough=("url", "flag"))):
+        with pytest.raises(TypeError, match=r"columns (n \(int\)|url "
+                                            r"\(string\))$"):
+            tiling.tiled_neighborhood(df, lambda s: {}, out_cols=(),
+                                      radius=1, **cols)
+    assert tracker.getJobIdsForGroup() == jobs
 
 
 def test_with_halo_counts(spark):
