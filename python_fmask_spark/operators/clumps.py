@@ -1,14 +1,14 @@
 """Cross-tile connected-component labeling (W5 in SURVEY §2.5).
 
-Per-tile ``label_components`` (NumPy union-find) runs tile-parallel;
-seam equivalences are resolved by a union-find over the tile-border
-pixel pairs. Border data is O(perimeter) — for a 10^12-pixel table the
-seam-edge set is ~10^6-10^7 rows, safely collectable to the driver (the
-same asymmetry the reference exploits by holding per-clump dicts in
-memory, fmask/fmask.py:910,976). Final labels are canonicalized to each
-component's first pixel in raster-scan order, so the result is
-partitioning-invariant and equals the whole-raster scipy-style labeling
-up to that canonical renumbering (property-tested).
+Per-tile ``label_components`` runs tile-parallel; seam equivalences are
+resolved per cell, on the executors, by the same min-label union-find
+(``kernels.min_label``) over the cell's tile-border label pairs. Seam
+data is O(perimeter) per cell, the same asymmetry the reference exploits
+by holding per-clump dicts in memory (fmask/fmask.py:910,976). Final
+labels are canonicalized to each component's first pixel in raster-scan
+order, so the result is partitioning-invariant and equals the
+whole-raster scipy-style labeling up to that canonical renumbering
+(property-tested).
 """
 
 from __future__ import annotations
@@ -45,29 +45,20 @@ def local_label(pdf: pd.DataFrame, eight_connected: bool) -> pd.DataFrame:
     })
 
 
-def seam_roots(edges) -> list[tuple]:
-    """Union-find over seam edges, (cell_id, lab_a, lab_b) each: returns
-    (cell_id, local_label, root) for every label an edge names, root
-    being the least label of its cross-tile component. Keys carry
-    cell_id, since local labels are cell-local pixel indexes that
-    distinct cells routinely share."""
-    parent: dict[tuple, tuple] = {}
-
-    def find(x: tuple) -> tuple:
-        parent.setdefault(x, x)
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    for cell, lab_a, lab_b in edges:
-        a, b = find((cell, int(lab_a))), find((cell, int(lab_b)))
-        if a != b:
-            # same cell by construction: the lesser label is the root
-            parent[max(a, b)] = min(a, b)
-    return [(k[0], k[1], find(k)[1]) for k in list(parent)]
+def seam_roots(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One cell's seam union-find: ``pdf`` holds the cell's seam edges
+    (cell_id, lab_a, lab_b), tile-local labels adjacent across a tile
+    seam. Returns (cell_id, local_label, root) for every label an edge
+    names, root being the least label of its cross-tile component. The
+    labels compact in ascending order, so kernels.min_label's least
+    index is the least label."""
+    n = len(pdf)
+    labels, idx = np.unique(
+        np.concatenate([pdf["lab_a"].to_numpy(), pdf["lab_b"].to_numpy()]),
+        return_inverse=True)
+    roots = kernels.min_label(len(labels), idx[:n], idx[n:])
+    return pd.DataFrame({"cell_id": pdf["cell_id"].iloc[0],
+                         "local_label": labels, "root": labels[roots]})
 
 
 def label_clumps_distributed(df: DataFrame, flag_col: str,
@@ -99,8 +90,8 @@ def label_clumps_distributed(df: DataFrame, flag_col: str,
     # the session's CacheManager until the session ends
     labeled = labeled.localCheckpoint(eager=False)
 
-    # Seam edges: 8-adjacent pixel pairs across tile boundaries, keyed
-    # by cell_id like every merge below (local labels are cell-local).
+    # Seam edges: 8-adjacent pixel pairs across tile boundaries, merged
+    # per cell (local labels are cell-local) on the executors.
     first_row, last_row = tiling.seam_rows_sql(tile_rows)
     top = labeled.filter(F.expr(first_row)) \
         .select(F.col("cell_id").alias("cell_b"), "r", "c",
@@ -114,25 +105,13 @@ def label_clumps_distributed(df: DataFrame, flag_col: str,
         top,
         (bottom.cell_a == top.cell_b) & (top.r == bottom.r_a + 1)
         & (F.abs(top.c - bottom.c_a) <= seam_e))
-        .select("cell_a", "lab_a", "lab_b").distinct())
-
-    # O(perimeter), see module docstring
-    mapping = seam_roots(edges.collect())
-    spark = df.sparkSession
-    if mapping:
-        # from pandas, the frame ships as Arrow batches (get_spark turns
-        # Arrow on), not as a Python-RDD job
-        map_df = spark.createDataFrame(
-            pd.DataFrame(mapping, columns=["cell_id", "local_label", "root"]),
-            "cell_id string, local_label bigint, root bigint")
-        out = (labeled.join(F.broadcast(map_df),
-                            ["cell_id", "local_label"], "left")
-               .withColumn("clump_id", F.coalesce("root", "local_label"))
-               .select("cell_id", "r", "c", "clump_id"))
-    else:
-        out = labeled.withColumnRenamed("local_label", "clump_id") \
-            .select("cell_id", "r", "c", "clump_id")
-    return out
+        .select(F.col("cell_a").alias("cell_id"), "lab_a", "lab_b"))
+    roots = edges.groupBy("cell_id").applyInPandas(
+        seam_roots, schema="cell_id string, local_label bigint, root bigint")
+    return (labeled.join(F.broadcast(roots), ["cell_id", "local_label"],
+                         "left")
+            .select("cell_id", "r", "c",
+                    F.coalesce("root", "local_label").alias("clump_id")))
 
 
 def drop_small_clouds(df: DataFrame, min_px: int) -> DataFrame:

@@ -175,6 +175,28 @@ def cdi_pcp_filter(pcp: np.ndarray, cdi: np.ndarray) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
+def min_label(n: int, ea: np.ndarray, eb: np.ndarray) -> np.ndarray:
+    """Connected components of the graph on nodes 0..n-1 with edges
+    (ea[i], eb[i]) by min-label propagation with pointer jumping (path
+    halving): O(edges) work per round, O(log n) rounds — no Python
+    iteration per node, so an adversarial checkerboard stays vectorized.
+    Returns each node's least node index in its component. Duplicate
+    edges and self-loops are harmless."""
+    roots = np.arange(n, dtype=np.int64)
+    while True:
+        nxt = roots.copy()
+        np.minimum.at(nxt, ea, roots[eb])
+        np.minimum.at(nxt, eb, roots[ea])
+        while True:
+            jumped = nxt[nxt]
+            if np.array_equal(jumped, nxt):
+                break
+            nxt = jumped
+        if np.array_equal(nxt, roots):
+            return roots
+        roots = nxt
+
+
 def label_components(mask: np.ndarray, eight_connected: bool = True
                      ) -> tuple[np.ndarray, int]:
     """Run-based union-find CCL. Label numbering follows raster scan order
@@ -214,7 +236,7 @@ def label_components(mask: np.ndarray, eight_connected: bool = True
     e = 1 if eight_connected else 0
     # row boundaries in the run arrays (run_row is non-decreasing)
     row_starts = np.searchsorted(run_row, np.arange(h + 1))
-    ea_parts, eb_parts = [], []
+    ea_parts, eb_parts = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
     for r in range(1, h):
         a0, a1 = row_starts[r], row_starts[r + 1]
         b0, b1 = row_starts[r - 1], row_starts[r]
@@ -230,30 +252,13 @@ def label_components(mask: np.ndarray, eight_connected: bool = True
         offs_r = np.arange(total_r) - np.repeat(np.cumsum(cnt) - cnt, cnt)
         eb_parts.append(np.repeat(lo, cnt) + offs_r)
 
-    # --- connected components of the run graph by min-label propagation
-    # with pointer jumping (path halving): O(edges) work per round,
-    # O(log n_runs) rounds — no Python iteration per run, so an
-    # adversarial checkerboard (runs ~ pixels/2) stays vectorized.
-    # The converged label is each component's MINIMUM run index == its
-    # first run in scan order, preserving scipy.ndimage.label numbering.
-    roots = np.arange(n_runs, dtype=np.int64)
-    if ea_parts:
-        ea = np.concatenate(ea_parts)
-        eb = np.concatenate(eb_parts)
-        while True:
-            nxt = roots.copy()
-            np.minimum.at(nxt, ea, roots[eb])
-            np.minimum.at(nxt, eb, roots[ea])
-            while True:
-                jumped = nxt[nxt]
-                if np.array_equal(jumped, nxt):
-                    break
-                nxt = jumped
-            if np.array_equal(nxt, roots):
-                break
-            roots = nxt
+    # --- connected components of the run graph: the converged label is
+    # each component's MINIMUM run index == its first run in scan order,
+    # preserving scipy.ndimage.label numbering.
+    roots = min_label(n_runs, np.concatenate(ea_parts),
+                      np.concatenate(eb_parts))
 
-    uniq, first_idx = np.unique(roots, return_index=True)
+    uniq = np.unique(roots)
     # uniq is sorted by root id == scan order of the root run itself,
     # and a root is always its component's first run, so label = rank.
     label_of_root = np.empty(n_runs, dtype=np.int64)

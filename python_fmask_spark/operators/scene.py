@@ -39,6 +39,13 @@ class FmaskParams:
     nir_snow_thresh: float = C.EQN20_NIR_SNOW_THRESH
     green_snow_thresh: float = C.EQN20_GREEN_SNOW_THRESH
 
+    def __post_init__(self):
+        # a tiled pass sizes its halo from the buffer: a negative one reads
+        # reflected borders at tile seams, where classify_scene buffers none
+        for name in ("cloud_buffer_px", "shadow_buffer_px"):
+            if not getattr(self, name) >= 0:
+                raise ValueError(f"FmaskParams.{name} must be >= 0")
+
     def snow_kwargs(self) -> dict:
         """The Eqn-20 knobs as materialize_pass1/_thresholds kwargs, None
         at the default. Only perfbench calls it; the engine reads

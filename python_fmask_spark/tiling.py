@@ -10,8 +10,9 @@ in stage 5's match bands (scene_dist: band b holds rows [bB, (b+1)B +
 span)). Radius rule: a halo wider than a tile reaches as many tiles as
 the radius needs. ``Window`` turns a group's rows into rasters and
 back. The per-group functions (``neighborhood_group``,
-``fillminima_dist.fill_round``, ``clumps.local_label`` and
-``seam_roots``) need no Spark; tests/test_tile_replay.py replays them.
+``fillminima_dist.fill_round``, ``clumps.local_label`` per tile and
+``clumps.seam_roots`` per cell) need no Spark; tests/test_tile_replay.py
+replays them.
 
 Halo duplication is (above + radius)/T (about 3% for radius 2 at
 TILE_SIZE 128); the (cell_id, tile) key is the skew answer: a mega-cell

@@ -128,6 +128,10 @@ def get_cmdargs(argv=None):
         # reference gates the CDI test to S2 (sentinel2Stacked only);
         # reject at parse time, before any SparkSession spins up
         p.error("--parallaxtest requires --sensor SENTINEL2")
+    for flag in ("cloudbufferdistance", "shadowbufferdistance"):
+        dist = getattr(args, flag)
+        if dist is not None and not 0 <= dist < float("inf"):
+            p.error(f"--{flag} must be a finite distance >= 0")
     if args.tempdir and args.mode != "distributed":
         # only the distributed path writes stage tables; the whole-cell
         # and auto paths would silently drop the advertised resumability

@@ -218,3 +218,38 @@ def test_parallaxtest_cli_flag(capsys):
             capsys.readouterr().err
     assert get_cmdargs(["sf", "--mode", "distributed", "--tempdir",
                         "/tmp/wd"]).tempdir == "/tmp/wd"
+
+
+def test_negative_buffer_params_raise():
+    """A tiled pass sizes its halo from the cloud buffer, so a negative
+    one left the 3x3 majority a reflected border at tile seams, where
+    the whole-cell kernel buffers nothing: FmaskParams refuses either
+    negative buffer by name."""
+    import pytest
+
+    for name in ("cloud_buffer_px", "shadow_buffer_px"):
+        for bad in (-1, float("nan")):
+            with pytest.raises(ValueError, match=name):
+                FmaskParams(**{name: bad})
+    zero = FmaskParams(cloud_buffer_px=0, shadow_buffer_px=0)
+    assert (zero.cloud_buffer_px, zero.shadow_buffer_px) == (0, 0)
+
+
+def test_negative_buffer_cli_flags_rejected(capsys):
+    """--cloudbufferdistance -30 is int(-30 / 30) = -1 px: the CLI
+    rejects a negative distance at parse time, before any SparkSession
+    starts, and a NaN or infinite one, which the metre -> pixel
+    conversion cannot turn into an int."""
+    sys.path.insert(0, SCRIPTS)
+    import pytest
+
+    from classify_job import get_cmdargs
+
+    for flag in ("--cloudbufferdistance", "--shadowbufferdistance"):
+        for bad in ("-30", "nan", "inf"):
+            with pytest.raises(SystemExit) as ei:
+                get_cmdargs(["sf", flag, bad])
+            assert ei.value.code == 2
+            assert f"{flag} must be a finite distance >= 0" in \
+                capsys.readouterr().err
+        assert getattr(get_cmdargs(["sf", flag, "0"]), flag[2:]) == 0

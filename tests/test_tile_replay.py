@@ -6,11 +6,13 @@ outside its own rows) and feeds them, as pandas frames in the columns
 Spark ships, to the module-level per-group functions: the halo-kernel
 tile (``tiling.neighborhood_group``), the fill-minima round
 (``fillminima_dist.fill_round``, iterated to the fixpoint as
-``fill_minima_distributed`` iterates it) and the tile-local CCL plus the
-seam union-find (``clumps.local_label``, ``clumps.seam_roots``). Cases
-cover tile heights 2-16, halos wider than a tile, ragged last rows,
-all-null cells, fill basins that cross 3 or more tiles and clumps that
-cross seams.
+``fill_minima_distributed`` iterates it), the tile-local CCL plus the
+per-cell seam union-find (``clumps.local_label``, ``clumps.seam_roots``)
+and stage 5's clump kernel and band match (``scene_dist._clump_kernel``,
+``scene_dist._match_band_kernel``). Cases cover tile heights 2-16, halos
+wider than a tile, ragged last rows, all-null cells, fill basins that
+cross 3 or more tiles, clumps that cross seams and cells that span
+several match bands.
 
 No test here needs a SparkSession, and the module fails any attempt to
 launch a JVM. Run alone, it takes seconds:
@@ -26,7 +28,8 @@ import pytest
 
 from python_fmask_spark import constants as C
 from python_fmask_spark import tiling
-from python_fmask_spark.operators import clumps, fillminima_dist, kernels
+from python_fmask_spark.operators import (clumps, fillminima_dist, kernels,
+                                         scene, scene_dist)
 
 W = C.SCENE_WIDTH
 NULL = C.REF_NULL_DN
@@ -253,7 +256,7 @@ def test_fill_basin_across_tiles_takes_rounds(tile_rows):
 def _replay_ccl(cells: dict, tile_rows: int, eight: bool) -> dict:
     """{(cell, r, c): clump_id} for the True pixels of ``cells`` (cell ->
     (r, c) arrays): tile-local labels, seam edges between each tile's
-    last row and the next tile's first row, one union-find."""
+    last row and the next tile's first row, one union-find per cell."""
     local = {}
     for cell, (r, c) in cells.items():
         tile = r // tile_rows
@@ -265,19 +268,22 @@ def _replay_ccl(cells: dict, tile_rows: int, eight: bool) -> dict:
             local.update({(cell, int(a), int(b)): int(lab) for a, b, lab in
                           zip(out["r"], out["c"], out["local_label"])})
     reach = (-1, 0, 1) if eight else (0,)
-    edges = {(cell, lab, local[(cell, r + 1, c + d)])
-             for (cell, r, c), lab in local.items()
-             if r % tile_rows == tile_rows - 1
-             for d in reach if (cell, r + 1, c + d) in local}
-    root = {(cell, lab): rt for cell, lab, rt in
-            clumps.seam_roots(sorted(edges))}
+    edges = pd.DataFrame(
+        [(cell, lab, local[(cell, r + 1, c + d)])
+         for (cell, r, c), lab in local.items()
+         if r % tile_rows == tile_rows - 1
+         for d in reach if (cell, r + 1, c + d) in local],
+        columns=["cell_id", "lab_a", "lab_b"])
+    root = {(cell, lab): rt for _, grp in edges.groupby("cell_id")
+            for cell, lab, rt in clumps.seam_roots(grp).itertuples(
+                index=False)}
     return {k: root.get((k[0], lab), lab) for k, lab in local.items()}
 
 
 @pytest.mark.parametrize("seed", range(6))
 def test_ccl_replay_equals_whole(seed):
-    """Two cells per case through one seam union-find (labels are
-    cell-local, so a merge must not leak across cells), 4- and
+    """Two cells per case, each through its own seam union-find (labels
+    are cell-local, so a merge must not leak across cells), 4- and
     8-connected, against label_components canonicalized to each
     component's first pixel."""
     rng = np.random.RandomState(300 + seed)
@@ -304,3 +310,107 @@ def test_ccl_replay_equals_whole(seed):
                       for k, v in got.items())
     # some clumps cross seams
     assert merged
+
+
+# --- stage 5: banded shadow match -------------------------------------------
+
+
+def _scene(rng, H: int, n: int, thermal: bool) -> dict:
+    """One cell's match inputs as pixel columns: clouds (null-free, as
+    the interim mask is), potential shadow, nulls, brightness
+    temperatures and view-angle DNs, plus the cell scalars. The sun
+    stands near north or south and high (sun zenith at most 0.2 rad), so
+    a shadow lands a few to a few dozen rows from its cloud."""
+    r, c = _pixels(H, n)
+    null = rng.rand(n) < rng.rand() * 0.1
+    return {
+        "r": r, "c": c, "nullmask": null,
+        "cloudmask": (rng.rand(n) < rng.rand() * 0.2) & ~null,
+        "potential_shadow": rng.rand(n) < rng.rand(),
+        "bt": rng.uniform(10.0, 25.0, n),
+        "sat_az_cdn": rng.randint(0, 629, n),
+        "sat_zen_cdn": rng.randint(0, 20, n),
+        "sun_az": float(rng.choice([0.0, np.pi]) + rng.uniform(-0.3, 0.3)),
+        "sun_zen": float(rng.uniform(0.01, 0.2)),
+        "g_tlow": float(rng.uniform(5.0, 15.0)) if thermal else np.nan,
+        "g_thigh": float(rng.uniform(15.0, 25.0)) if thermal else np.nan,
+    }
+
+
+def _whole_matches(s: dict, H: int, thermal: bool) -> set:
+    """classify_scene's per-clump loop: the shadow pixels matched."""
+    r, c = s["r"], s["c"]
+    cloud = _whole(r, c, s["cloudmask"], False)
+    pot = _whole(r, c, s["potential_shadow"], False)
+    null = _whole(r, c, s["nullmask"], True)
+    bt = _whole(r, c, s["bt"], 0.0, np.float64)
+    az = _whole(r, c, s["sat_az_cdn"], 0, np.int64)
+    zen = _whole(r, c, s["sat_zen_cdn"], 0, np.int64)
+    lab, _n = kernels.label_components(cloud, eight_connected=True)
+    out = set()
+    for _cid, flat in kernels.clump_groups(lab):
+        ndx = (flat // W, flat % W)
+        t_base, _h, entry = kernels.clump_shadow(
+            ndx[0], ndx[1], bt[ndx] if thermal else None, az[ndx], zen[ndx],
+            s["sun_az"], s["sun_zen"], (H, W))
+        got = kernels.match_one_shadow(
+            cloud, entry, pot, t_base, scene._opt(s["g_tlow"]),
+            scene._opt(s["g_thigh"]), null)
+        if got is not None:
+            out |= set(zip(got[0].tolist(), got[1].tolist()))
+    return out
+
+
+def _replay_match(s: dict, H: int, thermal: bool) -> tuple[set, int]:
+    """Stages 4-5 as scene_dist runs them, but with the band height as
+    low as the widest search window: (the union of the band matches,
+    the number of bands a template starts in)."""
+    r, c = s["r"], s["c"]
+    scalars = {k: s[k] for k in ("sun_az", "sun_zen", "g_tlow", "g_thigh")}
+    scalars.update(cell_id="x", cell_rows=H)
+    cloud = s["cloudmask"]
+    lab, _n = kernels.label_components(_whole(r, c, cloud, False),
+                                       eight_connected=True)
+    clump_px = pd.DataFrame({
+        "cloud_id": lab[r[cloud], c[cloud]], "r": r[cloud], "c": c[cloud],
+        **{k: s[k][cloud] for k in ("bt", "sat_az_cdn", "sat_zen_cdn")}})
+    if clump_px.empty:
+        return set(), 0
+    px = pd.concat([
+        scene_dist._clump_kernel(grp.assign(**scalars), has_thermal=thermal)
+        for _cid, grp in clump_px.groupby("cloud_id")])
+    span = max(int((px["win_r1"] - px["win_r0"] + 1).max()), 1)
+    flags = pd.DataFrame({
+        "cell_id": "x", "r": r, "c": c,
+        **{k: s[k] for k in ("cloudmask", "potential_shadow", "nullmask")}})
+    tmpl = px.assign(**scalars, band=px["win_r0"] // span)
+    bands = dict(tuple(tmpl.groupby("band")))
+    out = set()
+    for sel, _halo in _groups(r, span, span, above=0):
+        left = bands.get(int(r[sel[0]]) // span)
+        if left is not None:
+            got = scene_dist._match_band_kernel(
+                left, flags.iloc[sel].reset_index(drop=True))
+            out |= set(zip(got["r"].tolist(), got["c"].tolist()))
+    return out, len(bands)
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_match_band_replay_equals_whole(seed):
+    """Stage 5 at its tightest banding: band b holds rows [bB, (b+1)B +
+    span) with B = span, so a cell spans several bands. The union of the
+    band matches equals classify_scene's per-clump whole-raster match,
+    with and without thermal, and no band is under-covered (it would
+    raise)."""
+    rng = np.random.RandomState(500 + seed)
+    matched = multi_band = 0
+    for k in range(15):
+        H = int(rng.randint(1, 121))
+        thermal = bool(k % 3)
+        s = _scene(rng, H, _ragged(rng, H), thermal)
+        got, n_bands = _replay_match(s, H, thermal)
+        assert got == _whole_matches(s, H, thermal), (seed, k, H, thermal)
+        matched += len(got)
+        multi_band += n_bands > 1
+    # some shadows match, and some cells span several bands
+    assert matched and multi_band

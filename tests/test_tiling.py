@@ -154,6 +154,45 @@ def test_distributed_ccl_multi_cell_no_label_leak(spark):
     assert got[("cellB", 0, 0)] == 0
 
 
+@pytest.mark.parametrize("eight", [False, True])
+def test_distributed_ccl_collects_nothing(spark, monkeypatch, eight):
+    """The seam merge runs per cell on the executors: building the
+    labelled frame makes no driver collect(). Two random cells with an
+    isolated bar at c=5: cell A's crosses all four 4-row tiles from row
+    1, cell B's starts at row 8, so both cells hold local label 8*W+5
+    and only cell A's seams merge it. Against label_components
+    canonicalized to each component's first pixel, at 4- and
+    8-connectivity."""
+    tile_rows, rows, want = 4, [], {}
+    for k, (cell, top) in enumerate((("cellA", 1), ("cellB", 8))):
+        mask = np.random.RandomState(50 + k).rand(20, W) < 0.45
+        mask[:16, 4:7] = False
+        mask[top:15, 5] = True
+        lab, _n = kernels.label_components(mask, eight_connected=eight)
+        first = {}
+        for r, c in zip(*np.nonzero(mask)):
+            first.setdefault(lab[r, c], int(r) * W + int(c))
+            want[(cell, int(r), int(c))] = first[lab[r, c]]
+        rows += [(cell, r, c, bool(mask[r, c]))
+                 for r in range(20) for c in range(W)]
+    df = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["cell_id", "r", "c", "flag"]))
+
+    def refuse(*_a, **_k):
+        raise AssertionError("the CCL collected to the driver")
+
+    with monkeypatch.context() as m:
+        # the session's DataFrame class (pyspark.sql.classic), which
+        # overrides pyspark.sql.DataFrame.collect
+        m.setattr(type(df), "collect", refuse)
+        out = clumps.label_clumps_distributed(
+            df, "flag", tile_rows=tile_rows, eight_connected=eight)
+    got = {(row.cell_id, row.r, row.c): row.clump_id for row in out.collect()}
+    assert got == want
+    assert got[("cellA", 14, 5)] == 1 * W + 5
+    assert got[("cellB", 14, 5)] == 8 * W + 5
+
+
 def test_non_boolean_columns_raise(spark):
     """Every column rides one bitpacked tinyint, so a non-boolean in_cols
     or passthrough column is refused by name before any job runs."""
